@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":"total",...}. Failed queries are reported
   * as -1 (never silently counted into the total — VERDICT r01 item 10).
@@ -110,16 +108,7 @@ object Bench {
       best
     }
     val trusted = loadStart >= 0.0 && loadStart < 1.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus(4))
     // JVM/codegen warmup so the alphabetically-first query doesn't absorb
     // one-time JIT cost into its timing; the derived-view builds stay
     // inside the timed loop (they are real work).

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Developer tool: replicate the sf0.1 testdata N× with per-replica key
@@ -22,16 +22,7 @@ object ScaleSmoke {
     val reps = if (rest.nonEmpty) rest(0).toInt else 8
     val src = if (rest.length > 1) rest(1) else "/root/testdata/sf0.1"
     val out = s"${Q.scratch}/scale$reps"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus(32))
 
     def replicate(name: String)(f: (DataFrame, Int) => DataFrame): Unit =
       if (!reuse) {
@@ -196,31 +187,27 @@ object ScaleSmoke {
       graft.ops.Caches.releaseAll()
     }
 
-    // Direct drive of the >5M-row BH path: 10M synthetic p-values through
-    // both implementations (the windowed one sorts everything in ONE task;
-    // the ranged one never does).
+    // Direct drive of the >5M-row path of the shared prefix scan: 10M
+    // synthetic p-values through both RangedScan paths of BH and of Holm
+    // (the windowed twin sorts everything in ONE task; the ranged kernel
+    // never does). Each pair must print the same checksum: an exact
+    // decimal sum, so the two paths' different row orders cannot move it.
     lazy val big = spark.range(10000000L).select(
       format_string("k%09d", col("id")).as("id"),
       (pmod(hash(col("id")), lit(1000000)).cast("double") / 1000000.0).as("p"))
-    if (drive("bh10m"))
-    Seq("windowed" -> ((df: DataFrame) => graft.ops.Analytic.bhAdjustWindowed(df, "p", "id")),
-        "ranged" -> ((df: DataFrame) => graft.ops.Analytic.bhAdjustRanged(df, "p", "id"))
-    ).foreach { case (tag, f) =>
-      val t0 = System.nanoTime()
-      val chk = f(big).agg(sum("fdr")).head().getDouble(0)
-      println(f"[scale] bh-10M $tag%-9s ${(System.nanoTime() - t0) / 1e9}%8.2f s  sum=$chk%.6f")
-      graft.ops.Caches.releaseAll()
-    }
-    // Holm's ranged mirror (prefix-max direction) at the same 10M rows.
-    if (drive("holm"))
-    Seq("windowed" -> ((df: DataFrame) => graft.ops.Analytic.holmWindowed(df, "p", "id")),
-        "ranged" -> ((df: DataFrame) => graft.ops.Analytic.holmRanged(df, "p", "id"))
-    ).foreach { case (tag, f) =>
-      val t0 = System.nanoTime()
-      val chk = f(big).agg(sum("p_holm")).head().getDouble(0)
-      println(f"[scale] holm-10M $tag%-9s ${(System.nanoTime() - t0) / 1e9}%8.2f s  sum=$chk%.6f")
-      graft.ops.Caches.releaseAll()
-    }
+    Seq(("bh10m", "bh-10M", graft.ops.Analytic.bhScan("p", "id")),
+        ("holm", "holm-10M", graft.ops.Analytic.holmScan("p", "id")))
+      .filter(t => drive(t._1)).foreach { case (_, name, scan) =>
+        val out = scan.out.head.name
+        Seq("windowed" -> scan.windowed,
+            "ranged" -> ((df: DataFrame) => graft.ops.RangedScan.ranged(df, scan))
+        ).foreach { case (tag, f) =>
+          val t0 = System.nanoTime()
+          val chk = f(big).agg(sum(col(out).cast("decimal(38,18)"))).head().getDecimal(0)
+          println(f"[scale] $name $tag%-9s ${(System.nanoTime() - t0) / 1e9}%8.2f s  sum=$chk")
+          graft.ops.Caches.releaseAll()
+        }
+      }
     // Direct MATERIALIZED drive of d13's span removal: a bare count() of
     // the per-doc profile legally lets Catalyst eliminate the final left
     // join (unique join key, no referenced columns), so the sweep row

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField}
 
 /** Corpus-curation operators a training-data pipeline runs after dedup pair
   * generation: grouping near-dup pairs into clusters (connected components),
@@ -662,86 +663,39 @@ object Curation {
     * greedy order — integer, so no float-order hazard) and `selected`
     * (`cum_before < budget`).
     *
-    * Same two-path size dispatch as `Analytic.bhAdjust`: one global window
-    * up to `windowMaxRows`, and above that a range-partitioned two-pass
-    * prefix sum — ONE range shuffle on (score, id), per-partition token
-    * totals reduced to O(partitions) driver state, then a partition-local
-    * running sum seeded by the earlier partitions' offsets. Exact-integer
-    * both ways, so the paths are bit-equal (PropertySpec).
+    * Runs through the [[graft.ops.RangedScan]] size gate, the one BH uses:
+    * one global window at small sizes, the range-partitioned prefix sum
+    * above. Exact-integer both ways, so the paths are bit-equal
+    * (PropertySpec).
     */
   def tokenBudgetSelect(docs: DataFrame, scoreCol: String, tokenCol: String,
-                        idCol: String, budget: Long,
-                        windowMaxRows: Long = 5000000L): DataFrame = {
-    // normalize the token column to non-null long BEFORE the dispatch so
-    // both paths accept identical inputs and return the identical schema
-    // (the ranged pass decodes with getLong, which NPEs on null; the
-    // windowed sum would silently skip nulls — either divergence would be
-    // a downstream-breaking discontinuity at the size threshold)
-    val normalized =
-      docs.withColumn(tokenCol, coalesce(col(tokenCol).cast("long"), lit(0L)))
-    // Plan-only dispatch on the leaf-bytes estimate (r10, see
-    // Analytic.bhAdjust): the two paths are bit-equal (PropertySpec), so
-    // the old persist()+count() here was one job plus a cache fill of
-    // pure fixed cost; the windowed path consumes its input exactly once.
-    if (graft.ops.Analytic.planRowEstimate(normalized) <= windowMaxRows)
-      tokenBudgetWindowed(normalized, scoreCol, tokenCol, idCol, budget)
-    else tokenBudgetRanged(normalized, scoreCol, tokenCol, idCol, budget)
-  }
+                        idCol: String, budget: Long): DataFrame =
+    graft.ops.RangedScan.run(docs, tokenBudgetScan(scoreCol, tokenCol, idCol, budget))
+
+  /** The token budget as a prefix scan: each document weighs its tokens,
+    * so its `before` offset is `cum_before`. Both paths read a null token
+    * count as 0.
+    */
+  private[graft] def tokenBudgetScan(scoreCol: String, tokenCol: String,
+      idCol: String, budget: Long): graft.ops.RangedScan.Scan =
+    graft.ops.RangedScan.Scan(
+      tokenBudgetWindowed(_, scoreCol, tokenCol, idCol, budget),
+      Seq(col(scoreCol).desc, col(idCol).asc), tokenCol, tokens(tokenCol),
+      Seq(StructField("cum_before", LongType, nullable = false),
+        StructField("selected", BooleanType, nullable = false)),
+      weight = _.asInstanceOf[Long], fold = None,
+      emit = (_, before, _) => Seq(before, before < budget))
+
+  private def tokens(tokenCol: String): Column =
+    coalesce(col(tokenCol).cast("long"), lit(0L))
 
   private[graft] def tokenBudgetWindowed(df: DataFrame, scoreCol: String,
       tokenCol: String, idCol: String, budget: Long): DataFrame = {
     val w = Window.orderBy(col(scoreCol).desc, col(idCol).asc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn(tokenCol, coalesce(col(tokenCol).cast("long"), lit(0L)))
+    df.withColumn(tokenCol, tokens(tokenCol))
       .withColumn("cum_before",
         coalesce(sum(col(tokenCol)).over(w), lit(0L)))
       .withColumn("selected", col("cum_before") < budget)
-  }
-
-  /** Range-partitioned two-pass prefix sum — the 100 TB path (the
-    * bhAdjustRanged shape with min-fold replaced by integer addition).
-    * Driver state is O(partitions), never O(rows).
-    */
-  private[graft] def tokenBudgetRanged(df: DataFrame, scoreCol: String,
-      tokenCol: String, idCol: String, budget: Long,
-      numPartitions: Int = 0): DataFrame = {
-    import org.apache.spark.TaskContext
-    import org.apache.spark.sql.Row
-    val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // normalize the token column to non-null long up front: pass 2/3
-    // decode rows with getLong (NPE on null), and the windowed sibling
-    // coalesces too — the dispatch must not change accepted inputs at the
-    // size threshold
-    val sorted = graft.ops.Caches.track(df
-      .withColumn(tokenCol, coalesce(col(tokenCol).cast("long"), lit(0L)))
-      .repartitionByRange(parts, col(scoreCol).desc, col(idCol).asc)
-      .sortWithinPartitions(col(scoreCol).desc, col(idCol).asc)
-      .persist())
-    val tIdx = sorted.schema.fieldIndex(tokenCol)
-    // Pass 1 (O(partitions) to driver): token total per range partition.
-    val sums = sorted
-      .groupBy(spark_partition_id().as("__pid"))
-      .agg(sum(col(tokenCol)).as("__tok"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // exclusive prefix offsets: tokens in all EARLIER partitions
-    val offs = (0 until parts).map { pid =>
-      pid -> (0 until pid).map(q => sums.getOrElse(q, 0L)).sum
-    }.toMap
-    val bOffs = spark.sparkContext.broadcast(offs)
-    val outSchema = sorted.schema
-      .add("cum_before", org.apache.spark.sql.types.LongType, nullable = false)
-      .add("selected", org.apache.spark.sql.types.BooleanType, nullable = false)
-    sorted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var run = bOffs.value.getOrElse(pid, 0L)
-      it.map { r =>
-        val before = run
-        run += r.getLong(tIdx)
-        Row.fromSeq(r.toSeq :+ before :+ (before < budget))
-      }
-    }(Encoders.row(outSchema))
   }
 }

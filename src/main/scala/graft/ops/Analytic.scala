@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, StructField}
 
 /** Analytic tier (SURVEY.md §2.4/§2.5): per-key variance, top-k selection,
   * group means, and the Benjamini–Hochberg adjustment.
@@ -37,262 +36,117 @@ object Analytic {
            avg(when(col(groupCol) === g2, col(valCol))).as("mean_g2"))
       .withColumn("diff", col("mean_g1") - col("mean_g2"))
 
-  /** W3/K4 — Benjamini–Hochberg FDR (reference /root/reference/plots.R:162
+  /** W3/K4 — Benjamini–Hochberg FDR (reference plots.R:162
     * p.adjust(method="BH")): rank p ascending, p*n/rank, running min from the
     * largest p down, clamp to 1. Ties resolve identically to R because the
-    * running min absorbs any within-tie rank assignment.
+    * running min absorbs any within-tie rank assignment. As in R, a null p
+    * gets a null FDR and n counts the non-null p-values only.
     *
-    * Dispatches on row count: up to `windowMaxRows` the empty-partition
-    * window (single-partition sort) is cheapest; above it the
-    * range-partitioned two-pass rank takes over — no single task ever sees
-    * more than one range partition, so the adjustment scales to any probe
-    * cardinality. Both paths compute the identical double-op sequence
-    * (p·n then /rank, suffix-min, clamp), asserted bit-equal in PropertySpec.
+    * Runs through the [[RangedScan]] size gate. Callers that already hold
+    * the exact row count pass it as `knownRows` (Dmp folds it into the
+    * prior-fit aggregate); everyone else gets the plan estimate, no job.
+    * The windowed path consumes its input exactly once inside the caller's
+    * single action, so no persist is needed in front of it.
     */
   def bhAdjust(df: DataFrame, pCol: String, tieBreak: String,
-               outCol: String = "fdr", windowMaxRows: Long = 5000000L,
-               knownRows: Option[Long] = None): DataFrame = {
-    // Plan-ONLY dispatch: the two paths compute the identical double-op
-    // sequence (PropertySpec asserts them bit-equal), so the row count
-    // here picks a physical plan, never a result — which licenses an
-    // ESTIMATE in place of an exact count (the k12 width-dispatch
-    // precedent). Until r10 this ran `persist(); count()` — one extra job
-    // plus one cache fill per call, per adjusted query, pure fixed cost at
-    // every scale (the 8-vs-32-core cohort below 0.7 was job-count-bound).
-    // Callers that already know the exact row count pass it via knownRows
-    // (Dmp folds it into the prior-fit aggregate); everyone else gets the
-    // leaf-bytes estimate, which over-counts rows by ≥one order (≥48-byte
-    // statistic rows, /8 divisor, compressed leaf bytes) and so errs
-    // toward the scale-safe ranged path, never toward an oversized
-    // single-partition window sort.
-    // The windowed path consumes its input exactly once inside the
-    // caller's single action, so dropping the persist removes a cache
-    // fill without duplicating any upstream work.
-    val rows = knownRows.getOrElse(planRowEstimate(df))
-    if (rows <= windowMaxRows) bhAdjustWindowed(df, pCol, tieBreak, outCol)
-    else bhAdjustRanged(df, pCol, tieBreak, outCol)
-  }
-
-  /** Row-count ESTIMATE from plan statistics — no job. Sums the leaf
-    * relations' sizeInBytes (cached relations report their real in-memory
-    * bytes; file relations their on-disk bytes) and divides by 48 ≈ the
-    * bytes/row of this engine's long tables in either representation
-    * (~56 B UnsafeRow in cache, ~30–60 B compressed on disk), i.e. the
-    * estimate approximates the LEAF row count. That still over-counts
-    * the dispatch-relevant quantity: every adjusted input here is a
-    * per-key aggregate of its leaves (rows ≪ leaf rows), and self-joined
-    * leaves are summed once per appearance. (An /8 divisor was measured
-    * to shunt the k-tier's ~130 MB multi-leaf inputs onto the ranged
-    * path at sf0.1 — k22_mk_inference 1.48 → 1.82 s — for windows that
-    * fit one task with 10× headroom.) Suitable only for plan-equivalent
-    * dispatches (windowed vs ranged are bit-equal); never use where the
-    * count affects a result.
-    */
-  private[graft] def planRowEstimate(df: DataFrame): Long = {
-    val leafBytes = df.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    (leafBytes / 48).min(BigInt(Long.MaxValue)).toLong
-  }
+               outCol: String = "fdr", knownRows: Option[Long] = None): DataFrame =
+    RangedScan.run(df, bhScan(pCol, tieBreak, outCol), knownRows)
 
   /** Benjamini–Yekutieli FDR — the dependence-robust BH variant: the
     * step-up quantity is scaled by the harmonic factor c(m) = Σ_{i≤m} 1/i
-    * before the suffix-min + clamp. H_m is an ASCENDING driver loop over
-    * the (already-counted-for-dispatch) row total — the identical IEEE
-    * sequence to the oracle's i-ordered running sum, and O(m) driver time
-    * on a number, not a row set. Same two-path size dispatch as
-    * [[bhAdjust]]; scale=1 reproduces BH bit-for-bit (p·1.0 is exact).
+    * before the suffix-min + clamp. m is counted exactly (non-null p, as
+    * in R), and the same job's row count feeds the size gate. H_m is an
+    * ASCENDING driver loop — the identical IEEE sequence to the oracle's
+    * i-ordered running sum, and O(m) driver time on a number, not a row
+    * set. scale=1 reproduces BH bit-for-bit (p·1.0 is exact).
     */
   def byAdjust(df: DataFrame, pCol: String, tieBreak: String,
-               outCol: String = "fdr_by", windowMaxRows: Long = 5000000L): DataFrame = {
+               outCol: String = "fdr_by"): DataFrame = {
     val input =
       if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         Caches.track(df.persist())
       else df
-    val m = input.count()
+    val counts = input.agg(count(lit(1)), count(col(pCol))).head()
+    val m = counts.getLong(1)
     var h = 0.0
     var i = 1L
     while (i <= m) { h += 1.0 / i; i += 1 }
-    if (m <= windowMaxRows) bhAdjustWindowed(input, pCol, tieBreak, outCol, scale = h)
-    else bhAdjustRanged(input, pCol, tieBreak, outCol, scale = h)
+    RangedScan.run(input, bhScan(pCol, tieBreak, outCol, scale = h), Some(counts.getLong(0)))
   }
 
   /** Holm step-DOWN FWER adjustment (p.adjust method="holm" — the
     * no-assumptions Bonferroni improvement): adjusted p_(i) =
     * min(1, max_{j≤i} (m−j+1)·p_(j)) — a running MAX ascending in rank
-    * where BH runs a suffix-min descending. Same two-path size dispatch.
+    * where BH runs a suffix-min descending. Same size gate and null
+    * semantics as [[bhAdjust]].
     */
   def holmAdjust(df: DataFrame, pCol: String, tieBreak: String,
-                 outCol: String = "p_holm", windowMaxRows: Long = 5000000L): DataFrame =
-    // plan-only dispatch — see bhAdjust (holmWindowed ≡ holmRanged
-    // bit-equal, PropertySpec)
-    if (planRowEstimate(df) <= windowMaxRows) holmWindowed(df, pCol, tieBreak, outCol)
-    else holmRanged(df, pCol, tieBreak, outCol)
+                 outCol: String = "p_holm"): DataFrame =
+    RangedScan.run(df, holmScan(pCol, tieBreak, outCol))
+
+  /** BH as a prefix scan: largest p first, so a row's running min covers
+    * every larger p, and its ascending rank is total − before.
+    */
+  private[graft] def bhScan(pCol: String, tieBreak: String, outCol: String = "fdr",
+                            scale: Double = 1.0): RangedScan.Scan =
+    pValueScan(bhAdjustWindowed(_, pCol, tieBreak, outCol, scale),
+      Seq(col(pCol).desc_nulls_last, col(tieBreak).desc), pCol, outCol,
+      RangedScan.Fold((p, before, total) =>
+        p.asInstanceOf[Double] * scale * total.toDouble / (total - before).toDouble,
+        Double.PositiveInfinity, (a, b) => if (b < a) b else a))
+
+  /** Holm as a prefix scan: smallest p first, rank before + 1, running max. */
+  private[graft] def holmScan(pCol: String, tieBreak: String,
+                              outCol: String = "p_holm"): RangedScan.Scan =
+    pValueScan(holmWindowed(_, pCol, tieBreak, outCol),
+      Seq(col(pCol).asc_nulls_last, col(tieBreak).asc), pCol, outCol,
+      RangedScan.Fold((p, before, total) =>
+        p.asInstanceOf[Double] * (total - before).toDouble,
+        Double.NegativeInfinity, (a, b) => if (b > a) b else a))
+
+  /** The p.adjust shape BH and Holm share: p read as a double, one unit of
+    * weight per non-null p (so before/total count non-null p-values), a
+    * null p left out of the fold and emitted as null, the fold clamped at 1.
+    */
+  private def pValueScan(windowed: DataFrame => DataFrame, order: Seq[Column],
+                         pCol: String, outCol: String,
+                         fold: RangedScan.Fold): RangedScan.Scan =
+    RangedScan.Scan(windowed, order, pCol, col(pCol).cast("double"),
+      Seq(StructField(outCol, DoubleType)),
+      weight = p => if (p == null) 0L else 1L,
+      fold = Some(fold.copy(value = (p, before, total) =>
+        if (p == null) fold.zero else fold.value(p, before, total))),
+      emit = (p, _, run) => Seq(if (p == null) null else math.min(run, 1.0)))
 
   private[graft] def holmWindowed(df: DataFrame, pCol: String, tieBreak: String,
                                   outCol: String = "p_holm"): DataFrame = {
-    val wRank = Window.orderBy(col(pCol).asc, col(tieBreak).asc)
+    val wRank = Window.orderBy(col(pCol).asc_nulls_last, col(tieBreak).asc)
     val wAll = Window.partitionBy()
     val wMax = Window.orderBy(col("__rn").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df.withColumn("__rn", row_number().over(wRank))
-      .withColumn("__n", count(lit(1)).over(wAll))
+      .withColumn("__n", count(col(pCol)).over(wAll))
       .withColumn("__hm",
         col(pCol) * (col("__n") - col("__rn") + 1L).cast("double"))
-      .withColumn(outCol, least(max(col("__hm")).over(wMax), lit(1.0)))
+      .withColumn(outCol,
+        when(col(pCol).isNotNull, least(max(col("__hm")).over(wMax), lit(1.0))))
       .drop("__rn", "__n", "__hm")
-  }
-
-  /** Range-partitioned two-pass Holm — the bhAdjustRanged mirror with the
-    * directions flipped: ascending iteration, per-partition raw maxima,
-    * PREFIX maxima from earlier partitions seeding each partition's
-    * running max. Driver state is O(partitions).
-    */
-  private[graft] def holmRanged(df: DataFrame, pCol: String, tieBreak: String,
-                                outCol: String = "p_holm",
-                                numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sorted = Caches.track(df
-      .withColumn(pCol, col(pCol).cast("double"))
-      .repartitionByRange(parts, col(pCol).asc, col(tieBreak).asc)
-      .sortWithinPartitions(col(pCol).asc, col(tieBreak).asc)
-      .persist())
-    val pIdx = sorted.schema.fieldIndex(pCol)
-    val cnts = sorted.groupBy(spark_partition_id().as("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val total = cnts.values.sum
-    // lowest global rank (1-based) inside each partition
-    val rankLow = (0 until parts).map { pid =>
-      pid -> ((0 until pid).map(q => cnts.getOrElse(q, 0L)).sum + 1L)
-    }.toMap
-    val bLow = spark.sparkContext.broadcast(rankLow)
-    val bTotal = total
-    val maxRaw = sorted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var mx = Double.NegativeInfinity
-      var rank = bLow.value.getOrElse(pid, 1L)
-      it.foreach { r =>
-        val hm = r.getDouble(pIdx) * (bTotal - rank + 1L).toDouble
-        rank += 1
-        if (hm > mx) mx = hm
-      }
-      Iterator.single((pid, mx))
-    }.collect().toMap
-    // prefix maxima: the largest raw value among all SMALLER p-values
-    val prefix = (0 until parts).map { pid =>
-      val earlier = (0 until pid).map(q => maxRaw.getOrElse(q, Double.NegativeInfinity))
-      pid -> (if (earlier.isEmpty) Double.NegativeInfinity else earlier.max)
-    }.toMap
-    val bPrefix = spark.sparkContext.broadcast(prefix)
-    val outSchema = sorted.schema.add(outCol, DoubleType, nullable = false)
-    sorted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var rank = bLow.value.getOrElse(pid, 1L)
-      var run = bPrefix.value.getOrElse(pid, Double.NegativeInfinity)
-      it.map { r =>
-        val hm = r.getDouble(pIdx) * (bTotal - rank + 1L).toDouble
-        rank += 1
-        if (hm > run) run = hm
-        Row.fromSeq(r.toSeq :+ math.min(run, 1.0))
-      }
-    }(Encoders.row(outSchema))
   }
 
   /** Windowed BH — one single-partition sort; right up to ~1e7 result rows. */
   private[graft] def bhAdjustWindowed(df: DataFrame, pCol: String, tieBreak: String,
                                       outCol: String = "fdr",
                                       scale: Double = 1.0): DataFrame = {
-    val wRank = Window.orderBy(col(pCol).asc, col(tieBreak).asc)
+    val wRank = Window.orderBy(col(pCol).asc_nulls_last, col(tieBreak).asc)
     val wAll = Window.partitionBy()
     val wMin = Window.orderBy(col("__rn").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df.withColumn("__rn", row_number().over(wRank))
-      .withColumn("__n", count(lit(1)).over(wAll))
+      .withColumn("__n", count(col(pCol)).over(wAll))
       .withColumn("__bh", col(pCol) * lit(scale) * col("__n").cast("double") / col("__rn").cast("double"))
-      .withColumn(outCol, least(min(col("__bh")).over(wMin), lit(1.0)))
+      .withColumn(outCol,
+        when(col(pCol).isNotNull, least(min(col("__bh")).over(wMin), lit(1.0))))
       .drop("__rn", "__n", "__bh")
-  }
-
-  /** Range-partitioned two-pass BH — the 100 TB path. One range shuffle on
-    * (p, tieBreak), then two tiny driver reduces (per-partition row counts →
-    * rank offsets; per-partition BH minima → suffix minima) and one
-    * partition-local pass that assigns rank = offset − i and folds the
-    * running suffix-min. Driver state is O(partitions), never O(rows).
-    */
-  private[graft] def bhAdjustRanged(df: DataFrame, pCol: String, tieBreak: String,
-                                    outCol: String = "fdr",
-                                    numPartitions: Int = 0,
-                                    scale: Double = 1.0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // Sort DESC within ASC range partitions: partition 0 holds the smallest
-    // p-values, but each partition is iterated largest-p-first so the
-    // suffix-min folds in one forward pass.
-    // Tracked, not try/finally-released: the returned pass-3 plan is lazy and
-    // still reads `sorted` — an eager unpersist here would force the caller's
-    // action to redo the range shuffle + sort. The harness releases it after
-    // the query's final action (ops.Caches contract).
-    // normalize p to a non-null DoubleType up front: pass 2/3 decode rows
-    // with getDouble, and the windowed sibling accepts any numeric — the
-    // dispatch must not change accepted inputs at the size threshold
-    val sorted = Caches.track(df
-      .withColumn(pCol, col(pCol).cast("double"))
-      .filter(col(pCol).isNotNull)
-      .repartitionByRange(parts, col(pCol).asc, col(tieBreak).asc)
-      .sortWithinPartitions(col(pCol).desc, col(tieBreak).desc)
-      .persist())
-    val pIdx = sorted.schema.fieldIndex(pCol)
-    // Pass 1 (O(partitions) to driver): row count per range partition.
-    val cnts = sorted.groupBy(spark_partition_id().as("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val total = cnts.values.sum
-    val totalD = total.toDouble
-    // Highest global rank inside each partition (ranks ascend with pid).
-    val rankHigh = (0 until parts).map { pid =>
-      pid -> (0 to pid).map(q => cnts.getOrElse(q, 0L)).sum
-    }.toMap
-    val bHigh = spark.sparkContext.broadcast(rankHigh)
-    // Pass 2 (O(partitions) to driver): min raw-BH value per partition.
-    val minBh = sorted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var mn = Double.PositiveInfinity
-      var i = 0L
-      val high = bHigh.value.getOrElse(pid, 0L)
-      it.foreach { r =>
-        val bh = r.getDouble(pIdx) * scale * totalD / (high - i).toDouble
-        i += 1
-        if (bh < mn) mn = bh
-      }
-      Iterator.single((pid, mn))
-    }.collect().toMap
-    // Suffix minima: the smallest raw-BH among all LARGER p-values.
-    val suffix = (0 until parts).map { pid =>
-      val later = (pid + 1 until parts).map(q => minBh.getOrElse(q, Double.PositiveInfinity))
-      pid -> (if (later.isEmpty) Double.PositiveInfinity else later.min)
-    }.toMap
-    val bSuffix = spark.sparkContext.broadcast(suffix)
-    // Pass 3: emit fdr = min(running suffix-min, 1).
-    val outSchema = sorted.schema.add(outCol, DoubleType, nullable = false)
-    sorted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val high = bHigh.value.getOrElse(pid, 0L)
-      var run = bSuffix.value.getOrElse(pid, Double.PositiveInfinity)
-      var i = 0L
-      it.map { r =>
-        val bh = r.getDouble(pIdx) * scale * totalD / (high - i).toDouble
-        i += 1
-        if (bh < run) run = bh
-        Row.fromSeq(r.toSeq :+ math.min(run, 1.0))
-      }
-    }(Encoders.row(outSchema))
   }
 
   /** Per-group BH — FDR within each `byCol` slice (the multi-contrast
@@ -561,11 +415,17 @@ object Analytic {
     * cost, so the local path declines and the caller falls through.
     */
   private val SpearmanLocalEventBudget = 300000000L
-  private val SpearmanPackBits = 40 // packed entry: sid << 40 | ar2 (ar2 < 2²⁰ under MaxRows)
+  private val SpearmanPackBits = 40 // packed entry: sid << 40 | ar2 (ar2 < 2²² under MaxRows)
+
+  private def spearmanWithinBudget(groups: Array[Array[Long]]): Boolean =
+    groups.foldLeft(0L)((e, g) => e + g.length.toLong * (g.length - 1) / 2) <=
+      SpearmanLocalEventBudget
 
   /** Collect the persisted rank table and group it per probe as packed
     * (sampleIndex << 40 | ar2) longs. Caller guarantees rows ≤
-    * [[SpearmanLocalMaxRows]] (which bounds ar2 < 2²⁰ ≪ 2⁴⁰).
+    * [[SpearmanLocalMaxRows]] (which bounds ar2 ≤ 2·MaxRows+1 < 2²² ≪ 2⁴⁰).
+    * Rows with a null sample id are skipped, as the distributed plan's
+    * sample-dictionary join drops them.
     */
   private def spearmanCollectGroups(rb: DataFrame, probeCol: String,
       sampleCol: String, sampleIds: Array[String])
@@ -574,12 +434,13 @@ object Analytic {
     sampleIds.zipWithIndex.foreach { case (s, i) => sid.put(s, i) }
     val byProbe = new java.util.HashMap[String,
       scala.collection.mutable.ArrayBuffer[Long]]()
-    rb.select(col(probeCol), col(sampleCol), col("ar2")).collect().foreach { r =>
-      val s = sid.get(r.getString(1)).toLong
-      byProbe.computeIfAbsent(r.getString(0),
-        _ => new scala.collection.mutable.ArrayBuffer[Long]()) +=
-        ((s << SpearmanPackBits) | r.getLong(2))
-    }
+    rb.select(col(probeCol), col(sampleCol), col("ar2")).collect()
+      .filterNot(_.isNullAt(1)).foreach { r =>
+        val s = sid.get(r.getString(1)).toLong
+        byProbe.computeIfAbsent(r.getString(0),
+          _ => new scala.collection.mutable.ArrayBuffer[Long]()) +=
+          ((s << SpearmanPackBits) | r.getLong(2))
+      }
     val probes = new Array[String](byProbe.size())
     val groups = new Array[Array[Long]](byProbe.size())
     var i = 0
@@ -611,10 +472,8 @@ object Analytic {
   private def spearmanPairsLocalFrom(spark: org.apache.spark.sql.SparkSession,
       groups: Array[Array[Long]], sampleIds: Array[String],
       cand: java.util.HashSet[java.lang.Long], tau: Double): Option[DataFrame] = {
+    if (!spearmanWithinBudget(groups)) return None
     val nS = sampleIds.length
-    var events = 0L
-    groups.foreach(g => events += g.length.toLong * (g.length - 1) / 2)
-    if (events > SpearmanLocalEventBudget) return None
     val mask = (1L << SpearmanPackBits) - 1
     val cells = nS * nS
     val cnt = new Array[Long](cells)
@@ -712,6 +571,8 @@ object Analytic {
       sampleCol: String, sampleIds: Array[String], bands: Int, r: Int,
       tau: Double): Option[DataFrame] = {
     val (probes, groups) = spearmanCollectGroups(rb, probeCol, sampleCol, sampleIds)
+    // the pair-event budget check, before any sketch work
+    if (!spearmanWithinBudget(groups)) return None
     val nS = sampleIds.length
     val nbits = bands * r
     val mask = (1L << SpearmanPackBits) - 1
@@ -877,7 +738,7 @@ object Analytic {
     val useDecimal = forceDecimal.getOrElse(
       (if (perSample.isEmpty) 0L else perSample.map(_.getLong(1)).max) > 1300000L)
     val width = if (useDecimal) "decimal(38,0)" else "bigint"
-    val sampleIds = perSample.map(_.getString(0)).sorted
+    val sampleIds = perSample.filterNot(_.isNullAt(0)).map(_.getString(0)).sorted
     val nSamples = sampleIds.length.toLong
     val r = (4 to 30).find(b => (1L << b) * 4 >= nSamples).getOrElse(30)
     // Driver-local size dispatch (r10, see spearmanMatrix): the sketch +

@@ -72,46 +72,51 @@ object Pca {
       .setInputCols(topProbes.toArray).setOutputCol("features")
       .transform(wide)
       .persist()
-    val scaler = fitWithRetry("StandardScaler.fit") {
-      new StandardScaler().setWithMean(true).setWithStd(scale)
-        .setInputCol("features").setOutputCol("scaled")
-        .fit(assembled)
+    // Released in `finally`, so a throwing fit or eigen step leaves no
+    // cache behind either.
+    var feats: DataFrame = null
+    val (rows, schema) = try {
+      val scaler = fitWithRetry("StandardScaler.fit") {
+        new StandardScaler().setWithMean(true).setWithStd(scale)
+          .setInputCol("features").setOutputCol("scaled")
+          .fit(assembled)
+      }
+      feats = scaler.transform(assembled)
+        .select(col("sample_id"), vector_to_array(col("scaled")).as("x"))
+        .persist()
+
+      // distributed covariance (BLAS, no SVD), driver-side symmetric eigen
+      val cov = new RowMatrix(
+        feats.select("x").rdd.map(r => OldVectors.dense(r.getSeq[Double](0).toArray)))
+        .computeCovariance()
+      val d = cov.numCols
+      val covB = new BDM(d, d, cov.toArray)
+      val es = eigSym(covB) // eigenvalues ascending
+      val total = es.eigenvalues.toArray.map(math.max(_, 0.0)).sum
+      val comps = (1 to k).map { i =>
+        val idx = d - i
+        val v = es.eigenvectors(::, idx).toArray
+        // deterministic orientation: largest-|loading| entry positive
+        val maxAbs = v.maxBy(math.abs)
+        val oriented = if (maxAbs < 0) v.map(-_) else v
+        (oriented, math.max(es.eigenvalues(idx), 0.0) / math.max(total, 1e-300))
+      }
+
+      val projected = comps.zipWithIndex.foldLeft(feats) { case (df, ((v, evr), j)) =>
+        df.withColumn(s"pc${j + 1}",
+            round(aggregate(zip_with(col("x"), typedLit(v.toSeq), (a, b) => a * b),
+              lit(0.0), (acc, e) => acc + e), 6))
+          .withColumn(s"evr${j + 1}", round(lit(evr), 6))
+      }.drop("x").orderBy("sample_id")
+
+      // The result is samples × (1+2k) — the same bounded-by-design axis MDS
+      // already collects — so materialize it here and release the features
+      // cache: no cache block outlives the call.
+      (projected.collect(), projected.schema)
+    } finally {
+      if (feats != null) feats.unpersist(false)
+      assembled.unpersist(false)
     }
-    val feats = scaler.transform(assembled)
-      .select(col("sample_id"), vector_to_array(col("scaled")).as("x"))
-      .persist()
-
-    // distributed covariance (BLAS, no SVD), driver-side symmetric eigen
-    val cov = new RowMatrix(
-      feats.select("x").rdd.map(r => OldVectors.dense(r.getSeq[Double](0).toArray)))
-      .computeCovariance()
-    val d = cov.numCols
-    val covB = new BDM(d, d, cov.toArray)
-    val es = eigSym(covB) // eigenvalues ascending
-    val total = es.eigenvalues.toArray.map(math.max(_, 0.0)).sum
-    val comps = (1 to k).map { i =>
-      val idx = d - i
-      val v = es.eigenvectors(::, idx).toArray
-      // deterministic orientation: largest-|loading| entry positive
-      val maxAbs = v.maxBy(math.abs)
-      val oriented = if (maxAbs < 0) v.map(-_) else v
-      (oriented, math.max(es.eigenvalues(idx), 0.0) / math.max(total, 1e-300))
-    }
-
-    val projected = comps.zipWithIndex.foldLeft(feats) { case (df, ((v, evr), j)) =>
-      df.withColumn(s"pc${j + 1}",
-          round(aggregate(zip_with(col("x"), typedLit(v.toSeq), (a, b) => a * b),
-            lit(0.0), (acc, e) => acc + e), 6))
-        .withColumn(s"evr${j + 1}", round(lit(evr), 6))
-    }.drop("x").orderBy("sample_id")
-
-    // The result is samples × (1+2k) — the same bounded-by-design axis MDS
-    // already collects — so materialize it here and release the features
-    // cache: no cache block outlives the call.
-    val rows = projected.collect()
-    val schema = projected.schema
-    feats.unpersist(false)
-    assembled.unpersist(false)
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
   }
 

@@ -135,4 +135,18 @@ class PcaMdsSpec extends SparkSpec {
     val desc = dim1.sliding(2).forall { case Seq(x, y) => x > y }
     assert(asc || desc, s"dim1 not monotone in planted position: $dim1")
   }
+
+  test("PCA releases both of its caches when the call throws") {
+    val rows = for (p <- 0 until 3; s <- 0 until 4) yield
+      (f"p$p%03d", f"s$s%02d", 0.1 * p + 0.05 * s + 0.01 * ((p * s) % 3))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    // 10 components of 3 features: the eigen step throws, after the
+    // scaler fit and the covariance pass have filled both caches
+    intercept[IndexOutOfBoundsException] {
+      Pca.pcaCoords(rows.toDF("probe_id", "sample_id", "beta"),
+        topK = 3, k = 10, scale = false)
+    }
+    assert(sc.getPersistentRDDs.size == before)
+  }
 }

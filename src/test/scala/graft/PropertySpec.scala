@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.functions.Fns
-import graft.ops.Analytic
+import graft.ops.{Analytic, RangedScan}
 
 /** Property-based invariants (SURVEY.md §5): M-transform round-trip, BH
   * bounds/monotonicity, top-k permutation invariance. Inputs are drawn
@@ -50,10 +50,16 @@ class PropertySpec extends SparkSpec {
       val w = Analytic.bhAdjustWindowed(df, "p", "id")
         .select("id", "fdr").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       // force several range partitions so the offset/suffix-min logic is hit
-      val g = Analytic.bhAdjustRanged(df, "p", "id", numPartitions = 7)
+      val ranged = RangedScan.ranged(df, Analytic.bhScan("p", "id"), numPartitions = 7)
+      val g = ranged
         .select("id", "fdr").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(g.keySet == w.keySet)
       g.foreach { case (k, f) => assert(f == w(k), s"$k: ranged $f != windowed ${w(k)}") }
+      // a downstream coalesce runs the emit of every range partition in one
+      // task; each row still finds its own partition's offsets
+      val merged = ranged.coalesce(1)
+        .select("id", "fdr").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(merged == g)
     }
   }
 
@@ -77,8 +83,8 @@ class PropertySpec extends SparkSpec {
         .select("id", "fdr").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       by.foreach { case (id, f) => assert(f >= bh(id) - 1e-15) }
       // ranged path bit-equality at the same scale factor
-      val g = Analytic.bhAdjustRanged(df, "p", "id", outCol = "fdr_by",
-          numPartitions = 5, scale = h)
+      val g = RangedScan.ranged(df, Analytic.bhScan("p", "id", "fdr_by", scale = h),
+          numPartitions = 5)
         .select("id", "fdr_by").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       g.foreach { case (id, f) => assert(f == by(id)) }
     }
@@ -99,9 +105,39 @@ class PropertySpec extends SparkSpec {
       exp.foreach { case (id, f) => assert(got(id) == f, s"$id: $f vs ${got(id)}") }
       got.foreach { case (id, f) =>
         assert(f >= ps(id.drop(1).toInt) - 1e-15) } // adjusted ≥ raw
-      val g = Analytic.holmRanged(df, "p", "id", numPartitions = 6)
+      val g = RangedScan.ranged(df, Analytic.holmScan("p", "id"), numPartitions = 6)
         .select("id", "p_holm").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       g.foreach { case (id, f) => assert(f == got(id)) }
+    }
+  }
+
+  test("property: null p-values adjust to null and leave the non-null adjustment unchanged, both paths") {
+    // R's p.adjust: a null p gives a null output and n counts the non-null
+    // p-values only — so every non-null row must equal the adjustment of
+    // the non-null subset, on the windowed twin and the ranged kernel alike
+    samples(Gen.listOfN(120, Gen.option(Gen.choose(0.0, 1.0))), 4).foreach { ps =>
+      val df = ps.zipWithIndex.map { case (p, i) => (f"k$i%04d", p) }.toDF("id", "p")
+      val present = df.filter(col("p").isNotNull)
+      def m(d: org.apache.spark.sql.DataFrame, out: String) = d.select("id", out).collect()
+        .map(r => r.getString(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+      Seq(Analytic.bhScan("p", "id"), Analytic.holmScan("p", "id"),
+          Analytic.bhScan("p", "id", "fdr_by", scale = 2.5)).foreach { scan =>
+        val out = scan.out.head.name
+        val w = m(scan.windowed(df), out)
+        val g = m(RangedScan.ranged(df, scan, numPartitions = 5), out)
+        val subset = m(scan.windowed(present), out)
+        assert(g == w, s"$out: ranged != windowed")
+        assert(w.size == ps.size)
+        ps.zipWithIndex.foreach { case (p, i) =>
+          val id = f"k$i%04d"
+          assert(w(id) == p.flatMap(_ => subset(id)), s"$out $id: ${w(id)} vs subset ${subset.get(id)}")
+        }
+      }
+      // BY's harmonic factor counts the non-null p-values too
+      val by = m(Analytic.byAdjust(df, "p", "id"), "fdr_by")
+      val bySubset = m(Analytic.byAdjust(present, "p", "id"), "fdr_by")
+      by.foreach { case (id, f) => assert(f == bySubset.get(id).flatten, id) }
+      graft.ops.Caches.releaseAll()
     }
   }
 
@@ -368,8 +404,8 @@ class PropertySpec extends SparkSpec {
         .select("id", "cum_before", "selected").collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getBoolean(2))).toMap
       val w = m(Curation.tokenBudgetWindowed(df, "score", "tokens", "id", budget))
-      val g = m(Curation.tokenBudgetRanged(df, "score", "tokens", "id", budget,
-        numPartitions = 7))
+      val g = m(RangedScan.ranged(df,
+        Curation.tokenBudgetScan("score", "tokens", "id", budget), numPartitions = 7))
       assert(g.keySet == w.keySet)
       g.foreach { case (k, v) => assert(v == w(k), s"$k: ranged $v != windowed ${w(k)}") }
       // the greedy invariant: selected docs' cum_before all precede the budget

@@ -288,4 +288,27 @@ class SimilaritySpec extends SparkSpec {
     assert(byRank(1)._1 == 0.0)
     assert(byRank(2)._1 > 0.0 && byRank(2)._1 < 1.0)
   }
+
+  test("spearman kernels skip rows with a null sample id, local and distributed") {
+    import graft.ops.Analytic
+    val clean = (for (p <- 0 until 20; s <- 0 until 4) yield
+      (f"p$p%03d", s"s$s", ((p * 7 + s * s * 3) % 11) / 11.0))
+      .toDF("probe_id", "sample_id", "beta")
+    val withNull = clean.union(Seq(("p000", null: String, 0.3), ("p001", null: String, 0.9))
+      .toDF("probe_id", "sample_id", "beta"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("sa", "sb").collect().toSeq
+    val expected = rows(Analytic.spearmanMatrix(clean, "probe_id", "sample_id", "beta"))
+    assert(expected.nonEmpty)
+    // the small input takes the driver-local path; Some(false) pins the distributed one
+    assert(rows(Analytic.spearmanMatrix(withNull, "probe_id", "sample_id", "beta")) == expected)
+    assert(rows(Analytic.spearmanMatrix(withNull, "probe_id", "sample_id", "beta",
+      forceDecimal = Some(false))) == expected)
+    val thresholded = rows(Analytic.spearmanThresholded(clean, "probe_id", "sample_id",
+      "beta", tau = 0.2))
+    assert(rows(Analytic.spearmanThresholded(withNull, "probe_id", "sample_id",
+      "beta", tau = 0.2)) == thresholded)
+    assert(rows(Analytic.spearmanThresholded(withNull, "probe_id", "sample_id",
+      "beta", tau = 0.2, forceDecimal = Some(false))) == thresholded)
+    graft.ops.Caches.releaseAll()
+  }
 }
