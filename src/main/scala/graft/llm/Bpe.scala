@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * row-local rewrite of the words containing the winning pair. The frontier
   * is localCheckpoint'ed every few rounds so the plan does not grow with
   * the merge count (same lineage discipline as
-  * [[Curation.connectedComponents]]).
+  * [[graft.ops.Graph.connectedComponents]]).
   *
   * Determinism: the argmax tie-break is (count desc, left asc, right asc),
   * so the merge list is reproducible across runs and cluster layouts.

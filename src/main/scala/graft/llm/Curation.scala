@@ -6,12 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField}
 
 /** Corpus-curation operators a training-data pipeline runs after dedup pair
-  * generation: grouping near-dup pairs into clusters (connected components),
-  * deterministic stratified sampling, per-stratum quantile thresholds, and
-  * benchmark decontamination. Everything is join/aggregate-shaped — the only
-  * iteration (label propagation) carries one row per vertex per round and
-  * cuts its lineage every round, so the loop count is the graph diameter,
-  * never the data size.
+  * generation: grouping near-dup pairs into clusters (connected components,
+  * `ops.Graph.connectedComponents`), deterministic stratified sampling,
+  * per-stratum quantile thresholds, and benchmark decontamination.
+  * Everything here is join/aggregate-shaped.
   */
 object Curation {
 
@@ -75,146 +73,6 @@ object Curation {
       }
     }
 
-  /** Connected components over an undirected edge list by min-label
-    * propagation with pointer jumping: every vertex starts as its own
-    * label; each round a vertex adopts the minimum of its own label, its
-    * neighbors' labels, and its label's label (the shortcut step —
-    * label-distance covered doubles per round, so rounds are
-    * O(log diameter) instead of O(diameter), the PRAM shortcutting
-    * technique also underlying large-star/small-star, Kiveris et al.,
-    * SoCC'14). Each round shuffles the edge list against the label table
-    * (the dominant volume) plus two small copies of the touched-vertex
-    * label table for the shortcut self-join — on near-dup graphs the
-    * label table is tiny next to the edges, so the shortcut's insurance
-    * against chain-shaped components costs little. The frontier is
-    * localCheckpoint'ed so the plan does not grow with the iteration
-    * count (on a real cluster, point `spark.checkpoint.dir` at durable
-    * storage and use reliable checkpoints instead).
-    *
-    * @param edges    (srcCol, dstCol) pairs, interpreted undirected
-    * @param vertices single-column frame of all vertex ids (singletons keep
-    *                 their own label and appear as size-1 clusters)
-    * @return (id, cluster) — cluster = min vertex id of the component
-    */
-  def connectedComponents(edges: DataFrame, vertices: DataFrame,
-                          srcCol: String = "doc_a", dstCol: String = "doc_b",
-                          idCol: String = "doc_id", maxIter: Int = 50,
-                          localThreshold: Long = 1000000L): DataFrame = {
-    // The edge list is read once per round — persist it (released by the
-    // harness via ops.Caches) so an expensive upstream (e.g. the Jaccard
-    // pair join) doesn't recompute every iteration. The one-orientation
-    // list persists FIRST: materializing the two-orientation union
-    // directly evaluated the upstream pair join once per union branch
-    // (r9, KernelProbe: the CC stage cost ~2× the pair join; now the
-    // upstream runs once and the doubled view is two cache reads).
-    val edg = graft.ops.Caches.track(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).persist())
-    // Size dispatch (the bhAdjust pattern): near-dup edge lists are a tiny
-    // fraction of the corpus — when they fit on the driver, union-find in
-    // O(E·α) beats paying the iterative loop's per-round shuffle cost
-    // (measured 5.2 s for 590 edges at sf0.1 — all fixed overhead). Above
-    // the threshold the label-propagation loop below takes over; a
-    // CurationSpec property test asserts the two paths are bit-equal.
-    // The dispatch counts the ONE-orientation list and the union persists
-    // BELOW it (r10, the pageRank rule): on the local path the doubled
-    // view's fill and double-width collect were pure materialization
-    // barriers ahead of a driver collect — union-find is orientation-
-    // agnostic, so the local path takes edg directly.
-    if (edg.count() <= localThreshold)
-      return localComponents(edg, vertices, idCol)
-    val und = graft.ops.Caches.track(
-      edg.union(edg.select(col("dst").as("src"), col("src").as("dst")))
-        .persist())
-    // Only edge-touched vertices can ever change label — iterate over that
-    // subgraph and re-attach everything else as singleton clusters at the
-    // end. In a dedup corpus the near-dup fraction is small, so each
-    // round's shuffle carries |touched| rows, not |corpus|.
-    val touched = und.select(col("src").as("id")).distinct()
-    var labels = touched.withColumn("cluster", col("id"))
-      .localCheckpoint()
-    // Convergence via a monotone invariant: Σ labels strictly decreases
-    // every round until the fixpoint, so one tiny aggregate per round
-    // detects it — no join against the previous frontier, no extra count
-    // job. (Labels only ever move down to the component minimum.) The sum
-    // runs in DECIMAL(38,0): hashed 64-bit ids (magnitudes ~1e18, signed)
-    // overflow a Long sum, which throws under Spark's ANSI default.
-    def labelSum(df: org.apache.spark.sql.DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("cluster").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false // touched is nonempty here (undCount > threshold)
-    while (!converged && iter < maxIter) {
-      val prop = und.join(labels, und("src") === labels("id"))
-        .select(col("dst").as("id"), col("cluster"))
-      // pointer jump: my label's current label (labels form a forest
-      // pointing at component minima-so-far; following two hops at once
-      // doubles convergence speed on chains)
-      val short = labels.as("a")
-        .join(labels.select(col("id").as("cluster"),
-          col("cluster").as("cluster2")).as("b"), "cluster")
-        .select(col("a.id").as("id"), col("cluster2").as("cluster"))
-      labels = labels.union(prop).union(short)
-        .groupBy("id").agg(min("cluster").as("cluster"))
-        .localCheckpoint() // one row per vertex; cuts the iterative lineage
-      val s = labelSum(labels)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      iter += 1
-    }
-    // Unconverged labels are silently WRONG (one component reported as
-    // several — the exact leakage leakageFreeSplit exists to prevent), so
-    // fail loudly instead. Diameter > maxIter means the graph is not
-    // dedup-cluster-shaped; raise maxIter or pre-collapse with exact dedup.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds; " +
-          "component diameter exceeds maxIter")
-    val singletons = vertices.select(col(idCol).as("id"))
-      .join(touched, Seq("id"), "left_anti")
-      .withColumn("cluster", col("id"))
-    labels.union(singletons).select(col("id").as(idCol), col("cluster"))
-  }
-
-  /** Small-graph path of [[connectedComponents]]: union-find on the
-    * driver. Union-by-min (the larger root always attaches under the
-    * smaller) makes every root the minimum id of its component — the same
-    * label the propagation loop converges to; path compression keeps find
-    * amortized near-constant. The label map returns as an RDD-backed frame
-    * (not a plan-embedded local relation — it can be millions of rows).
-    * Takes the ONE-orientation edge list (union-find is orientation-
-    * agnostic; a self-loop just registers its vertex, the same label the
-    * propagation path gives it).
-    */
-  private def localComponents(edg: DataFrame, vertices: DataFrame,
-                              idCol: String): DataFrame = {
-    val spark = edg.sparkSession
-    import spark.implicits._
-    val pairs = edg.select(col("src"), col("dst")).as[(Long, Long)].collect()
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    pairs.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val labelRows = parent.keysIterator.map(v => (v, find(v))).toSeq
-    val labels = spark.sparkContext
-      .parallelize(labelRows, math.max(1, labelRows.size / 500000 + 1))
-      .toDF("id", "cluster")
-    val singletons = vertices.select(col(idCol).as("id"))
-      .join(labels.select("id"), Seq("id"), "left_anti")
-      .withColumn("cluster", col("id"))
-    labels.union(singletons).select(col("id").as(idCol), col("cluster"))
-  }
-
   /** Near-dup clustering: n-gram Jaccard pairs above `minJaccard` become
     * edges, components become dedup clusters; emits each doc with its
     * cluster id (min doc_id of the cluster — the kept representative) and
@@ -237,7 +95,7 @@ object Curation {
     val sh = graft.ops.Caches.track(Dedup.shingles(docs).persist())
     val pairs = cap.fold(Dedup.jaccardPairs(sh, minJaccard))(
       c => Dedup.jaccardPairsDfPruned(sh, minJaccard, c))
-    val cc = connectedComponents(pairs, docs.select("doc_id"))
+    val cc = graft.ops.Graph.connectedComponents(pairs, docs.select("doc_id"))
     // cluster_size via a window on the cluster key: one shuffle, vs the
     // two (aggregate + join back) of the groupBy/join formulation.
     cc.withColumn("cluster_size",
@@ -260,24 +118,34 @@ object Curation {
       .drop("__rn")
   }
 
+  /** Total rows up to which [[quantileProfile]] runs exact percentiles. */
+  private val ExactMaxRows = 10000000L
+
   /** Per-stratum quantile profile of a score column — the distribution
     * report a curation run uses to pick quality cutoffs. Size-dispatched
     * like bhAdjust: exact `percentile` buffers every value of a stratum in
     * its aggregation buffer (right answer, bounded memory only while
-    * strata are small), so above `exactMaxRows` TOTAL rows the profile
+    * strata are small), so above [[ExactMaxRows]] TOTAL rows the profile
     * switches to `approx_percentile` — a t-digest sketch with constant
     * per-group memory and mergeable partials, the only shape that
     * survives a 100 TB stratum.
     */
-  def quantileProfile(df: DataFrame, strataCol: String, scoreCol: String,
-                      exactMaxRows: Long = 10000000L): DataFrame = {
+  def quantileProfile(df: DataFrame, strataCol: String,
+                      scoreCol: String): DataFrame =
     // Dispatch count WITHOUT persisting: the input is the caller's frame
     // (persisting it here would register a cache we don't own — see the
     // ops.Caches ownership contract — and materializing a 100 TB input to
     // storage is exactly the cost the sketch path avoids). The price is
     // one extra scan pass; callers with an expensive upstream should
     // persist it themselves.
-    val exact = df.count() <= exactMaxRows
+    quantileProfile(df, strataCol, scoreCol, exact = df.count() <= ExactMaxRows)
+
+  /** [[quantileProfile]] with its path pinned: `exact = false` is the
+    * t-digest sketch.
+    */
+  private[graft] def quantileProfile(df: DataFrame, strataCol: String,
+                                     scoreCol: String,
+                                     exact: Boolean): DataFrame = {
     // the column name is quoted into the SQL string — backticks keep
     // non-identifier names (e.g. "quality-score") as one column reference
     // instead of parsing as arbitrary SQL

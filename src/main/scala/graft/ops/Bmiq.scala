@@ -146,31 +146,40 @@ object Bmiq {
     best
   }
 
-  private def normalizeSample(rows: Array[In], nfit: Int, niter: Int,
-                              minPerType: Int): Iterator[Out] = {
-    val sorted = rows.sortBy(_.probe_id)
+  /** Index of the mixture state with the largest weighted density at `v`. */
+  private def classify(p: Array[(Double, Double, Double)],
+                       d: Array[BetaDistribution], v: Double): Int = {
+    var best = 0; var bestD = -1.0
+    var j = 0
+    while (j < 3) {
+      val dd = p(j)._1 * math.max(d(j).density(v), 1e-300)
+      if (dd > bestD) { bestD = dd; best = j }
+      j += 1
+    }
+    best
+  }
+
+  /** A sample's fitted mixtures: the regularizer and (weight, a, b) per
+    * state for type 1 and type 2.
+    */
+  private final case class Fit(reg: Double => Double,
+                               p1: Array[(Double, Double, Double)],
+                               p2: Array[(Double, Double, Double)])
+
+  /** The pre-fit + EM chain over a probe-id-sorted sample: regularize,
+    * stride-subsample, fit type 1, then fit type 2 from the type-1 class
+    * boundaries shifted by the KDE-mode offsets. None under the
+    * ≥minPerType guard (reference DoBMIQ.R:135-141), where normalization
+    * is identity.
+    */
+  private def fit(sorted: Array[In], nfit: Int, niter: Int,
+                  minPerType: Int): Option[Fit] = {
     val t1 = sorted.filter(_.design_type == 1).map(_.beta)
     val t2 = sorted.filter(_.design_type == 2).map(_.beta)
-    // ≥50-point guard per type (reference DoBMIQ.R:135-141): identity pass-through.
-    if (t1.length < minPerType || t2.length < minPerType)
-      return sorted.iterator.map(r => Out(r.probe_id, r.sample_id, r.beta, r.beta, r.design_type))
-
+    if (t1.length < minPerType || t2.length < minPerType) return None
     val minPos = sorted.map(_.beta).filter(_ > 0).foldLeft(1.0)(math.min)
     val maxSub1 = sorted.map(_.beta).filter(_ < 1).foldLeft(0.0)(math.max)
     def reg(v: Double) = regularize(v, minPos, maxSub1)
-
-    def classify(p: Array[(Double, Double, Double)],
-                 d: Array[BetaDistribution], v: Double): Int = {
-      var best = 0; var bestD = -1.0
-      var j = 0
-      while (j < 3) {
-        val dd = p(j)._1 * math.max(d(j).density(v), 1e-300)
-        if (dd > bestD) { bestD = dd; best = j }
-        j += 1
-      }
-      best
-    }
-
     val t1r = t1.map(reg)
     val t2rAll = t2.map(reg)
     val p1 = fitMixture(strideSample(t1r, nfit), niter)
@@ -196,6 +205,16 @@ object Bmiq {
       if (mod1U.isNaN || mod1M.isNaN || mod2U.isNaN || mod2M.isNaN) (th1Lo, th1Hi)
       else (th1Lo + (mod2U - mod1U), th1Hi + (mod2M - mod1M))
     val p2 = fitMixture(strideSample(t2rAll, nfit), niter, th2Lo, th2Hi)
+    Some(Fit(reg, p1, p2))
+  }
+
+  private def normalizeSample(rows: Array[In], nfit: Int, niter: Int,
+                              minPerType: Int): Iterator[Out] = {
+    val sorted = rows.sortBy(_.probe_id)
+    val fitted = fit(sorted, nfit, niter, minPerType)
+    if (fitted.isEmpty) // the ≥minPerType guard: identity pass-through
+      return sorted.iterator.map(r => Out(r.probe_id, r.sample_id, r.beta, r.beta, r.design_type))
+    val Fit(reg, p1, p2) = fitted.get
     val dists2 = p2.map { case (_, a, b) => new BetaDistribution(a, b) }
 
     val d1U = new BetaDistribution(p1(0)._2, p1(0)._3)
@@ -266,12 +285,6 @@ object Bmiq {
     * (no RNG), which is why this row was "plotting-only" until the
     * plot-data restatement. One row per (sample, design_type, grid point)
     * with per-class contributions; rendering stays out of scope.
-    *
-    * The fit prep below deliberately MIRRORS normalizeSample's pre-fit
-    * steps (sort → regularize → stride-subsample → EM; type-2 thresholds
-    * shifted by the KDE-mode offsets) rather than refactoring that
-    * verified kernel — the two must stay in lockstep, see BmiqSpec's
-    * "diagnostic density matches the normalization fit" test.
     * Distribution shape = bmiq's: flatMapGroups over the sample axis.
     */
   def fittedDensity(beta: DataFrame, manifest: DataFrame, gridN: Int = 100,
@@ -299,52 +312,13 @@ object Bmiq {
       .toDF("sample_id", "design_type", "x", "dens_u", "dens_h", "dens_m", "density")
   }
 
-  /** The pre-fit + EM chain shared semantically with normalizeSample:
-    * returns (type-1 params, type-2 params), or None under the ≥minPerType
-    * guard (where normalization is identity and there is no fit to plot).
+  /** The type-1 and type-2 mixture parameters [[normalizeSample]] fits,
+    * or None under the ≥minPerType guard (where normalization is identity
+    * and there is no fit to plot).
     */
   private[graft] def fitParams(rows: Array[In], nfit: Int, niter: Int, minPerType: Int)
-      : Option[(Array[(Double, Double, Double)], Array[(Double, Double, Double)])] = {
-    val sorted = rows.sortBy(_.probe_id)
-    val t1 = sorted.filter(_.design_type == 1).map(_.beta)
-    val t2 = sorted.filter(_.design_type == 2).map(_.beta)
-    if (t1.length < minPerType || t2.length < minPerType) return None
-    val minPos = sorted.map(_.beta).filter(_ > 0).foldLeft(1.0)(math.min)
-    val maxSub1 = sorted.map(_.beta).filter(_ < 1).foldLeft(0.0)(math.max)
-    def reg(v: Double) = regularize(v, minPos, maxSub1)
-    val t1r = t1.map(reg)
-    val t2rAll = t2.map(reg)
-    val p1 = fitMixture(strideSample(t1r, nfit), niter)
-    val dists1 = p1.map { case (_, a, b) => new BetaDistribution(a, b) }
-    def classify(v: Double): Int = {
-      var best = 0; var bestD = -1.0
-      var j = 0
-      while (j < 3) {
-        val dd = p1(j)._1 * math.max(dists1(j).density(v), 1e-300)
-        if (dd > bestD) { bestD = dd; best = j }
-        j += 1
-      }
-      best
-    }
-    val c1 = t1r.map(classify)
-    def boundary(vals: Array[Double], cls: Array[Int], a: Int, b: Int,
-                 fallback: Double): Double = {
-      val left = vals.zip(cls).collect { case (v, c) if c == a => v }
-      val right = vals.zip(cls).collect { case (v, c) if c == b => v }
-      if (left.isEmpty || right.isEmpty) fallback else (left.max + right.min) / 2
-    }
-    val th1Lo = boundary(t1r, c1, 0, 1, 0.2)
-    val th1Hi = boundary(t1r, c1, 1, 2, 0.75)
-    val mod1U = kdeMode(t1r.zip(c1).collect { case (v, 0) => v })
-    val mod1M = kdeMode(t1r.zip(c1).collect { case (v, 2) => v })
-    val mod2U = kdeMode(t2rAll.filter(_ < 0.4))
-    val mod2M = kdeMode(t2rAll.filter(_ > 0.6))
-    val (th2Lo, th2Hi) =
-      if (mod1U.isNaN || mod1M.isNaN || mod2U.isNaN || mod2M.isNaN) (th1Lo, th1Hi)
-      else (th1Lo + (mod2U - mod1U), th1Hi + (mod2M - mod1M))
-    val p2 = fitMixture(strideSample(t2rAll, nfit), niter, th2Lo, th2Hi)
-    Some((p1, p2))
-  }
+      : Option[(Array[(Double, Double, Double)], Array[(Double, Double, Double)])] =
+    fit(rows.sortBy(_.probe_id), nfit, niter, minPerType).map(f => (f.p1, f.p2))
 
   /** Entry point: long betas + probe manifest (design_type 1|2) →
     * normalized long betas.

@@ -1,15 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Graph analytics over edge lists — the link-analysis tier a web-scale
   * curation pipeline runs to score crawl domains by connectivity (the
   * quality prior used alongside text-level scores; cf. Common Crawl
   * harmonic-centrality ranking). The reference pipeline has no graph
   * operators; this extends the engine the same way the dedup/ANN tier
-  * does, re-using the iterate-with-lineage-cuts shape of
-  * [[graft.llm.Curation.connectedComponents]].
+  * does, and [[connectedComponents]] is the near-dup clustering kernel
+  * behind `llm.Curation.dedupClusters`.
   *
   * PageRank here is FIXED-POINT INTEGER arithmetic: ranks are scaled by
   * 1e12 and every step is int64 add / multiply / floor-divide. Floating
@@ -24,6 +27,15 @@ object Graph {
     * products reach 85 * 1e12 < 2^63.
     */
   val Scale = 1000000000000L
+
+  /** One-orientation edges up to which [[pageRank]], [[shortestPaths]] and
+    * [[connectedComponents]] run on the driver (see [[gated]]). Each
+    * driver-local kernel computes the same integer result as its
+    * distributed loop, so the gate picks a plan, never a result. Below it
+    * the loops' per-round fixed cost (join + aggregate + checkpoint, about
+    * 1 s a round locally: 5.2 s for 590 edges) is all overhead.
+    */
+  private val LocalMaxEdges = 2000000L
 
   /** Undirected customer↔supplier graph from co-occurrence in orders:
     * edge (c, s) iff customer c placed an order containing a lineitem
@@ -57,38 +69,26 @@ object Graph {
     * node and localCheckpoint'ed so the plan does not grow with the
     * iteration count (reliable checkpoints on a real cluster). Undirected
     * means no dangling nodes: every node has in- and out-edges, so no
-    * dangling-mass redistribution pass is needed.
+    * dangling-mass redistribution pass is needed. Small graphs run the
+    * same recurrence on the driver ([[gated]]); GraphSpec pins both paths
+    * to the same output.
     *
     * @param edges (src, dst) pairs, interpreted undirected; must not
     *              contain both orientations of the same pair (bipartite
-    *              namespaced inputs like [[custSuppEdges]] guarantee this)
+    *              namespaced inputs like [[custSuppEdges]] guarantee this);
+    *              a pair with a null endpoint is no edge
     * @return (id, rank) — rank in Scale units, int64
     */
-  def pageRank(edges: DataFrame, iterations: Int = 5,
-               localThreshold: Long = 2000000L): DataFrame = {
-    // Size dispatch (the connectedComponents pattern): integer arithmetic
-    // is order-independent, so the driver-local recurrence is bit-identical
-    // to the distributed one — below the threshold, skip the per-iteration
-    // join/aggregate/checkpoint fixed cost entirely. GraphSpec pins both
-    // paths to the same output.
-    // Only the ONE-orientation list persists above the dispatch (r10): it
-    // serves two actions either way (the dispatch count + the local
-    // collect, or the count + the distributed union fill), so the
-    // across-actions persist rule applies. The r9 shape additionally
-    // persisted the two-orientation union BEFORE the dispatch — on the
-    // local path that second fill (2E rows) plus the doubled-width collect
-    // were pure materialization barriers ahead of a driver collect (driver
-    // host measured g01 1.42 → 2.32 s); an un-persisted variant (count +
-    // collect re-deriving the edge join twice) measured slower still
-    // (1.78 → 1.95 s subset A/B). The union persist moves BELOW the
-    // dispatch, where only the distributed path — whose per-iteration
-    // joins re-read it — pays its fill.
-    val edg = Caches.track(
-      edges.select(col("src"), col("dst")).persist())
-    if (edg.count() <= localThreshold) return pageRankLocal(edg, iterations)
-    val und = Caches.track(
-      edg.union(edg.select(col("dst").as("src"), col("src").as("dst")))
-        .persist())
+  def pageRank(edges: DataFrame, iterations: Int = 5): DataFrame =
+    gated(edges, "src", "dst")(pageRankLocal(_, iterations),
+      pageRankLoop(_, iterations))
+
+  /** [[pageRank]]'s distributed loop at any size. */
+  private[graft] def pageRankDistributed(edges: DataFrame,
+                                         iterations: Int): DataFrame =
+    pageRankLoop(undirected(edgeList(edges, "src", "dst")), iterations)
+
+  private def pageRankLoop(und: DataFrame, iterations: Int): DataFrame = {
     val deg = und.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // One bounded scalar to the driver: the node count feeds the literal
     // teleport term (matches the oracle's count(*) over the degree CTE).
@@ -109,61 +109,30 @@ object Graph {
     ranks
   }
 
-  /** Small-graph path of [[pageRank]]: the identical integer recurrence on
-    * the driver (every step int64 floor-divide/add, so summation order is
-    * irrelevant and the result matches the distributed path bit-for-bit).
-    * Takes the ONE-orientation edge list and doubles it driver-side (each
-    * collected row contributes both directed edges) — half the collect
-    * bytes of shipping the two-orientation union, and no union branch ever
-    * evaluates the upstream derivation a second time.
+  /** The same integer recurrence on the driver: every step is an int64
+    * floor-divide or add, so summation order is irrelevant and the result
+    * matches the distributed loop bit for bit. Each one-orientation edge
+    * carries degree and rank in both directions, exactly as iterating the
+    * two-orientation union does.
     */
-  private def pageRankLocal(edg: DataFrame, iterations: Int): DataFrame = {
-    val spark = edg.sparkSession
-    import spark.implicits._
-    val rows = edg.select(col("src"), col("dst")).collect()
-    // dense re-index so the iteration runs over primitive arrays (boxed
-    // Long->Long maps measured ~5x slower on a 1M-edge graph). Discovery
-    // order (src then dst per row) matches the old und collect, whose
-    // swapped branch introduced no new ids — but the output is an
-    // unordered (id, rank) set either way.
-    val index = scala.collection.mutable.LongMap.empty[Int]
-    val srcIdx = new Array[Int](rows.length)
-    val dstIdx = new Array[Int](rows.length)
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def idx(v: Long): Int =
-      index.getOrElseUpdate(v, { val i = ids.length; ids += v; i })
-    var e = 0
-    while (e < rows.length) {
-      srcIdx(e) = idx(rows(e).getLong(0))
-      dstIdx(e) = idx(rows(e).getLong(1))
-      e += 1
-    }
-    val n = ids.length.toLong
+  private def pageRankLocal(g: LocalGraph, iterations: Int): DataFrame = {
+    val n = g.n.toLong
     require(n > 0, "pageRank: empty graph")
-    // each undirected edge is two directed edges: degree and rank flow
-    // accumulate in both directions, identical to iterating the union
-    val deg = new Array[Long](ids.length)
-    e = 0
-    while (e < rows.length) {
-      deg(srcIdx(e)) += 1L; deg(dstIdx(e)) += 1L
-      e += 1
-    }
+    val deg = g.degrees
     val base = 15L * Scale / (100L * n)
-    var ranks = Array.fill(ids.length)(Scale / n)
+    var ranks = Array.fill(g.n)(Scale / n)
     for (_ <- 1 to iterations) {
-      val sums = new Array[Long](ids.length)
-      e = 0
-      while (e < rows.length) {
-        sums(dstIdx(e)) += ranks(srcIdx(e)) / deg(srcIdx(e))
-        sums(srcIdx(e)) += ranks(dstIdx(e)) / deg(dstIdx(e))
+      val sums = new Array[Long](g.n)
+      var e = 0
+      while (e < g.m) {
+        sums(g.dst(e)) += ranks(g.src(e)) / deg(g.src(e))
+        sums(g.src(e)) += ranks(g.dst(e)) / deg(g.dst(e))
         e += 1
       }
       ranks = sums.map(s => base + 85L * s / 100L)
     }
-    val out = ids.indices.map(i => (ids(i), ranks(i)))
-    spark.sparkContext
-      .parallelize(out, math.max(1, out.size / 500000 + 1))
-      .toDF("id", "rank")
+    g.emit(Array.tabulate(g.n)(i => (g.ids(i), ranks(i))),
+      StructField("rank", LongType, nullable = true))
   }
 
   /** DuckDB oracle for [[pageRank]] over [[custSuppEdges]]: the identical
@@ -250,33 +219,33 @@ object Graph {
     * stays constant-size in hops (reliable checkpoints on a real cluster),
     * and each round is two co-keyed shuffles — never a whole-graph
     * re-walk. Equivalent to min-dist over all ≤maxHops walks, which is
-    * what the recursive-CTE oracle computes.
+    * what the recursive-CTE oracle computes. Small graphs walk the same
+    * levels on the driver ([[gated]]).
     *
     * @param edges (src, dst) pairs, interpreted undirected (both
-    *              orientations are generated internally)
-    * @param seeds single-column `id` frame, distance-0 nodes
+    *              orientations are generated internally); a pair with a
+    *              null endpoint is no edge
+    * @param seeds single-column `id` frame, distance-0 nodes (a null id
+    *              is no node)
     * @return (id, dist) for every node within maxHops of a seed
     */
-  def shortestPaths(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-                    localThreshold: Long = 2000000L): DataFrame = {
-    // one-orientation list persists first — see pageRank (it serves the
-    // dispatch count plus either the local collect or the union fill)
-    val edg = Caches.track(
-      edges.select(col("src"), col("dst")).persist())
-    // Size dispatch (r10, the pageRank/CC pattern): BFS min-dist over
-    // integer hops is order-free, so the driver-local level walk is
-    // result-identical to the distributed loop — and below the threshold
-    // the loop is maxHops × (join + distinct + anti-join + union +
-    // 2 localCheckpoints) of fixed job cost over near-empty shuffles.
-    // GraphSpec pins both paths to the same output; the g04 oracle
-    // replays the recursive CTE.
-    if (edg.count() <= localThreshold)
-      return shortestPathsLocal(edg, seeds, maxHops)
-    val und = Caches.track(
-      edg.union(edg.select(col("dst").as("src"), col("src").as("dst")))
-        .persist())
-    var settled = seeds.select(col("id")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint()
+  def shortestPaths(edges: DataFrame, seeds: DataFrame,
+                    maxHops: Int): DataFrame =
+    gated(edges, "src", "dst")(shortestPathsLocal(_, seeds, maxHops),
+      shortestPathsLoop(_, seeds, maxHops))
+
+  /** [[shortestPaths]]'s distributed loop at any size. */
+  private[graft] def shortestPathsDistributed(edges: DataFrame,
+                                              seeds: DataFrame,
+                                              maxHops: Int): DataFrame =
+    shortestPathsLoop(undirected(edgeList(edges, "src", "dst")), seeds, maxHops)
+
+  private def seedIds(seeds: DataFrame): DataFrame =
+    seeds.select(col("id")).where(col("id").isNotNull).distinct()
+
+  private def shortestPathsLoop(und: DataFrame, seeds: DataFrame,
+                                maxHops: Int): DataFrame = {
+    var settled = seedIds(seeds).withColumn("dist", lit(0)).localCheckpoint()
     var frontier = settled
     var hop = 1
     while (hop <= maxHops && !frontier.isEmpty) {
@@ -292,87 +261,257 @@ object Graph {
     settled
   }
 
-  /** Small-graph path of [[shortestPaths]]: collect the one-orientation
-    * edge list, walk BFS levels over CSR adjacency on the driver. Hop
-    * distances are unique integers (min over walks), so the settled set
-    * is identical to the distributed loop's — including seeds that touch
-    * no edge, which settle at distance 0 in both paths.
+  /** The same level walk over CSR adjacency on the driver. Hop distances
+    * are unique integers (min over walks), so the settled set is the
+    * distributed loop's — including seeds that touch no edge, which
+    * settle at distance 0 on both paths.
     */
-  private def shortestPathsLocal(edg: DataFrame, seeds: DataFrame,
+  private def shortestPathsLocal(g: LocalGraph, seeds: DataFrame,
                                  maxHops: Int): DataFrame = {
-    val spark = edg.sparkSession
-    val rows = edg.collect()
-    val index = scala.collection.mutable.LongMap.empty[Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def idx(v: Long): Int =
-      index.getOrElseUpdate(v, { val i = ids.length; ids += v; i })
-    val srcIdx = new Array[Int](rows.length)
-    val dstIdx = new Array[Int](rows.length)
-    var e = 0
-    while (e < rows.length) {
-      srcIdx(e) = idx(rows(e).getLong(0))
-      dstIdx(e) = idx(rows(e).getLong(1))
-      e += 1
-    }
-    val n = ids.length
-    // CSR over both orientations
-    val deg = new Array[Int](n)
-    e = 0
-    while (e < rows.length) { deg(srcIdx(e)) += 1; deg(dstIdx(e)) += 1; e += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val adj = new Array[Int](2 * rows.length)
-    val fill = java.util.Arrays.copyOf(off, n)
-    e = 0
-    while (e < rows.length) {
-      adj(fill(srcIdx(e))) = dstIdx(e); fill(srcIdx(e)) += 1
-      adj(fill(dstIdx(e))) = srcIdx(e); fill(dstIdx(e)) += 1
-      e += 1
-    }
-    val seedIds = seeds.select(col("id")).distinct().collect().map(_.getLong(0))
-    val dist = new Array[Int](n)
-    java.util.Arrays.fill(dist, Int.MaxValue)
-    var frontier = scala.collection.mutable.ArrayBuffer.empty[Int]
-    // seeds settle at 0 whether or not they touch an edge; only in-graph
-    // seeds can expand
-    seedIds.foreach { s =>
-      index.get(s).foreach { si => dist(si) = 0; frontier += si }
-    }
-    var hop = 1
-    while (hop <= maxHops && frontier.nonEmpty) {
-      val next = scala.collection.mutable.ArrayBuffer.empty[Int]
-      frontier.foreach { u =>
-        var k = off(u)
-        while (k < off(u + 1)) {
-          val v = adj(k)
-          if (dist(v) == Int.MaxValue) { dist(v) = hop; next += v }
-          k += 1
-        }
+    val (off, adj) = g.csr
+    val seedList = seedIds(seeds).collect().map(_.getLong(0))
+    val dist = Array.fill(g.n)(Int.MaxValue)
+    // only in-graph seeds can expand
+    var frontier = seedList.map(g.indexOf).filter(_ >= 0)
+    frontier.foreach(dist(_) = 0)
+    for (hop <- 1 to maxHops) {
+      val next = mutable.ArrayBuilder.make[Int]
+      for (u <- frontier; k <- off(u) until off(u + 1)
+           if dist(adj(k)) == Int.MaxValue) {
+        dist(adj(k)) = hop; next += adj(k)
       }
-      frontier = next
-      hop += 1
+      frontier = next.result()
     }
-    val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    val seen = scala.collection.mutable.LongMap.empty[Boolean]
-    i = 0
-    while (i < n) {
-      if (dist(i) != Int.MaxValue) {
-        out += org.apache.spark.sql.Row(ids(i), dist(i))
-        seen(ids(i)) = true
+    val reached = g.ids.indices.filter(dist(_) != Int.MaxValue)
+      .map(i => (g.ids(i), dist(i)))
+    val isolated = seedList.filter(g.indexOf(_) < 0).map((_, 0))
+    g.emit(reached ++ isolated, StructField("dist", IntegerType, nullable = false),
+      seeds.schema("id").nullable)
+  }
+
+  /** Connected components over an undirected edge list by min-label
+    * propagation with pointer jumping: every vertex starts as its own
+    * label; each round a vertex adopts the minimum of its own label, its
+    * neighbors' labels, and its label's label (the shortcut step —
+    * label-distance covered doubles per round, so rounds are
+    * O(log diameter) instead of O(diameter), the PRAM shortcutting
+    * technique also underlying large-star/small-star, Kiveris et al.,
+    * SoCC'14). Each round shuffles the edge list against the label table
+    * (the dominant volume) plus two small copies of the touched-vertex
+    * label table for the shortcut self-join — on near-dup graphs the
+    * label table is tiny next to the edges, so the shortcut's insurance
+    * against chain-shaped components costs little. The frontier is
+    * localCheckpoint'ed so the plan does not grow with the iteration
+    * count (on a real cluster, point `spark.checkpoint.dir` at durable
+    * storage and use reliable checkpoints instead). Near-dup edge lists
+    * are a tiny fraction of the corpus: when they fit on the driver,
+    * union-find replaces the loop ([[gated]]; measured 5.2 s of pure
+    * per-round overhead for 590 edges at sf0.1).
+    *
+    * @param edges    (srcCol, dstCol) pairs, interpreted undirected; a
+    *                 pair with a null endpoint is no edge
+    * @param vertices single-column frame of all vertex ids (singletons keep
+    *                 their own label and appear as size-1 clusters)
+    * @return (id, cluster) — cluster = min vertex id of the component
+    */
+  def connectedComponents(edges: DataFrame, vertices: DataFrame,
+                          srcCol: String = "doc_a", dstCol: String = "doc_b",
+                          idCol: String = "doc_id",
+                          maxIter: Int = 50): DataFrame =
+    gated(edges, srcCol, dstCol)(componentsLocal(_, vertices, idCol),
+      componentsLoop(_, vertices, idCol, maxIter))
+
+  /** [[connectedComponents]]' distributed loop at any size. */
+  private[graft] def connectedComponentsDistributed(
+      edges: DataFrame, vertices: DataFrame, srcCol: String = "doc_a",
+      dstCol: String = "doc_b", idCol: String = "doc_id",
+      maxIter: Int = 50): DataFrame =
+    componentsLoop(undirected(edgeList(edges, srcCol, dstCol)), vertices,
+      idCol, maxIter)
+
+  private def componentsLoop(und: DataFrame, vertices: DataFrame,
+                             idCol: String, maxIter: Int): DataFrame = {
+    // Only edge-touched vertices can ever change label — iterate over that
+    // subgraph and re-attach everything else as singleton clusters at the
+    // end. In a dedup corpus the near-dup fraction is small, so each
+    // round's shuffle carries |touched| rows, not |corpus|.
+    var labels = und.select(col("src").as("id")).distinct()
+      .withColumn("cluster", col("id")).localCheckpoint()
+    // Convergence via a monotone invariant: Σ labels strictly decreases
+    // every round until the fixpoint, so one tiny aggregate per round
+    // detects it — no join against the previous frontier, no extra count
+    // job. (Labels only ever move down to the component minimum.) The sum
+    // runs in DECIMAL(38,0): hashed 64-bit ids (magnitudes ~1e18, signed)
+    // overflow a Long sum, which throws under Spark's ANSI default.
+    def labelSum(df: DataFrame): java.math.BigDecimal =
+      df.agg(coalesce(sum(col("cluster").cast("decimal(38,0)")),
+        lit(java.math.BigDecimal.ZERO))).head().getDecimal(0)
+    var prevSum = labelSum(labels)
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIter) {
+      val prop = und.join(labels, und("src") === labels("id"))
+        .select(col("dst").as("id"), col("cluster"))
+      // pointer jump: my label's current label (labels form a forest
+      // pointing at component minima-so-far; following two hops at once
+      // doubles convergence speed on chains)
+      val short = labels.as("a")
+        .join(labels.select(col("id").as("cluster"),
+          col("cluster").as("cluster2")).as("b"), "cluster")
+        .select(col("a.id").as("id"), col("cluster2").as("cluster"))
+      labels = labels.union(prop).union(short)
+        .groupBy("id").agg(min("cluster").as("cluster"))
+        .localCheckpoint() // one row per vertex; cuts the iterative lineage
+      val s = labelSum(labels)
+      converged = s.compareTo(prevSum) == 0
+      prevSum = s
+      iter += 1
+    }
+    // Unconverged labels are silently WRONG (one component reported as
+    // several — the exact leakage leakageFreeSplit exists to prevent), so
+    // fail loudly instead. Diameter > maxIter means the graph is not
+    // dedup-cluster-shaped; raise maxIter or pre-collapse with exact dedup.
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds; " +
+          "component diameter exceeds maxIter")
+    withSingletons(labels, vertices, idCol)
+  }
+
+  /** Union-find on the driver, over the dense index. A union attaches the
+    * root with the larger ORIGINAL id under the smaller, so every root is
+    * the minimum id of its component — the label the propagation loop
+    * converges to; path compression keeps find amortized near-constant.
+    * A self-loop just registers its vertex, the label propagation gives it
+    * too.
+    */
+  private def componentsLocal(g: LocalGraph, vertices: DataFrame,
+                              idCol: String): DataFrame = {
+    val parent = Array.tabulate(g.n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    for (e <- 0 until g.m) {
+      val (ra, rb) = (find(g.src(e)), find(g.dst(e)))
+      if (g.ids(ra) < g.ids(rb)) parent(rb) = ra
+      else if (ra != rb) parent(ra) = rb
+    }
+    val labels = g.emit(Array.tabulate(g.n)(i => (g.ids(i), g.ids(find(i)))),
+      StructField("cluster", LongType, nullable = true))
+    withSingletons(labels, vertices, idCol)
+  }
+
+  /** `(id, cluster)` labels of the edge-touched vertices plus every other
+    * vertex as its own cluster, under `idCol`.
+    */
+  private def withSingletons(labels: DataFrame, vertices: DataFrame,
+                             idCol: String): DataFrame = {
+    val singletons = vertices.select(col(idCol).as("id"))
+      .join(labels.select("id"), Seq("id"), "left_anti")
+      .withColumn("cluster", col("id"))
+    labels.union(singletons).select(col("id").as(idCol), col("cluster"))
+  }
+
+  /** The one-orientation `(src, dst)` edge list every kernel above starts
+    * from, persisted (it serves the gate's count and then the collect or
+    * the union fill). A pair with a null endpoint is dropped: it joins no
+    * two vertices, and neither path may count the null as a node.
+    */
+  private def edgeList(edges: DataFrame, src: String, dst: String): DataFrame =
+    Caches.track(edges.select(col(src).as("src"), col(dst).as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull).persist())
+
+  /** Both orientations of a one-orientation list, persisted: the
+    * distributed loops re-read it every round, and the persisted
+    * one-orientation input keeps the upstream from running once per union
+    * branch.
+    */
+  private def undirected(edg: DataFrame): DataFrame =
+    Caches.track(edg.union(edg.select(col("dst").as("src"),
+      col("src").as("dst"))).persist())
+
+  /** The size gate in front of every iterative kernel here: count the
+    * one-orientation list; at most [[LocalMaxEdges]] edges collect into a
+    * [[LocalGraph]] for `local`, more go to `distributed` as the
+    * two-orientation union. The union persists BELOW the gate, where only
+    * the distributed loops pay its fill: persisting it ahead of the count
+    * put a 2E-row fill and a double-width collect in front of every
+    * driver-local run (measured g01 1.42 → 2.32 s).
+    */
+  private def gated(edges: DataFrame, src: String, dst: String)(
+      local: LocalGraph => DataFrame,
+      distributed: DataFrame => DataFrame): DataFrame = {
+    val edg = edgeList(edges, src, dst)
+    if (edg.count() <= LocalMaxEdges) local(new LocalGraph(edg))
+    else distributed(undirected(edg))
+  }
+
+  /** A one-orientation edge list collected once into a dense index: vertex
+    * `i` is `ids(i)`, numbered in first-seen order; edge `e` joins `src(e)`
+    * and `dst(e)`. The driver-local kernels run on these primitive arrays
+    * (boxed Long→Long maps measured ~5× slower on a 1M-edge graph).
+    */
+  private final class LocalGraph(edg: DataFrame) {
+    private val index = mutable.LongMap.empty[Int]
+    val (ids, src, dst) = {
+      val rows = edg.collect()
+      val found = mutable.ArrayBuffer.empty[Long]
+      def idx(v: Long): Int =
+        index.getOrElseUpdate(v, { found += v; found.length - 1 })
+      val s = new Array[Int](rows.length)
+      // src before dst, edge by edge: the first-seen numbering
+      val d = Array.tabulate(rows.length) { e =>
+        s(e) = idx(rows(e).getLong(0)); idx(rows(e).getLong(1))
       }
-      i += 1
+      (found.toArray, s, d)
     }
-    seedIds.foreach { s =>
-      if (!seen.contains(s)) out += org.apache.spark.sql.Row(s, 0)
+    def n: Int = ids.length
+    def m: Int = src.length
+
+    /** The dense index of `id`, or -1 when no edge touches it. */
+    def indexOf(id: Long): Int = index.getOrElse(id, -1)
+
+    /** Undirected degrees: an edge counts at both of its endpoints. */
+    def degrees: Array[Int] = {
+      val deg = new Array[Int](n)
+      for (e <- 0 until m) { deg(src(e)) += 1; deg(dst(e)) += 1 }
+      deg
     }
-    // schema mirrors the distributed union (nullable seed/edge ids, the
-    // non-null literal hop column)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("dist",
-        org.apache.spark.sql.types.IntegerType, nullable = false)))
-    spark.createDataFrame(java.util.Arrays.asList(out.toArray: _*), schema)
+
+    /** CSR adjacency over both orientations: the neighbours of `i` are
+      * `adj(off(i) until off(i + 1))`.
+      */
+    def csr: (Array[Int], Array[Int]) = {
+      val off = degrees.scanLeft(0)(_ + _)
+      val adj = new Array[Int](2 * m)
+      val fill = java.util.Arrays.copyOf(off, n)
+      for (e <- 0 until m) {
+        adj(fill(src(e))) = dst(e); fill(src(e)) += 1
+        adj(fill(dst(e))) = src(e); fill(dst(e)) += 1
+      }
+      (off, adj)
+    }
+
+    /** A driver-local `(id, value)` result back in Spark, as an RDD-backed
+      * frame (not a plan-embedded local relation: it can hold millions of
+      * rows), under the distributed loop's schema: `id` is nullable when
+      * an edge column is, or when `moreNullable` (another input the loop
+      * takes ids from) is. The tasks ship primitive pairs and build their
+      * own Rows: driver-built Rows doubled the local components time on a
+      * 2M-edge, 3M-vertex graph (4 CPUs: 9–12 s against 4–5 s).
+      */
+    def emit[V](rows: Seq[(Long, V)], value: StructField,
+                moreNullable: Boolean = false): DataFrame = {
+      val idNullable = moreNullable || edg.schema.exists(_.nullable)
+      val spark = edg.sparkSession
+      spark.createDataFrame(spark.sparkContext
+          .parallelize(rows, math.max(1, rows.size / 500000 + 1))
+          .map { case (id, v) => Row(id, v) },
+        StructType(Seq(StructField("id", LongType, idNullable), value)))
+    }
   }
 }

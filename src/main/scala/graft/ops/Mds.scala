@@ -1,6 +1,6 @@
 package graft.ops
 
-import breeze.linalg.{eigSym, DenseMatrix}
+import breeze.linalg.DenseMatrix
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,22 +42,12 @@ object Mds {
     val bMat = DenseMatrix.tabulate[Double](n, n) { (i, j) =>
       -0.5 * (d2(i, j) - rowMean(i) - rowMean(j) + grand)
     }
-    val es = eigSym(bMat) // eigenvalues ascending
-    val (e1, e2) = (n - 1, n - 2)
-    val s1 = math.sqrt(math.max(es.eigenvalues(e1), 0))
-    val s2 = math.sqrt(math.max(es.eigenvalues(e2), 0))
-    // deterministic orientation (the Pca convention): the largest-|entry|
-    // coordinate of each axis is positive — eigSym's signs are a BLAS
-    // backend artifact, which would mirror coordinates across platforms
-    def sign(e: Int): Double = {
-      val v = (0 until n).map(es.eigenvectors(_, e))
-      if (v.maxBy(math.abs) < 0) -1.0 else 1.0
-    }
-    val (g1, g2) = (sign(e1), sign(e2))
+    val es = Pca.topEigen(bMat, 2)
+    val Array(s1, s2) = es.values.map(math.sqrt)
     val rows = ids.zipWithIndex.map { case (id, i) =>
       (id,
-        BigDecimal(es.eigenvectors(i, e1) * s1 * g1).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(es.eigenvectors(i, e2) * s2 * g2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        BigDecimal(es.vectors(0)(i) * s1).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
+        BigDecimal(es.vectors(1)(i) * s2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }.toSeq
     import spark.implicits._
     rows.toDF("sample_id", "dim1", "dim2").orderBy("sample_id")

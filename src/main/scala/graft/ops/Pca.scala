@@ -46,6 +46,26 @@ object Pca {
     throw last
   }
 
+  /** The `k` leading eigenpairs of a symmetric matrix: `values`
+    * descending and clamped at zero, `total` the sum of every clamped
+    * eigenvalue (the explained-variance denominator). Each vector is
+    * flipped so its largest-|entry| is positive: eigSym's signs are a BLAS
+    * backend artifact, which would mirror coordinates across platforms.
+    */
+  private[ops] final case class Eigen(values: Array[Double],
+                                      vectors: Array[Array[Double]],
+                                      total: Double)
+
+  private[ops] def topEigen(m: BDM[Double], k: Int): Eigen = {
+    val es = eigSym(m) // eigenvalues ascending
+    val lambdas = es.eigenvalues.toArray.map(math.max(_, 0.0))
+    val top = Array.tabulate(k)(lambdas.length - 1 - _)
+    Eigen(top.map(lambdas), top.map { idx =>
+      val v = es.eigenvectors(::, idx).toArray
+      if (v.maxBy(math.abs) < 0) v.map(-_) else v
+    }, lambdas.sum)
+  }
+
   /** PCA coordinates per sample + explained-variance ratios.
     * `scale=true` ~ sklearn StandardScaler flavor; `false` ~ the
     * centered-only prcomp(center=TRUE, scale.=FALSE) flavor
@@ -90,17 +110,8 @@ object Pca {
         feats.select("x").rdd.map(r => OldVectors.dense(r.getSeq[Double](0).toArray)))
         .computeCovariance()
       val d = cov.numCols
-      val covB = new BDM(d, d, cov.toArray)
-      val es = eigSym(covB) // eigenvalues ascending
-      val total = es.eigenvalues.toArray.map(math.max(_, 0.0)).sum
-      val comps = (1 to k).map { i =>
-        val idx = d - i
-        val v = es.eigenvectors(::, idx).toArray
-        // deterministic orientation: largest-|loading| entry positive
-        val maxAbs = v.maxBy(math.abs)
-        val oriented = if (maxAbs < 0) v.map(-_) else v
-        (oriented, math.max(es.eigenvalues(idx), 0.0) / math.max(total, 1e-300))
-      }
+      val es = topEigen(new BDM(d, d, cov.toArray), k)
+      val comps = es.vectors.toSeq.zip(es.values.map(_ / math.max(es.total, 1e-300)))
 
       val projected = comps.zipWithIndex.foldLeft(feats) { case (df, ((v, evr), j)) =>
         df.withColumn(s"pc${j + 1}",
@@ -156,22 +167,12 @@ object Pca {
     val gram = fitWithRetry("RowMatrix.computeGramianMatrix") {
       new RowMatrix(rows, 0L, nS).computeGramianMatrix()
     }
-    val gramB = new BDM(nS, nS, gram.toArray)
-    val es = eigSym(gramB) // eigenvalues ascending
-    val lambdas = es.eigenvalues.toArray.map(math.max(_, 0.0))
-    val total = lambdas.sum // = trace(AᵀA) = ‖A‖²_F
     val kEff = math.min(k, nS)
-    // deterministic orientation: largest-|entry| of each V column positive
-    val scores = Array.ofDim[Double](nS, kEff)
-    val evr = Array.ofDim[Double](kEff)
-    for (j <- 0 until kEff) {
-      val idx = nS - 1 - j
-      val colArr = Array.tabulate(nS)(r => es.eigenvectors(r, idx))
-      val sign = if (colArr.maxBy(math.abs) < 0) -1.0 else 1.0
-      val sigma = math.sqrt(lambdas(idx))
-      for (i <- 0 until nS) scores(i)(j) = colArr(i) * sign * sigma
-      evr(j) = lambdas(idx) / math.max(total, 1e-300)
-    }
+    // es.total = trace(AᵀA) = ‖A‖²_F
+    val es = topEigen(new BDM(nS, nS, gram.toArray), kEff)
+    val scores = Array.tabulate(nS, kEff)((i, j) =>
+      es.vectors(j)(i) * math.sqrt(es.values(j)))
+    val evr = es.values.map(_ / math.max(es.total, 1e-300))
     val out = (0 until nS).map { i =>
       (samples(i) +: (0 until kEff).flatMap(j => Seq(
         BigDecimal(scores(i)(j)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.llm.Curation
+import graft.ops.Graph
 
 class CurationSpec extends SparkSpec {
   import spark.implicits._
@@ -10,7 +11,7 @@ class CurationSpec extends SparkSpec {
     // graph: 1-2-3 chain, 5-4 pair (reversed direction), 6 isolated
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 4L)).toDF("doc_a", "doc_b")
     val verts = (1L to 6L).toDF("doc_id")
-    val got = Curation.connectedComponents(edges, verts)
+    val got = Graph.connectedComponents(edges, verts)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L))
   }
@@ -19,8 +20,8 @@ class CurationSpec extends SparkSpec {
     val n = 40L
     val edges = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val verts = (1L to n).toDF("doc_id")
-    // localThreshold = 0 pins the distributed label-propagation path
-    val got = Curation.connectedComponents(edges, verts, localThreshold = 0L)
+    // the distributed label-propagation path
+    val got = Graph.connectedComponentsDistributed(edges, verts)
       .as[(Long, Long)].collect()
     assert(got.length == n && got.forall(_._2 == 1L))
   }
@@ -32,7 +33,7 @@ class CurationSpec extends SparkSpec {
     val ids = Seq(base, base - 7, -base, -base + 11, base - 1000)
     val edges = Seq((ids(0), ids(1)), (ids(2), ids(3))).toDF("doc_a", "doc_b")
     val verts = ids.toDF("doc_id")
-    val got = Curation.connectedComponents(edges, verts, localThreshold = 0L)
+    val got = Graph.connectedComponentsDistributed(edges, verts)
       .as[(Long, Long)].collect().toMap
     assert(got(ids(0)) == ids(1) && got(ids(1)) == ids(1)) // min of the pair
     assert(got(ids(2)) == ids(2) && got(ids(3)) == ids(2))
@@ -56,7 +57,7 @@ class CurationSpec extends SparkSpec {
       .toDF("lang", "score")
     val exact = Curation.quantileProfile(df, "lang", "score")
       .collect().map(r => r.getString(0) -> (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    val approx = Curation.quantileProfile(df, "lang", "score", exactMaxRows = 10)
+    val approx = Curation.quantileProfile(df, "lang", "score", exact = false)
       .collect().map(r => r.getString(0) -> (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
     for (k <- Seq("a", "b"); i <- 0 until 3) {
       val e = exact(k).productElement(i).asInstanceOf[Double]
@@ -228,15 +229,27 @@ class CurationSpec extends SparkSpec {
   test("connected components on an empty edge list returns all singletons") {
     val edges = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     val verts = (1L to 5L).toDF("doc_id")
-    val got = Curation.connectedComponents(edges, verts).as[(Long, Long)].collect().toMap
+    val got = Graph.connectedComponents(edges, verts).as[(Long, Long)].collect().toMap
     assert(got == (1L to 5L).map(i => i -> i).toMap)
+  }
+
+  test("connected components drop edges with a null endpoint on both paths") {
+    val edges = Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)),
+      (None, None)).toDF("doc_a", "doc_b")
+    val verts = (1L to 4L).toDF("doc_id")
+    val local = Graph.connectedComponents(edges, verts)
+    val dist = Graph.connectedComponentsDistributed(edges, verts)
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L)
+    assert(local.as[(Long, Long)].collect().toMap == expected)
+    assert(dist.as[(Long, Long)].collect().toMap == expected)
+    assert(local.schema == dist.schema)
   }
 
   test("connected components fails loudly when maxIter is exhausted") {
     val edges = (1L until 10L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val verts = (1L to 10L).toDF("doc_id")
     val e = intercept[IllegalStateException] {
-      Curation.connectedComponents(edges, verts, maxIter = 3, localThreshold = 0L)
+      Graph.connectedComponentsDistributed(edges, verts, maxIter = 3)
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -267,12 +280,11 @@ class CurationSpec extends SparkSpec {
       }
       val expected = (1 to n).map(i => i.toLong -> find(i).toLong).toMap
       // both size-dispatch paths must match the ground truth bit-for-bit
-      val local = Curation.connectedComponents(
+      val local = Graph.connectedComponents(
           edges.toDF("doc_a", "doc_b"), (1L to n.toLong).toDF("doc_id"))
         .as[(Long, Long)].collect().toMap
-      val dist = Curation.connectedComponents(
-          edges.toDF("doc_a", "doc_b"), (1L to n.toLong).toDF("doc_id"),
-          localThreshold = 0L)
+      val dist = Graph.connectedComponentsDistributed(
+          edges.toDF("doc_a", "doc_b"), (1L to n.toLong).toDF("doc_id"))
         .as[(Long, Long)].collect().toMap
       assert(local == expected)
       assert(dist == expected)

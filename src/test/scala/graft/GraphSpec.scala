@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
 class GraphSpec extends SparkSpec {
 
   private def ranksOf(edges: Seq[(Long, Long)], iters: Int = 5,
-                      localThreshold: Long = 2000000L): Map[Long, Long] = {
+                      distributed: Boolean = false): Map[Long, Long] = {
     val sp = spark
     import sp.implicits._
-    try Graph.pageRank(edges.toDF("src", "dst"), iters, localThreshold)
+    val df = edges.toDF("src", "dst")
+    try (if (distributed) Graph.pageRankDistributed(df, iters)
+         else Graph.pageRank(df, iters))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     finally graft.ops.Caches.releaseAll()
   }
@@ -54,11 +56,11 @@ class GraphSpec extends SparkSpec {
     // Irregular multi-component graph: a triangle, a path, an isolated pair
     val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L), (5L, 6L),
       (6L, 7L), (8L, 9L), (1L, 4L))
-    // both size-dispatch paths: local (default threshold) and distributed
+    // both size-dispatch paths: local (under the gate) and distributed
     assert(ranksOf(g, 4) == reference(g, 4))
     assert(ranksOf(g, 7) == reference(g, 7))
-    assert(ranksOf(g, 4, localThreshold = 0L) == reference(g, 4))
-    assert(ranksOf(g, 7, localThreshold = 0L) == reference(g, 7))
+    assert(ranksOf(g, 4, distributed = true) == reference(g, 4))
+    assert(ranksOf(g, 7, distributed = true) == reference(g, 7))
   }
 
   test("shortestPaths: BFS distances on a planted path + branch graph") {
@@ -97,14 +99,35 @@ class GraphSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 6L),
       (6L, 7L), (8L, 9L), (9L, 1L)).toDF("src", "dst")
     val seeds = Seq(1L, 42L).toDF("id")
-    def run(threshold: Long) =
-      try Graph.shortestPaths(edges, seeds, maxHops = 3, threshold)
+    def run(distributed: Boolean) =
+      try (if (distributed) Graph.shortestPathsDistributed(edges, seeds, maxHops = 3)
+           else Graph.shortestPaths(edges, seeds, maxHops = 3))
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       finally graft.ops.Caches.releaseAll()
-    val local = run(2000000L)
-    val dist = run(0L)
+    val local = run(distributed = false)
+    val dist = run(distributed = true)
     assert(local == dist, s"paths disagree: local=$local dist=$dist")
     assert(local(42L) == 0 && local(9L) == 1 && local(4L) == 3)
+  }
+
+  test("edges with a null endpoint are no edges, on both paths") {
+    val sp = spark
+    import sp.implicits._
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L), (1L, 4L))
+    val edges = (g.map { case (a, b) => (Option(a), Option(b)) } ++
+      Seq((Some(6L), None), (None, Some(2L)), (None, None))).toDF("src", "dst")
+    val seeds = Seq(Some(1L), None).toDF("id")
+    try {
+      val ranks = Seq(Graph.pageRank(edges, 4), Graph.pageRankDistributed(edges, 4))
+      ranks.foreach(r => assert(
+        r.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == reference(g, 4)))
+      val dists = Seq(Graph.shortestPaths(edges, seeds, maxHops = 2),
+        Graph.shortestPathsDistributed(edges, seeds, maxHops = 2))
+      dists.foreach(d => assert(d.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap ==
+        Map(1L -> 0, 2L -> 1, 3L -> 1, 4L -> 1, 5L -> 2)))
+      assert(ranks(0).schema == ranks(1).schema)
+      assert(dists(0).schema == dists(1).schema)
+    } finally graft.ops.Caches.releaseAll()
   }
 
   test("custSuppEdges namespaces customers even / suppliers odd, distinct") {
