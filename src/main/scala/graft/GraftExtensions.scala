@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
@@ -15,9 +16,22 @@ import org.apache.spark.sql.types.DoubleType
   * Every function is a pure Catalyst expression tree (custom codegen
   * expressions or compositions of built-ins) — they stay inside
   * whole-stage codegen and fold when given literal inputs.
+  *
+  * The extension also sets one session default:
+  * `spark.sql.codegen.cache.maxEntries` (Spark's generated-class cache,
+  * default 100) to [[GraftExtensions.CodegenCacheEntries]] unless the user
+  * set it. One e02 run alone needs about 150 generated classes, so under
+  * Spark's default every warm run of the pipeline evicts its own classes
+  * and compiles them again. Spark reads the bound once per JVM, at the
+  * first compile, so it is set here: this hook runs inside
+  * `SparkSession.Builder.getOrCreate` after the SparkContext exists and
+  * before the session's SQL configuration is built. [[registerAll]] on a
+  * session that already exists cannot change it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    Option(SparkEnv.get).foreach(_.conf.setIfMissing(
+      "spark.sql.codegen.cache.maxEntries", GraftExtensions.CodegenCacheEntries.toString))
     GraftExtensions.descriptors.foreach(ext.injectFunction)
     // SQL-surface tier (r8): the flagship pipelines as table-valued
     // functions, so the engine is usable from pure SQL — the shape a
@@ -34,6 +48,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  /** The generated-class cache bound the extension sets: about 3× the
+    * classes a whole `methyl_study` benchmark process compiles (322), and
+    * bounded so a long-lived session cannot grow metaspace without limit.
+    */
+  private[graft] val CodegenCacheEntries = 1024
 
   private def lit(d: Double): Expression = Literal(d)
   private def dbl(e: Expression): Expression = Cast(e, DoubleType)

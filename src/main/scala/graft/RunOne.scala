@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Developer tool: run one registered query N times and print row counts or
   * full stack traces — for chasing intermittent failures under a given
-  * parallelism. Usage: runMain graft.RunOne <sfDir> <query> [reps]
+  * parallelism. Each rep also prints the generated classes it compiled and
+  * their compile time, so a warm rep that recompiles shows up without a
+  * trace. Usage: runMain graft.RunOne <sfDir> <query> [reps]
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
@@ -13,9 +18,13 @@ object RunOne {
     (1 to reps).foreach { i =>
       try {
         val t0 = System.nanoTime()
+        val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
         val n = SparkEntry.queries(name)(spark, sfDir).count()
         val secs = (System.nanoTime() - t0) / 1e9
-        println(f"[runone] $name rep $i OK rows=$n ($secs%.2f s)")
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        val compileMs = (CodeGenerator.compileTime - ns0) / 1e6
+        println(f"[runone] $name rep $i OK rows=$n ($secs%.2f s, " +
+          f"codegen $compiles compiles $compileMs%.0f ms)")
       } catch {
         case e: Throwable =>
           println(s"[runone] $name rep $i FAILED")

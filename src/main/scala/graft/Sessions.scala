@@ -5,6 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one session configuration. Bench, Verify, the developer tools and
   * the test suite all build their local session here, so each runs under
   * the configuration the others are measured and checked with.
+  * [[GraftExtensions]] sets the generated-class cache bound for every graft
+  * session, these included.
   */
 object Sessions {
 

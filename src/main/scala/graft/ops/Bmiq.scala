@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.commons.math3.distribution.BetaDistribution
+import org.apache.commons.math3.random.RandomGenerator
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,6 +26,13 @@ object Bmiq {
   final case class Out(probe_id: String, sample_id: String, beta: Double,
                        beta_norm: Double, design_type: Int)
 
+  /** Beta(a, b) without a random generator: the kernel only evaluates
+    * densities, CDFs and inverse CDFs, and the default constructor seeds a
+    * fresh `Well19937c` (about 11 µs) for samples it never draws.
+    */
+  private def betaDist(a: Double, b: Double): BetaDistribution =
+    new BetaDistribution(null: RandomGenerator, a, b)
+
   /** 3-state beta mixture fitted by EM with moment-matching M-steps.
     * Returns (weight, a, b) per state, states ordered U < H < M.
     * `thLo`/`thHi` seed the initial hard assignment (reference
@@ -42,7 +50,7 @@ object Bmiq {
     var params = Array.tabulate(3)(j => mStep(x, resp, j))
     var it = 0
     while (it < niter) {
-      val dists = params.map { case (_, a, b) => new BetaDistribution(a, b) }
+      val dists = params.map { case (_, a, b) => betaDist(a, b) }
       var i = 0
       while (i < n) {
         var tot = 0.0
@@ -183,7 +191,7 @@ object Bmiq {
     val t1r = t1.map(reg)
     val t2rAll = t2.map(reg)
     val p1 = fitMixture(strideSample(t1r, nfit), niter)
-    val dists1 = p1.map { case (_, a, b) => new BetaDistribution(a, b) }
+    val dists1 = p1.map { case (_, a, b) => betaDist(a, b) }
 
     // Type-2 EM initialization: type-1 class boundaries shifted by the
     // KDE-mode offsets between the two designs (reference
@@ -215,18 +223,13 @@ object Bmiq {
     if (fitted.isEmpty) // the ≥minPerType guard: identity pass-through
       return sorted.iterator.map(r => Out(r.probe_id, r.sample_id, r.beta, r.beta, r.design_type))
     val Fit(reg, p1, p2) = fitted.get
-    val dists2 = p2.map { case (_, a, b) => new BetaDistribution(a, b) }
-
-    val d1U = new BetaDistribution(p1(0)._2, p1(0)._3)
-    val d1M = new BetaDistribution(p1(2)._2, p1(2)._3)
-    val d2U = new BetaDistribution(p2(0)._2, p2(0)._3)
-    val d2M = new BetaDistribution(p2(2)._2, p2(2)._3)
+    val dists1 = p1.map { case (_, a, b) => betaDist(a, b) }
+    val dists2 = p2.map { case (_, a, b) => betaDist(a, b) }
 
     def clamp01(v: Double) = math.min(math.max(v, 0.0), 1.0)
-    def mapU(v: Double) = clamp01(d1U.inverseCumulativeProbability(
-      math.min(math.max(d2U.cumulativeProbability(v), 1e-12), 1 - 1e-12)))
-    def mapM(v: Double) = clamp01(d1M.inverseCumulativeProbability(
-      math.min(math.max(d2M.cumulativeProbability(v), 1e-12), 1 - 1e-12)))
+    // type-II state j → type-I state j by beta quantile (U: j=0, M: j=2)
+    def quantileMap(j: Int, v: Double) = clamp01(dists1(j).inverseCumulativeProbability(
+      math.min(math.max(dists2(j).cumulativeProbability(v), 1e-12), 1 - 1e-12)))
 
     // Classify type-II probes; M-class probes LEFT of the fitted M mean
     // join the H set (reference's ML patching — the left M tail is not
@@ -238,11 +241,15 @@ object Bmiq {
       val c = classify(p2, dists2, v)
       if (c == 2 && v <= avM2) 1 else c // ML → H
     }
-    val uRaw = vraw.zip(kinds).collect { case (v, 0) => v }
-    val mrRaw = vraw.zip(kinds).collect { case (v, 2) => v }
-    val hRaw = vraw.zip(kinds).collect { case (v, 1) => v }
-    val uMapped = uRaw.map(mapU)
-    val mrMapped = mrRaw.map(mapM)
+    def ofKind(xs: Array[Double], k: Int) = xs.zip(kinds).collect { case (v, `k`) => v }
+    // U and MR probes map by quantile, once each; H probes wait for mapH
+    val qMapped = Array.tabulate(vraw.length)(i =>
+      if (kinds(i) == 1) Double.NaN else quantileMap(kinds(i), vraw(i)))
+    val uRaw = ofKind(vraw, 0)
+    val mrRaw = ofKind(vraw, 2)
+    val hRaw = ofKind(vraw, 1)
+    val uMapped = ofKind(qMapped, 0)
+    val mrMapped = ofKind(qMapped, 2)
 
     // Conformal H transform (shift+dilation, BMIQ_1.4.R:184-207): the new
     // H interval preserves the RAW gaps to the neighboring classes around
@@ -265,7 +272,7 @@ object Bmiq {
     val t2Norm = t2r.indices.map { i =>
       val r = t2r(i)
       val v = vraw(i)
-      val mapped = kinds(i) match { case 0 => mapU(v); case 2 => mapM(v); case _ => mapH(v) }
+      val mapped = if (kinds(i) == 1) mapH(v) else qMapped(i)
       // never emit a non-finite normalized value — fall back to the input
       // (downstream kernels assume finite betas; NaN reaching LAPACK hangs)
       val nb = if (mapped.isNaN || mapped.isInfinite) v else mapped
@@ -300,7 +307,7 @@ object Bmiq {
           case None => Iterator.empty
           case Some((p1, p2)) =>
             Seq((1, p1), (2, p2)).iterator.flatMap { case (dt, p) =>
-              val dists = p.map { case (_, a, b) => new BetaDistribution(a, b) }
+              val dists = p.map { case (_, a, b) => betaDist(a, b) }
               (1 until gridN).iterator.map { g =>
                 val x = g.toDouble / gridN
                 val c = Array.tabulate(3)(j => p(j)._1 * dists(j).density(x))

@@ -39,10 +39,17 @@ object Qc {
 
   /** Composite QC (reference per-run loop workflow.R:43-75): apply sample
     * filter then probe filter to the beta table via semi-joins.
+    *
+    * The passing samples feed both semi-joins, so they are collected once
+    * (one eager collect, one row per sample) and joined as a local relation:
+    * as a lazy subtree each join aggregated the whole detp table again —
+    * adaptive execution does not reuse an exchange over a cached table.
     */
   def qcBetas(beta: DataFrame, detp: DataFrame, nSamples: Long = -1,
               thr: Double = 0.05): DataFrame = {
-    val goodSamples = passingSamples(detp, thr)
+    val passing = passingSamples(detp, thr)
+    val goodSamples = detp.sparkSession.createDataFrame(
+      java.util.Arrays.asList(passing.collect(): _*), passing.schema)
     val goodProbes = passingProbes(detp.join(goodSamples, Seq("sample_id"), "left_semi"),
       nSamples, thr)
     beta.join(goodSamples, Seq("sample_id"), "left_semi")

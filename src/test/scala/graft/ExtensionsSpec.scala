@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.metrics.source.CodegenMetrics
 import graft.functions.Fns
 import org.apache.spark.sql.functions._
 
@@ -188,5 +189,27 @@ class ExtensionsSpec extends SparkSpec {
     assert(byIn("caf\u00e9")._1 == "caf\u00e9") // already NFC: unchanged
     assert(byIn("plain ascii")._1 == "plain ascii")
     rows.foreach(r => assert(r.getString(1) == r.getString(2), "not idempotent"))
+  }
+
+  // CodegenMetrics is JVM-wide; the forked test JVM runs suites one after
+  // another (Test / testForkedParallel is off), so no other suite compiles
+  // while this one counts. A warm run may still compile a few classes:
+  // the whole-stage codegen stage number is part of the generated source,
+  // and adaptive execution can number a stage differently depending on
+  // the order its stages finish. Each variant compiles once per JVM (4
+  // classes, at most once in 12 runs); under Spark's default bound of
+  // 100 entries every warm e02 run compiled about 130 classes again.
+  test("warm e02 runs reuse their generated classes") {
+    val sp = spark
+    assert(sp.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftExtensions.CodegenCacheEntries.toString)
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      try SparkEntry.queries("e02_full_workflow")(sp, "/root/testdata/sf0.001").collect()
+      finally ops.Caches.releaseAll()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val counts = Seq.fill(3)(compiles())
+    assert(counts.last <= 10, s"compiles per run: $counts")
   }
 }
