@@ -1855,12 +1855,14 @@ object QueriesStats {
     // probes can't dominate a pair). Ranks are per-sample over that
     // sample's observed probes, pairs correlate over shared probes — the
     // pairwise-complete convention k09 established. Exact end to end:
-    // ranks in doubled-rank integer units (ties exact via the k10 tie-cell
-    // trick), Pearson-on-ranks from exact integer moments — width-dispatched
-    // bigint/decimal(38,0) (see Analytic.spearmanMatrix), one fixed double
-    // sequence at the end. Plan: cell aggregate + per-sample window +
-    // co-keyed join back, then the k08 probe self-join — samples stay the
-    // bounded axis, probes scale freely.
+    // ranks in doubled-rank integer units (one per-sample window pass;
+    // ties exact, the integers the oracle's k10 tie-cell chain produces),
+    // Pearson-on-ranks from exact integer moments — bigint while the
+    // largest per-sample row count is ≤ 1.3M, decimal(38,0) above — and
+    // one fixed double sequence at the end. Plan (Analytic.spearman): one
+    // persisted rank table, one per-sample count collect, then either the
+    // driver-local kernel (≤ 1.3M rank rows, ≤ 256 samples) or the k08
+    // probe self-join — samples stay the bounded axis, probes scale freely.
     Q("k12_spearman_corr", (s, d) =>
       Analytic.spearmanMatrix(Tables.betaLong(s, d),
           "probe_id", "sample_id", "beta")

@@ -441,13 +441,6 @@ object SqlOracles {
        |               - (lgamma(a) + lgamma(b) - lgamma(a + b))) * 1.0 / h AS ib
        |    FROM ${pfx}cf_h))""".stripMargin
 
-  /** SQL mirror of [[graft.ops.Analytic.bhAdjustWindowed]]'s step-up chain
-    * (the w03 pattern), shared by every inference oracle so the BH replay
-    * has exactly ONE definition: expects a prior CTE named `pv` with a
-    * double column `p` plus `passCols` to carry through; appends `rr`/`f`
-    * so the final SELECT reads `FROM f` with columns ($passCols, p, fdr).
-    * `tieBreak` must match the Spark side's bhAdjust tie-break column.
-    */
   /** Per-group flavor of [[bhTail]] — the SQL mirror of
     * [[graft.ops.Analytic.bhAdjustBy]] (rank, m and the suffix-min all
     * partition by `by`, which must be ⊆ passCols).
@@ -464,6 +457,13 @@ object SqlOracles {
        |                   1.0) AS fdr
        |      FROM rr)""".stripMargin
 
+  /** SQL mirror of [[graft.ops.Analytic.bhAdjustWindowed]]'s step-up chain
+    * (the w03 pattern), shared by every inference oracle so the BH replay
+    * has exactly ONE definition: expects a prior CTE named `pv` with a
+    * double column `p` plus `passCols` to carry through; appends `rr`/`f`
+    * so the final SELECT reads `FROM f` with columns ($passCols, p, fdr).
+    * `tieBreak` must match the Spark side's bhAdjust tie-break column.
+    */
   def bhTail(passCols: String, tieBreak: String = "probe_id"): String =
     s""",
        |rr AS (SELECT $passCols, p,

@@ -1,9 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import graft.functions.{SignSketchAgg, SignSketchBuf}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Analytic tier (SURVEY.md §2.4/§2.5): per-key variance, top-k selection,
   * group means, and the Benjamini–Hochberg adjustment.
@@ -152,18 +157,21 @@ object Analytic {
   /** Per-group BH — FDR within each `byCol` slice (the multi-contrast
     * per-coef p.adjust). The window is hash-partitioned on the group key, so
     * the sort is per-contrast, never global; bounded by the largest single
-    * contrast's probe count.
+    * contrast's probe count. Null p follows R as in [[bhAdjust]]: a null
+    * FDR, and n counts the slice's non-null p-values only.
     */
   def bhAdjustBy(df: DataFrame, byCol: String, pCol: String, tieBreak: String,
                  outCol: String = "fdr"): DataFrame = {
-    val wRank = Window.partitionBy(byCol).orderBy(col(pCol).asc, col(tieBreak).asc)
+    val wRank = Window.partitionBy(byCol)
+      .orderBy(col(pCol).asc_nulls_last, col(tieBreak).asc)
     val wAll = Window.partitionBy(byCol)
     val wMin = Window.partitionBy(byCol).orderBy(col("__rn").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df.withColumn("__rn", row_number().over(wRank))
-      .withColumn("__n", count(lit(1)).over(wAll))
+      .withColumn("__n", count(col(pCol)).over(wAll))
       .withColumn("__bh", col(pCol) * col("__n").cast("double") / col("__rn").cast("double"))
-      .withColumn(outCol, least(min(col("__bh")).over(wMin), lit(1.0)))
+      .withColumn(outCol,
+        when(col(pCol).isNotNull, least(min(col("__bh")).over(wMin), lit(1.0))))
       .drop("__rn", "__n", "__bh")
   }
 
@@ -279,385 +287,16 @@ object Analytic {
   }
 
   /** K12 — sample×sample Spearman correlation matrix: ranks are per-sample
-    * over that sample's observed probes (doubled-rank integer units, ties
-    * exact via the tie-cell trick), pairs correlate over shared probes
-    * (pairwise-complete), Pearson-on-ranks from exact integer moments.
-    * Plan: cell aggregate + per-sample window + co-keyed join back, then
-    * the probe self-join — samples stay the bounded axis, probes scale
-    * freely.
-    *
-    * Width dispatch (the bhAdjust/CC/PageRank size-dispatch pattern): the
-    * six rank moments per pair dominate the shuffle. With ranks ≤ 2·P the
-    * moment sums are bounded by 4·P³, so below P ≈ 1.3M probes BIGINT
-    * (8-byte, codegen'd long arithmetic) is exact — a 300k-probe array
-    * rides the cheap path with 85× headroom at the 300_000 threshold.
-    * Above it, decimal(38,0) takes over. Either way the FINAL per-pair
-    * combination runs in decimal(38,0) over the same exact integer sums,
-    * so the two paths are bit-equal by construction (PropertySpec asserts
-    * it). ANSI mode (Spark 4 default) turns any bound miscount into an
-    * overflow error, never a silent wrap.
-    *
-    * @param forceDecimal Some(true)/Some(false) pins the moment width for
-    *   the equivalence test; None (production) dispatches on probe count.
+    * over that sample's observed probes (doubled average ranks, ties
+    * exact), pairs correlate over shared probes (pairwise-complete),
+    * Pearson-on-ranks from exact integer moments. Samples stay the bounded
+    * axis, probes scale freely. One row (sa, sb, n_shared, rho), sa < sb,
+    * per pair with ≥ 2 shared probes and rank variance on both sides; see
+    * [[spearman]] for the plan.
     */
   def spearmanMatrix(df: DataFrame, probeCol: String, sampleCol: String,
-      valCol: String, forceDecimal: Option[Boolean] = None): DataFrame = {
-    // Doubled average ranks in ONE window pass over the rows (r9): with
-    // cum = count over RANGE unbounded..current (peers included ⇒ the
-    // tie group's MAX rank) and t = count over RANGE current..current
-    // (the tie count), min+max rank = 2·cum − t + 1 — the identical
-    // exact integer the tie-cell construction produced as
-    // 2·Σt − (t−1). Both frames share one (sample, order-by-value)
-    // window spec, so this is one exchange + one sort, replacing the
-    // cells aggregate + cell window + (sample, value) join-back
-    // (three shuffles; KernelProbe measured the old chain ~1.6 s/pass
-    // at sf0.1).
-    val w = Window.partitionBy(sampleCol).orderBy(valCol)
-    val cumAll = count(lit(1))
-      .over(w.rangeBetween(Window.unboundedPreceding, Window.currentRow))
-    val ties = count(lit(1))
-      .over(w.rangeBetween(Window.currentRow, Window.currentRow))
-    // Both sides of the pair-expansion self-join read the ranked rows —
-    // persist (released by the harness via Caches) so the rank window
-    // runs once, not once per join side. Projected to the three
-    // surviving columns so the cache holds narrow rows.
-    val rb = graft.ops.Caches.track(
-      df.withColumn("ar2", lit(2L) * cumAll - ties + lit(1L))
-        .select(col(probeCol), col(sampleCol), col("ar2"))
-        .persist())
-    // ONE pass over rb decides the moment width, collects the bounded
-    // sample axis AND materializes the cache (was three jobs: an exact
-    // distinct-probe count, a distinct-sample collect, and the first
-    // consumer's cache fill). The width dispatch may use an ESTIMATE:
-    // both widths are bit-equal by construction (PropertySpec), so the
-    // HLL ±2% error only moves the cheap/exact crossover, never a result
-    // bit; the 250k gate keeps ~4× integer-envelope headroom below the
-    // 1.3M-probe bigint bound even at maximal HLL undercount.
-    val spark = df.sparkSession
-    import spark.implicits._
-    val disp = rb.agg(
-      approx_count_distinct(col(probeCol)).as("np"),
-      collect_set(col(sampleCol)).as("ss"),
-      count(lit(1)).as("rows")).head()
-    val useDecimal = forceDecimal.getOrElse(disp.getLong(0) > 250000L)
-    val width = if (useDecimal) "decimal(38,0)" else "bigint"
-    // Driver-local size dispatch (the pageRank/CC pattern, r10): below the
-    // thresholds the whole pair expansion is integer accumulation over a
-    // samples²-bounded table — the per-iteration shuffle/aggregate fixed
-    // cost of the distributed expansion dominates it by ~2×. The local
-    // kernel computes the IDENTICAL exact integer moments and the
-    // identical final double sequence (asserted against the distributed
-    // path in PropertySpec, and every k12 query replays against the
-    // DuckDB oracle), so the dispatch is plan-only. forceDecimal pins the
-    // distributed path for the width-equivalence tests.
-    if (forceDecimal.isEmpty && disp.getLong(2) <= SpearmanLocalMaxRows &&
-        disp.getSeq[String](1).size <= SpearmanMatrixLocalMaxSamples) {
-      val local = spearmanMatrixLocal(rb, probeCol, sampleCol,
-        disp.getSeq[String](1).toArray.sorted)
-      if (local.isDefined) return local.get
-    }
-    // Dict-encode the bounded sample axis (sorted → index order preserves
-    // the id sort, so `sa < sb` keeps its string semantics) so the
-    // expansion join's pair aggregate hashes one 8-byte int pair instead
-    // of two strings per row — the aggregate sees |probe|·|samples/probe|²
-    // rows, every byte of key counts. Decoded after the aggregate, which
-    // is pairs-sized, not expansion-sized.
-    val sampleIds = disp.getSeq[String](1).toArray.sorted
-    val sdim = broadcast(
-      sampleIds.zipWithIndex.toSeq.toDF(sampleCol, "__sid"))
-    val rbe = rb.join(sdim, sampleCol)
-    val l = rbe.select(col(probeCol), col("__sid").as("sa_i"),
-      col("ar2").cast(width).as("ra"))
-    val r = rbe.select(col(probeCol), col("__sid").as("sb_i"),
-      col("ar2").cast(width).as("rb"))
-    val m = l.join(r, probeCol).filter(col("sa_i") < col("sb_i"))
-      .groupBy("sa_i", "sb_i")
-      .agg(count(lit(1)).as("cnt"),
-        sum("ra").as("msx"), sum("rb").as("msy"),
-        sum(col("ra") * col("ra")).as("msxx"),
-        sum(col("rb") * col("rb")).as("msyy"),
-        sum(col("ra") * col("rb")).as("msxy"))
-    val dec = "decimal(38,0)"
-    def D(c: String) = col(c).cast(dec)
-    val (n, sx, sy, sxx, syy, sxy) =
-      (D("cnt"), D("msx"), D("msy"), D("msxx"), D("msyy"), D("msxy"))
-    val denx = (n * sxx - sx * sx).cast("double")
-    val deny = (n * syy - sy * sy).cast("double")
-    m.filter(col("cnt") >= 2 && denx * deny > 0.0)
-      .join(broadcast(sdim.toDF("sa", "sa_i")), "sa_i")
-      .join(broadcast(sdim.toDF("sb", "sb_i")), "sb_i")
-      .select(col("sa"), col("sb"), col("cnt").cast("bigint").as("n_shared"),
-        ((n * sxy - sx * sy).cast("double") / sqrt(denx * deny)).as("rho"))
-  }
-
-  /** Driver-local dispatch gates for the k12 pair kernels: collected rank
-    * rows and the sample axis must both be bounded. MaxRows 1.3M is the
-    * SAME 4·n³ < 2⁶³ envelope as the distributed bigint fast path (a
-    * sample's doubled ranks are < 2·n_s+1 and a pair shares ≤ min(n_a,
-    * n_b) probes, so every moment sum is ≤ 4·rows³), keeping all local
-    * accumulation exact in longs while the collect stays ≈ 100 MB;
-    * MaxSamples 1500 bounds the flat moment arrays at 6·1500²·8 B
-    * ≈ 108 MB.
-    */
-  private[graft] val SpearmanLocalMaxRows = 1300000L
-  private[graft] val SpearmanLocalMaxSamples = 1500
-  /** The FULL-matrix local path additionally gates the sample axis at 256:
-    * its output is all C(nS, 2) pairs, and materializing hundreds of
-    * thousands of pairs as a driver-local relation starves the caller's
-    * downstream (round/sort/BH all run over the local scan) — measured
-    * SLOWER at 1000 samples (corr 2.8 → 3.3 s, inference 2.9 → 5.6 s)
-    * while the sketch-thresholded variant, whose output is candidate-
-    * bounded, kept winning at the wider gate.
-    */
-  private[graft] val SpearmanMatrixLocalMaxSamples = 256
-  /** Pair-event budget for the local kernels: beyond ~3·10⁸ accumulate
-    * steps the distributed expansion's parallelism wins back its fixed
-    * cost, so the local path declines and the caller falls through.
-    */
-  private val SpearmanLocalEventBudget = 300000000L
-  private val SpearmanPackBits = 40 // packed entry: sid << 40 | ar2 (ar2 < 2²² under MaxRows)
-
-  private def spearmanWithinBudget(groups: Array[Array[Long]]): Boolean =
-    groups.foldLeft(0L)((e, g) => e + g.length.toLong * (g.length - 1) / 2) <=
-      SpearmanLocalEventBudget
-
-  /** Collect the persisted rank table and group it per probe as packed
-    * (sampleIndex << 40 | ar2) longs. Caller guarantees rows ≤
-    * [[SpearmanLocalMaxRows]] (which bounds ar2 ≤ 2·MaxRows+1 < 2²² ≪ 2⁴⁰).
-    * Rows with a null sample id are skipped, as the distributed plan's
-    * sample-dictionary join drops them.
-    */
-  private def spearmanCollectGroups(rb: DataFrame, probeCol: String,
-      sampleCol: String, sampleIds: Array[String])
-      : (Array[String], Array[Array[Long]]) = {
-    val sid = new java.util.HashMap[String, Integer]()
-    sampleIds.zipWithIndex.foreach { case (s, i) => sid.put(s, i) }
-    val byProbe = new java.util.HashMap[String,
-      scala.collection.mutable.ArrayBuffer[Long]]()
-    rb.select(col(probeCol), col(sampleCol), col("ar2")).collect()
-      .filterNot(_.isNullAt(1)).foreach { r =>
-        val s = sid.get(r.getString(1)).toLong
-        byProbe.computeIfAbsent(r.getString(0),
-          _ => new scala.collection.mutable.ArrayBuffer[Long]()) +=
-          ((s << SpearmanPackBits) | r.getLong(2))
-      }
-    val probes = new Array[String](byProbe.size())
-    val groups = new Array[Array[Long]](byProbe.size())
-    var i = 0
-    val it = byProbe.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      probes(i) = e.getKey
-      groups(i) = e.getValue.toArray
-      i += 1
-    }
-    (probes, groups)
-  }
-
-  /** Driver-local exact pair moments + ρ — the integer/double sequence of
-    * [[spearmanMatrix]]'s distributed expansion, verbatim: per shared
-    * probe accumulate (cnt, Σra, Σrb, Σra², Σrb², Σra·rb) in exact longs
-    * for each ordered pair (dict index asc, equal-sample rows skipped);
-    * per pair with cnt ≥ 2, combine in exact BigInt (the decimal(38,0)
-    * sequence), cast to double, keep denx·deny > 0, ρ = num/√(denx·deny).
-    * BigInt.toDouble and Decimal.toDouble are both correctly-rounded, so
-    * the doubles match bit-for-bit (PropertySpec + the k12 oracles pin
-    * it). Returns None when the pair-event count exceeds the budget —
-    * callers fall through to the distributed plan.
-    *
-    * @param cand candidate-pair filter as (saIdx << 32 | sbIdx) keys, or
-    *             null for all pairs (the full-matrix kernel)
-    * @param tau  |ρ| threshold applied at emit, or NaN for none
-    */
-  private def spearmanPairsLocalFrom(spark: org.apache.spark.sql.SparkSession,
-      groups: Array[Array[Long]], sampleIds: Array[String],
-      cand: java.util.HashSet[java.lang.Long], tau: Double): Option[DataFrame] = {
-    if (!spearmanWithinBudget(groups)) return None
-    val nS = sampleIds.length
-    val mask = (1L << SpearmanPackBits) - 1
-    val cells = nS * nS
-    val cnt = new Array[Long](cells)
-    val sx = new Array[Long](cells)
-    val sy = new Array[Long](cells)
-    val sxx = new Array[Long](cells)
-    val syy = new Array[Long](cells)
-    val sxy = new Array[Long](cells)
-    groups.foreach { g =>
-      java.util.Arrays.sort(g) // sid-ascending (sid is the high bits)
-      var i = 0
-      while (i < g.length) {
-        val si = (g(i) >>> SpearmanPackBits).toInt
-        val ai = g(i) & mask
-        val rowBase = si * nS
-        var j = i + 1
-        while (j < g.length) {
-          val sj = (g(j) >>> SpearmanPackBits).toInt
-          if (sj != si) { // equal-sample duplicates: sa < sb excludes them
-            val aj = g(j) & mask
-            val idx = rowBase + sj
-            cnt(idx) += 1
-            sx(idx) += ai
-            sy(idx) += aj
-            sxx(idx) += ai * ai
-            syy(idx) += aj * aj
-            sxy(idx) += ai * aj
-          }
-          j += 1
-        }
-        i += 1
-      }
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    var a = 0
-    while (a < nS) {
-      var b = a + 1
-      while (b < nS) {
-        val idx = a * nS + b
-        val n = cnt(idx)
-        if (n >= 2 &&
-            (cand == null || cand.contains((a.toLong << 32) | b.toLong))) {
-          val bn = BigInt(n)
-          val bsx = BigInt(sx(idx))
-          val bsy = BigInt(sy(idx))
-          val denx = (bn * sxx(idx) - bsx * bsx).toDouble
-          val deny = (bn * syy(idx) - bsy * bsy).toDouble
-          if (denx * deny > 0.0) {
-            val rho = (bn * sxy(idx) - bsx * bsy).toDouble /
-              math.sqrt(denx * deny)
-            if (tau.isNaN || math.abs(rho) >= tau)
-              out += org.apache.spark.sql.Row(sampleIds(a), sampleIds(b), n, rho)
-          }
-        }
-        b += 1
-      }
-      a += 1
-    }
-    // schema mirrors the distributed output exactly, nullability included
-    // (sa/sb from a local-seq dim join, n_shared a non-null count cast,
-    // rho a nullable arithmetic column). A LocalRelation (not an RDD) so
-    // plan statistics stay accurate for downstream dispatches
-    // (planRowEstimate reads its real byte size; a LogicalRDD reports the
-    // unknown-size default and would shunt a 5k-row BH onto the ranged
-    // path).
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("sa",
-        org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("sb",
-        org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("n_shared",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rho",
-        org.apache.spark.sql.types.DoubleType, nullable = true)))
-    Some(spark.createDataFrame(
-      java.util.Arrays.asList(out.toArray: _*), schema))
-  }
-
-  /** Local full-matrix kernel: collect + all-pairs moments. */
-  private def spearmanMatrixLocal(rb: DataFrame, probeCol: String,
-      sampleCol: String, sampleIds: Array[String]): Option[DataFrame] = {
-    val (_, groups) = spearmanCollectGroups(rb, probeCol, sampleCol, sampleIds)
-    spearmanPairsLocalFrom(rb.sparkSession, groups, sampleIds, null, Double.NaN)
-  }
-
-  /** Local thresholded kernel: the identical md5 hyperplane table, exact
-    * integer projections ([[graft.functions.SignSketchAgg]]'s
-    * n·sdot − sr·ssum ≥ 0 bit rule), band canonicalization and bucket
-    * candidate pairs as the distributed plan, then the shared local pair
-    * verify restricted to candidates. The sign convention replays
-    * `substring(md5(probe || '#' || j), 1, 1) < '8'` as "first digest
-    * byte ≥ 0" (high nibble 0–7 ⟺ non-negative signed byte).
-    */
-  private def spearmanThresholdedLocal(rb: DataFrame, probeCol: String,
-      sampleCol: String, sampleIds: Array[String], bands: Int, r: Int,
-      tau: Double): Option[DataFrame] = {
-    val (probes, groups) = spearmanCollectGroups(rb, probeCol, sampleCol, sampleIds)
-    // the pair-event budget check, before any sketch work
-    if (!spearmanWithinBudget(groups)) return None
-    val nS = sampleIds.length
-    val nbits = bands * r
-    val mask = (1L << SpearmanPackBits) - 1
-    // ±1 per (probe, bit): md5 over the distinct-probe axis, as distributed
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val plusBits = new Array[Array[Boolean]](probes.length)
-    var p = 0
-    while (p < probes.length) {
-      val bits = new Array[Boolean](nbits)
-      var j = 0
-      while (j < nbits) {
-        md.reset()
-        bits(j) = md.digest(
-          (probes(p) + "#" + j).getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) >= 0
-        j += 1
-      }
-      plusBits(p) = bits
-      p += 1
-    }
-    // per-sample exact integer sketch state (SignSketchAgg's buffer)
-    val n = new Array[Long](nS)
-    val sr = new Array[Long](nS)
-    val sdot = Array.ofDim[Long](nS, nbits)
-    val ssum = Array.ofDim[Long](nS, nbits)
-    p = 0
-    while (p < probes.length) {
-      val bits = plusBits(p)
-      val g = groups(p)
-      var i = 0
-      while (i < g.length) {
-        val s = (g(i) >>> SpearmanPackBits).toInt
-        val ar2 = g(i) & mask
-        n(s) += 1
-        sr(s) += ar2
-        val sd = sdot(s)
-        val ss = ssum(s)
-        var j = 0
-        while (j < nbits) {
-          if (bits(j)) { sd(j) += ar2; ss(j) += 1 } else { sd(j) -= ar2; ss(j) -= 1 }
-          j += 1
-        }
-        i += 1
-      }
-      p += 1
-    }
-    // band signatures, flip-canonicalized; bucket → candidate pairs
-    val buckets = new java.util.HashMap[java.lang.Long,
-      scala.collection.mutable.ArrayBuffer[Int]]()
-    var s = 0
-    while (s < nS) {
-      def bit(j: Int): Long = {
-        val proj = n(s) * sdot(s)(j) - sr(s) * ssum(s)(j)
-        if (proj >= 0L) 1L else 0L
-      }
-      var b = 0
-      while (b < bands) {
-        var sig = 0L
-        var i = 0
-        while (i < r) { sig += bit(b * r + i) << i; i += 1 }
-        val canon = if (bit(b * r) == 1L) ((1L << r) - 1) - sig else sig
-        buckets.computeIfAbsent((b.toLong << 32) | canon,
-          _ => new scala.collection.mutable.ArrayBuffer[Int]()) += s
-        b += 1
-      }
-      s += 1
-    }
-    val cand = new java.util.HashSet[java.lang.Long]()
-    val bit2 = buckets.values().iterator()
-    while (bit2.hasNext) {
-      val members = bit2.next()
-      var i = 0
-      while (i < members.length) {
-        var j = i + 1
-        while (j < members.length) {
-          val (lo, hi) =
-            if (members(i) < members(j)) (members(i), members(j))
-            else (members(j), members(i))
-          cand.add((lo.toLong << 32) | hi.toLong)
-          j += 1
-        }
-        i += 1
-      }
-    }
-    spearmanPairsLocalFrom(rb.sparkSession, groups, sampleIds, cand, tau)
-  }
+                     valCol: String): DataFrame =
+    spearman(df, probeCol, sampleCol, valCol, None, None)
 
   /** K12 thresholded production variant (r8): emit only sample pairs with
     * |Spearman ρ| ≥ `tau`, via a deterministic sign-sketch pre-filter so
@@ -668,22 +307,19 @@ object Analytic {
     * and random-hyperplane sign bits (Charikar, STOC'02 — the d04 SimHash
     * family) collide them into shared buckets:
     *
-    *  1. per-sample doubled ranks (k12's exact tie-cell construction);
+    *  1. per-sample doubled ranks (k12's rank table);
     *  2. per (sample, bit j): the EXACT INTEGER projection sign — with
-    *     hash-derived ±1 signs s(probe, j) (first md5 hex digit, engine-
-    *     portable), p_j = n·Σ s·ar2 − (Σ ar2)·(Σ s) is n× the projection
-    *     of the centered rank vector, all in integer arithmetic, so the
-    *     sign is order-free exact in both engines;
-    *  3. bits pack into `bands` band signatures, each canonicalized under
-    *     global sign flip (lead bit 1 ⇒ complement) so anti-correlated
-    *     pairs collide too;
+    *     hash-derived ±1 signs s(probe, j) ([[SignSketchAgg.signWords]]),
+    *     p_j = n·Σ s·ar2 − (Σ ar2)·(Σ s) is n× the projection of the
+    *     centered rank vector, all in integer arithmetic, so the sign is
+    *     order-free exact in both engines;
+    *  3. bits pack into [[SpearmanBands]] band signatures, each
+    *     canonicalized under global sign flip (lead bit 1 ⇒ complement) so
+    *     anti-correlated pairs collide too;
     *  4. pairs sharing any (band, canonical signature) bucket are
     *     candidates; ONLY candidates pay the exact k12 moment aggregate,
     *     and the |ρ| ≥ τ filter runs on the exact value.
     *
-    * The band width r is derived from the sample count (smallest r with
-    * 4·2^r ≥ samples, floor 4) so expected bucket size stays ~4 and the
-    * candidate stage stays ~linear in samples; total bits = bands·r.
     * Semantics are deterministic and SQL-expressible (the d10 rule): the
     * oracle replays the identical sketch, so recall is part of the
     * operator's definition — every emitted pair is EXACT (a true
@@ -696,154 +332,308 @@ object Analytic {
     * band containing a zero projection loses exact complementarity.
     * Pairs barely above τ are found with the standard banded-LSH
     * probability (AnalyticSpec pins the main directions).
-    *
-    * Width rule: the verify-stage moments use k12's 300k-probe
-    * bigint/decimal dispatch; the sketch runs in checked long arithmetic
-    * inside SignSketchAgg (exact to ~1.3M probes per sample — the same
-    * 4n³ < 2⁶³ envelope as k12's fast path — and loud beyond, never a
-    * silent wrap).
     */
   def spearmanThresholded(df: DataFrame, probeCol: String, sampleCol: String,
-      valCol: String, tau: Double, bands: Int = 8,
-      forceDecimal: Option[Boolean] = None): DataFrame = {
+                          valCol: String, tau: Double): DataFrame =
+    spearman(df, probeCol, sampleCol, valCol, Some(SpearmanSketch(tau)), None)
+
+  /** The distributed plans at a pinned moment width (decimal(38,0) when
+    * `decimal`, else bigint), past the local gate — for the specs.
+    */
+  private[graft] def spearmanMatrixDistributed(df: DataFrame, probeCol: String,
+      sampleCol: String, valCol: String, decimal: Boolean): DataFrame =
+    spearman(df, probeCol, sampleCol, valCol, None, Some(decimal))
+
+  private[graft] def spearmanThresholdedDistributed(df: DataFrame, probeCol: String,
+      sampleCol: String, valCol: String, tau: Double, decimal: Boolean): DataFrame =
+    spearman(df, probeCol, sampleCol, valCol, Some(SpearmanSketch(tau)), Some(decimal))
+
+  /** The thresholded search's threshold and band width. r is derived from
+    * the sample count (smallest r with 4·2^r ≥ samples, floor 4) so the
+    * expected bucket size stays ~4 and the candidate stage stays ~linear
+    * in samples; the sketch has [[SpearmanBands]]·r bits.
+    */
+  private case class SpearmanSketch(tau: Double) {
     require(tau > 0.0 && tau < 1.0, s"tau=$tau outside (0, 1)")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // one-window-pass doubled ranks — see spearmanMatrix (r9)
+    def r(nSamples: Int): Int =
+      (4 to 30).find(b => (1L << b) * 4 >= nSamples).getOrElse(30)
+  }
+
+  /** One bound for the moment width and the local gate. A sample's doubled
+    * ranks are ≤ 2n+1 and a pair shares ≤ n probes, so every pair moment
+    * and sketch projection is ≤ 4n³ < 2⁶³ while the largest per-sample
+    * row count n is ≤ 1.3M: bigint is exact there, decimal(38,0) above.
+    * The local path collects at most this many rank rows in total
+    * (≈ 100 MB), which also keeps ar2 < 2²² inside its packed longs.
+    * Duplicated (probe, sample) keys void the per-pair bound; both paths
+    * then fail with an overflow error (ANSI sums, Math.addExact), never a
+    * silent wrap.
+    */
+  private val SpearmanMaxRows = 1300000L
+  /** Local sample gates: 1500 bounds the six flat nS² moment arrays at
+    * ≈ 108 MB. The full matrix stops at 256: its output is all C(nS, 2)
+    * pairs, and hundreds of thousands of pairs as a driver-local relation
+    * starve the caller's downstream (round/sort/BH over the local scan) —
+    * measured slower at 1000 samples (corr 2.8 → 3.3 s, inference
+    * 2.9 → 5.6 s) while the candidate-bounded thresholded output kept
+    * winning at 1500.
+    */
+  private val SpearmanLocalMaxSamples = 1500
+  private val SpearmanMatrixLocalMaxSamples = 256
+  /** Beyond ~3·10⁸ pair events the distributed expansion's parallelism
+    * wins back its fixed cost, so the local path declines.
+    */
+  private val SpearmanLocalEventBudget = 300000000L
+  private val SpearmanPackBits = 40 // packed entry: sampleIndex << 40 | ar2
+  private val SpearmanBands = 8 // the k12_spearman_thresholded oracle replays 8
+
+  /** The one pipeline behind [[spearmanMatrix]] and [[spearmanThresholded]].
+    *
+    *  1. Rank table: doubled average ranks in ONE window pass (r9). With
+    *     cum = count over RANGE unbounded..current (peers included ⇒ the
+    *     tie group's max rank) and t = count over RANGE current..current
+    *     (the tie count), min+max rank = 2·cum − t + 1, an exact integer.
+    *     Persisted, projected to (probe, sample, ar2): the self-join's two
+    *     sides, the sketch and the local collect all read it.
+    *  2. Dispatch: one per-sample count collect gives the sorted non-null
+    *     sample ids, the total row count and the largest per-sample count
+    *     (the width, [[SpearmanMaxRows]]), and fills the cache.
+    *  3. Small inputs run [[spearmanLocal]]; the rest, and any input the
+    *     local path declines, run [[spearmanDistributed]]. Both compute the
+    *     same exact integers and the same final doubles, so the dispatch is
+    *     plan-only (PropertySpec pins local ≡ distributed and bigint ≡
+    *     decimal; every k12 query replays against the DuckDB oracle).
+    *
+    * @param pinnedDecimal Some(decimal) pins the distributed plan at that
+    *   width (decimal(38,0) when true, else bigint).
+    */
+  private def spearman(df: DataFrame, probeCol: String, sampleCol: String,
+      valCol: String, sketch: Option[SpearmanSketch],
+      pinnedDecimal: Option[Boolean]): DataFrame = {
     val w = Window.partitionBy(sampleCol).orderBy(valCol)
-    val cumAll = count(lit(1))
+    val cum = count(lit(1))
       .over(w.rangeBetween(Window.unboundedPreceding, Window.currentRow))
     val ties = count(lit(1))
       .over(w.rangeBetween(Window.currentRow, Window.currentRow))
-    // consumed by the sketch (probes×bits) AND the candidate verify —
-    // persist so the rank window runs once
-    val rb = graft.ops.Caches.track(
-      df.withColumn("ar2", lit(2L) * cumAll - ties + lit(1L))
+    val rb = Caches.track(
+      df.withColumn("ar2", lit(2L) * cum - ties + lit(1L))
         .select(col(probeCol), col(sampleCol), col("ar2"))
         .persist())
-    // Width dispatch on the semantically-correct axis: every moment here
-    // (sketch projections and pair sums alike) is bounded by 4·n³ where n
-    // is the MAX PER-SAMPLE probe count — not the total probe axis k12
-    // conservatively dispatches on (equal only in the dense-grid case).
-    // A replica-disjoint or sharded corpus keeps per-sample n small while
-    // total probes grow unboundedly; dispatching on the real bound keeps
-    // the 64×-sweep pair stream on 8-byte bigint rows instead of 16-byte
-    // decimals (the sort/shuffle volume of the verify stage is the
-    // operator's dominant memory term).
-    // ONE samples-bounded aggregate serves the width dispatch (max
-    // per-sample probe count), the sample-axis collect (r derivation +
-    // dict-encode) and the rb cache fill — was three jobs (r9).
-    val perSample = rb.groupBy(sampleCol).agg(count(lit(1)).as("__n"))
-      .collect()
-    val useDecimal = forceDecimal.getOrElse(
-      (if (perSample.isEmpty) 0L else perSample.map(_.getLong(1)).max) > 1300000L)
-    val width = if (useDecimal) "decimal(38,0)" else "bigint"
-    val sampleIds = perSample.filterNot(_.isNullAt(0)).map(_.getString(0)).sorted
-    val nSamples = sampleIds.length.toLong
-    val r = (4 to 30).find(b => (1L << b) * 4 >= nSamples).getOrElse(30)
-    // Driver-local size dispatch (r10, see spearmanMatrix): the sketch +
-    // candidate + verify chain replays driver-side over the collected rank
-    // table — identical md5 signs, identical exact integer projections and
-    // moments, identical doubles (PropertySpec pins local ≡ distributed;
-    // the k12_spearman_thresholded oracle replays the whole chain). The
-    // ~10-shuffle sketch/candidate plan is pure fixed cost at this size.
-    if (forceDecimal.isEmpty &&
-        perSample.foldLeft(0L)(_ + _.getLong(1)) <= SpearmanLocalMaxRows &&
-        nSamples <= SpearmanLocalMaxSamples) {
-      val local = spearmanThresholdedLocal(rb, probeCol, sampleCol,
-        sampleIds, bands, r, tau)
-      if (local.isDefined) return local.get
-    }
-    val nbits = bands * r
-    // ±1 per (probe, bit) computed once on the distinct-probe axis and
-    // PACKED into a long bitmask (bit set ⇒ +1) — md5 runs probes×bits
-    // times, not rows×bits, and the join payload is words, not nbits rows
-    val nWords = (nbits + 63) / 64
-    def signBit(j: Int): Column =
-      when(substring(md5(concat(col(probeCol), lit("#"), lit(j.toString))),
-        1, 1) < "8", lit(1L << (j % 64))).otherwise(lit(0L))
-    val signWords = (0 until nWords).map { w =>
-      (w * 64 until math.min((w + 1) * 64, nbits))
-        .map(signBit).reduce(_.bitwiseOR(_))
-    }
-    val signs = rb.select(col(probeCol)).distinct()
-      .select(col(probeCol), array(signWords: _*).as("words"))
-    // One sign-sketch buffer per sample (functions/SignSketchAgg — exact
-    // integer projections, no per-(sample, bit) row amplification: the
-    // groupBy(sample, bit) restatement OOM'd an 8 g heap at the 64×
-    // sweep). The skinny joined rows pre-partition by sample so the
-    // object aggregation keeps ONE buffer per sample and its partial
-    // output already satisfies the final distribution (the
-    // PoissonBootAgg pattern).
-    val sketch = udaf(new graft.functions.SignSketchAgg(nbits))
-    val proj = rb.join(signs, probeCol)
-      .repartition(col(sampleCol))
-      .groupBy(col(sampleCol))
-      .agg(sketch(col("ar2"), col("words")).as("bits"))
-    // band signatures row-local from the bit array; canonicalized under
-    // global sign flip (lead bit 1 ⇒ complement) so anti-correlated pairs
-    // collide too
-    def bitAt(j: Int) = element_at(col("bits"), j + 1)
-    val bandCols = (0 until bands).map { b =>
-      val sig = (0 until r).map(i => bitAt(b * r + i) * lit(1L << i))
-        .reduce(_ + _)
-      struct(lit(b).as("band"),
-        when(bitAt(b * r) === 1, lit((1L << r) - 1) - sig).otherwise(sig)
-          .as("canon"))
-    }
-    val bandSig = proj
-      .select(col(sampleCol), explode(array(bandCols: _*)).as("bc"))
-      .select(col(sampleCol), col("bc.band").as("band"),
-        col("bc.canon").as("canon"))
-    // Candidate pairs on DICT-ENCODED int sample keys (k12's shuffle-byte
-    // rule; index order preserves the lexical sort so sa_i < sb_i keeps
-    // the string semantics).
+    val counts = rb.groupBy(sampleCol).agg(count(lit(1))).collect()
+    val sizes = counts.map(_.getLong(1))
+    val sampleIds = counts.filterNot(_.isNullAt(0)).map(_.getString(0)).sorted
+    val maxSamples =
+      if (sketch.isEmpty) SpearmanMatrixLocalMaxSamples else SpearmanLocalMaxSamples
+    val local =
+      if (pinnedDecimal.isEmpty && sizes.sum <= SpearmanMaxRows && sampleIds.length <= maxSamples)
+        spearmanLocal(rb, probeCol, sampleCol, sampleIds, sketch)
+      else None
+    local.getOrElse(spearmanDistributed(rb, probeCol, sampleCol, sampleIds, sketch,
+      pinnedDecimal.getOrElse(sizes.exists(_ > SpearmanMaxRows))))
+  }
+
+  /** Distributed tail. The bounded sample axis is dict-encoded (sorted, so
+    * index order keeps the id order and `sa_i < sb_i` its string meaning):
+    * the pair aggregate sees |probe|·|samples/probe|² rows and hashes one
+    * int pair per row instead of two strings. The probe-keyed self-join
+    * expands pairs stream-side, inside the join stage; the thresholded
+    * search restricts them there with a broadcast left-semi on its
+    * candidates (the (l ⋈ cand) ⋈ r formulation shuffled |cand|×probes rows
+    * and OOM'd the 64× sweep on an 8 g heap). The driver holds the
+    * candidates as one primitive long array; the executors split each key
+    * back into its index pair. The six moment sums run at
+    * the chosen width and combine in decimal(38,0) either way, so the
+    * widths are bit-equal by construction; ANSI mode turns a bound
+    * miscount into an overflow error.
+    */
+  private def spearmanDistributed(rb: DataFrame, probeCol: String, sampleCol: String,
+      sampleIds: Array[String], sketch: Option[SpearmanSketch],
+      decimal: Boolean): DataFrame = {
+    val spark = rb.sparkSession
+    import spark.implicits._
+    val width = if (decimal) "decimal(38,0)" else "bigint"
     val sdim = broadcast(sampleIds.zipWithIndex.toSeq.toDF(sampleCol, "__sid"))
-    val bse = bandSig.join(sdim, sampleCol)
-      .select(col("__sid"), col("band"), col("canon"))
-    val cand = bse.select(col("__sid").as("sa_i"), col("band"), col("canon"))
-      .join(bse.select(col("__sid").as("sb_i"), col("band"), col("canon")),
-        Seq("band", "canon"))
-      .filter(col("sa_i") < col("sb_i"))
-      .select("sa_i", "sb_i").distinct()
-    // Exact k12 moments, restricted to candidates — in k12's OWN plan
-    // shape: the probe-keyed self-join expands pairs STREAM-SIDE inside
-    // the join stage (never materializing/shuffling expanded rows — the
-    // (l ⋈ cand) ⋈ rr formulation shuffled |cand|×probes rows and OOM'd
-    // the 64× sweep on an 8 g heap), and the candidate restriction is a
-    // BROADCAST left-semi applied in the same stage, so only candidate
-    // pairs reach the moment aggregate. cand is bounded by Σ C(bucket, 2)
-    // (≈ bands × samples × expected-bucket-size ≈ linear in samples by
-    // the derived-r rule), so the broadcast stays tens of MB at 64k
-    // samples; like d03's LSH bands, adversarial all-identical corpora
-    // inflate it only with true near-duplicates.
     val rbe = rb.join(sdim, sampleCol)
-    val l = rbe.select(col(probeCol), col("__sid").as("sa_i"),
-      col("ar2").cast(width).as("ra"))
-    val rr = rbe.select(col(probeCol), col("__sid").as("sb_i"),
-      col("ar2").cast(width).as("rbv"))
-    val m = l.join(rr, probeCol).filter(col("sa_i") < col("sb_i"))
-      .join(broadcast(cand), Seq("sa_i", "sb_i"), "left_semi")
-      .groupBy("sa_i", "sb_i")
+    def side(sid: String, rank: String) = rbe.select(col(probeCol),
+      col("__sid").as(sid), col("ar2").cast(width).as(rank))
+    val pairs = side("sa_i", "ra").join(side("sb_i", "rb"), probeCol)
+      .filter(col("sa_i") < col("sb_i"))
+    val kept = sketch.fold(pairs) { s =>
+      val keys = spearmanSketchDistributed(rb, probeCol, sampleCol, sampleIds, s)
+      val cand = spark.sparkContext.parallelize(ArraySeq.unsafeWrapArray(keys)).toDF("k")
+        .select(shiftright(col("k"), 32).cast("int").as("sa_i"),
+          (col("k") bitwiseAND 0xFFFFFFFFL).cast("int").as("sb_i"))
+      pairs.join(broadcast(cand), Seq("sa_i", "sb_i"), "left_semi")
+    }
+    val m = kept.groupBy("sa_i", "sb_i")
       .agg(count(lit(1)).as("cnt"),
-        sum("ra").as("msx"), sum("rbv").as("msy"),
+        sum("ra").as("msx"), sum("rb").as("msy"),
         sum(col("ra") * col("ra")).as("msxx"),
-        sum(col("rbv") * col("rbv")).as("msyy"),
-        sum(col("ra") * col("rbv")).as("msxy"))
-    val dec = "decimal(38,0)"
-    def D(c: String) = col(c).cast(dec)
+        sum(col("rb") * col("rb")).as("msyy"),
+        sum(col("ra") * col("rb")).as("msxy"))
+    def D(c: String) = col(c).cast("decimal(38,0)")
     val (n, sx, sy, sxx, syy, sxy) =
       (D("cnt"), D("msx"), D("msy"), D("msxx"), D("msyy"), D("msxy"))
     val denx = (n * sxx - sx * sx).cast("double")
     val deny = (n * syy - sy * sy).cast("double")
-    m.filter(col("cnt") >= 2 && denx * deny > 0.0)
-      .withColumn("rho",
-        (n * sxy - sx * sy).cast("double") / sqrt(denx * deny))
-      .filter(abs(col("rho")) >= tau)
+    val rho = m.filter(col("cnt") >= 2 && denx * deny > 0.0)
+      .withColumn("rho", (n * sxy - sx * sy).cast("double") / sqrt(denx * deny))
+    sketch.fold(rho)(s => rho.filter(abs(col("rho")) >= s.tau))
       .join(broadcast(sdim.toDF("sa", "sa_i")), "sa_i")
       .join(broadcast(sdim.toDF("sb", "sb_i")), "sb_i")
       .select(col("sa"), col("sb"), col("cnt").cast("bigint").as("n_shared"),
         col("rho"))
+  }
+
+  /** The sketch on the distributed path: signs once per distinct probe
+    * (md5 runs probes×bits times, not rows×bits), one [[SignSketchAgg]]
+    * buffer per sample — the rows pre-partition by sample so each buffer
+    * exists once and its partial output already satisfies the final
+    * distribution (the PoissonBootAgg pattern) — and the packed bits
+    * collected (samples × ⌈nbits/64⌉ longs) for [[spearmanCandidates]].
+    */
+  private def spearmanSketchDistributed(rb: DataFrame, probeCol: String,
+      sampleCol: String, sampleIds: Array[String],
+      s: SpearmanSketch): Array[Long] = {
+    val r = s.r(sampleIds.length)
+    val nbits = SpearmanBands * r
+    val signs = udf((p: String) => SignSketchAgg.signWords(p, nbits))
+    val words = rb.select(col(probeCol)).distinct()
+      .select(col(probeCol), signs(col(probeCol)).as("words"))
+    val sketch = udaf(new SignSketchAgg(nbits))
+    val index = sampleIds.zipWithIndex.toMap
+    val bits = new Array[Array[Long]](sampleIds.length)
+    rb.join(words, probeCol)
+      .repartition(col(sampleCol))
+      .groupBy(col(sampleCol))
+      .agg(sketch(col("ar2"), col("words")))
+      .collect().filterNot(_.isNullAt(0))
+      .foreach(row => bits(index(row.getString(0))) = row.getSeq[Long](1).toArray)
+    spearmanCandidates(bits, r)
+  }
+
+  /** Bucketing, shared by both paths: each sample's packed sketch bits
+    * split into [[SpearmanBands]] signatures of r bits, canonicalized under
+    * global sign flip (lead bit 1 ⇒ complement) so anti-correlated pairs
+    * collide too. Samples sharing any (band, signature) bucket are
+    * candidate pairs, keyed (lo << 32 | hi) by dictionary index and
+    * returned sorted and distinct in one primitive array. A sample without
+    * bits (no sketched row) joins no bucket.
+    */
+  private def spearmanCandidates(bits: Array[Array[Long]], r: Int): Array[Long] = {
+    val buckets = new java.util.HashMap[java.lang.Long, ArrayBuffer[Int]]()
+    for (s <- bits.indices if bits(s) != null; b <- 0 until SpearmanBands) {
+      def bit(j: Int): Long = (bits(s)(j >> 6) >>> (j & 63)) & 1L
+      val sig = (0 until r).foldLeft(0L)((acc, i) => acc | (bit(b * r + i) << i))
+      val canon = if (bit(b * r) == 1L) ((1L << r) - 1) - sig else sig
+      buckets.computeIfAbsent((b.toLong << 32) | canon, _ => ArrayBuffer.empty[Int]) += s
+    }
+    val keys = Array.newBuilder[Long]
+    buckets.values.forEach { members => // ascending: samples enter in index order
+      for (i <- members.indices; j <- i + 1 until members.length)
+        keys += (members(i).toLong << 32) | members(j)
+    }
+    val cand = keys.result()
+    java.util.Arrays.sort(cand)
+    var n = 0 // a pair sharing several bands appears once per band
+    for (i <- cand.indices if n == 0 || cand(i) != cand(n - 1)) { cand(n) = cand(i); n += 1 }
+    java.util.Arrays.copyOf(cand, n)
+  }
+
+  /** Driver-local kernel: the distributed plan's integers and doubles over
+    * the collected rank table. One collect, grouped per probe as packed
+    * (sampleIndex << 40 | ar2) longs — rows with a null probe or sample id
+    * are skipped, as the distributed joins drop them. One pair-event budget
+    * check: None sends the caller to the distributed plan. The thresholded
+    * search then runs the sketch through [[SignSketchAgg]]'s own
+    * zero/reduce/finish and [[spearmanCandidates]]. Per shared probe the
+    * kernel accumulates (cnt, Σra, Σrb, Σra², Σrb², Σra·rb) for each
+    * ordered pair (dict index ascending, equal-sample rows skipped), the
+    * last three with Math.addExact (see [[SpearmanMaxRows]]); per pair with
+    * cnt ≥ 2 it combines them in exact BigInt (the decimal(38,0)
+    * sequence), keeps denx·deny > 0 and emits ρ = num/√(denx·deny).
+    * BigInt.toDouble and Decimal.toDouble both round correctly, so the
+    * doubles match bit for bit.
+    */
+  private def spearmanLocal(rb: DataFrame, probeCol: String, sampleCol: String,
+      sampleIds: Array[String], sketch: Option[SpearmanSketch]): Option[DataFrame] = {
+    val nS = sampleIds.length
+    val index = sampleIds.zipWithIndex.toMap
+    val byProbe = new java.util.HashMap[String, ArrayBuffer[Long]]()
+    rb.select(col(probeCol), col(sampleCol), col("ar2")).collect()
+      .filterNot(row => row.isNullAt(0) || row.isNullAt(1)).foreach { row =>
+        byProbe.computeIfAbsent(row.getString(0), _ => ArrayBuffer.empty[Long]) +=
+          ((index(row.getString(1)).toLong << SpearmanPackBits) | row.getLong(2))
+      }
+    val (probes, groups) = byProbe.asScala.toArray.map { case (p, g) => (p, g.toArray) }.unzip
+    if (groups.foldLeft(0L)((e, g) => e + g.length.toLong * (g.length - 1) / 2) >
+        SpearmanLocalEventBudget) return None
+    val mask = (1L << SpearmanPackBits) - 1
+    val cand = sketch.map { s =>
+      val r = s.r(nS)
+      val nbits = SpearmanBands * r
+      val agg = new SignSketchAgg(nbits)
+      val bufs = new Array[SignSketchBuf](nS)
+      for (p <- probes.indices) {
+        val words = SignSketchAgg.signWords(probes(p), nbits)
+        groups(p).foreach { e =>
+          val i = (e >>> SpearmanPackBits).toInt
+          bufs(i) = agg.reduce(if (bufs(i) == null) agg.zero else bufs(i), (e & mask, words))
+        }
+      }
+      spearmanCandidates(bufs.map(b => if (b == null) null else agg.finish(b)), r)
+    }
+    val cnt, sx, sy, sxx, syy, sxy = new Array[Long](nS * nS)
+    groups.foreach { g =>
+      java.util.Arrays.sort(g) // sample index ascending (it is the high bits)
+      var i = 0
+      while (i < g.length) {
+        val si = (g(i) >>> SpearmanPackBits).toInt
+        val ai = g(i) & mask
+        var j = i + 1
+        while (j < g.length) {
+          val sj = (g(j) >>> SpearmanPackBits).toInt
+          if (sj != si) { // equal-sample duplicates: sa < sb excludes them
+            val aj = g(j) & mask
+            val idx = si * nS + sj
+            cnt(idx) += 1
+            sx(idx) += ai
+            sy(idx) += aj
+            sxx(idx) = Math.addExact(sxx(idx), ai * ai)
+            syy(idx) = Math.addExact(syy(idx), aj * aj)
+            sxy(idx) = Math.addExact(sxy(idx), ai * aj)
+          }
+          j += 1
+        }
+        i += 1
+      }
+    }
+    val out = ArrayBuffer.empty[Row]
+    for (a <- 0 until nS; b <- a + 1 until nS) {
+      val idx = a * nS + b
+      val n = cnt(idx)
+      if (n >= 2 && cand.forall(java.util.Arrays.binarySearch(_, (a.toLong << 32) | b) >= 0)) {
+        val bn = BigInt(n)
+        val bsx = BigInt(sx(idx))
+        val bsy = BigInt(sy(idx))
+        val denx = (bn * sxx(idx) - bsx * bsx).toDouble
+        val deny = (bn * syy(idx) - bsy * bsy).toDouble
+        if (denx * deny > 0.0) {
+          val rho = (bn * sxy(idx) - bsx * bsy).toDouble / math.sqrt(denx * deny)
+          if (sketch.forall(s => math.abs(rho) >= s.tau))
+            out += Row(sampleIds(a), sampleIds(b), n, rho)
+        }
+      }
+    }
+    // The distributed output's schema, nullability included. A
+    // LocalRelation (not an RDD) so plan statistics stay accurate for
+    // downstream dispatches (planRowEstimate reads its real byte size; a
+    // LogicalRDD reports the unknown-size default and would shunt a
+    // 5k-row BH onto the ranged path).
+    val schema = StructType(Seq(StructField("sa", StringType),
+      StructField("sb", StringType), StructField("n_shared", LongType, nullable = false),
+      StructField("rho", DoubleType)))
+    Some(rb.sparkSession.createDataFrame(java.util.Arrays.asList(out.toArray: _*), schema))
   }
 
   /** Per-group z-score normalization (the feature-standardization step,

@@ -61,6 +61,44 @@ class AnalyticSpec extends SparkSpec {
         .forall { case (_, rho) => math.abs(rho) >= 0.9 })
   }
 
+  test("the sign sketch's packed md5 signs equal the oracle's SQL sign rule") {
+    // Both Spearman paths call signWords, so only the SQL form the oracle
+    // replays can catch a wrong charset, byte or bit position. 72 bits
+    // span two words; one probe id is non-ASCII.
+    val nbits = 72
+    val probes = Seq("cg00000029", "p007", "ß-probé-µ")
+    val sql = probes.toDF("p").crossJoin(spark.range(nbits).toDF("j"))
+      .select(col("p"), col("j"),
+        (substring(md5(concat(col("p"), lit("#"), col("j").cast("string"))), 1, 1) < "8")
+          .as("plus"))
+      .collect().map(r => (r.getString(0), r.getLong(1).toInt) -> r.getBoolean(2)).toMap
+    probes.foreach { p =>
+      val words = graft.functions.SignSketchAgg.signWords(p, nbits)
+      assert(words.length == 2 && (words(1) >>> (nbits - 64)) == 0L)
+      for (j <- 0 until nbits)
+        assert((((words(j >> 6) >>> (j & 63)) & 1L) == 1L) == sql((p, j)), s"$p bit $j")
+    }
+    assert(sql.values.toSet == Set(true, false))
+  }
+
+  test("spearmanMatrix fails loudly when duplicated keys overflow the local moment sums") {
+    // sample a: 150,000 singleton probes plus 12,000 rows on probe p that
+    // hold its largest values; sample b: 12,000 rows on p. The 1.44e8
+    // (a, b) pair events on p each add ra² ≈ (3.2e5)², so Σra² passes 2⁶³
+    // on the driver-local path (174k rows, within its gates and its
+    // pair-event budget); a wrapped sum would return a wrong matrix.
+    val single = spark.range(150000).select(format_string("q%06d", col("id")).as("probe_id"),
+      lit("a").as("sample_id"), col("id").cast("double").as("beta"))
+    val dup = spark.range(12000).select(lit("p").as("probe_id"), lit("a").as("sample_id"),
+      (col("id") + 150000).cast("double").as("beta"))
+      .union(spark.range(12000).select(lit("p").as("probe_id"), lit("b").as("sample_id"),
+        col("id").cast("double").as("beta")))
+    try intercept[ArithmeticException] {
+      Analytic.spearmanMatrix(single.union(dup), "probe_id", "sample_id", "beta").collect()
+    }
+    finally graft.ops.Caches.releaseAll()
+  }
+
   test("topKByVariance returns the k most variable keys in order") {
     val df = Seq(
       ("p1", 1.0), ("p1", 1.0), ("p1", 1.0), // var 0

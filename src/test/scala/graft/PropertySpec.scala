@@ -142,16 +142,20 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: per-group BH equals global BH run on each slice") {
-    samples(Gen.listOfN(60, Gen.zip(Gen.oneOf("c1", "c2", "c3"), Gen.choose(0.0, 1.0))), 5)
+    // some p are null: the slice BH (R's p.adjust semantics) gives them a
+    // null FDR and leaves them out of n
+    val p = Gen.frequency(5 -> Gen.choose(0.0, 1.0).map(Option(_)), 1 -> Gen.const(None))
+    samples(Gen.listOfN(60, Gen.zip(Gen.oneOf("c1", "c2", "c3"), p)), 5)
       .foreach { rows =>
+        assert(rows.exists(_._2.isEmpty))
         val df = rows.zipWithIndex.map { case ((c, p), i) => (c, f"k$i%03d", p) }
           .toDF("cid", "id", "p")
         val by = Analytic.bhAdjustBy(df, "cid", "p", "id")
           .select("cid", "id", "fdr").collect()
-          .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+          .map(r => (r.getString(0), r.getString(1)) -> Option(r.get(2))).toMap
         Seq("c1", "c2", "c3").foreach { c =>
           val slice = Analytic.bhAdjustWindowed(df.filter(col("cid") === c), "p", "id")
-            .select("id", "fdr").collect().map(r => r.getString(0) -> r.getDouble(1))
+            .select("id", "fdr").collect().map(r => r.getString(0) -> Option(r.get(1)))
           slice.foreach { case (id, f) => assert(by((c, id)) == f) }
         }
       }
@@ -234,11 +238,11 @@ class PropertySpec extends SparkSpec {
         val df = triples.distinct
           .map { case (p, s, v) => (f"p$p%03d", s"s$s", v / 12.0) }
           .toDF("probe_id", "sample_id", "beta")
-        val narrow = Analytic.spearmanMatrix(df, "probe_id", "sample_id",
-            "beta", forceDecimal = Some(false))
+        val narrow = Analytic.spearmanMatrixDistributed(df, "probe_id", "sample_id",
+            "beta", decimal = false)
           .orderBy("sa", "sb").collect().toSeq
-        val wide = Analytic.spearmanMatrix(df, "probe_id", "sample_id",
-            "beta", forceDecimal = Some(true))
+        val wide = Analytic.spearmanMatrixDistributed(df, "probe_id", "sample_id",
+            "beta", decimal = true)
           .orderBy("sa", "sb").collect().toSeq
         assert(narrow == wide) // bit-equal: same integers, same final ops
         assert(narrow.nonEmpty)
@@ -246,8 +250,8 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: spearman driver-local kernels are bit-equal to the distributed plans") {
-    // forceDecimal = Some(false) pins the DISTRIBUTED bigint plan; None on
-    // these tiny inputs takes the r10 driver-local path — the collected
+    // the *Distributed entry points pin the distributed bigint plan; the
+    // public calls on these tiny inputs take the driver-local path — the collected
     // rows must reproduce the distributed integers and doubles exactly,
     // for both the full matrix and the sketch-thresholded variant (whose
     // local path replays md5 signs, projections, band canonicalization
@@ -260,16 +264,16 @@ class PropertySpec extends SparkSpec {
           .toDF("probe_id", "sample_id", "beta")
         val localM = Analytic.spearmanMatrix(df, "probe_id", "sample_id", "beta")
           .orderBy("sa", "sb").collect().toSeq
-        val distM = Analytic.spearmanMatrix(df, "probe_id", "sample_id",
-            "beta", forceDecimal = Some(false))
+        val distM = Analytic.spearmanMatrixDistributed(df, "probe_id", "sample_id",
+            "beta", decimal = false)
           .orderBy("sa", "sb").collect().toSeq
         assert(localM == distM)
         assert(localM.nonEmpty)
         val localT = Analytic.spearmanThresholded(df, "probe_id", "sample_id",
             "beta", tau = 0.2)
           .orderBy("sa", "sb").collect().toSeq
-        val distT = Analytic.spearmanThresholded(df, "probe_id", "sample_id",
-            "beta", tau = 0.2, forceDecimal = Some(false))
+        val distT = Analytic.spearmanThresholdedDistributed(df, "probe_id", "sample_id",
+            "beta", tau = 0.2, decimal = false)
           .orderBy("sa", "sb").collect().toSeq
         assert(localT == distT)
       }

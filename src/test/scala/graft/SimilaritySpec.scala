@@ -299,16 +299,36 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("sa", "sb").collect().toSeq
     val expected = rows(Analytic.spearmanMatrix(clean, "probe_id", "sample_id", "beta"))
     assert(expected.nonEmpty)
-    // the small input takes the driver-local path; Some(false) pins the distributed one
+    // the small input takes the driver-local path; *Distributed pins the distributed one
     assert(rows(Analytic.spearmanMatrix(withNull, "probe_id", "sample_id", "beta")) == expected)
-    assert(rows(Analytic.spearmanMatrix(withNull, "probe_id", "sample_id", "beta",
-      forceDecimal = Some(false))) == expected)
+    assert(rows(Analytic.spearmanMatrixDistributed(withNull, "probe_id", "sample_id", "beta",
+      decimal = false)) == expected)
     val thresholded = rows(Analytic.spearmanThresholded(clean, "probe_id", "sample_id",
       "beta", tau = 0.2))
     assert(rows(Analytic.spearmanThresholded(withNull, "probe_id", "sample_id",
       "beta", tau = 0.2)) == thresholded)
-    assert(rows(Analytic.spearmanThresholded(withNull, "probe_id", "sample_id",
-      "beta", tau = 0.2, forceDecimal = Some(false))) == thresholded)
+    assert(rows(Analytic.spearmanThresholdedDistributed(withNull, "probe_id", "sample_id",
+      "beta", tau = 0.2, decimal = false)) == thresholded)
+    graft.ops.Caches.releaseAll()
+  }
+
+  test("spearman kernels skip rows with a null probe id, local and distributed") {
+    import graft.ops.Analytic
+    // the null-probe rows still take ranks in their samples, but they share
+    // no probe: s0 and s1 must not gain a shared "null" probe on either path
+    val df = (for (p <- 0 until 20; s <- 0 until 4) yield
+      (f"p$p%03d", s"s$s", ((p * 7 + s * s * 3) % 11) / 11.0))
+      .toDF("probe_id", "sample_id", "beta")
+      .union(Seq((null: String, "s0", 0.3), (null: String, "s1", 0.9))
+        .toDF("probe_id", "sample_id", "beta"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("sa", "sb").collect().toSeq
+    val local = rows(Analytic.spearmanMatrix(df, "probe_id", "sample_id", "beta"))
+    assert(local.nonEmpty && local.forall(_.getLong(2) == 20L))
+    assert(rows(Analytic.spearmanMatrixDistributed(df, "probe_id", "sample_id", "beta",
+      decimal = false)) == local)
+    assert(rows(Analytic.spearmanThresholded(df, "probe_id", "sample_id", "beta",
+      tau = 0.2)) == rows(Analytic.spearmanThresholdedDistributed(df, "probe_id",
+      "sample_id", "beta", tau = 0.2, decimal = false)))
     graft.ops.Caches.releaseAll()
   }
 }
