@@ -774,7 +774,6 @@ object QueriesCuration {
     // itself (strcmp95 conventions: ⌊max/2⌋−1 window, integer-halved
     // transpositions, 0.7 boost threshold, both-empty → 0).
     Q("c18_fuzzy_scores", (s, d) => {
-      GraftExtensions.registerAll(s)
       val (crm, web) = erMentions(s, d)
       erCandidates(crm, web)
         .select(col("a.id").as("crm_id"), col("b.id").as("web_id"),

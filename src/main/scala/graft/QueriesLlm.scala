@@ -1114,7 +1114,6 @@ object QueriesLlm {
     // own nfc_normalize — the two independent Unicode tables must agree
     // byte-for-byte for the hash check to pass.
     Q("t22_nfc_normalize", (s, d) => {
-      GraftExtensions.registerAll(s)
       val sp = s
       import sp.implicits._
       val base = docs(s, d).select(col("doc_id"), col("text"), col("source"))

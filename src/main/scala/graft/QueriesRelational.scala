@@ -263,7 +263,6 @@ object QueriesRelational {
     // oracle shape, two execution paths. AsOfExecSpec additionally pins
     // row-level equivalence between the two paths on planted edge cases.
     Q("j13_asof_join_exec", (s, d) => {
-      GraftExtensions.registerAll(s)
       val ev = Tables.events(s, d)
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
@@ -1039,7 +1038,6 @@ object QueriesRelational {
     // df it is tested against.
     Q("a25_chisq_inference", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      GraftExtensions.registerAll(s)
       val cells = chisqCellsZeroFilled(Tables.table(s, d, "lineitem"))
       val withMargins = cells
         .withColumn("ri", sum("nij").over(Window.partitionBy("l_returnflag")))

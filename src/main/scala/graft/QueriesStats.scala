@@ -1056,7 +1056,6 @@ object QueriesStats {
     // end (see k03_dmp_moderated), so the TVF is held to the IDENTICAL
     // DuckDB SQL — full moderated-lifecycle TVF parity, not just pass-1.
     Q("e14_sql_tvf_dmp", (s, d) => {
-      GraftExtensions.registerAll(s)
       s.sql(s"SELECT * FROM graft_dmp('$d') ORDER BY probe_id")
     }, Some(ctes.replaceFirst("WITH ", "WITH RECURSIVE ") + dmpMomSql +
       dmpModeratedTailSql + "\n" +
@@ -1070,7 +1069,6 @@ object QueriesStats {
     // graft_dmp_pass1 TVF must hash-match the identical DuckDB SQL the
     // Scala-API k03_dmp_pass1 matches — TVF parity, end to end.
     Q("e15_sql_tvf_pass1", (s, d) => {
-      GraftExtensions.registerAll(s)
       s.sql(s"SELECT * FROM graft_dmp_pass1('$d') ORDER BY probe_id")
     }, Some(dmpPass1OracleSql)),
 
@@ -1693,7 +1691,6 @@ object QueriesStats {
     // feeding it is the shared mwChainSql statistic, verbatim from k10's
     // own oracle.
     Q("k10_ranksum_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val bg = Tables.betaLong(s, d)
         .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
       val stats = Analytic.mannWhitney(bg, "probe_id", "beta", "group", "WT", "MUT")
@@ -1747,7 +1744,6 @@ object QueriesStats {
     // [0,1] clamp. RankTestSpec asserts the series against commons-math
     // approximateP.
     Q("k11_ks_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val bg = Tables.betaLong(s, d)
         .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
       val stats = Analytic.ksTest(bg, "probe_id", "beta", "group", "WT", "MUT")
@@ -1790,7 +1786,6 @@ object QueriesStats {
     // chain definitions k17/k10/k11 use), and the fused χ²(6) survival is
     // the finite even-df series exp(−x/2)·(1 + x/2 + (x/2)²/2).
     Q("k19_fisher_combined", (s, d) => {
-      GraftExtensions.registerAll(s)
       val bg = Tables.betaLong(s, d)
         .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
       val pWelch = welchT(s, d)
@@ -1888,7 +1883,6 @@ object QueriesStats {
     // incomplete beta agrees with the closed forms to ~1e-13, far inside
     // round-6. The Spark side stays generic in df.
     Q("k12_spearman_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = Analytic.spearmanMatrix(Tables.betaLong(s, d),
           "probe_id", "sample_id", "beta")
         .filter(col("n_shared") >= 4 && abs(col("rho")) < 1.0)
@@ -2038,7 +2032,6 @@ object QueriesStats {
     // round-6). ExtensionsSpec asserts graft_f_sf against commons-math
     // FDistribution.
     Q("k13_anova_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = anovaF(s, d)
         .withColumn("p_value",
           expr("graft_f_sf(f, CAST(df1 AS DOUBLE), CAST(df2 AS DOUBLE))"))
@@ -2424,7 +2417,6 @@ object QueriesStats {
     // df1 = 2 collapses the F survival to (d2/(d2+2f))^{d2/2} — the same
     // I_x(a,1) = x^a move as k13, replayed on the shared statistic chain.
     Q("k18_bf_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = brownForsythe(s, d)
         .withColumn("p_value",
           expr("graft_f_sf(bf_f, CAST(df1 AS DOUBLE), CAST(df2 AS DOUBLE))"))
@@ -2459,7 +2451,6 @@ object QueriesStats {
     // the shared welchChainSql (t, df) — agreement ~1e-13, far inside
     // round-6.
     Q("k17_welch_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = welchT(s, d).withColumn("p_value", expr("graft_t_pvalue(t, df)"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
         .select(col("probe_id"), col("n1"), col("n2"),
@@ -2499,7 +2490,6 @@ object QueriesStats {
     // k21 move; commons-math agrees with exp(−x/2) to ~1 ulp, far inside
     // round-6).
     Q("k20_kw_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = kruskalWallis(s, d)
         .withColumn("p_value", expr("graft_chisq_sf(h, 2.0)"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
@@ -2533,7 +2523,6 @@ object QueriesStats {
     // replay over the shared dunnChainSql statistic, BH tie-broken on the
     // same probe|pair key as the Spark side.
     Q("k37_dunn_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = dunnPairs(s, d)
         .withColumn("p_value", expr("graft_chisq_sf(z * z, 1.0)"))
         .withColumn("key", concat(col("probe_id"), lit("|"), col("pair")))
@@ -2681,7 +2670,6 @@ object QueriesStats {
     // over the shared welchChainSql; ExactInferenceSpec additionally pins
     // both one-sided p's against commons-math's TDistribution cdf.
     Q("k40_tost_equivalence", (s, d) => {
-      GraftExtensions.registerAll(s)
       val delta = 0.20 // equivalence margin in beta units — wide enough
       // that ~11% of sf0.01 probes DEMONSTRATE equivalence at these n (the
       // gate binds both ways; at 0.1 the per-group SEs swamp every margin)
@@ -2904,7 +2892,6 @@ object QueriesStats {
     // regularizedGammaQ(1, x/2) and exp(−x/2) agree to ~1 ulp, far inside
     // the round-6 comparison. BH is the w03 SQL mirror.
     Q("k21_jb_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = jarqueBera(s, d)
         .withColumn("p_value", expr("graft_chisq_sf(jb, 2.0)"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
@@ -2948,7 +2935,6 @@ object QueriesStats {
     // FULLY oracle-checked (r9): the erfc replay over the shared
     // mkChainSql statistic.
     Q("k22_mk_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = mannKendall(s, d)
         .withColumn("p_value", expr("graft_chisq_sf(z * z, 1.0)"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
@@ -3258,7 +3244,6 @@ object QueriesStats {
     // p via the codegen chi-square survival function. Rows-only (the CDF
     // has no SQL analog; the statistic and cells ride k27's oracle).
     Q("k27_chisq_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val cells = chisqCells(s, d)
       val agg = cells.agg(
         countDistinct("lang").as("n_lang"),
@@ -3413,7 +3398,6 @@ object QueriesStats {
     // χ²(1) sf = erfc(√(x/2)) through the Cody replay over the shared
     // lrChainSql statistic.
     Q("k28_logrank_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       Survival.logRank(kmSubjects(s, d), "cohort_a")
         .select(col("grp_a"), col("o_a"), round(col("e_a"), 6).as("e_a"),
           round(col("chi2"), 6).as("chi2"),
@@ -3440,7 +3424,6 @@ object QueriesStats {
     // 1e-7) is FULLY oracle-checked — DuckDB's C lgamma and commons-math's
     // Lanczos agree far below the 1e-6 rounding.
     Q("k29_fisher_exact", (s, d) => {
-      GraftExtensions.registerAll(s)
       import org.apache.spark.sql.expressions.Window
       val qc = Tables.detpLong(s, d)
         .withColumn("k", round(col("pval") * 1010).cast("bigint"))
@@ -3682,7 +3665,6 @@ object QueriesStats {
     // FULLY oracle-checked (r9): the erfc replay over the shared
     // cmhChainSql statistic.
     Q("k32_cmh_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       cmhTest(s, d)
         .select(col("n_strata"), round(col("cmh"), 6).as("cmh"),
           round(col("or_mh"), 6).as("or_mh"),
@@ -3937,7 +3919,6 @@ object QueriesStats {
     // k28's oracle-checked o_a/e_a EXACTLY. p via the codegen χ²(1)
     // survival function.
     Q("k35_cox_ph", (s, d) => {
-      GraftExtensions.registerAll(s)
       Survival.coxPh(kmSubjects(s, d), "cohort_a")
         .withColumn("p_value", round(expr("graft_chisq_sf(wald_chi2, 1.0)"), 6))
     }, None),
@@ -4095,7 +4076,6 @@ object QueriesStats {
     // (SqlOracles.studentTIntDfPv — the k12_spearman_inference move) on
     // top of the shared olsCte chain.
     Q("k42_ols_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       // persisted: consumed twice by the unionAll below (the w18 rule —
       // without this the nine-moment aggregate runs once per branch)
       val base = graft.ops.Caches.track(probeOls(s, d).persist())

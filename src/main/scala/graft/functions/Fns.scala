@@ -27,6 +27,28 @@ object Fns {
   def inverseMValue(m: Column): Column =
     clamp(pow(lit(2.0), m) / (lit(1.0) + pow(lit(2.0), m)), 0.0, 1.0)
 
+  /** [[mValueClamped]] on one double, evaluated as Spark evaluates the
+    * column: the clamp, then `Log2` as `StrictMath.log(x) / StrictMath.log(2)`.
+    * The driver-local e02 chain uses it, so its M-values carry the bits
+    * the distributed chain computes.
+    */
+  def mValueOf(beta: Double): Double = {
+    val b = clampOf(beta, 0.001, 0.999)
+    StrictMath.log(b / (1.0 - b)) / StrictMath.log(2)
+  }
+
+  /** [[inverseMValue]] on one double, with `Pow` as `StrictMath.pow`. */
+  def inverseMValueOf(m: Double): Double = {
+    val p = StrictMath.pow(2.0, m)
+    clampOf(p / (1.0 + p), 0.0, 1.0)
+  }
+
+  /** [[clamp]] on one double: `greatest`/`least` order NaN above every
+    * number, so NaN clamps to `hi`.
+    */
+  private def clampOf(x: Double, lo: Double, hi: Double): Double =
+    if (x.isNaN || x > hi) hi else if (x < lo) lo else x
+
   /** F9 — -log10(p); NULL where p <= 0 (volcano y-axis guard). */
   def negLog10(p: Column): Column = when(p > 0, -log10(p))
 

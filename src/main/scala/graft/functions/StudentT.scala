@@ -25,8 +25,8 @@ object StudentT {
   * row boxing, no codegen barrier in the moderated-statistics projection,
   * which matters when the DMP kernel runs over millions of probes.
   *
-  * Registered as the SQL function `graft_t_pvalue(t, df)` by
-  * [[graft.ops.Dmp.registerFunctions]].
+  * Installed as the SQL function `graft_t_pvalue(t, df)` by
+  * [[graft.GraftExtensions]].
   */
 case class StudentTPValue(left: Expression, right: Expression)
     extends BinaryExpression {

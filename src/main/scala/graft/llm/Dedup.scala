@@ -25,7 +25,6 @@ object Dedup {
     * fan-out is the distinct-shingle count, not the token count.
     */
   def shingles(docs: DataFrame, n: Int = 3): DataFrame = {
-    graft.GraftExtensions.registerAll(docs.sparkSession)
     docs
       .withColumn("__norm", TextAnalysis.normalized(col("text")))
       .select(col("doc_id"),
@@ -149,7 +148,6 @@ object Dedup {
                           passthrough: Seq[String] = Nil): DataFrame = {
     require(bands >= 1 && numPerm % bands == 0,
       s"bands ($bands) must divide numPerm ($numPerm)")
-    graft.GraftExtensions.registerAll(docs.sparkSession)
     val rowsPerBand = numPerm / bands
     val withSig = docs
       .withColumn("sigv", minhashSignatureArray(col("text"), numPerm))
@@ -442,7 +440,6 @@ object Dedup {
     */
   def winnowFingerprints(docs: DataFrame, k: Int = 12, w: Int = 4,
                          textCol: String = "text"): DataFrame = {
-    graft.GraftExtensions.registerAll(docs.sparkSession)
     docs
       .withColumn("__norm", TextAnalysis.normalized(col(textCol)))
       .select(col("doc_id"),

@@ -26,6 +26,10 @@ object Bmiq {
   final case class Out(probe_id: String, sample_id: String, beta: Double,
                        beta_norm: Double, design_type: Int)
 
+  /** The fit's subsample size and EM iterations (reference nfit/niter). */
+  private[ops] val Nfit = 10000
+  private[ops] val Niter = 5
+
   /** Beta(a, b) without a random generator: the kernel only evaluates
     * densities, CDFs and inverse CDFs, and the default constructor seeds a
     * fresh `Well19937c` (about 11 µs) for samples it never draws.
@@ -107,7 +111,11 @@ object Bmiq {
     * R's `density()$x[which.max(density()$y)]` (reference BMIQ_1.4.R:99-106
     * estimates per-class modes this way). bw.nrd0 bandwidth, 512-point
     * grid, data pre-binned onto the grid so cost is O(n + 512²) regardless
-    * of class size. Returns NaN for an empty input (caller falls back).
+    * of class size. The Gaussian weight of a bin `d` bins away is
+    * computed once per distance: `u·u` is sign-symmetric, so `w(|g − b|)`
+    * carries the bits `exp(−u²/2)` has at `(g, b)`, and the sum runs over
+    * the non-empty bins only, in the same order. Returns NaN for an empty
+    * input (caller falls back).
     */
   private[graft] def kdeMode(x: Array[Double]): Double = {
     val n = x.length
@@ -135,18 +143,18 @@ object Bmiq {
       val b = math.min(math.max(((v - lo) / step).round.toInt, 0), grid - 1)
       counts(b) += 1
     }
+    val w = Array.tabulate(grid) { d => val u = d * step / bw; math.exp(-0.5 * u * u) }
+    val filled = (0 until grid).filter(counts(_) > 0).toArray
     var best = lo
     var bestY = -1.0
     var g = 0
     while (g < grid) {
       var y = 0.0
-      var b = 0
-      while (b < grid) {
-        if (counts(b) > 0) {
-          val u = (g - b) * step / bw
-          y += counts(b) * math.exp(-0.5 * u * u)
-        }
-        b += 1
+      var i = 0
+      while (i < filled.length) {
+        val b = filled(i)
+        y += counts(b) * w(math.abs(g - b))
+        i += 1
       }
       if (y > bestY) { bestY = y; best = lo + g * step }
       g += 1
@@ -216,8 +224,11 @@ object Bmiq {
     Some(Fit(reg, p1, p2))
   }
 
-  private def normalizeSample(rows: Array[In], nfit: Int, niter: Int,
-                              minPerType: Int): Iterator[Out] = {
+  /** One sample's BMIQ: its rows in any order, its normalized rows out.
+    * Pure, so the distributed and the driver-local e02 chains share it.
+    */
+  private[ops] def normalizeSample(rows: Array[In], nfit: Int, niter: Int,
+                                   minPerType: Int): Iterator[Out] = {
     val sorted = rows.sortBy(_.probe_id)
     val fitted = fit(sorted, nfit, niter, minPerType)
     if (fitted.isEmpty) // the ≥minPerType guard: identity pass-through
@@ -295,7 +306,7 @@ object Bmiq {
     * Distribution shape = bmiq's: flatMapGroups over the sample axis.
     */
   def fittedDensity(beta: DataFrame, manifest: DataFrame, gridN: Int = 100,
-                    nfit: Int = 10000, niter: Int = 5, minPerType: Int = 50): DataFrame = {
+                    nfit: Int = Nfit, niter: Int = Niter, minPerType: Int = 50): DataFrame = {
     val spark = beta.sparkSession
     import spark.implicits._
     beta.join(broadcast(manifest), "probe_id")
@@ -330,12 +341,16 @@ object Bmiq {
   /** Entry point: long betas + probe manifest (design_type 1|2) →
     * normalized long betas.
     */
-  def bmiq(beta: DataFrame, manifest: DataFrame, nfit: Int = 10000,
-           niter: Int = 5, minPerType: Int = 50): DataFrame = {
-    val spark = beta.sparkSession
+  def bmiq(beta: DataFrame, manifest: DataFrame, nfit: Int = Nfit,
+           niter: Int = Niter, minPerType: Int = 50): DataFrame =
+    normalizeTyped(beta.join(broadcast(manifest), "probe_id"), nfit, niter, minPerType)
+
+  /** [[bmiq]] over betas that already carry their probe's `design_type`. */
+  private[ops] def normalizeTyped(typed: DataFrame, nfit: Int, niter: Int,
+                                  minPerType: Int): DataFrame = {
+    val spark = typed.sparkSession
     import spark.implicits._
-    beta.join(broadcast(manifest), "probe_id")
-      .select("probe_id", "sample_id", "beta", "design_type")
+    typed.select("probe_id", "sample_id", "beta", "design_type")
       .as[In]
       .groupByKey(_.sample_id)
       .flatMapGroups((_, it) => normalizeSample(it.toArray, nfit, niter, minPerType))

@@ -49,11 +49,7 @@ object Combat {
     val dims = sheet.select("sample_id", "run", "group")
     val joined = mvals.join(broadcast(dims), "sample_id")
 
-    // ONE aggregate job collects both bounded axes (was two distinct()
-    // collects — r10, the k12 consolidation template)
-    val axes = dims.agg(collect_set(col("run")), collect_set(col("group"))).head()
-    val batches = axes.getSeq[String](0).toArray.sorted
-    val groups = axes.getSeq[String](1).toArray.sorted
+    val (batches, groups) = axes(sheet)
     val bc = spark.sparkContext.broadcast((batches, groups))
 
     val cells = joined.groupBy("probe_id", "run", "group")
@@ -64,76 +60,140 @@ object Combat {
       val (bs, gs) = bc.value
       val bIdx = bs.zipWithIndex.toMap
       val gIdx = gs.zipWithIndex.toMap
-      val bN = bs.length
-      val gN = gs.length
-      val p = bN + (gN - 1) // batch one-hots + non-baseline group dummies
       val cellArr = it.toArray
-      val xtx = DenseMatrix.zeros[Double](p, p)
-      val xty = DenseVector.zeros[Double](p)
-      var yy = 0.0
-      var nTot = 0L
-      var finite = true
-      cellArr.foreach { case (_, b, g, n, s, ss) =>
-        if (s.isNaN || s.isInfinite || ss.isNaN || ss.isInfinite) finite = false
-        val bi = bIdx(b)
-        xtx(bi, bi) += n.toDouble
-        xty(bi) += s
-        val gi = gIdx(g)
-        if (gi > 0) {
-          val gcol = bN + gi - 1
-          xtx(gcol, gcol) += n.toDouble
-          xtx(bi, gcol) += n.toDouble
-          xtx(gcol, bi) += n.toDouble
-          xty(gcol) += s
-        }
-        yy += ss
-        nTot += n
-      }
-      // Non-finite cell moments are dropped outright: beyond being wrong,
-      // NaN/Inf reaching LAPACK's SVD (dgesdd) makes the f2j implementation
-      // spin forever — observed wedging a whole bench run.
-      if (!finite || nTot < p + 2) Iterator.empty
-      else {
-        // Ridge-regularized LU solve of the normal equations: LAPACK dgesv
-        // has no iterative-convergence path (unlike SVD-based pinv), and
-        // the tiny ridge makes rank-deficient designs (empty cells)
-        // solvable with negligible bias.
-        val ridge = 1e-8 * (breeze.linalg.trace(xtx) / p + 1.0)
-        val beta = (xtx + DenseMatrix.eye[Double](p) * ridge) \ xty
-        val ssr = yy - (beta dot xty)
-        val varPooled = ssr / nTot
-        if (!(varPooled > 1e-12)) Iterator.empty
-        else {
-          val sd = math.sqrt(varPooled)
-          // grand mean = batch-size-weighted mean of batch coefficients
-          // over the probe's own observation counts.
-          val nPerBatch = Array.fill(bN)(0L)
-          cellArr.foreach { case (_, b, _, n, _, _) => nPerBatch(bIdx(b)) += n }
-          val grand = (0 until bN).map(i => beta(i) * nPerBatch(i) / nTot).sum
-          def standMean(g: String): Double = {
-            val gi = gIdx(g)
-            grand + (if (gi > 0) beta(bN + gi - 1) else 0.0)
-          }
-          // per-cell z sums → per-batch γ̂ / δ̂²
-          val zs = Array.fill(bN)(0.0)
-          val zss = Array.fill(bN)(0.0)
-          cellArr.foreach { case (_, b, g, n, s, ss) =>
-            val sm = standMean(g)
-            zs(bIdx(b)) += (s - n * sm) / sd
-            zss(bIdx(b)) += (ss - 2 * sm * s + n * sm * sm) / varPooled
-          }
-          cellArr.iterator.map { case (_, b, g, n, _, _) =>
+      standardize(cellArr.map { case (_, b, g, n, s, ss) => Cell(bIdx(b), gIdx(g), n, s, ss) },
+          bs.length, gs.length) match {
+        case None => Iterator.empty
+        case Some(st) =>
+          cellArr.iterator.map { case (_, b, g, _, _, _) =>
             val bi = bIdx(b)
-            val nb = nPerBatch(bi)
-            val gHat = if (nb > 0) zs(bi) / nb else 0.0
-            val d2Hat =
-              if (nb > 1) math.max((zss(bi) - zs(bi) * zs(bi) / nb) / (nb - 1), 1e-8)
-              else 1.0
-            CellStats(probe, b, g, standMean(g), varPooled, nb, zs(bi), zss(bi), gHat, d2Hat)
+            CellStats(probe, b, g, st.standMean(gIdx(g)), st.varPooled, st.nB(bi),
+              st.zs(bi), st.zss(bi), st.gammaHat(bi), st.delta2Hat(bi))
           }
-        }
       }
     }.toDF()
+  }
+
+  /** The sheet's distinct non-null batches (`run`) and groups, each
+    * sorted. Their counts set the design's width. The sheet has one row
+    * per sample, a bounded axis, so it is collected in one scan job (none
+    * for a local relation) and deduplicated on the driver.
+    */
+  private[ops] def axes(sheet: DataFrame): (Array[String], Array[String]) = {
+    val rows = sheet.select("run", "group").collect()
+    def distinct(i: Int) = rows.flatMap(r => Option(r.getString(i))).distinct.sorted
+    (distinct(0), distinct(1))
+  }
+
+  /** One (batch, group) cell of a probe: its observation count and the
+    * sum and sum of squares of its M-values.
+    */
+  private[ops] final case class Cell(b: Int, g: Int, n: Long, s: Double, ss: Double)
+
+  /** One probe's standardization: the pooled variance, the stand mean per
+    * group, and per batch the observation count and the sums of the
+    * standardized values and of their squares.
+    */
+  private[ops] final case class Stand(varPooled: Double, standMean: Array[Double],
+                                      nB: Array[Long], zs: Array[Double], zss: Array[Double]) {
+    /** The batch's location estimate γ̂. */
+    def gammaHat(b: Int): Double = if (nB(b) > 0) zs(b) / nB(b) else 0.0
+    /** The batch's scale estimate δ̂². */
+    def delta2Hat(b: Int): Double =
+      if (nB(b) > 1) math.max((zss(b) - zs(b) * zs(b) / nB(b)) / (nB(b) - 1), 1e-8)
+      else 1.0
+  }
+
+  /** Pass 2 of [[combat]] for one probe: the OLS fit of the additive
+    * batch + group design from the probe's cell moments, then its
+    * standardization. None drops the probe: non-finite cell moments, fewer
+    * than p + 2 observations, or a pooled variance ≤ 1e-12.
+    */
+  private[ops] def standardize(cells: Array[Cell], bN: Int, gN: Int): Option[Stand] = {
+    val p = bN + (gN - 1) // batch one-hots + non-baseline group dummies
+    val xtx = DenseMatrix.zeros[Double](p, p)
+    val xty = DenseVector.zeros[Double](p)
+    var yy = 0.0
+    var nTot = 0L
+    var finite = true
+    cells.foreach { c =>
+      if (c.s.isNaN || c.s.isInfinite || c.ss.isNaN || c.ss.isInfinite) finite = false
+      xtx(c.b, c.b) += c.n.toDouble
+      xty(c.b) += c.s
+      if (c.g > 0) {
+        val gcol = bN + c.g - 1
+        xtx(gcol, gcol) += c.n.toDouble
+        xtx(c.b, gcol) += c.n.toDouble
+        xtx(gcol, c.b) += c.n.toDouble
+        xty(gcol) += c.s
+      }
+      yy += c.ss
+      nTot += c.n
+    }
+    // Non-finite cell moments are dropped outright: beyond being wrong,
+    // NaN/Inf reaching LAPACK's SVD (dgesdd) makes the f2j implementation
+    // spin forever — observed wedging a whole bench run.
+    if (!finite || nTot < p + 2) return None
+    // Ridge-regularized LU solve of the normal equations: LAPACK dgesv
+    // has no iterative-convergence path (unlike SVD-based pinv), and
+    // the tiny ridge makes rank-deficient designs (empty cells)
+    // solvable with negligible bias.
+    val ridge = 1e-8 * (breeze.linalg.trace(xtx) / p + 1.0)
+    val beta = (xtx + DenseMatrix.eye[Double](p) * ridge) \ xty
+    val ssr = yy - (beta dot xty)
+    val varPooled = ssr / nTot
+    if (!(varPooled > 1e-12)) return None
+    val sd = math.sqrt(varPooled)
+    // grand mean = batch-size-weighted mean of batch coefficients
+    // over the probe's own observation counts.
+    val nPerBatch = Array.fill(bN)(0L)
+    cells.foreach(c => nPerBatch(c.b) += c.n)
+    val grand = (0 until bN).map(i => beta(i) * nPerBatch(i) / nTot).sum
+    val standMean = Array.tabulate(gN)(g => grand + (if (g > 0) beta(bN + g - 1) else 0.0))
+    // per-cell z sums → per-batch γ̂ / δ̂²
+    val zs = Array.fill(bN)(0.0)
+    val zss = Array.fill(bN)(0.0)
+    cells.foreach { c =>
+      val sm = standMean(c.g)
+      zs(c.b) += (c.s - c.n * sm) / sd
+      zss(c.b) += (c.ss - 2 * sm * c.s + c.n * sm * sm) / varPooled
+    }
+    Some(Stand(varPooled, standMean, nPerBatch, zs, zss))
+  }
+
+  /** A batch's parametric hyperpriors: γ̂ ~ N(γ̄, τ̄²) and
+    * δ̂² ~ InvGamma(a, b).
+    */
+  private[ops] final case class Hyper(gBar: Double, t2: Double, a: Double, b: Double)
+
+  /** Pass 3 of [[combat]]: the moment fit of one batch's hyperpriors from
+    * the mean and sample variance of its γ̂ and δ̂² across probes (a
+    * variance is 0 when one probe survives: a no-spread prior).
+    */
+  private[ops] def hyperprior(gbar: Double, tau2: Double, dm: Double, ds2: Double): Hyper = {
+    val a = if (ds2 > 1e-12) (2 * ds2 + dm * dm) / ds2 else 1e6
+    val bp = if (ds2 > 1e-12) (dm * ds2 + dm * dm * dm) / ds2 else (1e6 - 1) * dm
+    Hyper(gbar, math.max(tau2, 1e-12), a, bp)
+  }
+
+  /** Pass 4 of [[combat]]: the coupled (γ*, δ²*) EB fixed point of one
+    * (probe, batch) from its γ̂, δ̂², count and z-sums, ≤ 100 steps.
+    */
+  private[ops] def ebSolve(h: Hyper, gHat: Double, d2Hat: Double, n: Long,
+                           zSum: Double, zSs: Double): (Double, Double) = {
+    var g = gHat
+    var dlt = math.max(d2Hat, 1e-8)
+    var i = 0
+    var change = 1.0
+    while (i < 100 && change > 1e-6) {
+      val gNew = (n * h.t2 * gHat + dlt * h.gBar) / (n * h.t2 + dlt)
+      val sse = zSs - 2 * gNew * zSum + n * gNew * gNew
+      val dNew = math.max((h.b + 0.5 * sse) / (n / 2.0 + h.a - 1), 1e-8)
+      change = math.max(math.abs(gNew - g) / math.max(math.abs(g), 1e-12),
+        math.abs(dNew - dlt) / dlt)
+      g = gNew; dlt = dNew; i += 1
+    }
+    (g, dlt)
   }
 
   /** Input: long M-values `m(probe_id, sample_id, m)` and a sample sheet
@@ -166,33 +226,14 @@ object Combat {
         avg("delta2_hat").as("dmean"), var_samp("delta2_hat").as("dvar"))
       .collect()
       .map { r =>
-        val b = r.getString(0)
-        val gbar = r.getDouble(1)
-        val tau2 = if (r.isNullAt(2)) 0.0 else r.getDouble(2)
-        val dm = r.getDouble(3)
-        val ds2 = if (r.isNullAt(4)) 0.0 else r.getDouble(4)
-        val a = if (ds2 > 1e-12) (2 * ds2 + dm * dm) / ds2 else 1e6
-        val bp = if (ds2 > 1e-12) (dm * ds2 + dm * dm * dm) / ds2 else (1e6 - 1) * dm
-        b -> (gbar, math.max(tau2, 1e-12), a, bp)
+        r.getString(0) -> hyperprior(r.getDouble(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2),
+          r.getDouble(3), if (r.isNullAt(4)) 0.0 else r.getDouble(4))
       }.toMap
     val bcHyper = spark.sparkContext.broadcast(hyper)
 
-    val ebSolve = udf { (batch: String, gHat: Double, d2Hat: Double, n: Long,
-                         zSum: Double, zSs: Double) =>
-      val (gBar, t2, a, b) = bcHyper.value(batch)
-      var g = gHat
-      var dlt = math.max(d2Hat, 1e-8)
-      var i = 0
-      var change = 1.0
-      while (i < 100 && change > 1e-6) {
-        val gNew = (n * t2 * gHat + dlt * gBar) / (n * t2 + dlt)
-        val sse = zSs - 2 * gNew * zSum + n * gNew * gNew
-        val dNew = math.max((b + 0.5 * sse) / (n / 2.0 + a - 1), 1e-8)
-        change = math.max(math.abs(gNew - g) / math.max(math.abs(g), 1e-12),
-          math.abs(dNew - dlt) / dlt)
-        g = gNew; dlt = dNew; i += 1
-      }
-      (g, dlt)
+    val eb = udf { (batch: String, gHat: Double, d2Hat: Double, n: Long,
+                    zSum: Double, zSs: Double) =>
+      ebSolve(bcHyper.value(batch), gHat, d2Hat, n, zSum, zSs)
     }
 
     // ONE adjustment-parameter join instead of two (r10): cellStats holds
@@ -210,7 +251,7 @@ object Combat {
     // once — bounded extra compute (groups are a constant axis), zero
     // extra shuffle bytes.
     val adjParams = cellStats.withColumn("eb",
-        ebSolve(col("batch"), col("gamma_hat"), col("delta2_hat"), col("n_b"),
+        eb(col("batch"), col("gamma_hat"), col("delta2_hat"), col("n_b"),
           col("z_sum_b"), col("z_ss_b")))
       .select(col("probe_id"), col("batch").as("run"), col("group"),
         col("stand_mean"), col("var_pooled"),

@@ -112,7 +112,6 @@ object Dmp {
     * aggregated, so the fitted prior is bit-unchanged.
     */
   private[ops] def fitPriorCounted(moments: DataFrame): (Prior, Long) = {
-    registerFunctions(moments.sparkSession)
     val valid = col("s2") > 0 && !isnan(col("s2"))
     val z = when(valid, log(col("s2")) - adjCol("df"))
     val row = moments
@@ -139,7 +138,6 @@ object Dmp {
     * coefficients; per-contrast MoM fit is the per-coef restatement).
     */
   def fitPriorsBy(moments: DataFrame, byCol: String): Map[String, Prior] = {
-    registerFunctions(moments.sparkSession)
     val z = log(col("s2")) - adjCol("df")
     moments
       .filter(col("s2") > 0 && !isnan(col("s2")))
@@ -159,14 +157,6 @@ object Dmp {
       .toMap
   }
 
-  /** Register the engine's native scalar functions in the session's
-    * function registry. Sessions built with
-    * `spark.sql.extensions=graft.GraftExtensions` already have them; this
-    * is the no-restart flavor for pre-existing sessions. Idempotent.
-    */
-  def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.GraftExtensions.registerAll(spark)
-
   /** Pass 3: moderated statistics + BH FDR + the reference's significance
     * call (FDR < 0.05 AND |logFC| > log2(1.5), /root/reference/plots.R:165).
     * The t CDF is a native codegen Expression ([[graft.functions.StudentTPValue]]),
@@ -174,7 +164,6 @@ object Dmp {
     */
   def moderated(moments: DataFrame, prior: Prior,
                 knownRows: Option[Long] = None): DataFrame = {
-    registerFunctions(moments.sparkSession)
     val d0 = if (prior.d0.isInfinite) 1e12 else prior.d0
     val withT = moments
       .withColumn("s2_post",
@@ -251,7 +240,6 @@ object Dmp {
                              contrasts: Seq[(String, String, String)]): DataFrame = {
     val spark = betaWithGroup.sparkSession
     import spark.implicits._
-    registerFunctions(spark)
     // reused by the prior-fit action and the final pass; released by the
     // harness between queries (ops.Caches)
     val mom = Caches.track(multiContrastMoments(betaWithGroup, contrasts).persist())

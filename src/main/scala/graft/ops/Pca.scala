@@ -1,12 +1,11 @@
 package graft.ops
 
 import breeze.linalg.{eigSym, DenseMatrix => BDM}
-import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
-import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** K1 — PCA over samples×top-k-probes
   * (reference /root/reference/pca_analysis.py:38-48 sklearn
@@ -21,11 +20,11 @@ import org.apache.spark.sql.functions._
   * Implementation note: Spark ML's PCA estimator routes through LAPACK
   * dgesdd (SVD), whose f2j implementation intermittently fails to converge
   * — or spins — on near-degenerate covariances (observed both ways). This
-  * kernel instead computes the covariance distributed (BLAS-only,
-  * RowMatrix.computeCovariance) and eigendecomposes the small k×k
-  * symmetric matrix with eigSym (the far more robust symmetric path),
-  * then projects with plain column expressions. Deterministic sign
-  * convention: each component's largest-|loading| entry is positive.
+  * kernel instead computes the covariance of the collected samples × topK
+  * matrix on the driver and eigendecomposes the small topK × topK
+  * symmetric matrix with eigSym (the far more robust symmetric path).
+  * Deterministic sign convention: each component's largest-|loading|
+  * entry is positive.
   */
 object Pca {
 
@@ -70,6 +69,11 @@ object Pca {
     * `scale=true` ~ sklearn StandardScaler flavor; `false` ~ the
     * centered-only prcomp(center=TRUE, scale.=FALSE) flavor
     * (workflow.R:321). Both flavors center.
+    *
+    * The top-k selection and the pivot run in Spark; the pivot (samples
+    * with at least one top-k probe × topK, absent cells 0.5) is collected,
+    * so the driver holds samples × topK doubles, and [[coords]] does the
+    * rest there.
     */
   def pcaCoords(beta: DataFrame, topK: Int, k: Int, scale: Boolean): DataFrame = {
     val spark = beta.sparkSession
@@ -80,56 +84,66 @@ object Pca {
     // closure and defeat codegen.
     val topProbes = Analytic.topKByVariance(beta, "probe_id", "beta", topK)
       .select("probe_id").collect().map(_.getString(0)).sorted.toSeq
-    val topDf = topProbes.toDF("probe_id")
-    val wide = beta.join(broadcast(topDf), Seq("probe_id"), "left_semi")
+    val wide = beta.join(broadcast(topProbes.toDF("probe_id")), Seq("probe_id"), "left_semi")
       .groupBy("sample_id").pivot("probe_id", topProbes).agg(first("beta"))
       .na.fill(0.5) // reference drops NA rows pre-PCA; absent cells are imputed at the midpoint
-    // assembled feeds the scaler FIT (one pass) and the transformed
-    // feature table (a second pass) — persist it so the pivot shuffle runs
-    // once, not once per consumer (r10, §2.4; rows = samples, a bounded
-    // axis, so the cache is small at any probe scale)
-    val assembled = new VectorAssembler()
-      .setInputCols(topProbes.toArray).setOutputCol("features")
-      .transform(wide)
-      .persist()
-    // Released in `finally`, so a throwing fit or eigen step leaves no
-    // cache behind either.
-    var feats: DataFrame = null
-    val (rows, schema) = try {
-      val scaler = fitWithRetry("StandardScaler.fit") {
-        new StandardScaler().setWithMean(true).setWithStd(scale)
-          .setInputCol("features").setOutputCol("scaled")
-          .fit(assembled)
-      }
-      feats = scaler.transform(assembled)
-        .select(col("sample_id"), vector_to_array(col("scaled")).as("x"))
-        .persist()
-
-      // distributed covariance (BLAS, no SVD), driver-side symmetric eigen
-      val cov = new RowMatrix(
-        feats.select("x").rdd.map(r => OldVectors.dense(r.getSeq[Double](0).toArray)))
-        .computeCovariance()
-      val d = cov.numCols
-      val es = topEigen(new BDM(d, d, cov.toArray), k)
-      val comps = es.vectors.toSeq.zip(es.values.map(_ / math.max(es.total, 1e-300)))
-
-      val projected = comps.zipWithIndex.foldLeft(feats) { case (df, ((v, evr), j)) =>
-        df.withColumn(s"pc${j + 1}",
-            round(aggregate(zip_with(col("x"), typedLit(v.toSeq), (a, b) => a * b),
-              lit(0.0), (acc, e) => acc + e), 6))
-          .withColumn(s"evr${j + 1}", round(lit(evr), 6))
-      }.drop("x").orderBy("sample_id")
-
-      // The result is samples × (1+2k) — the same bounded-by-design axis MDS
-      // already collects — so materialize it here and release the features
-      // cache: no cache block outlives the call.
-      (projected.collect(), projected.schema)
-    } finally {
-      if (feats != null) feats.unpersist(false)
-      assembled.unpersist(false)
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
+      .collect().sortBy(r => Option(r.getString(0)))
+    coords(spark, wide.map(_.getString(0)),
+      wide.map(r => Array.tabulate(topProbes.length)(j => r.getDouble(j + 1))), k, scale)
   }
+
+  /** The driver-side PCA of a samples × features matrix `x` (rows in
+    * `samples` order), shared by [[pcaCoords]] and the driver-local e02
+    * chain: center each feature, divide it by its unbiased std when
+    * `scale` (Spark ML StandardScaler: a zero-std feature maps to 0), take
+    * the features' covariance, its `k` leading eigenpairs ([[topEigen]])
+    * and the projections. Scores and ratios are rounded HALF_UP at 6
+    * places; rows come back in `samples` order as
+    * `sample_id, pc1, evr1, …, pck, evrk`.
+    */
+  private[ops] def coords(spark: SparkSession, samples: Array[String],
+                          x: Array[Array[Double]], k: Int, scale: Boolean): DataFrame = {
+    val n = x.length
+    require(n > 1, s"PCA needs at least 2 samples, got $n")
+    val d = x.head.length
+    // Welford means and M2: a constant feature keeps exactly zero spread
+    val mean = new Array[Double](d)
+    val m2 = new Array[Double](d)
+    for (j <- 0 until d; i <- 0 until n) {
+      val delta = x(i)(j) - mean(j)
+      mean(j) += delta / (i + 1)
+      m2(j) += delta * (x(i)(j) - mean(j))
+    }
+    val factor = Array.tabulate(d) { j =>
+      val std = math.sqrt(m2(j) / (n - 1))
+      if (!scale) 1.0 else if (std == 0.0) 0.0 else 1.0 / std
+    }
+    val z = x.map(row => Array.tabulate(d)(j => (row(j) - mean(j)) * factor(j)))
+    val cov = BDM.zeros[Double](d, d)
+    for (a <- 0 until d; b <- a until d) {
+      var acc = 0.0
+      for (i <- 0 until n) acc += z(i)(a) * z(i)(b)
+      cov(a, b) = acc / (n - 1)
+      cov(b, a) = cov(a, b)
+    }
+    val es = topEigen(cov, k)
+    val evr = es.values.map(v => round6(v / math.max(es.total, 1e-300)))
+    val rows = samples.indices.map { i =>
+      Row.fromSeq(samples(i) +: es.vectors.indices.flatMap { c =>
+        var acc = 0.0
+        for (j <- 0 until d) acc += z(i)(j) * es.vectors(c)(j)
+        Seq(round6(acc), evr(c))
+      })
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+      StructField("sample_id", StringType) +: (1 to k).flatMap(c => Seq(
+        StructField(s"pc$c", DoubleType), StructField(s"evr$c", DoubleType)))))
+  }
+
+  /** Spark SQL's `round(v, 6)`: BigDecimal HALF_UP, NaN and ±∞ unchanged. */
+  private def round6(v: Double): Double =
+    if (v.isNaN || v.isInfinite) v
+    else BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** All-CpG PCA — the scale path for an UNBOUNDED feature axis (the
     * documented escape above: no top-k selection, no pivot). Dual
@@ -174,21 +188,11 @@ object Pca {
       es.vectors(j)(i) * math.sqrt(es.values(j)))
     val evr = es.values.map(_ / math.max(es.total, 1e-300))
     val out = (0 until nS).map { i =>
-      (samples(i) +: (0 until kEff).flatMap(j => Seq(
-        BigDecimal(scores(i)(j)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(evr(j)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))).toSeq
+      (samples(i) +: (0 until kEff).flatMap(j => Seq(round6(scores(i)(j)), round6(evr(j))))).toSeq
     }
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("sample_id",
-        org.apache.spark.sql.types.StringType) +:
-      (1 to kEff).flatMap(j => Seq(
-        org.apache.spark.sql.types.StructField(s"pc$j",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField(s"evr$j",
-          org.apache.spark.sql.types.DoubleType))))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        out.map(org.apache.spark.sql.Row.fromSeq), 1), schema)
+    val schema = StructType(StructField("sample_id", StringType) +:
+      (1 to kEff).flatMap(j => Seq(StructField(s"pc$j", DoubleType), StructField(s"evr$j", DoubleType))))
+    spark.createDataFrame(spark.sparkContext.parallelize(out.map(Row.fromSeq), 1), schema)
       .orderBy("sample_id")
   }
 }

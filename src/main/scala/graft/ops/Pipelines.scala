@@ -5,18 +5,39 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Fns
 
-/** E2 — the reference's flagship end-to-end lifecycle as ONE lazy DataFrame
+/** E2 — the reference's flagship end-to-end lifecycle, QC as one Spark
   * DAG (reference /root/reference/workflow.R:1-722: "IDAT -> QC -> BMIQ
-  * (per run) -> ComBat (across all runs) -> PCA"). Where the reference
-  * crosses Python↔R process boundaries and round-trips CSV/RData temp
-  * files between stages (workflow.R:86-91), the engine chains the same
-  * stages as transforms — Catalyst sees the whole plan, and the only
-  * materialization points are the two iterative kernels' internal
-  * persists.
+  * (per run) -> ComBat (across all runs) -> PCA"), the post-QC chain on
+  * the driver or as distributed transforms by the QC'd table's size.
+  * Where the reference crosses Python↔R process boundaries and
+  * round-trips CSV/RData temp files between stages (workflow.R:86-91),
+  * the engine chains the same stages in one process.
   */
 object Pipelines {
 
+  /** The QC'd rows at or below which [[fullWorkflow]] runs its post-QC
+    * chain on the driver. A study's QC'd table is small next to its raw
+    * input (about 29k rows of 1,000 samples at sf0.1), and there the
+    * distributed chain's time is job, stage and replanning overhead.
+    * Measured on 4 CPUs over ScaleSmoke replicas of sf0.1, the local
+    * chain is faster at 1×, 8× and 16× (470,078 QC'd rows: 7.7–7.9 s
+    * against 9.1–9.5 s warm); larger tables, ScaleSmoke's 64× replica
+    * (about 1.9M rows) among them, stay distributed.
+    */
+  private val LocalMaxRows = 500000L
+
   /** QC'd → BMIQ-normalized → ComBat-adjusted → top-k → PCA coordinates.
+    *
+    * QC runs in Spark. Its output is joined once with the manifest's
+    * `design_type`, persisted and counted; the sheet is collected once.
+    * At most [[LocalMaxRows]] (500,000) rows are collected into
+    * primitive arrays and run BMIQ → M-values → ComBat → top-k → PCA on
+    * the driver; larger tables run the same steps as distributed
+    * transforms over the persisted table, which is released before
+    * returning. Both paths call the same per-sample BMIQ, per-probe
+    * ComBat, M-value and PCA functions, so they differ only in summation
+    * order. Either way the driver holds the samples × topK matrix PCA
+    * runs on.
     *
     * @return PCA coordinates per surviving sample (the workflow's final
     *         plot-ready table, workflow.R:229-237).
@@ -24,13 +45,46 @@ object Pipelines {
   def fullWorkflow(spark: SparkSession, beta: DataFrame, detp: DataFrame,
                    sheet: DataFrame, manifest: DataFrame,
                    qcThr: Double = 0.05, topK: Int = 50, pcs: Int = 3,
-                   bmiqMinPerType: Int = 50): DataFrame = {
+                   bmiqMinPerType: Int = 50): DataFrame =
+    workflow(beta, detp, sheet, manifest, qcThr, topK, pcs, bmiqMinPerType,
+      pinDistributed = false)
+
+  /** [[fullWorkflow]]'s distributed chain at any size — for the specs. */
+  private[graft] def fullWorkflowDistributed(beta: DataFrame, detp: DataFrame,
+      sheet: DataFrame, manifest: DataFrame, qcThr: Double, topK: Int, pcs: Int,
+      bmiqMinPerType: Int): DataFrame =
+    workflow(beta, detp, sheet, manifest, qcThr, topK, pcs, bmiqMinPerType,
+      pinDistributed = true)
+
+  private def workflow(beta: DataFrame, detp: DataFrame, sheet: DataFrame,
+                       manifest: DataFrame, qcThr: Double, topK: Int, pcs: Int,
+                       minPerType: Int, pinDistributed: Boolean): DataFrame = {
+    // The sheet (one row per sample) as a local relation: both chains
+    // read ComBat's batch and group axes and each sample's run and group
+    // from it without another job.
+    val dims = sheet.select("sample_id", "run", "group")
+    val localDims = dims.sparkSession.createDataFrame(
+      java.util.Arrays.asList(dims.collect(): _*), dims.schema)
     // 1. per-run QC (workflow.R:43-75): sample mean-detP filter + probe
     // filter (observed-entry semantics — long model)
-    val qcd = Qc.qcBetas(beta, detp, nSamples = -1, thr = qcThr)
+    val typed = Qc.qcBetas(beta, detp, nSamples = -1, thr = qcThr)
+      .join(broadcast(manifest.select("probe_id", "design_type")), "probe_id")
+      .select("probe_id", "sample_id", "beta", "design_type")
+      .persist()
+    try {
+      // An RDD count fills the cache and counts it; Dataset.count would add
+      // an aggregate exchange, a job of its own.
+      if (!pinDistributed && typed.rdd.count() <= LocalMaxRows)
+        local(typed, localDims, topK, pcs, minPerType)
+      else distributed(typed, localDims, topK, pcs, minPerType)
+    } finally typed.unpersist(false)
+  }
 
+  /** The post-QC chain as distributed transforms. */
+  private def distributed(typed: DataFrame, sheet: DataFrame, topK: Int, pcs: Int,
+                          minPerType: Int): DataFrame = {
     // 2. BMIQ intra-sample normalization (workflow.R:84-108)
-    val normalized = Bmiq.bmiq(qcd, manifest, minPerType = bmiqMinPerType)
+    val normalized = Bmiq.normalizeTyped(typed, Bmiq.Nfit, Bmiq.Niter, minPerType)
       .select(col("probe_id"), col("sample_id"), col("beta_norm").as("beta"))
 
     // 3. ComBat across runs on M-values (workflow.R:112-150), back to betas.
@@ -54,6 +108,109 @@ object Pipelines {
     // dropped before returning — nothing leaks past the call.
     try Pca.pcaCoords(adjusted, topK, pcs, scale = true)
     finally { adjusted.unpersist(false); m.unpersist(false) }
+  }
+
+  /** The post-QC chain on the driver, over one collect of `typed`. As
+    * ComBat's sheet join does, it drops the samples the sheet lacks.
+    * Samples and probes are dictionary-encoded in sorted id order and every
+    * step visits them in that order, so the result is the same on every run.
+    */
+  private def local(typed: DataFrame, sheet: DataFrame, topK: Int, pcs: Int,
+                    minPerType: Int): DataFrame = {
+    val (batches, groups) = Combat.axes(sheet)
+    val runGroup = sheet.collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    val rows = typed.collect().filter(r => runGroup.contains(r.getString(1)))
+    val sIds = rows.map(_.getString(1)).distinct.sorted
+    val pIds = rows.map(_.getString(0)).distinct.sorted
+    val (nS, nP, bN, gN) = (sIds.length, pIds.length, batches.length, groups.length)
+    val pIndex = pIds.zipWithIndex.toMap
+    val batchOf = sIds.map(s => batches.indexOf(runGroup(s)._1))
+    val groupOf = sIds.map(s => groups.indexOf(runGroup(s)._2))
+
+    // 2. BMIQ per sample: samples are independent, so they run in
+    // parallel on the common fork-join pool, each into its own slot
+    val bySample = rows.groupBy(_.getString(1))
+    val normalized = new Array[Array[Bmiq.Out]](nS)
+    java.util.stream.IntStream.range(0, nS).parallel().forEach { s =>
+      normalized(s) = Bmiq.normalizeSample(bySample(sIds(s)).map(r =>
+          Bmiq.In(r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))),
+        Bmiq.Nfit, Bmiq.Niter, minPerType).toArray
+    }
+    // M-values in sample order, then a stable counting sort by probe:
+    // probe p's cells are start(p) until start(p + 1), samples ascending
+    val probe0 = Array.newBuilder[Int]
+    val m0 = Array.newBuilder[Double]
+    val sample0 = Array.newBuilder[Int]
+    for (s <- 0 until nS; o <- normalized(s)) {
+      probe0 += pIndex(o.probe_id); sample0 += s; m0 += Fns.mValueOf(o.beta_norm)
+    }
+    val (probeOf, sampleOf, mOf) = (probe0.result(), sample0.result(), m0.result())
+    val len = probeOf.length
+    val start = new Array[Int](nP + 1)
+    probeOf.foreach(p => start(p + 1) += 1)
+    for (p <- 0 until nP) start(p + 1) += start(p)
+    val (sample, m) = (new Array[Int](len), new Array[Double](len))
+    val fill = start.clone()
+    for (i <- 0 until len) {
+      val at = fill(probeOf(i))
+      sample(at) = sampleOf(i); m(at) = mOf(i); fill(probeOf(i)) += 1
+    }
+
+    // 3. ComBat: per-probe standardization, per-batch hyperpriors, EB
+    val stand = Array.tabulate(nP) { p =>
+      val n = new Array[Long](bN * gN)
+      val sum = new Array[Double](bN * gN)
+      val ss = new Array[Double](bN * gN)
+      for (i <- start(p) until start(p + 1)) {
+        val c = batchOf(sample(i)) * gN + groupOf(sample(i))
+        n(c) += 1; sum(c) += m(i); ss(c) += m(i) * m(i)
+      }
+      Combat.standardize((0 until bN * gN).filter(n(_) > 0)
+        .map(c => Combat.Cell(c / gN, c % gN, n(c), sum(c), ss(c))).toArray, bN, gN)
+    }
+    val survivors = stand.flatten
+    val hyper = Array.tabulate(bN) { b =>
+      val st = survivors.filter(_.nB(b) > 0)
+      val (gbar, tau2) = meanVar(st.map(_.gammaHat(b)))
+      val (dm, ds2) = meanVar(st.map(_.delta2Hat(b)))
+      Combat.hyperprior(gbar, tau2.getOrElse(0.0), dm, ds2.getOrElse(0.0))
+    }
+    val adj = new Array[Double](len)
+    for (p <- 0 until nP; st <- stand(p)) {
+      val eb = Array.tabulate(bN)(b =>
+        if (st.nB(b) > 0) Combat.ebSolve(hyper(b), st.gammaHat(b), st.delta2Hat(b),
+          st.nB(b), st.zs(b), st.zss(b)) else (0.0, 1.0))
+      val sd = math.sqrt(st.varPooled)
+      for (i <- start(p) until start(p + 1)) {
+        val sm = st.standMean(groupOf(sample(i)))
+        val (g, d) = eb(batchOf(sample(i)))
+        adj(i) = Fns.inverseMValueOf(sd * ((m(i) - sm) / sd - g) / math.sqrt(d) + sm)
+      }
+    }
+
+    // 4. top-k probes by the variance of their adjusted betas (var_samp;
+    // a single-sample probe's null variance sorts last), probe id ascending
+    val top = (0 until nP).filter(stand(_).isDefined)
+      .map(p => (p, meanVar(adj.slice(start(p), start(p + 1)))._2))
+      .sortBy { case (p, v) => (v.isEmpty, -v.getOrElse(0.0), p) }
+      .take(topK).map(_._1).sorted
+    val column = top.zipWithIndex.toMap
+
+    // 5. PCA over the samples with at least one top-k probe, absent cells 0.5
+    val wide = Array.fill(nS)(null: Array[Double])
+    for (p <- top; i <- start(p) until start(p + 1)) {
+      if (wide(sample(i)) == null) wide(sample(i)) = Array.fill(top.length)(0.5)
+      wide(sample(i))(column(p)) = adj(i)
+    }
+    val kept = (0 until nS).filter(wide(_) != null)
+    Pca.coords(typed.sparkSession, kept.map(sIds).toArray, kept.map(wide).toArray, pcs, scale = true)
+  }
+
+  /** The mean and the sample variance (None below two values) of `v`. */
+  private def meanVar(v: Array[Double]): (Double, Option[Double]) = {
+    val mean = v.sum / v.length
+    (mean, if (v.length < 2) None
+           else Some(v.map(x => (x - mean) * (x - mean)).sum / (v.length - 1)))
   }
 
   /** The LLM-data analog of [[fullWorkflow]]: the whole curation tier as

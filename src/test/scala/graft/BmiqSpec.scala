@@ -83,6 +83,66 @@ class BmiqSpec extends SparkSpec {
     assert(Bmiq.kdeMode(Array(0.42)) == 0.42)
   }
 
+  /** kdeMode as it evaluated every (grid, bin) weight before the kernel
+    * table: the O(512²) reference the table must match bit for bit.
+    */
+  private def kdeModeReference(x: Array[Double]): Double = {
+    val n = x.length
+    if (n == 0) return Double.NaN
+    if (n == 1) return x(0)
+    val mean = x.sum / n
+    val sd = math.sqrt(x.map(v => (v - mean) * (v - mean)).sum / (n - 1))
+    val sorted = x.sorted
+    def q7(q: Double): Double = {
+      val h = (n - 1) * q
+      val lo = math.floor(h).toInt
+      val hi = math.ceil(h).toInt
+      sorted(lo) + (h - lo) * (sorted(hi) - sorted(lo))
+    }
+    val iqr = q7(0.75) - q7(0.25)
+    val spread = math.min(sd, if (iqr > 0) iqr / 1.34 else sd)
+    val bw = math.max(0.9 * spread * math.pow(n, -0.2), 1e-9)
+    val lo = sorted.head - 3 * bw
+    val hi = sorted.last + 3 * bw
+    val grid = 512
+    val step = (hi - lo) / (grid - 1)
+    if (step <= 0) return sorted.head
+    val counts = new Array[Double](grid)
+    x.foreach { v =>
+      val b = math.min(math.max(((v - lo) / step).round.toInt, 0), grid - 1)
+      counts(b) += 1
+    }
+    var best = lo
+    var bestY = -1.0
+    for (g <- 0 until grid) {
+      var y = 0.0
+      for (b <- 0 until grid) if (counts(b) > 0) {
+        val u = (g - b) * step / bw
+        y += counts(b) * math.exp(-0.5 * u * u)
+      }
+      if (y > bestY) { bestY = y; best = lo + g * step }
+    }
+    best
+  }
+
+  test("kdeMode's kernel table is bit-identical to the full O(512²) sum") {
+    val rng = new scala.util.Random(20261018L)
+    val inputs = Seq(Array(0.3, 0.7), Array(0.5, 0.5), Array(0.2, 0.2, 0.2), // n = 2, step <= 0
+        Array.fill(40)(0.61)) ++ // one tie group: step <= 0
+      (0 until 1000).map { i =>
+        val n = 2 + rng.nextInt(if (i % 10 == 0) 4 else 400)
+        // every third input draws from 20 levels, so most values tie
+        if (i % 3 == 0) Array.fill(n)(rng.nextInt(20) / 20.0)
+        else Array.fill(n)(if (rng.nextBoolean()) rng.nextGaussian() * 0.05 + 0.15
+                           else rng.nextDouble())
+      }
+    inputs.foreach { x =>
+      val (got, want) = (Bmiq.kdeMode(x), kdeModeReference(x))
+      assert(java.lang.Double.doubleToRawLongBits(got) == java.lang.Double.doubleToRawLongBits(want),
+        s"n=${x.length}: $got vs $want")
+    }
+  }
+
   test("below the 50-probe-per-type guard the sample passes through unchanged") {
     val tiny = fixture("S2").filter(col("probe_id").rlike("_000[0-9]$")) // 20+20 probes
     val out = Bmiq.bmiq(tiny.select("probe_id", "sample_id", "beta"), manifest(tiny))

@@ -91,6 +91,20 @@ class ExtensionsSpec extends SparkSpec {
     assert(xs.zip(xs.tail).forall { case (a, b) => a > b }, xs)
   }
 
+  test("a session built with the extension resolves every function without registration") {
+    // a fresh session of the shared context: the extension's injections,
+    // none of the temp functions registerAll adds elsewhere in this suite
+    val fresh = spark.newSession()
+    GraftExtensions.descriptors.foreach { case (id, _, _) =>
+      assert(fresh.catalog.functionExists(id.funcName), id.funcName)
+    }
+    GraftExtensions.tableFunctions.foreach { case (id, _, _) =>
+      assert(fresh.sessionState.tableFunctionRegistry.functionExists(id), id.funcName)
+    }
+    assert(fresh.sql("SELECT graft_inverse_mvalue(graft_mvalue(0.25D)) AS b")
+      .head().getDouble(0) == 0.25)
+  }
+
   test("builders reject wrong arity") {
     intercept[IllegalArgumentException] {
       builder("graft_mvalue")(Seq(Literal(1.0), Literal(2.0)))

@@ -29,6 +29,23 @@ class FnsSpec extends SparkSpec {
     assert(math.abs(r.getDouble(3) - 2.0) < 1e-12) // log2(0.8/0.2) = 2
   }
 
+  test("scalar M-value and inverse carry the column functions' bits") {
+    // 0 and 1, both clamps and their neighbours, the interior, the
+    // inverse's saturation and NaN (greatest/least clamp NaN to the top)
+    val grid = (Seq(0.0, 1.0, 0.001, 0.999, Math.nextUp(0.001), Math.nextDown(0.001),
+        Math.nextUp(0.999), Math.nextDown(0.999), -0.5, 1.5, 0.5, -12.0, 12.0,
+        1100.0, -1100.0, Double.NaN) ++ (0 to 400).map(_ / 400.0) ++
+      (-200 to 200).map(_ * 0.07)).toDF("x")
+    val rows = grid.select(col("x"), Fns.mValueClamped(col("x")).as("m"),
+      Fns.inverseMValue(col("x")).as("b")).collect()
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    rows.foreach { r =>
+      val x = r.getDouble(0)
+      assert(bits(Fns.mValueOf(x)) == bits(r.getDouble(1)), s"mValue($x)")
+      assert(bits(Fns.inverseMValueOf(x)) == bits(r.getDouble(2)), s"inverseMValue($x)")
+    }
+  }
+
   test("varFromMoments equals textbook sample variance") {
     val xs = Seq(3L, 7L, 7L, 19L)
     val mean = xs.map(_.toDouble).sum / xs.length

@@ -141,8 +141,8 @@ class PcaMdsSpec extends SparkSpec {
       (f"p$p%03d", f"s$s%02d", 0.1 * p + 0.05 * s + 0.01 * ((p * s) % 3))
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size
-    // 10 components of 3 features: the eigen step throws, after the
-    // scaler fit and the covariance pass have filled both caches
+    // 10 components of 3 features: the driver-side eigen step throws after
+    // the pivot is collected; no cache may outlive the failed call
     intercept[IndexOutOfBoundsException] {
       Pca.pcaCoords(rows.toDF("probe_id", "sample_id", "beta"),
         topK = 3, k = 10, scale = false)
