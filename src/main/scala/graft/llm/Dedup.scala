@@ -8,6 +8,12 @@ import org.apache.spark.sql.functions._
   * pairwise step is blocked — candidates only ever meet through a join key
   * (content hash, shared shingle, LSH band bucket), never a cross join, so
   * the shuffles stay proportional to collisions rather than n².
+  *
+  * The shingle, MinHash and winnowing steps call native expressions by
+  * name (`graft_shingles`, `graft_minhash_sigs`, `graft_winnow`), so the
+  * session must be built with `graft.GraftExtensions` (as
+  * `graft.Sessions.local` builds it) or have had
+  * `GraftExtensions.registerAll` called on it.
   */
 object Dedup {
 

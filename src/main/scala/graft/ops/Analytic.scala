@@ -31,6 +31,22 @@ object Analytic {
       .orderBy(col("variance").desc, col(keyCol).asc)
       .limit(k)
 
+  /** [[topKByVariance]]'s order over keys numbered in key order whose
+    * variances are on the driver: variance descending, a single
+    * observation's null (None) variance last, then key ascending; the first
+    * `k` key numbers. AnalyticSpec pins the two orders together.
+    */
+  private[graft] def topKIndices(variance: Array[Option[Double]], k: Int): Array[Int] =
+    variance.indices.sortBy(i => (variance(i).isEmpty, -variance(i).getOrElse(0.0), i))
+      .take(k).toArray
+
+  /** The mean and `var_samp` (None below two values) of `v` on the driver. */
+  private[ops] def meanVar(v: Array[Double]): (Double, Option[Double]) = {
+    val mean = v.sum / v.length
+    (mean, if (v.length < 2) None
+           else Some(v.map(x => (x - mean) * (x - mean)).sum / (v.length - 1)))
+  }
+
   /** A3 — per-key per-group means and their difference (logFC precursor,
     * reference /root/reference/plots.R:148-158). `g1 - g2`.
     */

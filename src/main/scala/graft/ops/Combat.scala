@@ -1,7 +1,7 @@
 package graft.ops
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** K5 — ComBat batch correction with parametric empirical-Bayes priors
@@ -168,12 +168,21 @@ object Combat {
 
   /** Pass 3 of [[combat]]: the moment fit of one batch's hyperpriors from
     * the mean and sample variance of its γ̂ and δ̂² across probes (a
-    * variance is 0 when one probe survives: a no-spread prior).
+    * variance is 0 when one probe survives: a no-spread prior). [[combat]]
+    * aggregates the moments in Spark, [[hyperpriorOf]] on the driver.
     */
   private[ops] def hyperprior(gbar: Double, tau2: Double, dm: Double, ds2: Double): Hyper = {
     val a = if (ds2 > 1e-12) (2 * ds2 + dm * dm) / ds2 else 1e6
     val bp = if (ds2 > 1e-12) (dm * ds2 + dm * dm * dm) / ds2 else (1e6 - 1) * dm
     Hyper(gbar, math.max(tau2, 1e-12), a, bp)
+  }
+
+  /** [[hyperprior]] from one batch's γ̂ and δ̂² of every probe observed in
+    * it, held on the driver: the `avg` and `var_samp` [[combat]] takes.
+    */
+  private[ops] def hyperpriorOf(gammaHat: Array[Double], delta2Hat: Array[Double]): Hyper = {
+    val ((gbar, tau2), (dm, ds2)) = (Analytic.meanVar(gammaHat), Analytic.meanVar(delta2Hat))
+    hyperprior(gbar, tau2.getOrElse(0.0), dm, ds2.getOrElse(0.0))
   }
 
   /** Pass 4 of [[combat]]: the coupled (γ*, δ²*) EB fixed point of one
@@ -194,6 +203,23 @@ object Combat {
       g = gNew; dlt = dNew; i += 1
     }
     (g, dlt)
+  }
+
+  /** Pass 5 of [[combat]] on one observation `m` of a probe with stand
+    * mean `sm` and pooled variance `varPooled`, in its batch with EB
+    * parameters `g` (γ*) and `d` (δ²*): standardize, remove γ*, divide by
+    * √δ²*, return to the probe's scale. [[adjustCol]] is the same
+    * expression as a Column; CombatSpec pins the two bit for bit.
+    */
+  private[graft] def adjust(m: Double, sm: Double, varPooled: Double, g: Double, d: Double): Double = {
+    val sd = math.sqrt(varPooled)
+    sd * ((m - sm) / sd - g) / math.sqrt(d) + sm
+  }
+
+  /** [[adjust]] as a Column, the form [[combat]] evaluates. */
+  private[graft] def adjustCol(m: Column, sm: Column, varPooled: Column, g: Column, d: Column): Column = {
+    val sd = sqrt(varPooled)
+    sd * ((m - sm) / sd - g) / sqrt(d) + sm
   }
 
   /** Input: long M-values `m(probe_id, sample_id, m)` and a sample sheet
@@ -259,11 +285,8 @@ object Combat {
 
     joined
       .join(adjParams, Seq("probe_id", "run", "group"))
-      .withColumn("sd", sqrt(col("var_pooled")))
-      .withColumn("z", (col("m") - col("stand_mean")) / col("sd"))
-      .withColumn("m_adj",
-        col("sd") * (col("z") - col("gamma_star")) / sqrt(col("delta_star")) +
-          col("stand_mean"))
+      .withColumn("m_adj", adjustCol(col("m"), col("stand_mean"), col("var_pooled"),
+        col("gamma_star"), col("delta_star")))
       .select("probe_id", "sample_id", "run", "group", "m", "m_adj")
   }
 

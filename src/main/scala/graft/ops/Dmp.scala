@@ -23,6 +23,10 @@ import graft.functions.Fns
   *     CDF and the digamma/trigamma adjustments are native codegen
   *     Expressions (functions/StudentT.scala, functions/GammaExprs.scala)
   *     — no scalar UDF anywhere in the kernel.
+  *
+  * Those expressions resolve by name, so the session must be built with
+  * `graft.GraftExtensions` (as `graft.Sessions.local` builds it) or have had
+  * `GraftExtensions.registerAll` called on it.
   */
 object Dmp {
 
@@ -83,8 +87,8 @@ object Dmp {
     * a df-varying mean offset inflate evar and under-moderate).
     */
   // native codegen expressions (functions/GammaExprs.scala), not UDFs —
-  // these run once per probe, millions of rows at scale; registration is
-  // idempotent and the callers below invoke it before building the column
+  // these run once per probe, millions of rows at scale; the session's
+  // GraftExtensions register them (see the object's scaladoc)
   private def adjCol(dfCol: String) =
     expr(s"graft_digamma(CAST($dfCol AS DOUBLE) / 2)") - log(col(dfCol) / 2)
   private def triCol(dfCol: String) =

@@ -65,6 +65,9 @@ object Pca {
     }, lambdas.sum)
   }
 
+  /** The pivot's value for a sample's absent top-k cell: the midpoint. */
+  private[ops] val AbsentCell = 0.5
+
   /** PCA coordinates per sample + explained-variance ratios.
     * `scale=true` ~ sklearn StandardScaler flavor; `false` ~ the
     * centered-only prcomp(center=TRUE, scale.=FALSE) flavor
@@ -86,7 +89,7 @@ object Pca {
       .select("probe_id").collect().map(_.getString(0)).sorted.toSeq
     val wide = beta.join(broadcast(topProbes.toDF("probe_id")), Seq("probe_id"), "left_semi")
       .groupBy("sample_id").pivot("probe_id", topProbes).agg(first("beta"))
-      .na.fill(0.5) // reference drops NA rows pre-PCA; absent cells are imputed at the midpoint
+      .na.fill(AbsentCell) // reference drops NA rows pre-PCA; absent cells are imputed
       .collect().sortBy(r => Option(r.getString(0)))
     coords(spark, wide.map(_.getString(0)),
       wide.map(r => Array.tabulate(topProbes.length)(j => r.getDouble(j + 1))), k, scale)

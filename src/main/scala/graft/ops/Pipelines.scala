@@ -16,21 +16,26 @@ import graft.functions.Fns
 object Pipelines {
 
   /** The QC'd rows at or below which [[fullWorkflow]] runs its post-QC
-    * chain on the driver. A study's QC'd table is small next to its raw
-    * input (about 29k rows of 1,000 samples at sf0.1), and there the
-    * distributed chain's time is job, stage and replanning overhead.
-    * Measured on 4 CPUs over ScaleSmoke replicas of sf0.1, the local
-    * chain is faster at 1×, 8× and 16× (470,078 QC'd rows: 7.7–7.9 s
-    * against 9.1–9.5 s warm); larger tables, ScaleSmoke's 64× replica
-    * (about 1.9M rows) among them, stay distributed.
+    * chain on the driver. Driver memory sets it, not speed: over
+    * ScaleSmoke replicas of sf0.1 (4 CPUs, 6 GB heap, warm runs) the local
+    * chain was faster at every size measured, and its largest after-GC
+    * heap grew past the distributed chain's:
+    *
+    * | replica | QC'd rows | local           | distributed     |
+    * |---------|-----------|-----------------|-----------------|
+    * | 32×     |   940,964 | 30–34 s, 4.0 GB | 37–39 s, 3.8 GB |
+    * | 64×     | 1,883,514 | 44–47 s, 5.2 GB | 54–57 s, 4.4 GB |
+    *
+    * At 64× the local chain filled 86% of the heap; the gate sits above
+    * 32× and below 64×, whose replica stays distributed.
     */
-  private val LocalMaxRows = 500000L
+  private val LocalMaxRows = 1000000L
 
   /** QC'd → BMIQ-normalized → ComBat-adjusted → top-k → PCA coordinates.
     *
     * QC runs in Spark. Its output is joined once with the manifest's
     * `design_type`, persisted and counted; the sheet is collected once.
-    * At most [[LocalMaxRows]] (500,000) rows are collected into
+    * At most [[LocalMaxRows]] (1,000,000) rows are collected into
     * primitive arrays and run BMIQ → M-values → ComBat → top-k → PCA on
     * the driver; larger tables run the same steps as distributed
     * transforms over the persisted table, which is released before
@@ -171,46 +176,35 @@ object Pipelines {
     val survivors = stand.flatten
     val hyper = Array.tabulate(bN) { b =>
       val st = survivors.filter(_.nB(b) > 0)
-      val (gbar, tau2) = meanVar(st.map(_.gammaHat(b)))
-      val (dm, ds2) = meanVar(st.map(_.delta2Hat(b)))
-      Combat.hyperprior(gbar, tau2.getOrElse(0.0), dm, ds2.getOrElse(0.0))
+      Combat.hyperpriorOf(st.map(_.gammaHat(b)), st.map(_.delta2Hat(b)))
     }
     val adj = new Array[Double](len)
     for (p <- 0 until nP; st <- stand(p)) {
       val eb = Array.tabulate(bN)(b =>
         if (st.nB(b) > 0) Combat.ebSolve(hyper(b), st.gammaHat(b), st.delta2Hat(b),
           st.nB(b), st.zs(b), st.zss(b)) else (0.0, 1.0))
-      val sd = math.sqrt(st.varPooled)
       for (i <- start(p) until start(p + 1)) {
-        val sm = st.standMean(groupOf(sample(i)))
         val (g, d) = eb(batchOf(sample(i)))
-        adj(i) = Fns.inverseMValueOf(sd * ((m(i) - sm) / sd - g) / math.sqrt(d) + sm)
+        adj(i) = Fns.inverseMValueOf(
+          Combat.adjust(m(i), st.standMean(groupOf(sample(i))), st.varPooled, g, d))
       }
     }
 
-    // 4. top-k probes by the variance of their adjusted betas (var_samp;
-    // a single-sample probe's null variance sorts last), probe id ascending
-    val top = (0 until nP).filter(stand(_).isDefined)
-      .map(p => (p, meanVar(adj.slice(start(p), start(p + 1)))._2))
-      .sortBy { case (p, v) => (v.isEmpty, -v.getOrElse(0.0), p) }
-      .take(topK).map(_._1).sorted
+    // 4. top-k surviving probes by the variance of their adjusted betas
+    val live = (0 until nP).filter(stand(_).isDefined).toArray
+    val top = Analytic.topKIndices(
+      live.map(p => Analytic.meanVar(adj.slice(start(p), start(p + 1)))._2), topK)
+      .map(live).sorted
     val column = top.zipWithIndex.toMap
 
-    // 5. PCA over the samples with at least one top-k probe, absent cells 0.5
+    // 5. PCA over the samples with at least one top-k probe
     val wide = Array.fill(nS)(null: Array[Double])
     for (p <- top; i <- start(p) until start(p + 1)) {
-      if (wide(sample(i)) == null) wide(sample(i)) = Array.fill(top.length)(0.5)
+      if (wide(sample(i)) == null) wide(sample(i)) = Array.fill(top.length)(Pca.AbsentCell)
       wide(sample(i))(column(p)) = adj(i)
     }
     val kept = (0 until nS).filter(wide(_) != null)
     Pca.coords(typed.sparkSession, kept.map(sIds).toArray, kept.map(wide).toArray, pcs, scale = true)
-  }
-
-  /** The mean and the sample variance (None below two values) of `v`. */
-  private def meanVar(v: Array[Double]): (Double, Option[Double]) = {
-    val mean = v.sum / v.length
-    (mean, if (v.length < 2) None
-           else Some(v.map(x => (x - mean) * (x - mean)).sum / (v.length - 1)))
   }
 
   /** The LLM-data analog of [[fullWorkflow]]: the whole curation tier as

@@ -110,6 +110,26 @@ class AnalyticSpec extends SparkSpec {
     assert(got.toSeq == Seq("p2", "p3"))
   }
 
+  test("topKIndices keeps topKByVariance's order: ties by key, null variances last") {
+    // repeated value sets tie exactly; one-observation keys have no variance
+    val rnd = new scala.util.Random(5)
+    val shapes = Seq.fill(6)(Seq.fill(4)(rnd.nextInt(5).toDouble))
+    val rows = (0 until 60).flatMap { p =>
+      val id = f"p$p%03d"
+      if (p % 7 == 0) Seq(id -> rnd.nextDouble()) else shapes(p % 6).map(id -> _)
+    }
+    val df = rows.toDF("probe_id", "beta")
+    val variance = Analytic.perKeyVariance(df, "probe_id", "beta")
+      .orderBy("probe_id").collect()
+    val ids = variance.map(_.getString(0))
+    val local = variance.map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
+    for (k <- Seq(5, 40, 60)) {
+      val want = Analytic.topKByVariance(df, "probe_id", "beta", k)
+        .select("probe_id").as[String].collect().toSeq
+      assert(Analytic.topKIndices(local, k).map(ids).toSeq == want, s"k=$k")
+    }
+  }
+
   test("approx_count_distinct stays within its configured error bound") {
     val df = (1L to 20000L).map(k => (k % 7, k % 5000)).toDF("g", "k")
     val rows = df.groupBy("g")

@@ -100,4 +100,22 @@ class CombatSpec extends SparkSpec {
       batchOf).select("probe_id").distinct().collect().map(_.getString(0))
     assert(out.sameElements(Array("p_full")), out.mkString(","))
   }
+
+  test("scalar adjust carries the Column adjustment's bits") {
+    // pooled variances and EB scales span the clamps standardize and
+    // ebSolve leave (> 1e-12, ≥ 1e-8); the rest is seeded noise
+    val rnd = new scala.util.Random(11)
+    val grid = (for (v <- Seq(1.1e-12, 1e-6, 0.3, 4.0, 250.0);
+                     d <- Seq(1e-8, 0.01, 1.0, 37.0);
+                     _ <- 0 until 20)
+      yield (rnd.nextGaussian() * 6, rnd.nextGaussian() * 3, v, rnd.nextGaussian(), d))
+      .toDF("m", "sm", "v", "g", "d")
+    val rows = grid.select(col("m"), col("sm"), col("v"), col("g"), col("d"),
+      Combat.adjustCol(col("m"), col("sm"), col("v"), col("g"), col("d"))).collect()
+    def bits(x: Double) = java.lang.Double.doubleToRawLongBits(x)
+    rows.foreach { r =>
+      val (m, sm, v, g, d) = (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))
+      assert(bits(Combat.adjust(m, sm, v, g, d)) == bits(r.getDouble(5)), s"adjust($m, $sm, $v, $g, $d)")
+    }
+  }
 }
