@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.functions.Fns
+
 /** Session-extension entry point: installs the engine's native SQL
   * functions into every session built with
   * `--conf spark.sql.extensions=graft.GraftExtensions` (the standard way a
@@ -55,7 +57,6 @@ object GraftExtensions {
     */
   private[graft] val CodegenCacheEntries = 1024
 
-  private def lit(d: Double): Expression = Literal(d)
   private def dbl(e: Expression): Expression = Cast(e, DoubleType)
 
   private def arity(name: String, n: Int)(b: Seq[Expression] => Expression)
@@ -64,38 +65,6 @@ object GraftExtensions {
       require(es.size == n, s"$name expects $n argument(s), got ${es.size}")
       b(es)
     }
-
-  /** P12 clamp as an expression tree (reference pmax/pmin). */
-  private def clampExpr(e: Expression, lo: Double, hi: Double): Expression =
-    Least(Seq(Greatest(Seq(e, lit(lo))), lit(hi)))
-
-  /** F7 — `graft_mvalue(beta)` = log2(b/(1-b)) with the reference's
-    * 0.001/0.999 pre-clamp (/root/reference/workflow.R:135-136), matching
-    * [[graft.functions.Fns.mValueClamped]].
-    */
-  private def mValue(es: Seq[Expression]): Expression = {
-    val b = clampExpr(dbl(es.head), 0.001, 0.999)
-    Log2(Divide(b, Subtract(lit(1.0), b)))
-  }
-
-  /** F8 — `graft_inverse_mvalue(m)` = 2^m/(1+2^m) clipped to [0,1],
-    * matching [[graft.functions.Fns.inverseMValue]].
-    */
-  private def inverseMValue(es: Seq[Expression]): Expression = {
-    val p = Pow(lit(2.0), dbl(es.head))
-    clampExpr(Divide(p, Add(lit(1.0), p)), 0.0, 1.0)
-  }
-
-  /** F9 — `graft_neglog10(p)`: -log10(p), NULL for p <= 0 (volcano y-axis
-    * guard, /root/reference/volcano.R:166), matching
-    * [[graft.functions.Fns.negLog10]].
-    */
-  private def negLog10(es: Seq[Expression]): Expression = {
-    val p = dbl(es.head)
-    If(GreaterThan(p, lit(0.0)),
-      UnaryMinus(Log10(p)),
-      Literal.create(null, DoubleType))
-  }
 
   /** (name, arity, builder) for every injected function. `graft_t_pvalue`
     * is the custom codegen expression ([[graft.functions.StudentTPValue]]);
@@ -134,9 +103,11 @@ object GraftExtensions {
           es(1).eval().asInstanceOf[Number].intValue(),
           es(2).eval().asInstanceOf[Number].intValue())
       }),
-      ("graft_mvalue", 1, mValue),
-      ("graft_inverse_mvalue", 1, inverseMValue),
-      ("graft_neglog10", 1, negLog10)
+      // F7 with the reference's 0.001/0.999 pre-clamp, F8 clipped to
+      // [0,1], F9 NULL for p <= 0: the trees behind the Fns columns
+      ("graft_mvalue", 1, es => Fns.mValueClamped(dbl(es.head))),
+      ("graft_inverse_mvalue", 1, es => Fns.inverseMValue(dbl(es.head))),
+      ("graft_neglog10", 1, es => Fns.negLog10(dbl(es.head)))
     ).map { case (name, n, b) =>
       (FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name),

@@ -913,13 +913,12 @@ object QueriesCuration {
     // ("take the top documents until 1T tokens"). Order is (quality desc,
     // doc_id) — both engines compute the identical score double, and the
     // prefix sum is EXACT INTEGER tokens, so the boundary document is
-    // never a float-order accident. Curation.tokenBudgetSelect carries the
-    // bhAdjust two-path dispatch: one global window at this size, a
-    // range-partitioned two-pass prefix sum (one range shuffle,
-    // O(partitions) driver state) at 100 TB. Reported per source: how many
-    // documents/tokens each source contributes and its selected-quality
-    // floor (min is order-independent — avg of a double is not, the t25
-    // lesson).
+    // never a float-order accident. Curation.tokenBudgetSelect is the
+    // prefix-scan kernel bhAdjust uses: one range partition at this size,
+    // many (one range shuffle, O(partitions) driver state) at 100 TB.
+    // Reported per source: how many documents/tokens each source
+    // contributes and its selected-quality floor (min is
+    // order-independent — avg of a double is not, the t25 lesson).
     Q("c21_token_budget", (s, d) => {
       val scored = docs(s, d).select(col("doc_id"), col("source"),
         TextAnalysis.qualityScore(col("text")).as("score"),

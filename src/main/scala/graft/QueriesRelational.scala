@@ -1869,9 +1869,10 @@ object QueriesRelational {
 
     // Holm step-down FWER adjustment (p.adjust method="holm") — completes
     // the multiple-testing family (BH w03, BY w16, Holm here): running MAX
-    // ascending in rank of (m−rank+1)·p, clamped at 1. Same size dispatch
-    // as w03; the ranged path is the bhAdjustRanged mirror with prefix
-    // maxima instead of suffix minima.
+    // ascending in rank of (m−rank+1)·p, clamped at 1. Same prefix-scan
+    // kernel and size gate as w03 (Analytic.holmScan), with a running
+    // maximum from the smallest p up where BH runs a minimum from the
+    // largest p down.
     Q("w17_holm_adjust", (s, d) => {
       val p = D(s, d).groupBy("probe_id").agg(min("pval").as("p"))
       Analytic.holmAdjust(p, "p", "probe_id")

@@ -187,11 +187,11 @@ object ScaleSmoke {
       graft.ops.Caches.releaseAll()
     }
 
-    // Direct drive of the >5M-row path of the shared prefix scan: 10M
-    // synthetic p-values through both RangedScan paths of BH and of Holm
-    // (the windowed twin sorts everything in ONE task; the ranged kernel
-    // never does). Each pair must print the same checksum: an exact
-    // decimal sum, so the two paths' different row orders cannot move it.
+    // Direct drive of both sides of the shared prefix scan's size gate:
+    // 10M synthetic p-values through BH and Holm on one range partition
+    // (the whole sort in ONE task) and on spark.sql.shuffle.partitions.
+    // Each pair must print the same checksum: an exact decimal sum, so
+    // the two sides' different row orders cannot move it.
     lazy val big = spark.range(10000000L).select(
       format_string("k%09d", col("id")).as("id"),
       (pmod(hash(col("id")), lit(1000000)).cast("double") / 1000000.0).as("p"))
@@ -199,11 +199,9 @@ object ScaleSmoke {
         ("holm", "holm-10M", graft.ops.Analytic.holmScan("p", "id")))
       .filter(t => drive(t._1)).foreach { case (_, name, scan) =>
         val out = scan.out.head.name
-        Seq("windowed" -> scan.windowed,
-            "ranged" -> ((df: DataFrame) => graft.ops.RangedScan.ranged(df, scan))
-        ).foreach { case (tag, f) =>
+        Seq("1-part" -> 1, "n-part" -> 0).foreach { case (tag, parts) =>
           val t0 = System.nanoTime()
-          val chk = f(big).agg(sum(col(out).cast("decimal(38,18)"))).head().getDecimal(0)
+          val chk = graft.ops.RangedScan.ranged(big, scan, parts).agg(sum(col(out).cast("decimal(38,18)"))).head().getDecimal(0)
           println(f"[scale] $name $tag%-9s ${(System.nanoTime() - t0) / 1e9}%8.2f s  sum=$chk")
           graft.ops.Caches.releaseAll()
         }

@@ -457,7 +457,7 @@ object SqlOracles {
        |                   1.0) AS fdr
        |      FROM rr)""".stripMargin
 
-  /** SQL mirror of [[graft.ops.Analytic.bhAdjustWindowed]]'s step-up chain
+  /** SQL mirror of [[graft.ops.Analytic.bhScan]]'s step-up chain
     * (the w03 pattern), shared by every inference oracle so the BH replay
     * has exactly ONE definition: expects a prior CTE named `pv` with a
     * double column `p` plus `passCols` to carry through; appends `rr`/`f`

@@ -1,7 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Add, Divide, Expression, GreaterThan,
+  Greatest, If, Least, Literal, Log10, Log2, Pow, Subtract, UnaryMinus}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.DoubleType
 
 /** Scalar column functions mirroring the reference pipeline's math.
   * All are pure Column expressions (no UDFs) so they stay inside
@@ -14,18 +18,16 @@ import org.apache.spark.sql.functions._
 object Fns {
 
   /** P12 — clamp to [lo, hi] (reference pmax/pmin 0.001/0.999). */
-  def clamp(c: Column, lo: Double, hi: Double): Column =
-    least(greatest(c, lit(lo)), lit(hi))
+  def clamp(c: Column, lo: Double, hi: Double): Column = lift(clamp(_, lo, hi))(c)
 
   /** F7 — M-value transform log2(b/(1-b)). */
-  def mValue(beta: Column): Column = log2(beta / (lit(1.0) - beta))
+  def mValue(beta: Column): Column = lift(mValue)(beta)
 
   /** F7 with the reference's pre-clamp so exact-0/1 betas stay finite. */
-  def mValueClamped(beta: Column): Column = mValue(clamp(beta, 0.001, 0.999))
+  def mValueClamped(beta: Column): Column = lift(mValueClamped)(beta)
 
   /** F8 — inverse M-value 2^m/(1+2^m), clipped back into [0,1]. */
-  def inverseMValue(m: Column): Column =
-    clamp(pow(lit(2.0), m) / (lit(1.0) + pow(lit(2.0), m)), 0.0, 1.0)
+  def inverseMValue(m: Column): Column = lift(inverseMValue)(m)
 
   /** [[mValueClamped]] on one double, evaluated as Spark evaluates the
     * column: the clamp, then `Log2` as `StrictMath.log(x) / StrictMath.log(2)`.
@@ -50,7 +52,31 @@ object Fns {
     if (x.isNaN || x > hi) hi else if (x < lo) lo else x
 
   /** F9 — -log10(p); NULL where p <= 0 (volcano y-axis guard). */
-  def negLog10(p: Column): Column = when(p > 0, -log10(p))
+  def negLog10(p: Column): Column = lift(negLog10)(p)
+
+  /** The Catalyst trees behind the columns above, one definition each;
+    * `GraftExtensions` injects them as SQL functions over a double cast
+    * of the argument.
+    */
+  private[graft] def clamp(e: Expression, lo: Double, hi: Double): Expression =
+    Least(Seq(Greatest(Seq(e, Literal(lo))), Literal(hi)))
+
+  private[graft] def mValue(b: Expression): Expression =
+    Log2(Divide(b, Subtract(Literal(1.0), b)))
+
+  private[graft] def mValueClamped(beta: Expression): Expression =
+    mValue(clamp(beta, 0.001, 0.999))
+
+  private[graft] def inverseMValue(m: Expression): Expression = {
+    val p = Pow(Literal(2.0), m)
+    clamp(Divide(p, Add(Literal(1.0), p)), 0.0, 1.0)
+  }
+
+  private[graft] def negLog10(p: Expression): Expression =
+    If(GreaterThan(p, Literal(0.0)), UnaryMinus(Log10(p)), Literal.create(null, DoubleType))
+
+  private def lift(f: Expression => Expression)(c: Column): Column =
+    ColumnBridge.column(f(ColumnBridge.expression(c)))
 
   /** Sample variance from exact integer moment columns (n, sum, sum-of-squares).
     *

@@ -531,39 +531,26 @@ object Curation {
     * greedy order — integer, so no float-order hazard) and `selected`
     * (`cum_before < budget`).
     *
-    * Runs through the [[graft.ops.RangedScan]] size gate, the one BH uses:
-    * one global window at small sizes, the range-partitioned prefix sum
-    * above. Exact-integer both ways, so the paths are bit-equal
-    * (PropertySpec).
+    * A prefix scan ([[tokenBudgetScan]]) through the
+    * [[graft.ops.RangedScan]] size gate, the one BH uses: one range
+    * partition at small sizes, `spark.sql.shuffle.partitions` above.
+    * Exact-integer either way, so every partition count gives the same
+    * result (PropertySpec); a null token count reads as 0.
     */
   def tokenBudgetSelect(docs: DataFrame, scoreCol: String, tokenCol: String,
                         idCol: String, budget: Long): DataFrame =
     graft.ops.RangedScan.run(docs, tokenBudgetScan(scoreCol, tokenCol, idCol, budget))
 
   /** The token budget as a prefix scan: each document weighs its tokens,
-    * so its `before` offset is `cum_before`. Both paths read a null token
-    * count as 0.
+    * so its `before` offset is `cum_before`.
     */
   private[graft] def tokenBudgetScan(scoreCol: String, tokenCol: String,
       idCol: String, budget: Long): graft.ops.RangedScan.Scan =
     graft.ops.RangedScan.Scan(
-      tokenBudgetWindowed(_, scoreCol, tokenCol, idCol, budget),
-      Seq(col(scoreCol).desc, col(idCol).asc), tokenCol, tokens(tokenCol),
+      Seq(col(scoreCol).desc, col(idCol).asc), tokenCol,
+      coalesce(col(tokenCol).cast("long"), lit(0L)),
       Seq(StructField("cum_before", LongType, nullable = false),
         StructField("selected", BooleanType, nullable = false)),
-      weight = _.asInstanceOf[Long], fold = None,
+      weight = col(tokenCol), fold = None,
       emit = (_, before, _) => Seq(before, before < budget))
-
-  private def tokens(tokenCol: String): Column =
-    coalesce(col(tokenCol).cast("long"), lit(0L))
-
-  private[graft] def tokenBudgetWindowed(df: DataFrame, scoreCol: String,
-      tokenCol: String, idCol: String, budget: Long): DataFrame = {
-    val w = Window.orderBy(col(scoreCol).desc, col(idCol).asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn(tokenCol, tokens(tokenCol))
-      .withColumn("cum_before",
-        coalesce(sum(col(tokenCol)).over(w), lit(0L)))
-      .withColumn("selected", col("cum_before") < budget)
-  }
 }

@@ -63,11 +63,12 @@ object Analytic {
     * running min absorbs any within-tie rank assignment. As in R, a null p
     * gets a null FDR and n counts the non-null p-values only.
     *
-    * Runs through the [[RangedScan]] size gate. Callers that already hold
+    * A prefix scan ([[bhScan]]) through the [[RangedScan]] size gate,
+    * which picks one range partition or many. Callers that already hold
     * the exact row count pass it as `knownRows` (Dmp folds it into the
     * prior-fit aggregate); everyone else gets the plan estimate, no job.
-    * The windowed path consumes its input exactly once inside the caller's
-    * single action, so no persist is needed in front of it.
+    * On one partition, building runs no job: n is an execution-time
+    * scalar subquery over the same persisted sorted rows the emit reads.
     */
   def bhAdjust(df: DataFrame, pCol: String, tieBreak: String,
                outCol: String = "fdr", knownRows: Option[Long] = None): DataFrame =
@@ -110,8 +111,7 @@ object Analytic {
     */
   private[graft] def bhScan(pCol: String, tieBreak: String, outCol: String = "fdr",
                             scale: Double = 1.0): RangedScan.Scan =
-    pValueScan(bhAdjustWindowed(_, pCol, tieBreak, outCol, scale),
-      Seq(col(pCol).desc_nulls_last, col(tieBreak).desc), pCol, outCol,
+    pValueScan(Seq(col(pCol).desc_nulls_last, col(tieBreak).desc), pCol, outCol,
       RangedScan.Fold((p, before, total) =>
         p.asInstanceOf[Double] * scale * total.toDouble / (total - before).toDouble,
         Double.PositiveInfinity, (a, b) => if (b < a) b else a))
@@ -119,8 +119,7 @@ object Analytic {
   /** Holm as a prefix scan: smallest p first, rank before + 1, running max. */
   private[graft] def holmScan(pCol: String, tieBreak: String,
                               outCol: String = "p_holm"): RangedScan.Scan =
-    pValueScan(holmWindowed(_, pCol, tieBreak, outCol),
-      Seq(col(pCol).asc_nulls_last, col(tieBreak).asc), pCol, outCol,
+    pValueScan(Seq(col(pCol).asc_nulls_last, col(tieBreak).asc), pCol, outCol,
       RangedScan.Fold((p, before, total) =>
         p.asInstanceOf[Double] * (total - before).toDouble,
         Double.NegativeInfinity, (a, b) => if (b > a) b else a))
@@ -129,46 +128,14 @@ object Analytic {
     * weight per non-null p (so before/total count non-null p-values), a
     * null p left out of the fold and emitted as null, the fold clamped at 1.
     */
-  private def pValueScan(windowed: DataFrame => DataFrame, order: Seq[Column],
-                         pCol: String, outCol: String,
+  private def pValueScan(order: Seq[Column], pCol: String, outCol: String,
                          fold: RangedScan.Fold): RangedScan.Scan =
-    RangedScan.Scan(windowed, order, pCol, col(pCol).cast("double"),
+    RangedScan.Scan(order, pCol, col(pCol).cast("double"),
       Seq(StructField(outCol, DoubleType)),
-      weight = p => if (p == null) 0L else 1L,
+      weight = when(col(pCol).isNull, 0L).otherwise(1L),
       fold = Some(fold.copy(value = (p, before, total) =>
         if (p == null) fold.zero else fold.value(p, before, total))),
       emit = (p, _, run) => Seq(if (p == null) null else math.min(run, 1.0)))
-
-  private[graft] def holmWindowed(df: DataFrame, pCol: String, tieBreak: String,
-                                  outCol: String = "p_holm"): DataFrame = {
-    val wRank = Window.orderBy(col(pCol).asc_nulls_last, col(tieBreak).asc)
-    val wAll = Window.partitionBy()
-    val wMax = Window.orderBy(col("__rn").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__rn", row_number().over(wRank))
-      .withColumn("__n", count(col(pCol)).over(wAll))
-      .withColumn("__hm",
-        col(pCol) * (col("__n") - col("__rn") + 1L).cast("double"))
-      .withColumn(outCol,
-        when(col(pCol).isNotNull, least(max(col("__hm")).over(wMax), lit(1.0))))
-      .drop("__rn", "__n", "__hm")
-  }
-
-  /** Windowed BH — one single-partition sort; right up to ~1e7 result rows. */
-  private[graft] def bhAdjustWindowed(df: DataFrame, pCol: String, tieBreak: String,
-                                      outCol: String = "fdr",
-                                      scale: Double = 1.0): DataFrame = {
-    val wRank = Window.orderBy(col(pCol).asc_nulls_last, col(tieBreak).asc)
-    val wAll = Window.partitionBy()
-    val wMin = Window.orderBy(col("__rn").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__rn", row_number().over(wRank))
-      .withColumn("__n", count(col(pCol)).over(wAll))
-      .withColumn("__bh", col(pCol) * lit(scale) * col("__n").cast("double") / col("__rn").cast("double"))
-      .withColumn(outCol,
-        when(col(pCol).isNotNull, least(min(col("__bh")).over(wMin), lit(1.0))))
-      .drop("__rn", "__n", "__bh")
-  }
 
   /** Per-group BH — FDR within each `byCol` slice (the multi-contrast
     * per-coef p.adjust). The window is hash-partitioned on the group key, so

@@ -446,7 +446,9 @@ object Graph {
       local: LocalGraph => DataFrame,
       distributed: DataFrame => DataFrame): DataFrame = {
     val edg = edgeList(edges, src, dst)
-    if (edg.count() <= LocalMaxEdges) local(new LocalGraph(edg))
+    // An RDD count fills the cache and counts it; Dataset.count would add
+    // an aggregate exchange, a job of its own.
+    if (edg.rdd.count() <= LocalMaxEdges) local(new LocalGraph(edg))
     else distributed(undirected(edg))
   }
 

@@ -23,6 +23,62 @@ class AnalyticSpec extends SparkSpec {
     assert(m("a") <= 1.0 && m("b") <= 1.0)
   }
 
+  test("holmAdjust matches R p.adjust(method='holm'), including a tie and a null") {
+    // R: p.adjust(c(0.01, 0.04, 0.04, NA, 0.03, 0.5), "holm")
+    //      == c(0.05, 0.12, 0.12, NA, 0.12, 0.5)
+    // i.e. pmin(1, cummax((n - i + 1) * p[o]))[ro] with n = 5 non-null p
+    // and o = (a, e, b, c, f); the tie b/c keeps input order
+    val df = Seq(("a", Some(0.01)), ("b", Some(0.04)), ("c", Some(0.04)), ("d", None),
+      ("e", Some(0.03)), ("f", Some(0.5))).toDF("id", "p")
+    val got = Analytic.holmAdjust(df, "p", "id").collect()
+      .map(r => r.getString(0) -> Option(r.get(2))).toMap
+    val adj = Seq(5 * 0.01, 4 * 0.03, 3 * 0.04, 2 * 0.04, 1 * 0.5)
+      .scanLeft(0.0)(math.max).tail.map(math.min(_, 1.0))
+    assert(adj == Seq(0.05, 0.12, 0.12, 0.12, 0.5))
+    assert(got == Seq("a", "e", "b", "c", "f").zip(adj.map(Some(_))).toMap + ("d" -> None))
+  }
+
+  test("the one-partition prefix scan builds with no job and no window, and reads its input once") {
+    import org.apache.spark.graft.ListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = (0 until 200).map(i => (f"k$i%03d", (i * 37 % 200) / 200.0, i % 50 + 1L))
+      .toDF("id", "p", "tokens")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ListenerBus.drain(spark.sparkContext)
+      val built = Seq(Analytic.bhAdjust(df, "p", "id"), Analytic.holmAdjust(df, "p", "id"),
+        graft.llm.Curation.tokenBudgetSelect(df, "p", "tokens", "id", 1000L))
+      ListenerBus.drain(spark.sparkContext)
+      assert(jobs.get == 0, "building ran Spark jobs")
+      val helper = new AdaptiveSparkPlanHelper {}
+      built.foreach { out =>
+        assert(out.count() == 200)
+        val plan = out.queryExecution.executedPlan
+        assert(helper.collectWithSubqueries(plan) { case p: WindowExec => p }.isEmpty, plan.toString)
+        // The input is evaluated once: scanned directly, or through one
+        // cache that both the emit and BH's/Holm's n subquery read.
+        val inputs = java.util.Collections.newSetFromMap(
+          new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+        helper.collectWithSubqueries(plan) {
+          case s: LocalTableScanExec => s
+          case s: InMemoryTableScanExec => s.relation.cacheBuilder
+        }.foreach(inputs.add)
+        assert(inputs.size == 1, plan.toString)
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.ops.Caches.releaseAll()
+    }
+  }
+
   test("spearmanThresholded finds |rho|=1 pairs (both signs), emits exact k12 values, never false positives") {
     // s1/s2 perfectly rank-correlated, s1/s3 perfectly anti-correlated,
     // s4 independent noise. rho = +1 pairs are GUARANTEED found (equal

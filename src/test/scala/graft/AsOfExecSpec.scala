@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions._
 class AsOfExecSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftExtensions.registerAll(spark)
-
   private def leftDf = Seq(
     (1L, 10L, 100L), // key 10: candidates at 90,100 -> ties take <= (100)
     (2L, 10L, 95L),  // between right rows -> 90

@@ -16,7 +16,6 @@ class ExactInferenceSpec extends SparkSpec {
 
   test("graft_lgamma matches exact log-factorials and guards its domain") {
     val sp = spark
-    GraftExtensions.registerAll(sp)
     // lgamma(n+1) = ln(n!) — checked against an exact running log sum
     var logFact = 0.0
     (1 to 170).foreach { n =>
@@ -445,7 +444,6 @@ class ExactInferenceSpec extends SparkSpec {
       .orderBy("probe_id").limit(6).collect()
     assert(got.nonEmpty)
     // recompute from the shared Welch pass
-    GraftExtensions.registerAll(sp)
     val base = QueriesStats.welchT(sp, sf)
       .orderBy("probe_id").limit(6).collect()
       .map(r => r.getAs[String]("probe_id") ->

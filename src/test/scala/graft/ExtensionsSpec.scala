@@ -92,8 +92,8 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("a session built with the extension resolves every function without registration") {
-    // a fresh session of the shared context: the extension's injections,
-    // none of the temp functions registerAll adds elsewhere in this suite
+    // a fresh session of the shared context: the extension's injections
+    // alone
     val fresh = spark.newSession()
     GraftExtensions.descriptors.foreach { case (id, _, _) =>
       assert(fresh.catalog.functionExists(id.funcName), id.funcName)
@@ -112,7 +112,14 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("registerAll exposes the functions to spark.sql, matching Fns columns") {
-    val sp = spark
+    // a fresh session with the graft_* functions dropped, so only
+    // registerAll can bring them back
+    val sp = spark.newSession()
+    val registry = sp.sessionState.functionRegistry
+    GraftExtensions.descriptors.foreach { case (id, _, _) => registry.dropFunction(id) }
+    GraftExtensions.descriptors.foreach { case (id, _, _) =>
+      assert(!sp.catalog.functionExists(id.funcName), id.funcName)
+    }
     GraftExtensions.registerAll(sp)
     import sp.implicits._
     val df = Seq(0.25, 0.5, 0.999, 0.0001).toDF("beta")
@@ -131,7 +138,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("injected expressions fold and stay codegen-compatible") {
     val sp = spark
-    GraftExtensions.registerAll(sp)
     // literal input folds at optimization time -> plan carries no function call
     val plan = sp.sql("SELECT graft_inverse_mvalue(0.0) AS x")
       .queryExecution.optimizedPlan.toString
@@ -141,7 +147,6 @@ class ExtensionsSpec extends SparkSpec {
   test("graft_dot is bit-equal to the zip_with/aggregate fold") {
     val sp = spark
     import sp.implicits._
-    GraftExtensions.registerAll(sp)
     val rows = Seq.tabulate(50)(i =>
       (i.toLong, Seq.tabulate(16)(j => math.sin(i * 17 + j) * 3.7),
         Seq.tabulate(16)(j => math.cos(i * 5 + j) / 1.3)))
@@ -164,7 +169,6 @@ class ExtensionsSpec extends SparkSpec {
   test("graft_nearest matches the composed argmin chain, first-min tie rule") {
     val sp = spark
     import sp.implicits._
-    GraftExtensions.registerAll(sp)
     val rows = Seq.tabulate(40)(i =>
       (i.toLong, Seq.tabulate(8)(j => math.sin(i * 13 + j))))
       .toDF("id", "v")
@@ -192,7 +196,6 @@ class ExtensionsSpec extends SparkSpec {
   test("graft_nfc composes combining marks, is idempotent, keeps NFC text as-is") {
     val sp = spark
     import sp.implicits._
-    GraftExtensions.registerAll(sp)
     val rows = Seq("cafe\u0301", "caf\u00e9", "nai\u0308ve", "plain ascii")
       .toDF("s")
       .selectExpr("s", "graft_nfc(s) AS n", "graft_nfc(graft_nfc(s)) AS nn")

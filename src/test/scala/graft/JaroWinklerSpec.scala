@@ -24,7 +24,6 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("registered SQL function: codegen path, null propagation, symmetry") {
-    GraftExtensions.registerAll(spark)
     import spark.implicits._
     val df = Seq(("DWAYNE", "DUANE"), ("MARTHA", "MARHTA"), (null, "x"))
       .toDF("a", "b")

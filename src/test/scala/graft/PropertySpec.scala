@@ -47,14 +47,14 @@ class PropertySpec extends SparkSpec {
   test("property: ranged BH is bit-equal to the windowed implementation") {
     samples(Gen.listOfN(200, Gen.choose(0.0, 1.0)), 6).foreach { ps =>
       val df = ps.zipWithIndex.map { case (p, i) => (f"k$i%04d", p) }.toDF("id", "p")
-      val w = Analytic.bhAdjustWindowed(df, "p", "id")
+      val w = RangedScan.ranged(df, Analytic.bhScan("p", "id"), numPartitions = 1)
         .select("id", "fdr").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      // force several range partitions so the offset/suffix-min logic is hit
+      // several range partitions, so the offset/suffix-min carry is hit
       val ranged = RangedScan.ranged(df, Analytic.bhScan("p", "id"), numPartitions = 7)
       val g = ranged
         .select("id", "fdr").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(g.keySet == w.keySet)
-      g.foreach { case (k, f) => assert(f == w(k), s"$k: ranged $f != windowed ${w(k)}") }
+      g.foreach { case (k, f) => assert(f == w(k), s"$k: 7 partitions $f != 1 partition ${w(k)}") }
       // a downstream coalesce runs the emit of every range partition in one
       // task; each row still finds its own partition's offsets
       val merged = ranged.coalesce(1)
@@ -79,7 +79,7 @@ class PropertySpec extends SparkSpec {
         run = math.min(run, v); id -> math.min(run, 1.0) }.toMap
       exp.foreach { case (id, f) => assert(by(id) == f, s"$id: $f vs ${by(id)}") }
       // dominance: H_m >= 1 so BY >= BH everywhere
-      val bh = Analytic.bhAdjustWindowed(df, "p", "id")
+      val bh = Analytic.bhAdjust(df, "p", "id")
         .select("id", "fdr").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       by.foreach { case (id, f) => assert(f >= bh(id) - 1e-15) }
       // ranged path bit-equality at the same scale factor
@@ -114,7 +114,7 @@ class PropertySpec extends SparkSpec {
   test("property: null p-values adjust to null and leave the non-null adjustment unchanged, both paths") {
     // R's p.adjust: a null p gives a null output and n counts the non-null
     // p-values only — so every non-null row must equal the adjustment of
-    // the non-null subset, on the windowed twin and the ranged kernel alike
+    // the non-null subset, on one range partition and on several alike
     samples(Gen.listOfN(120, Gen.option(Gen.choose(0.0, 1.0))), 4).foreach { ps =>
       val df = ps.zipWithIndex.map { case (p, i) => (f"k$i%04d", p) }.toDF("id", "p")
       val present = df.filter(col("p").isNotNull)
@@ -123,10 +123,10 @@ class PropertySpec extends SparkSpec {
       Seq(Analytic.bhScan("p", "id"), Analytic.holmScan("p", "id"),
           Analytic.bhScan("p", "id", "fdr_by", scale = 2.5)).foreach { scan =>
         val out = scan.out.head.name
-        val w = m(scan.windowed(df), out)
+        val w = m(RangedScan.ranged(df, scan, numPartitions = 1), out)
         val g = m(RangedScan.ranged(df, scan, numPartitions = 5), out)
-        val subset = m(scan.windowed(present), out)
-        assert(g == w, s"$out: ranged != windowed")
+        val subset = m(RangedScan.ranged(present, scan, numPartitions = 1), out)
+        assert(g == w, s"$out: 5 partitions != 1 partition")
         assert(w.size == ps.size)
         ps.zipWithIndex.foreach { case (p, i) =>
           val id = f"k$i%04d"
@@ -154,7 +154,7 @@ class PropertySpec extends SparkSpec {
           .select("cid", "id", "fdr").collect()
           .map(r => (r.getString(0), r.getString(1)) -> Option(r.get(2))).toMap
         Seq("c1", "c2", "c3").foreach { c =>
-          val slice = Analytic.bhAdjustWindowed(df.filter(col("cid") === c), "p", "id")
+          val slice = Analytic.bhAdjust(df.filter(col("cid") === c), "p", "id")
             .select("id", "fdr").collect().map(r => r.getString(0) -> Option(r.get(1)))
           slice.foreach { case (id, f) => assert(by((c, id)) == f) }
         }
@@ -407,13 +407,17 @@ class PropertySpec extends SparkSpec {
       def m(d: org.apache.spark.sql.DataFrame) = d
         .select("id", "cum_before", "selected").collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-      val w = m(Curation.tokenBudgetWindowed(df, "score", "tokens", "id", budget))
-      val g = m(RangedScan.ranged(df,
-        Curation.tokenBudgetScan("score", "tokens", "id", budget), numPartitions = 7))
+      val scan = Curation.tokenBudgetScan("score", "tokens", "id", budget)
+      val w = m(RangedScan.ranged(df, scan, numPartitions = 1))
+      val g = m(RangedScan.ranged(df, scan, numPartitions = 7))
       assert(g.keySet == w.keySet)
-      g.foreach { case (k, v) => assert(v == w(k), s"$k: ranged $v != windowed ${w(k)}") }
-      // the greedy invariant: selected docs' cum_before all precede the budget
-      w.values.foreach { case (cb, sel) => assert(sel == (cb < budget)) }
+      g.foreach { case (k, v) => assert(v == w(k), s"$k: 7 partitions $v != 1 partition ${w(k)}") }
+      // driver reference: tokens summed in (score desc, id asc) order
+      val ordered = rows.zipWithIndex.map { case ((sc, tk), i) => (f"d$i%04d", sc, tk) }
+        .sortBy { case (id, sc, _) => (-sc, id) }
+      val before = ordered.scanLeft(0L)(_ + _._3)
+      val exp = ordered.zip(before).map { case ((id, _, _), cb) => id -> (cb, cb < budget) }.toMap
+      assert(w == exp)
       graft.ops.Caches.releaseAll()
     }
   }

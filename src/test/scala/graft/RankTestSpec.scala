@@ -91,7 +91,6 @@ class RankTestSpec extends SparkSpec {
   test("ksTest + graft_ks_sf end-to-end matches commons-math approximateP") {
     // the k11_ks_inference chain on tie-free samples: D from the engine,
     // p from the asymptotic series at t = D·sqrt(n1·n2/(n1+n2))
-    GraftExtensions.registerAll(spark)
     val rnd = new scala.util.Random(17)
     val xs = Seq.fill(60)(rnd.nextDouble()).distinct
     val ys = Seq.fill(45)(rnd.nextDouble() * 1.2 + 0.1).distinct
@@ -104,7 +103,6 @@ class RankTestSpec extends SparkSpec {
   }
 
   test("spearman t-transform inference matches commons-math TDistribution") {
-    GraftExtensions.registerAll(spark)
     // two samples sharing 8 probes with an imperfect monotone relation
     val a = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8)
     val b = Seq(0.15, 0.25, 0.30, 0.50, 0.45, 0.70, 0.65, 0.90)

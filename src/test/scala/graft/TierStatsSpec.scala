@@ -15,7 +15,6 @@ class TierStatsSpec extends SparkSpec {
   test("k17 Welch t/df/p match commons-math TTest on real probes") {
     val sp = spark
     import sp.implicits._
-    GraftExtensions.registerAll(sp)
     val got = QueriesStats.welchT(sp, sf)
       .withColumn("p_value", expr("graft_t_pvalue(t, df)"))
       .orderBy("probe_id").limit(5).collect()
@@ -419,7 +418,6 @@ class TierStatsSpec extends SparkSpec {
 
   test("k27 chi-square independence matches commons-math on the real contingency table") {
     val sp = spark
-    GraftExtensions.registerAll(sp)
     val cells = SparkEntry.queries("k27_chisq_independence")(sp, sf).collect()
     val langs = cells.map(_.getString(0)).distinct.sorted
     val sources = cells.map(_.getString(1)).distinct.sorted
