@@ -2341,7 +2341,7 @@ object QueriesStats {
     // keeps a realistic surviving fraction. bmiqMinPerType lowered to
     // match the post-QC per-sample probe counts.
     Q("e02_full_workflow", (s, d) =>
-      graft.ops.Pipelines.fullWorkflow(s,
+      graft.ops.Pipelines.fullWorkflow(
         Tables.betaLong(s, d), Tables.detpLong(s, d),
         Tables.sampleSheet(s, d), Tables.probeManifest(s, d),
         qcThr = 0.09, topK = 50, pcs = 3, bmiqMinPerType = 10),

@@ -13,8 +13,9 @@ final case class Q(
     oracle: Option[String])
 
 object Q {
-  /** Scratch dir for queries that exercise file sinks/sources (kept inside
-    * the repo's build dir; nothing outside /root/repo is touched).
+  /** Scratch dir for queries that exercise file sinks/sources: the build
+    * dir of the checkout the process runs from, so engines started from
+    * two checkouts never write into each other's folders.
     */
-  val scratch = "/root/repo/target/qtmp"
+  val scratch = s"${sys.props("user.dir")}/target/qtmp"
 }

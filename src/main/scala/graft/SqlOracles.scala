@@ -195,7 +195,6 @@ object SqlOracles {
   def ebayesPriorSql(pfx: String, by: Option[String]): String = {
     val k = by.fold("")(c => s"$c, ")
     val grp = by.fold("")(c => s" GROUP BY $c")
-    val joinKey = by.getOrElse("")
     val rootJoin = by.fold(
       s"LEFT JOIN (SELECT (lo + hi) / 2.0 AS root FROM ${pfx}bi WHERE i = 200) r ON TRUE")(
       c => s"LEFT JOIN (SELECT $c, (lo + hi) / 2.0 AS root FROM ${pfx}bi WHERE i = 200) r USING ($c)")

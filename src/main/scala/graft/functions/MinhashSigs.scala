@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Static MinHash-signature kernel: per-permutation minima of seeded
   * xxhash64 over a document's distinct shingles, in ONE compiled pass.

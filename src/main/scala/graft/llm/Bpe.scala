@@ -32,12 +32,11 @@ object Bpe {
     * never cross word boundaries because pairing happens within each
     * word's symbol array).
     */
-  def learnMerges(docs: DataFrame, numMerges: Int,
-                  textCol: String = "text"): Seq[Merge] = {
+  def learnMerges(docs: DataFrame, numMerges: Int): Seq[Merge] = {
     val spark = docs.sparkSession
     import spark.implicits._
     var vocab = docs
-      .select(explode(split(TextAnalysis.normalized(col(textCol)), " ")).as("w"))
+      .select(explode(split(TextAnalysis.normalized(col("text")), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(split(col("w"), "").as("syms"), col("freq"))
@@ -120,14 +119,13 @@ object Bpe {
     * if a corpus's vocab ever outgrew broadcast range, the same plan works
     * as a co-keyed join on `w`.
     */
-  def encode(docs: DataFrame, merges: Seq[Merge],
-             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def encode(docs: DataFrame, merges: Seq[Merge]): DataFrame = {
     val spark = docs.sparkSession
     val ordered = merges.sortBy(_.merge_rank).map(m => (m.left, m.right))
     val bc = spark.sparkContext.broadcast(ordered)
     val encUdf = udf((w: String) => encodeWord(w, bc.value).length)
-    val toks = docs.select(col(idCol).as("doc_id"),
-        explode(split(TextAnalysis.normalized(col(textCol)), " ")).as("w"))
+    val toks = docs.select(col("doc_id"),
+        explode(split(TextAnalysis.normalized(col("text")), " ")).as("w"))
       .filter(col("w") =!= "")
     val vocabEnc = toks.select("w").distinct()
       .withColumn("n_sub", encUdf(col("w")))
@@ -138,7 +136,7 @@ object Bpe {
         sum(length(col("w"))).as("n_chars"))
     // left join back to the corpus so a doc whose text normalizes to zero
     // tokens reports (0, 0, 0) instead of vanishing from the output.
-    docs.select(col(idCol).as("doc_id")).join(counts, Seq("doc_id"), "left")
+    docs.select(col("doc_id")).join(counts, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_words"), lit(0L)).as("n_words"),
         coalesce(col("n_subtokens"), lit(0L)).as("n_subtokens"),

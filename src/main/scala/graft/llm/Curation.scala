@@ -33,8 +33,9 @@ object Curation {
     */
   val AutoMaxDf: Long = -1L
 
-  /** Default cap policy for [[dedupClusters]]/[[bestOfCluster]]/
-    * `Pipelines.curationPipeline`: auto-derive (see [[AutoMaxDf]]).
+  /** Default cap policy for [[dedupClusters]], and the one
+    * [[bestOfCluster]] and `Pipelines.curationPipeline` always use:
+    * auto-derive (see [[AutoMaxDf]]).
     * `maxDf = None` is the explicit unguarded escape hatch (the c01/c07
     * oracles use it — their DuckDB closure replays exact semantics);
     * `Some(k)` with k > 0 pins a fixed cap.
@@ -182,10 +183,8 @@ object Curation {
     * per-cluster, bounded by the largest cluster. Scores are rounded
     * before ranking so the kept doc is stable under last-ulp noise.
     */
-  def bestOfCluster(docs: DataFrame, minJaccard: Double,
-                    scoreCol: Column,
-                    maxDf: Option[Long] = DefaultMaxDf): DataFrame =
-    bestOfClusterFrom(dedupClusters(docs, minJaccard, maxDf),
+  def bestOfCluster(docs: DataFrame, minJaccard: Double, scoreCol: Column): DataFrame =
+    bestOfClusterFrom(dedupClusters(docs, minJaccard),
       docs.select(col("doc_id"), round(scoreCol, 6).as("score")))
 
   /** [[bestOfCluster]] over a precomputed cluster table and a
@@ -211,12 +210,11 @@ object Curation {
     * fingerprints — at 100 TB that set lives as a bucketed table keyed by
     * fingerprint, so the anti-join is shuffle-free.
     */
-  def incrementalDedup(batch: DataFrame, corpus: DataFrame,
-                       textCol: String = "text"): DataFrame = {
+  def incrementalDedup(batch: DataFrame, corpus: DataFrame): DataFrame = {
     val corpusFp = corpus.select(
-      TextAnalysis.fingerprint(col(textCol)).as("fp")).distinct()
+      TextAnalysis.fingerprint(col("text")).as("fp")).distinct()
     val w = Window.partitionBy("fp").orderBy(col("doc_id").asc)
-    batch.withColumn("fp", TextAnalysis.fingerprint(col(textCol)))
+    batch.withColumn("fp", TextAnalysis.fingerprint(col("text")))
       .join(corpusFp, Seq("fp"), "left_anti")
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
@@ -349,14 +347,13 @@ object Curation {
     * arithmetic, so the operator is embarrassingly parallel at corpus
     * scale.
     */
-  def chunkDocuments(docs: DataFrame, chunkSize: Int, stride: Int,
-                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def chunkDocuments(docs: DataFrame, chunkSize: Int, stride: Int): DataFrame = {
     require(stride > 0 && stride <= chunkSize)
-    val toks = split(TextAnalysis.normalized(col(textCol)), " ")
+    val toks = split(TextAnalysis.normalized(col("text")), " ")
     val n = size(toks)
     val k = when(n <= chunkSize, lit(1L))
       .otherwise(ceil((n - chunkSize).cast("double") / stride).cast("long") + 1L)
-    docs.select(col(idCol).as("doc_id"), toks.as("__toks"), k.as("__k"))
+    docs.select(col("doc_id"), toks.as("__toks"), k.as("__k"))
       .select(col("doc_id"),
         explode(sequence(lit(0L), col("__k") - 1L)).as("chunk_id"),
         col("__toks"))
@@ -380,12 +377,11 @@ object Curation {
     * orderBy+limit = `TakeOrderedAndProject` (per-partition top-k, k rows
     * to the driver, no global sort).
     */
-  def weightedSample(docs: DataFrame, weightCol: Column, k: Int,
-                     idCol: String = "doc_id"): DataFrame = {
-    val u = (conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
+  def weightedSample(docs: DataFrame, weightCol: Column, k: Int): DataFrame = {
+    val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("bigint") + 1L).cast("double") / 4294967297.0
     docs.withColumn("skey", -log(u) / weightCol)
-      .orderBy(col("skey").asc, col(idCol).asc)
+      .orderBy(col("skey").asc, col("doc_id").asc)
       .limit(k)
   }
 
@@ -403,15 +399,14 @@ object Curation {
     * on-disk file order IS the training order, and a trainer streams shard
     * files with no further shuffle.
     */
-  def shuffleShards(docs: DataFrame, nShards: Int,
-                    idCol: String = "doc_id"): DataFrame = {
-    val key = md5(col(idCol).cast("string"))
+  def shuffleShards(docs: DataFrame, nShards: Int): DataFrame = {
+    val key = md5(col("doc_id").cast("string"))
     val shard = pmod(conv(substring(key, 1, 8), 16, 10).cast("bigint"),
       lit(nShards.toLong))
-    val w = Window.partitionBy("shard").orderBy(col("__key").asc, col(idCol).asc)
-    docs.select(col(idCol), key.as("__key"), shard.as("shard"))
+    val w = Window.partitionBy("shard").orderBy(col("__key").asc, col("doc_id").asc)
+    docs.select(col("doc_id"), key.as("__key"), shard.as("shard"))
       .withColumn("pos", row_number().over(w).cast("bigint"))
-      .select(col(idCol), col("shard"), col("pos"))
+      .select(col("doc_id"), col("shard"), col("pos"))
   }
 
   /** DSIR-style importance weights (Xie et al., NeurIPS'23, "Data Selection
@@ -430,10 +425,9 @@ object Curation {
     * side becomes a broadcast-able constant-size table — same plan, bounded
     * build side.
     */
-  def importanceWeights(docs: DataFrame, isTarget: Column,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val toks = docs.select(col(idCol).as("doc_id"), isTarget.as("__t"),
-        explode(split(TextAnalysis.normalized(col(textCol)), " ")).as("w"))
+  def importanceWeights(docs: DataFrame, isTarget: Column): DataFrame = {
+    val toks = docs.select(col("doc_id"), isTarget.as("__t"),
+        explode(split(TextAnalysis.normalized(col("text")), " ")).as("w"))
       .filter(col("w") =!= "")
     val tf = toks.groupBy("w").agg(
       sum(when(col("__t"), 1L).otherwise(0L)).as("ct"),
@@ -449,13 +443,17 @@ object Curation {
           .as("log_ratio"))
   }
 
+  /** Feature buckets of [[hashedImportanceWeights]]' model: the model table
+    * has this many rows whatever the corpus vocabulary. */
+  private val HashedBuckets = 1024
+
   /** HASHED importance weights — the DSIR scale path proper (Xie et al.
     * 2023, "Data Selection for Language Models via Importance Resampling",
     * arXiv:2302.03169): unigram AND bigram features hash into a FIXED
     * bucket count, so the target/raw model is a constant-size table
     * regardless of corpus vocabulary — at 100 TB the word-level model of
     * [[importanceWeights]] grows with the (unbounded) vocab while this
-    * model stays `buckets` rows, broadcast everywhere. Weights are the
+    * model stays [[HashedBuckets]] rows, broadcast everywhere. Weights are the
     * log-likelihood ratio of each document's hashed feature bag under the
     * add-half-smoothed target vs raw bucket multinomials.
     *
@@ -471,10 +469,7 @@ object Curation {
     * document scores `(n_feats, weight_1e9) = (0, 0)` via a spine
     * left-join rather than silently disappearing (r9 ADVICE fix).
     */
-  def hashedImportanceWeights(docs: DataFrame, isTarget: Column,
-                              buckets: Int = 1024,
-                              idCol: String = "doc_id",
-                              textCol: String = "text"): DataFrame = {
+  def hashedImportanceWeights(docs: DataFrame, isTarget: Column): DataFrame = {
     // the token array MUST be a materialized column before the bigram
     // lambda touches it: a lambda body referencing the raw
     // filter(split(normalized(...))) expression re-evaluates that whole
@@ -491,19 +486,19 @@ object Curation {
     // join — without it the explode+md5 scan runs three times (hist for
     // totals, hist for the model, scoring), the dominant cost here
     val toks = graft.ops.Caches.track(docs
-      .select(col(idCol).as("doc_id"), isTarget.as("__t"),
-        filter(split(TextAnalysis.normalized(col(textCol)), " "),
+      .select(col("doc_id"), isTarget.as("__t"),
+        filter(split(TextAnalysis.normalized(col("text")), " "),
           w => w =!= "").as("__ws"))
       .select(col("doc_id"), col("__t"), explode(feats).as("f"))
       .withColumn("b", pmod(conv(substring(md5(col("f")), 1, 8), 16, 10)
-        .cast("long"), lit(buckets.toLong)))
+        .cast("long"), lit(HashedBuckets.toLong)))
       .drop("f")
       .persist())
     val hist = toks.groupBy("b").agg(
       sum(when(col("__t"), 1L).otherwise(0L)).as("ct"),
       count(lit(1)).as("cr"))
     val totals = hist.agg(sum("ct").as("nt"), sum("cr").as("nr"))
-    val half = buckets / 2.0
+    val half = HashedBuckets / 2.0
     val model = hist.crossJoin(broadcast(totals))
       .select(col("b"),
         floor((log((col("ct") + 0.5) / (col("nt") + half)) -
@@ -517,7 +512,7 @@ object Curation {
     // left-join back to the doc spine with (n_feats, weight) = (0, 0),
     // the same spine contract as removeDuplicateSpans. Co-keyed doc_id
     // join, no broadcast (both sides are corpus-sized).
-    docs.select(col(idCol).as("doc_id"))
+    docs.select(col("doc_id"))
       .join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("n_feats"), lit(0L)).as("n_feats"),
         coalesce(col("weight_1e9"), lit(0L)).as("weight_1e9"))

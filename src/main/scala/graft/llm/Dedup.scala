@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** Word tokens with positions from normalized text. */
-  def words(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol),
-        posexplode(split(TextAnalysis.normalized(col(textCol)), " ")).as(Seq("pos", "w")))
+  def words(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        posexplode(split(TextAnalysis.normalized(col("text")), " ")).as(Seq("pos", "w")))
       .filter(col("w") =!= "")
 
   /** Distinct word n-gram shingles per document via the native
@@ -128,11 +128,10 @@ object Dedup {
     * computed without the shingle explode/groupBy: the shape a per-row
     * STREAMING transform needs (a stream can't re-aggregate a doc's
     * shingles without a stateful shuffle per doc). NULL when the text has
-    * fewer than `n` words (no shingles — such docs have no signature rows
+    * fewer than 3 words (no shingles — such docs have no signature rows
     * in the batch path either).
     */
-  def minhashSignatureArray(text: org.apache.spark.sql.Column, numPerm: Int,
-                            n: Int = 3): org.apache.spark.sql.Column =
+  def minhashSignatureArray(text: org.apache.spark.sql.Column, numPerm: Int): org.apache.spark.sql.Column =
     // ONE compiled pass over the shingle array (functions/MinhashSigs —
     // NULL for empty arrays, so the old when(size > 0) guard is folded
     // into the kernel). The previous numPerm × transform/array_min HOF
@@ -141,7 +140,7 @@ object Dedup {
     // DedupSpec pins value parity with the batch minhashSignatures
     // aggregate, permutation by permutation.
     call_function("graft_minhash_sigs",
-      call_function("graft_shingles", TextAnalysis.normalized(text), lit(n)),
+      call_function("graft_shingles", TextAnalysis.normalized(text), lit(3)),
       lit(numPerm))
 
   /** Per-(band, bucket) rows with the full signature carried along:
@@ -151,7 +150,7 @@ object Dedup {
     * batch flavor so the two can never drift.
     */
   def bandedSignatureRows(docs: DataFrame, numPerm: Int, bands: Int,
-                          passthrough: Seq[String] = Nil): DataFrame = {
+                          passthrough: Seq[String]): DataFrame = {
     require(bands >= 1 && numPerm % bands == 0,
       s"bands ($bands) must divide numPerm ($numPerm)")
     val rowsPerBand = numPerm / bands
@@ -178,8 +177,8 @@ object Dedup {
     * would emit. One shuffle on (band, sig); fan-out bounded by bucket
     * collisions.
     */
-  def estimatedNearDupPairs(docs: DataFrame, numPerm: Int = 16,
-      bands: Int = 4, minSim: Double = 0.5,
+  def estimatedNearDupPairs(docs: DataFrame, numPerm: Int,
+      bands: Int, minSim: Double,
       ttlMs: Long = Long.MaxValue): DataFrame = {
     // persist: the self-join consumes the signature subtree twice, and the
     // 16-permutation row-local hashing is the expensive part of the plan
@@ -222,9 +221,8 @@ object Dedup {
     * candidate cross pairs. Batch and corpus doc_ids must be disjoint
     * (they key one shared shingle table for the verify step).
     */
-  def incrementalNearDupAdmit(batch: DataFrame, corpus: DataFrame,
-                              numPerm: Int = 16, bands: Int = 4,
-                              minJaccard: Double = 0.5): DataFrame = {
+  def incrementalNearDupAdmit(batch: DataFrame, corpus: DataFrame): DataFrame = {
+    val (numPerm, bands) = (16, 4)
     val shB = graft.ops.Caches.track(shingles(batch).persist())
     val shC = graft.ops.Caches.track(shingles(corpus).persist())
     val cand = bandTable(minhashSignatures(shB, numPerm), numPerm, bands).as("x")
@@ -233,7 +231,7 @@ object Dedup {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
     val near = jaccardForPairs(shB.unionByName(shC), cand)
-      .filter(col("jaccard") >= minJaccard)
+      .filter(col("jaccard") >= 0.5)
     batch.join(near.select(col("doc_a").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
   }
@@ -262,8 +260,8 @@ object Dedup {
   /** Full MinHash+LSH near-dup pipeline: candidates from banding, exact
     * Jaccard computed ONLY for candidate pairs.
     */
-  def minhashNearDups(docs: DataFrame, numPerm: Int = 16, bands: Int = 4,
-                      minJaccard: Double = 0.5): DataFrame = {
+  def minhashNearDups(docs: DataFrame, numPerm: Int, bands: Int,
+                      minJaccard: Double): DataFrame = {
     val sh = graft.ops.Caches.track(shingles(docs).persist())
     val cand = minhashCandidates(minhashSignatures(sh, numPerm), numPerm, bands)
     jaccardForPairs(sh, cand).filter(col("jaccard") >= minJaccard)
@@ -286,7 +284,7 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs via banded tables (the multi-table design of
-    * Manku et al., WWW'07 §3): the 64-bit signature is split into `bands`
+    * Manku et al., WWW'07 §3): the 64-bit signature is split into four
     * 16-bit slices, each slice a separate blocking table; candidates agree
     * on at least one full slice. Unlike single-prefix blocking, a near-dup
     * whose differing bits fall in the prefix is still caught by another
@@ -299,11 +297,11 @@ object Dedup {
     * identical-content mass) and cap pathological buckets if the corpus is
     * adversarial.
     */
-  def simhashPairs(sim: DataFrame, maxHamming: Int, bands: Int = 4,
+  def simhashPairs(sim: DataFrame, maxHamming: Int,
                    idCol: String = "doc_id", hashCol: String = "simhash"): DataFrame = {
-    val width = 64 / bands
+    val width = 16
     val mask = (1L << width) - 1
-    val bandCols = (0 until bands).map { b =>
+    val bandCols = (0 until 4).map { b =>
       struct(lit(b).as("band"),
         shiftrightunsigned(col(hashCol), b * width).bitwiseAND(lit(mask)).as("key"))
     }
@@ -337,9 +335,8 @@ object Dedup {
     * 100 TB, hash the span to 16 bytes before the shuffle (md5 here) so
     * shuffle width is constant per span regardless of n.
     */
-  def duplicateSpans(docs: DataFrame, n: Int,
-                     textCol: String = "text"): DataFrame = {
-    val t = split(graft.llm.TextAnalysis.normalized(col(textCol)), " ")
+  def duplicateSpans(docs: DataFrame, n: Int): DataFrame = {
+    val t = split(graft.llm.TextAnalysis.normalized(col("text")), " ")
     val sh = graft.ops.Caches.track(docs
       .select(col("doc_id"), t.as("__t"))
       .filter(size(col("__t")) >= n)
@@ -382,16 +379,15 @@ object Dedup {
     * sort-aggregate. The span rank window partitions by the span hash —
     * never by anything corpus-sized. No all-pairs stage anywhere.
     */
-  def removeDuplicateSpans(docs: DataFrame, n: Int,
-                           textCol: String = "text"): DataFrame = {
+  def removeDuplicateSpans(docs: DataFrame, n: Int): DataFrame = {
     val w = Window.partitionBy("gh").orderBy(col("doc_id"), col("pos"))
-    val removal = duplicateSpans(docs, n, textCol)
+    val removal = duplicateSpans(docs, n)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") > 1)
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + (n - 1))).as("i"))
       .distinct()
-    val toks = graft.ops.Caches.track(words(docs, textCol = textCol)
+    val toks = graft.ops.Caches.track(words(docs)
       .select(col("doc_id"), (col("pos") + 1).as("i"), col("w"))
       .persist())
     // n_tokens from the SAME persisted token stream the anti-join reads
@@ -444,19 +440,18 @@ object Dedup {
     * window (31.7 s at sf0.1 vs sub-second; HOF lambdas never codegen).
     * Returns (doc_id, pos, fp) — one row per selected occurrence.
     */
-  def winnowFingerprints(docs: DataFrame, k: Int = 12, w: Int = 4,
-                         textCol: String = "text"): DataFrame = {
+  def winnowFingerprints(docs: DataFrame, k: Int, w: Int): DataFrame = {
     docs
-      .withColumn("__norm", TextAnalysis.normalized(col(textCol)))
+      .withColumn("__norm", TextAnalysis.normalized(col("text")))
       .select(col("doc_id"),
         explode(expr(s"graft_winnow(__norm, $k, $w)")).as("s"))
       .select(col("doc_id"), col("s.pos").as("pos"), col("s.fp").as("fp"))
   }
 
   /** Exact dedup keeping the first doc per content hash (deterministic). */
-  def exactDedup(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def exactDedup(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy("h").orderBy(col("doc_id").asc)
-    docs.withColumn("h", md5(col(textCol)))
+    docs.withColumn("h", md5(col("text")))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "h")

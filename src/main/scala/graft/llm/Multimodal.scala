@@ -30,12 +30,11 @@ object Multimodal {
     * In a real pipeline this is the parquet `binary` column written at
     * ingest (image bytes, audio frames, …).
     */
-  def packBinary(docs: DataFrame, idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).cast("bigint").as("doc_id"),
-      col(textCol).cast("binary").as("payload"),
+  def packBinary(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").cast("bigint").as("doc_id"),
+      col("text").cast("binary").as("payload"),
       lit("text/plain").as("kind"),
-      length(col(textCol).cast("binary")).cast("bigint").as("meta_len"))
+      length(col("text").cast("binary")).cast("bigint").as("meta_len"))
 
   /** STUB decode: a real deployment decodes/resizes/frame-samples here.
     * Deterministic fake so the batch plumbing is verifiable end-to-end:
@@ -478,7 +477,4 @@ object Multimodal {
     out.write(0x3b)
     out.toByteArray
   }
-
-  /** UTF-8 byte length sanity helper used by tests. */
-  def utf8Len(s: String): Int = s.getBytes(StandardCharsets.UTF_8).length
 }

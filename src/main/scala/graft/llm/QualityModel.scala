@@ -25,8 +25,8 @@ object QualityModel {
   /** Row-local feature columns: word count (log-scaled), mean word length,
     * type-token ratio, digit fraction, and the heuristic composite.
     */
-  def featureFrame(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def featureFrame(docs: DataFrame): DataFrame = {
+    val t = col("text")
     val toks = split(TextAnalysis.normalized(t), " ")
     val nToks = greatest(size(toks), lit(1)).cast("double")
     val alpha = length(regexp_replace(lower(t), "[^a-z0-9]", "")).cast("double")
@@ -50,10 +50,9 @@ object QualityModel {
   /** Train on the weak labels and score every document. Returns
     * (doc_id, label, quality_prob, prediction).
     */
-  def trainScore(docs: DataFrame, idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame = {
-    val labeled = featureFrame(docs, textCol)
-      .withColumn("label", weakLabel(col(textCol)))
+  def trainScore(docs: DataFrame): DataFrame = {
+    val labeled = featureFrame(docs)
+      .withColumn("label", weakLabel(col("text")))
     val assembled0 = new VectorAssembler()
       .setInputCols(featureCols).setOutputCol("features")
       // null text propagates null features; skip such rows instead of
@@ -81,7 +80,7 @@ object QualityModel {
       .setMaxIter(100).setRegParam(1e-3).setStandardization(true)
       .fit(assembled)
     model.transform(assembled)
-      .select(col(idCol), col("label"),
+      .select(col("doc_id"), col("label"),
         vector_to_array(col("probability")).getItem(1).as("quality_prob"),
         col("prediction"))
   }
@@ -95,10 +94,9 @@ object QualityModel {
     * `(idx, boundary, calibrated)` — the table a serving layer broadcasts
     * to turn scores into admission probabilities.
     */
-  def isotonicCalibration(docs: DataFrame, target: Column,
-                          textCol: String = "text"): DataFrame =
+  def isotonicCalibration(docs: DataFrame, target: Column): DataFrame =
     isotonicFit(docs.select(
-      TextAnalysis.qualityScore(col(textCol)).as("score"),
+      TextAnalysis.qualityScore(col("text")).as("score"),
       target.cast("double").as("label")))
 
   /** PAV fit over a `(score: double, label: double)` frame → the

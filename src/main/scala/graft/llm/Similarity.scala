@@ -65,7 +65,7 @@ object Similarity {
     }.reduce(_ + _)
 
   /** LSH-bucketed ANN: score only vectors in the query's sign bucket. */
-  def lshTopK(emb: DataFrame, queryId: Long, k: Int, bits: Int = 4): DataFrame = {
+  def lshTopK(emb: DataFrame, queryId: Long, k: Int, bits: Int): DataFrame = {
     val e = withVec(emb).withColumn("bucket", signBucket("v", bits))
     val q = queryVec(e, queryId)
     require(bits <= q.length,
@@ -89,7 +89,7 @@ object Similarity {
     * @return (rank, vec_id, relevance, redundancy, mmr_score), rank 1..k
     */
   def mmrRerank(emb: DataFrame, queryId: Long, k: Int,
-                candidates: Int = 20, lambda: Double = 0.7): DataFrame = {
+                candidates: Int, lambda: Double): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val e = withVec(emb)
@@ -144,8 +144,10 @@ object Similarity {
     * literals. Farthest-first init (greedy 2-approx k-center seeding from
     * the first point) makes it seed-free and run-to-run identical.
     */
-  private[llm] def localKMeans(points: Array[Array[Double]], k: Int,
-                               maxIter: Int = 25): Array[Array[Double]] = {
+  /** Lloyd rounds of [[localKMeans]] when assignments keep changing. */
+  private val KMeansMaxIter = 25
+
+  private[llm] def localKMeans(points: Array[Array[Double]], k: Int): Array[Array[Double]] = {
     require(points.nonEmpty, "k-means needs a non-empty training sample")
     val dim = points(0).length
     def d2(a: Array[Double], b: Array[Double]): Double = {
@@ -169,7 +171,7 @@ object Similarity {
     val assign = Array.fill(points.length)(-1)
     var changed = true
     var iter = 0
-    while (changed && iter < maxIter) {
+    while (changed && iter < KMeansMaxIter) {
       changed = false
       var i = 0
       while (i < points.length) {
@@ -292,8 +294,8 @@ object Similarity {
     * is file-level partition pruning and each query touches nprobe/nlist
     * of the data.
     */
-  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nlist: Int = 16,
-              nprobe: Int = 2): DataFrame = {
+  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nlist: Int,
+              nprobe: Int): DataFrame = {
     val e = graft.ops.Caches.track(withVec(emb).persist())
     val centers = trainCenters(e, "v", nlist, 200L * nlist)
     val assigned = e.withColumn("cell", nearestC(centers, col("v")) - 1)

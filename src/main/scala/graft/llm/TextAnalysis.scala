@@ -84,12 +84,11 @@ object TextAnalysis {
     * doc_id (the distinct-shingle count); the total 3-gram count is a
     * scan-side expression. High ratio → template/boilerplate text.
     */
-  def repetitionProfile(docs: org.apache.spark.sql.DataFrame,
-                        n: Int = 3): org.apache.spark.sql.DataFrame = {
+  def repetitionProfile(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val words = size(split(normalized(col("text")), " "))
     val total = docs.select(col("doc_id"),
-      greatest(words - (n - 1), lit(0)).cast("bigint").as("n_grams"))
-    val distinct = Dedup.shingles(docs, n)
+      greatest(words - 2, lit(0)).cast("bigint").as("n_grams"))
+    val distinct = Dedup.shingles(docs, 3)
       .groupBy("doc_id").agg(count(lit(1)).as("n_distinct"))
     total.join(distinct, Seq("doc_id"), "left")
       .withColumn("n_distinct", coalesce(col("n_distinct"), lit(0L)))
@@ -111,11 +110,14 @@ object TextAnalysis {
     * the 1-row global) and a TakeOrdered top-k, nothing pairwise. Output
     * columns: doc_id, dl, tf_<term>…, score (unrounded).
     */
-  def bm25(docs: org.apache.spark.sql.DataFrame, terms: Seq[String],
-           k1: Double = 1.2, b: Double = 0.75,
-           idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    val words = docs.select(col(idCol).as("doc_id"),
-        explode(split(normalized(col(textCol)), " ")).as("w"))
+  /** BM25's term-frequency saturation k1 and length normalisation b, the
+    * Robertson/Lucene defaults. */
+  private val Bm25K1 = 1.2
+  private val Bm25B = 0.75
+
+  def bm25(docs: org.apache.spark.sql.DataFrame, terms: Seq[String]): org.apache.spark.sql.DataFrame = {
+    val words = docs.select(col("doc_id"),
+        explode(split(normalized(col("text")), " ")).as("w"))
       .filter(col("w") =!= "")
     val perDoc = words.groupBy("doc_id").agg(
       count(lit(1)).as("dl"),
@@ -131,7 +133,7 @@ object TextAnalysis {
       val tf = col(s"tf_$t").cast("double")
       val df = col(s"df_$t").cast("double")
       val idf = log(lit(1.0) + (col("nd").cast("double") - df + lit(0.5)) / (df + lit(0.5)))
-      idf * (tf * lit(k1 + 1.0)) / (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / avgdl))
+      idf * (tf * lit(Bm25K1 + 1.0)) / (tf + lit(Bm25K1) * (lit(1.0 - Bm25B) + lit(Bm25B) * dl / avgdl))
     }.reduceLeft(_ + _)
     joined.select(
       (col("doc_id") +: col("dl") +: terms.map(t => col(s"tf_$t"))) :+ score.as("score"): _*)
@@ -141,11 +143,10 @@ object TextAnalysis {
     * Two hash aggregates + one join on the term — the shuffle keys are the
     * natural ones and nothing is driver-side except the corpus count N.
     */
-  def tfIdf(docs: org.apache.spark.sql.DataFrame,
-            idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.DataFrame = {
+  def tfIdf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val n = docs.count()
-    val words = docs.select(col(idCol).as("doc_id"),
-        explode(split(normalized(col(textCol)), " ")).as("w"))
+    val words = docs.select(col("doc_id"),
+        explode(split(normalized(col("text")), " ")).as("w"))
       .filter(col("w") =!= "")
     val tf = words.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("w").agg(count(lit(1)).as("df"))
@@ -164,11 +165,10 @@ object TextAnalysis {
     * is deterministic for a fixed JDK deflate implementation; treat it as
     * a filter signal, not a cross-engine-stable value.
     */
-  def compressionRatio(docs: org.apache.spark.sql.DataFrame,
-                       idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.DataFrame = {
+  def compressionRatio(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("bigint").as("doc_id"), col(textCol).as("t"))
+    docs.select(col("doc_id").cast("bigint").as("doc_id"), col("text").as("t"))
       .as[(Long, String)]
       .mapPartitions { it =>
         val defl = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION)
@@ -208,10 +208,9 @@ object TextAnalysis {
     * aggregates; V rides a one-row broadcast. Docs with <2 tokens drop out
     * (no bigrams), mirroring the oracle's empty-range semantics.
     */
-  def bigramLogProb(docs: org.apache.spark.sql.DataFrame,
-                    idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    val toks = split(normalized(col(textCol)), " ")
-    val bi = docs.select(col(idCol).as("doc_id"), toks.as("__t"))
+  def bigramLogProb(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val toks = split(normalized(col("text")), " ")
+    val bi = docs.select(col("doc_id"), toks.as("__t"))
       .filter(size(col("__t")) >= 2) // sequence(1, 0) would run DESCENDING
       .select(col("doc_id"),
         explode(sequence(lit(1), size(col("__t")) - 1)).as("__i"), col("__t"))
@@ -220,7 +219,7 @@ object TextAnalysis {
       .filter(col("w1") =!= "" && col("w2") =!= "")
     val cbg = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val cug = bi.groupBy("w1").agg(count(lit(1)).as("c1"))
-    val vocab = docs.select(explode(split(normalized(col(textCol)), " ")).as("w"))
+    val vocab = docs.select(explode(toks).as("w"))
       .filter(col("w") =!= "").agg(count_distinct(col("w")).as("v"))
     bi.join(cbg, Seq("w1", "w2")).join(cug, "w1")
       .crossJoin(broadcast(vocab))
@@ -237,10 +236,9 @@ object TextAnalysis {
     * filter on either tail. Shuffle keys are the natural ones (token, then
     * doc); the corpus-size scalar rides a broadcast, nothing driver-side.
     */
-  def unigramLogProb(docs: org.apache.spark.sql.DataFrame,
-                     idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-        explode(split(normalized(col(textCol)), " ")).as("w"))
+  def unigramLogProb(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val toks = docs.select(col("doc_id"),
+        explode(split(normalized(col("text")), " ")).as("w"))
       .filter(col("w") =!= "")
     val tf = toks.groupBy("w").agg(count(lit(1)).as("cw"))
     val total = tf.agg(sum("cw").as("nt"))

@@ -47,16 +47,6 @@ object Analytic {
            else Some(v.map(x => (x - mean) * (x - mean)).sum / (v.length - 1)))
   }
 
-  /** A3 — per-key per-group means and their difference (logFC precursor,
-    * reference /root/reference/plots.R:148-158). `g1 - g2`.
-    */
-  def groupMeanDiff(df: DataFrame, keyCol: String, groupCol: String,
-                    valCol: String, g1: String, g2: String): DataFrame =
-    df.groupBy(keyCol)
-      .agg(avg(when(col(groupCol) === g1, col(valCol))).as("mean_g1"),
-           avg(when(col(groupCol) === g2, col(valCol))).as("mean_g2"))
-      .withColumn("diff", col("mean_g1") - col("mean_g2"))
-
   /** W3/K4 — Benjamini–Hochberg FDR (reference plots.R:162
     * p.adjust(method="BH")): rank p ascending, p*n/rank, running min from the
     * largest p down, clamp to 1. Ties resolve identically to R because the
@@ -71,8 +61,8 @@ object Analytic {
     * scalar subquery over the same persisted sorted rows the emit reads.
     */
   def bhAdjust(df: DataFrame, pCol: String, tieBreak: String,
-               outCol: String = "fdr", knownRows: Option[Long] = None): DataFrame =
-    RangedScan.run(df, bhScan(pCol, tieBreak, outCol), knownRows)
+               knownRows: Option[Long] = None): DataFrame =
+    RangedScan.run(df, bhScan(pCol, tieBreak), knownRows)
 
   /** Benjamini–Yekutieli FDR — the dependence-robust BH variant: the
     * step-up quantity is scaled by the harmonic factor c(m) = Σ_{i≤m} 1/i
@@ -82,8 +72,7 @@ object Analytic {
     * i-ordered running sum, and O(m) driver time on a number, not a row
     * set. scale=1 reproduces BH bit-for-bit (p·1.0 is exact).
     */
-  def byAdjust(df: DataFrame, pCol: String, tieBreak: String,
-               outCol: String = "fdr_by"): DataFrame = {
+  def byAdjust(df: DataFrame, pCol: String, tieBreak: String): DataFrame = {
     val input =
       if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         Caches.track(df.persist())
@@ -93,7 +82,7 @@ object Analytic {
     var h = 0.0
     var i = 1L
     while (i <= m) { h += 1.0 / i; i += 1 }
-    RangedScan.run(input, bhScan(pCol, tieBreak, outCol, scale = h), Some(counts.getLong(0)))
+    RangedScan.run(input, bhScan(pCol, tieBreak, "fdr_by", scale = h), Some(counts.getLong(0)))
   }
 
   /** Holm step-DOWN FWER adjustment (p.adjust method="holm" — the
@@ -102,9 +91,8 @@ object Analytic {
     * where BH runs a suffix-min descending. Same size gate and null
     * semantics as [[bhAdjust]].
     */
-  def holmAdjust(df: DataFrame, pCol: String, tieBreak: String,
-                 outCol: String = "p_holm"): DataFrame =
-    RangedScan.run(df, holmScan(pCol, tieBreak, outCol))
+  def holmAdjust(df: DataFrame, pCol: String, tieBreak: String): DataFrame =
+    RangedScan.run(df, holmScan(pCol, tieBreak))
 
   /** BH as a prefix scan: largest p first, so a row's running min covers
     * every larger p, and its ascending rank is total − before.
@@ -117,9 +105,8 @@ object Analytic {
         Double.PositiveInfinity, (a, b) => if (b < a) b else a))
 
   /** Holm as a prefix scan: smallest p first, rank before + 1, running max. */
-  private[graft] def holmScan(pCol: String, tieBreak: String,
-                              outCol: String = "p_holm"): RangedScan.Scan =
-    pValueScan(Seq(col(pCol).asc_nulls_last, col(tieBreak).asc), pCol, outCol,
+  private[graft] def holmScan(pCol: String, tieBreak: String): RangedScan.Scan =
+    pValueScan(Seq(col(pCol).asc_nulls_last, col(tieBreak).asc), pCol, "p_holm",
       RangedScan.Fold((p, before, total) =>
         p.asInstanceOf[Double] * (total - before).toDouble,
         Double.NegativeInfinity, (a, b) => if (b > a) b else a))
@@ -143,8 +130,7 @@ object Analytic {
     * contrast's probe count. Null p follows R as in [[bhAdjust]]: a null
     * FDR, and n counts the slice's non-null p-values only.
     */
-  def bhAdjustBy(df: DataFrame, byCol: String, pCol: String, tieBreak: String,
-                 outCol: String = "fdr"): DataFrame = {
+  def bhAdjustBy(df: DataFrame, byCol: String, pCol: String, tieBreak: String): DataFrame = {
     val wRank = Window.partitionBy(byCol)
       .orderBy(col(pCol).asc_nulls_last, col(tieBreak).asc)
     val wAll = Window.partitionBy(byCol)
@@ -153,7 +139,7 @@ object Analytic {
     df.withColumn("__rn", row_number().over(wRank))
       .withColumn("__n", count(col(pCol)).over(wAll))
       .withColumn("__bh", col(pCol) * col("__n").cast("double") / col("__rn").cast("double"))
-      .withColumn(outCol,
+      .withColumn("fdr",
         when(col(pCol).isNotNull, least(min(col("__bh")).over(wMin), lit(1.0))))
       .drop("__rn", "__n", "__bh")
   }

@@ -27,8 +27,12 @@ object Bmiq {
                        beta_norm: Double, design_type: Int)
 
   /** The fit's subsample size and EM iterations (reference nfit/niter). */
-  private[ops] val Nfit = 10000
-  private[ops] val Niter = 5
+  private val Nfit = 10000
+  private val Niter = 5
+
+  /** Probes per design type below which a sample passes through
+    * unnormalized (reference DoBMIQ.R:135-141). */
+  private val MinPerType = 50
 
   /** Beta(a, b) without a random generator: the kernel only evaluates
     * densities, CDFs and inverse CDFs, and the default constructor seeds a
@@ -43,8 +47,8 @@ object Bmiq {
     * BMIQ_1.4.R:60-64 for type-1 defaults 0.2/0.75; the type-2 fit shifts
     * them by the KDE-mode offsets, BMIQ_1.4.R:108-115).
     */
-  private[ops] def fitMixture(x: Array[Double], niter: Int,
-                              thLo: Double = 0.2, thHi: Double = 0.75): Array[(Double, Double, Double)] = {
+  private[ops] def fitMixture(x: Array[Double], thLo: Double = 0.2,
+                              thHi: Double = 0.75): Array[(Double, Double, Double)] = {
     val n = x.length
     val resp = Array.ofDim[Double](n, 3)
     x.zipWithIndex.foreach { case (v, i) =>
@@ -53,7 +57,7 @@ object Bmiq {
     }
     var params = Array.tabulate(3)(j => mStep(x, resp, j))
     var it = 0
-    while (it < niter) {
+    while (it < Niter) {
       val dists = params.map { case (_, a, b) => betaDist(a, b) }
       var i = 0
       while (i < n) {
@@ -97,9 +101,9 @@ object Bmiq {
   /** Deterministic replacement for the reference's un-seeded subsample:
     * stride over the (already probe-sorted) vector.
     */
-  private def strideSample(x: Array[Double], nfit: Int): Array[Double] =
-    if (x.length <= nfit) x
-    else { val step = x.length.toDouble / nfit; Array.tabulate(nfit)(i => x((i * step).toInt)) }
+  private def strideSample(x: Array[Double]): Array[Double] =
+    if (x.length <= Nfit) x
+    else { val step = x.length.toDouble / Nfit; Array.tabulate(Nfit)(i => x((i * step).toInt)) }
 
   /** Regularize exact 0/1 betas to the nearest interior observed value
     * (reference BMIQ_1.4.R:48-59).
@@ -188,8 +192,7 @@ object Bmiq {
     * ≥minPerType guard (reference DoBMIQ.R:135-141), where normalization
     * is identity.
     */
-  private def fit(sorted: Array[In], nfit: Int, niter: Int,
-                  minPerType: Int): Option[Fit] = {
+  private def fit(sorted: Array[In], minPerType: Int): Option[Fit] = {
     val t1 = sorted.filter(_.design_type == 1).map(_.beta)
     val t2 = sorted.filter(_.design_type == 2).map(_.beta)
     if (t1.length < minPerType || t2.length < minPerType) return None
@@ -198,7 +201,7 @@ object Bmiq {
     def reg(v: Double) = regularize(v, minPos, maxSub1)
     val t1r = t1.map(reg)
     val t2rAll = t2.map(reg)
-    val p1 = fitMixture(strideSample(t1r, nfit), niter)
+    val p1 = fitMixture(strideSample(t1r))
     val dists1 = p1.map { case (_, a, b) => betaDist(a, b) }
 
     // Type-2 EM initialization: type-1 class boundaries shifted by the
@@ -220,17 +223,16 @@ object Bmiq {
     val (th2Lo, th2Hi) =
       if (mod1U.isNaN || mod1M.isNaN || mod2U.isNaN || mod2M.isNaN) (th1Lo, th1Hi)
       else (th1Lo + (mod2U - mod1U), th1Hi + (mod2M - mod1M))
-    val p2 = fitMixture(strideSample(t2rAll, nfit), niter, th2Lo, th2Hi)
+    val p2 = fitMixture(strideSample(t2rAll), th2Lo, th2Hi)
     Some(Fit(reg, p1, p2))
   }
 
   /** One sample's BMIQ: its rows in any order, its normalized rows out.
     * Pure, so the distributed and the driver-local e02 chains share it.
     */
-  private[ops] def normalizeSample(rows: Array[In], nfit: Int, niter: Int,
-                                   minPerType: Int): Iterator[Out] = {
+  private[ops] def normalizeSample(rows: Array[In], minPerType: Int): Iterator[Out] = {
     val sorted = rows.sortBy(_.probe_id)
-    val fitted = fit(sorted, nfit, niter, minPerType)
+    val fitted = fit(sorted, minPerType)
     if (fitted.isEmpty) // the ≥minPerType guard: identity pass-through
       return sorted.iterator.map(r => Out(r.probe_id, r.sample_id, r.beta, r.beta, r.design_type))
     val Fit(reg, p1, p2) = fitted.get
@@ -305,8 +307,7 @@ object Bmiq {
     * with per-class contributions; rendering stays out of scope.
     * Distribution shape = bmiq's: flatMapGroups over the sample axis.
     */
-  def fittedDensity(beta: DataFrame, manifest: DataFrame, gridN: Int = 100,
-                    nfit: Int = Nfit, niter: Int = Niter, minPerType: Int = 50): DataFrame = {
+  def fittedDensity(beta: DataFrame, manifest: DataFrame, gridN: Int = 100): DataFrame = {
     val spark = beta.sparkSession
     import spark.implicits._
     beta.join(broadcast(manifest), "probe_id")
@@ -314,7 +315,7 @@ object Bmiq {
       .as[In]
       .groupByKey(_.sample_id)
       .flatMapGroups { (sid, it) =>
-        fitParams(it.toArray, nfit, niter, minPerType) match {
+        fitParams(it.toArray, MinPerType) match {
           case None => Iterator.empty
           case Some((p1, p2)) =>
             Seq((1, p1), (2, p2)).iterator.flatMap { case (dt, p) =>
@@ -334,26 +335,24 @@ object Bmiq {
     * or None under the ≥minPerType guard (where normalization is identity
     * and there is no fit to plot).
     */
-  private[graft] def fitParams(rows: Array[In], nfit: Int, niter: Int, minPerType: Int)
+  private[graft] def fitParams(rows: Array[In], minPerType: Int)
       : Option[(Array[(Double, Double, Double)], Array[(Double, Double, Double)])] =
-    fit(rows.sortBy(_.probe_id), nfit, niter, minPerType).map(f => (f.p1, f.p2))
+    fit(rows.sortBy(_.probe_id), minPerType).map(f => (f.p1, f.p2))
 
   /** Entry point: long betas + probe manifest (design_type 1|2) →
     * normalized long betas.
     */
-  def bmiq(beta: DataFrame, manifest: DataFrame, nfit: Int = Nfit,
-           niter: Int = Niter, minPerType: Int = 50): DataFrame =
-    normalizeTyped(beta.join(broadcast(manifest), "probe_id"), nfit, niter, minPerType)
+  def bmiq(beta: DataFrame, manifest: DataFrame, minPerType: Int = MinPerType): DataFrame =
+    normalizeTyped(beta.join(broadcast(manifest), "probe_id"), minPerType)
 
   /** [[bmiq]] over betas that already carry their probe's `design_type`. */
-  private[ops] def normalizeTyped(typed: DataFrame, nfit: Int, niter: Int,
-                                  minPerType: Int): DataFrame = {
+  private[ops] def normalizeTyped(typed: DataFrame, minPerType: Int): DataFrame = {
     val spark = typed.sparkSession
     import spark.implicits._
     typed.select("probe_id", "sample_id", "beta", "design_type")
       .as[In]
       .groupByKey(_.sample_id)
-      .flatMapGroups((_, it) => normalizeSample(it.toArray, nfit, niter, minPerType))
+      .flatMapGroups((_, it) => normalizeSample(it.toArray, minPerType))
       .toDF()
   }
 }

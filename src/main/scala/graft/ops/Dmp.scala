@@ -33,14 +33,16 @@ object Dmp {
   /** Fitted variance prior: s²_g ~ s0² · F(df_g, d0). */
   final case class Prior(d0: Double, s02: Double)
 
+  /** The reference requires >= 3 samples per group (reference
+    * plots.R:73-76). */
+  private val MinPerGroup = 3
+
   /** Pass 1: per-probe two-group moments of clamped M-values.
     * Input columns: probe_id, group, beta. Output adds n1/n2, mean1/mean2,
     * var1/var2, logfc = mean1-mean2, df = n1+n2-2, pooled s².
-    * Group-size guard: the reference requires >= 3 samples per group
-    * (/root/reference/plots.R:73-76).
+    * Group-size guard: [[MinPerGroup]] samples per group.
     */
   def moments(betaWithGroup: DataFrame, g1: String, g2: String,
-              minPerGroup: Int = 3,
               extraAggs: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
     val m = Fns.mValueClamped(col("beta"))
     val aggs = Seq(
@@ -51,7 +53,7 @@ object Dmp {
       var_samp(when(col("group") === g2, m)).as("var2")) ++ extraAggs
     betaWithGroup.groupBy("probe_id")
       .agg(count(when(col("group") === g1, 1)).as("n1"), aggs: _*)
-      .filter(col("n1") >= minPerGroup && col("n2") >= minPerGroup)
+      .filter(col("n1") >= MinPerGroup && col("n2") >= MinPerGroup)
       .withColumn("logfc", col("mean1") - col("mean2"))
       .withColumn("df", (col("n1") + col("n2") - 2).cast("double"))
       .withColumn("s2",

@@ -79,7 +79,7 @@ object Graph {
     *              a pair with a null endpoint is no edge
     * @return (id, rank) — rank in Scale units, int64
     */
-  def pageRank(edges: DataFrame, iterations: Int = 5): DataFrame =
+  def pageRank(edges: DataFrame, iterations: Int): DataFrame =
     gated(edges, "src", "dst")(pageRankLocal(_, iterations),
       pageRankLoop(_, iterations))
 
@@ -308,29 +308,29 @@ object Graph {
     * union-find replaces the loop ([[gated]]; measured 5.2 s of pure
     * per-round overhead for 590 edges at sf0.1).
     *
-    * @param edges    (srcCol, dstCol) pairs, interpreted undirected; a
+    * @param edges    (doc_a, doc_b) pairs, interpreted undirected; a
     *                 pair with a null endpoint is no edge
-    * @param vertices single-column frame of all vertex ids (singletons keep
+    * @param vertices frame of all vertex ids in `doc_id` (singletons keep
     *                 their own label and appear as size-1 clusters)
-    * @return (id, cluster) — cluster = min vertex id of the component
+    * @return (doc_id, cluster) — cluster = min vertex id of the component
     */
-  def connectedComponents(edges: DataFrame, vertices: DataFrame,
-                          srcCol: String = "doc_a", dstCol: String = "doc_b",
-                          idCol: String = "doc_id",
-                          maxIter: Int = 50): DataFrame =
-    gated(edges, srcCol, dstCol)(componentsLocal(_, vertices, idCol),
-      componentsLoop(_, vertices, idCol, maxIter))
+  def connectedComponents(edges: DataFrame, vertices: DataFrame): DataFrame =
+    gated(edges, "doc_a", "doc_b")(componentsLocal(_, vertices),
+      componentsLoop(_, vertices, ComponentsMaxIter))
+
+  /** Label-propagation rounds after which [[connectedComponents]]'
+    * distributed loop throws rather than return unconverged labels. */
+  private val ComponentsMaxIter = 50
 
   /** [[connectedComponents]]' distributed loop at any size. */
   private[graft] def connectedComponentsDistributed(
-      edges: DataFrame, vertices: DataFrame, srcCol: String = "doc_a",
-      dstCol: String = "doc_b", idCol: String = "doc_id",
-      maxIter: Int = 50): DataFrame =
-    componentsLoop(undirected(edgeList(edges, srcCol, dstCol)), vertices,
-      idCol, maxIter)
+      edges: DataFrame, vertices: DataFrame,
+      maxIter: Int = ComponentsMaxIter): DataFrame =
+    componentsLoop(undirected(edgeList(edges, "doc_a", "doc_b")), vertices,
+      maxIter)
 
   private def componentsLoop(und: DataFrame, vertices: DataFrame,
-                             idCol: String, maxIter: Int): DataFrame = {
+                             maxIter: Int): DataFrame = {
     // Only edge-touched vertices can ever change label — iterate over that
     // subgraph and re-attach everything else as singleton clusters at the
     // end. In a dedup corpus the near-dup fraction is small, so each
@@ -375,7 +375,7 @@ object Graph {
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds; " +
           "component diameter exceeds maxIter")
-    withSingletons(labels, vertices, idCol)
+    withSingletons(labels, vertices)
   }
 
   /** Union-find on the driver, over the dense index. A union attaches the
@@ -385,8 +385,7 @@ object Graph {
     * A self-loop just registers its vertex, the label propagation gives it
     * too.
     */
-  private def componentsLocal(g: LocalGraph, vertices: DataFrame,
-                              idCol: String): DataFrame = {
+  private def componentsLocal(g: LocalGraph, vertices: DataFrame): DataFrame = {
     val parent = Array.tabulate(g.n)(identity)
     def find(x: Int): Int = {
       var r = x
@@ -402,18 +401,17 @@ object Graph {
     }
     val labels = g.emit(Array.tabulate(g.n)(i => (g.ids(i), g.ids(find(i)))),
       StructField("cluster", LongType, nullable = true))
-    withSingletons(labels, vertices, idCol)
+    withSingletons(labels, vertices)
   }
 
   /** `(id, cluster)` labels of the edge-touched vertices plus every other
-    * vertex as its own cluster, under `idCol`.
+    * vertex as its own cluster, under `doc_id`.
     */
-  private def withSingletons(labels: DataFrame, vertices: DataFrame,
-                             idCol: String): DataFrame = {
-    val singletons = vertices.select(col(idCol).as("id"))
+  private def withSingletons(labels: DataFrame, vertices: DataFrame): DataFrame = {
+    val singletons = vertices.select(col("doc_id").as("id"))
       .join(labels.select("id"), Seq("id"), "left_anti")
       .withColumn("cluster", col("id"))
-    labels.union(singletons).select(col("id").as(idCol), col("cluster"))
+    labels.union(singletons).select(col("id").as("doc_id"), col("cluster"))
   }
 
   /** The one-orientation `(src, dst)` edge list every kernel above starts

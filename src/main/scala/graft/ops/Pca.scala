@@ -28,17 +28,20 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   */
 object Pca {
 
-  private def fitWithRetry[T](what: String, attempts: Int = 3)(f: => T): T = {
+  /** Tries of an eigendecomposition before its last failure is thrown. */
+  private val FitAttempts = 3
+
+  private def fitWithRetry[T](what: String)(f: => T): T = {
     var last: Throwable = null
     var i = 0
-    while (i < attempts) {
+    while (i < FitAttempts) {
       try return f
       catch {
         // NonFatal only: retrying an OOM against a degraded heap or a
         // swallowed InterruptedException (cancellation) makes things worse
         case scala.util.control.NonFatal(e) =>
           last = e
-          System.err.println(s"[pca] $what attempt ${i + 1}/$attempts failed: $e")
+          System.err.println(s"[pca] $what attempt ${i + 1}/$FitAttempts failed: $e")
       }
       i += 1
     }

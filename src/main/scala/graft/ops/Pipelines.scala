@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Fns
@@ -47,10 +47,9 @@ object Pipelines {
     * @return PCA coordinates per surviving sample (the workflow's final
     *         plot-ready table, workflow.R:229-237).
     */
-  def fullWorkflow(spark: SparkSession, beta: DataFrame, detp: DataFrame,
-                   sheet: DataFrame, manifest: DataFrame,
-                   qcThr: Double = 0.05, topK: Int = 50, pcs: Int = 3,
-                   bmiqMinPerType: Int = 50): DataFrame =
+  def fullWorkflow(beta: DataFrame, detp: DataFrame, sheet: DataFrame,
+                   manifest: DataFrame, qcThr: Double, topK: Int, pcs: Int,
+                   bmiqMinPerType: Int): DataFrame =
     workflow(beta, detp, sheet, manifest, qcThr, topK, pcs, bmiqMinPerType,
       pinDistributed = false)
 
@@ -89,7 +88,7 @@ object Pipelines {
   private def distributed(typed: DataFrame, sheet: DataFrame, topK: Int, pcs: Int,
                           minPerType: Int): DataFrame = {
     // 2. BMIQ intra-sample normalization (workflow.R:84-108)
-    val normalized = Bmiq.normalizeTyped(typed, Bmiq.Nfit, Bmiq.Niter, minPerType)
+    val normalized = Bmiq.normalizeTyped(typed, minPerType)
       .select(col("probe_id"), col("sample_id"), col("beta_norm").as("beta"))
 
     // 3. ComBat across runs on M-values (workflow.R:112-150), back to betas.
@@ -139,7 +138,7 @@ object Pipelines {
     java.util.stream.IntStream.range(0, nS).parallel().forEach { s =>
       normalized(s) = Bmiq.normalizeSample(bySample(sIds(s)).map(r =>
           Bmiq.In(r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))),
-        Bmiq.Nfit, Bmiq.Niter, minPerType).toArray
+        minPerType).toArray
     }
     // M-values in sample order, then a stable counting sort by probe:
     // probe p's cells are start(p) until start(p + 1), samples ascending
@@ -220,11 +219,7 @@ object Pipelines {
     */
   def curationPipeline(docs: org.apache.spark.sql.DataFrame,
                        benchmark: org.apache.spark.sql.DataFrame,
-                       minJaccard: Double = 0.5, minQuality: Double = 0.3,
-                       minOverlap: Int = 5, chunkSize: Int = 50,
-                       stride: Int = 40, capacity: Long = 512,
-                       funnel: Option[CurationFunnel] = None,
-                       maxDf: Option[Long] = graft.llm.Curation.DefaultMaxDf)
+                       funnel: Option[CurationFunnel] = None)
       : org.apache.spark.sql.DataFrame = {
     import graft.llm.{Curation, Dedup, TextAnalysis}
     funnel.foreach(_.register(docs.sparkSession))
@@ -239,26 +234,26 @@ object Pipelines {
     // (the qualityScore regex over every doc + the cluster rank window)
     // re-evaluated under both branches (r9: one full regex pass saved).
     val kept = Caches.track(observed(
-      Curation.bestOfCluster(exact, minJaccard,
-          TextAnalysis.qualityScore(col("text")), maxDf)
+      Curation.bestOfCluster(exact, minJaccard = 0.5,
+          TextAnalysis.qualityScore(col("text")))
         .select(col("kept_doc").as("doc_id"), col("score"))
         .join(exact, "doc_id")
-        .filter(col("score") >= minQuality), "after_quality_gate")
+        .filter(col("score") >= 0.3), "after_quality_gate")
       .persist())
     // survivors feed two consumers (chunk text + provenance join); the
     // cache is registered in Caches and released by the harness.
     val survivors = Caches.track(
       observed(
-        kept.join(Curation.decontaminate(kept, benchmark, minOverlap)
+        kept.join(Curation.decontaminate(kept, benchmark, minOverlap = 5)
             .filter(!col("contaminated")).select("doc_id"), "doc_id"),
         "after_decontamination")
         .persist())
-    val chunks = Curation.chunkDocuments(survivors, chunkSize, stride)
+    val chunks = Curation.chunkDocuments(survivors, chunkSize = 50, stride = 40)
       .withColumn("chunk_key",
         col("doc_id") * 10000L + col("chunk_id")) // chunk count/doc is bounded
     val packed = Curation.packSequences(
       chunks.select(col("chunk_key").as("doc_id"), col("chunk").as("text")),
-      capacity).toDF()
+      capacity = 512).toDF()
     val meta = chunks.select(col("chunk_key"), col("doc_id").as("src_doc"),
       col("chunk_id"))
     packed.join(meta, packed.col("doc_id") === meta.col("chunk_key"))

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object Qc {
 
   /** P9 — samples whose mean detP < thr. */
-  def passingSamples(detp: DataFrame, thr: Double = 0.05): DataFrame =
+  def passingSamples(detp: DataFrame, thr: Double): DataFrame =
     detp.groupBy("sample_id")
       .agg(avg("pval").as("mean_detp"))
       .filter(col("mean_detp") < thr)
@@ -29,7 +29,7 @@ object Qc {
     * over observed entries only — the long-model reading where an absent
     * (probe, sample) cell means "not measured", not "failed".
     */
-  def passingProbes(detp: DataFrame, nSamples: Long = -1, thr: Double = 0.05): DataFrame = {
+  def passingProbes(detp: DataFrame, nSamples: Long, thr: Double): DataFrame = {
     val agg = detp.groupBy("probe_id")
       .agg(max("pval").as("__max"), count(lit(1)).as("__n"))
       .filter(col("__max") < thr)
@@ -38,22 +38,19 @@ object Qc {
   }
 
   /** Composite QC (reference per-run loop workflow.R:43-75): apply sample
-    * filter then probe filter to the beta table via semi-joins.
+    * filter then probe filter to the beta table.
     *
-    * The passing samples feed both semi-joins, so they are collected once
-    * (one eager collect, one row per sample) and joined as a local relation:
-    * as a lazy subtree each join aggregated the whole detp table again —
-    * adaptive execution does not reuse an exchange over a cached table.
+    * The passing samples feed both sides, so they are collected once (one
+    * eager collect, one row per sample) and applied as an IN-list filter:
+    * as a lazy subtree each semi-join aggregated the whole detp table
+    * again, and as a local relation each semi-join broadcast it through a
+    * Spark job of its own. The probe filter is a semi-join.
     */
-  def qcBetas(beta: DataFrame, detp: DataFrame, nSamples: Long = -1,
-              thr: Double = 0.05): DataFrame = {
-    val passing = passingSamples(detp, thr)
-    val goodSamples = detp.sparkSession.createDataFrame(
-      java.util.Arrays.asList(passing.collect(): _*), passing.schema)
-    val goodProbes = passingProbes(detp.join(goodSamples, Seq("sample_id"), "left_semi"),
-      nSamples, thr)
-    beta.join(goodSamples, Seq("sample_id"), "left_semi")
-      .join(goodProbes, Seq("probe_id"), "left_semi")
+  def qcBetas(beta: DataFrame, detp: DataFrame, nSamples: Long,
+              thr: Double): DataFrame = {
+    val passing = col("sample_id").isin(passingSamples(detp, thr).collect().map(_.get(0)): _*)
+    val goodProbes = passingProbes(detp.filter(passing), nSamples, thr)
+    beta.filter(passing).join(goodProbes, Seq("probe_id"), "left_semi")
   }
 
   /** A5 — null/missingness profile of a long table against its full

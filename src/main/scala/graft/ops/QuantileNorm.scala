@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
 object QuantileNorm {
 
   def normalizeBinned(long: DataFrame, keyCol: String, sampleCol: String,
-                      valCol: String, bins: Int = 100,
+                      valCol: String, bins: Int,
                       denom: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
 

@@ -96,7 +96,7 @@ object RangedScan {
     *
     * @param numPartitions range partitions; 0 takes spark.sql.shuffle.partitions
     */
-  private[graft] def ranged(df: DataFrame, scan: Scan, numPartitions: Int = 0): DataFrame = {
+  private[graft] def ranged(df: DataFrame, scan: Scan, numPartitions: Int): DataFrame = {
     val spark = df.sparkSession
     val parts =
       if (numPartitions > 0) numPartitions

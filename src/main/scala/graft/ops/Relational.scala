@@ -159,9 +159,11 @@ object Relational {
     * being shuffled.
     */
   def bloomPruneJoin(big: DataFrame, dim: DataFrame, bigKey: String,
-                     dimKey: String, fpp: Double = 0.01): DataFrame = {
+                     dimKey: String): DataFrame = {
     val expected = math.max(dim.count(), 64L)
-    val bf = dim.stat.bloomFilter(dimKey, expected, fpp)
+    // 1% false positives: the exact join drops them, so this only sizes
+    // the sketch against the surviving shuffle volume
+    val bf = dim.stat.bloomFilter(dimKey, expected, 0.01)
     val bc = big.sparkSession.sparkContext.broadcast(bf)
     // probe with the SAME hash domain the sketch was built with: string
     // keys insert string bytes, so probing them as longs silently prunes

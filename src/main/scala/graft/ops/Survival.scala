@@ -191,6 +191,11 @@ object Survival {
         col("d1"), col("d2"), col("surv"), col("cif1"), col("cif2"))
   }
 
+  /** Newton steps [[coxPh]] takes at most (it reports `converged` false
+    * after them) and the step size below which it has converged. */
+  private val CoxMaxIter = 25
+  private val CoxTol = 1e-12
+
   /** One-covariate Cox proportional-hazards fit (binary x = 1[grp = grpA],
     * Breslow tie handling — the partial-likelihood Newton iteration every
     * survival package runs, restated on the SAME per-event-time risk table
@@ -207,8 +212,7 @@ object Survival {
     * Returns one row: (grp_a, n_times, beta, hr, se, z, wald_chi2,
     * score_chi2, iters, converged).
     */
-  def coxPh(subjects: DataFrame, grpA: String, maxIter: Int = 25,
-            tol: Double = 1e-12): DataFrame = {
+  def coxPh(subjects: DataFrame, grpA: String): DataFrame = {
     val spark = subjects.sparkSession
     import spark.implicits._
     val rows = riskTable(subjects, grpA)
@@ -242,13 +246,13 @@ object Survival {
     // (complete separation) sends beta to ±infinity — detected by a bound
     // on |beta| well before exp(beta) degrades the p = w/(w+nb) terms.
     var identifiable = i0 > 0.0
-    while (iters < maxIter && !converged && identifiable) {
+    while (iters < CoxMaxIter && !converged && identifiable) {
       val (u, inf) = scoreInfo(b)
       if (inf <= 0.0 || inf.isNaN) identifiable = false
       else {
         val step = u / inf
         b += step
-        if (math.abs(step) < tol) converged = true
+        if (math.abs(step) < CoxTol) converged = true
         else if (math.abs(b) > 35.0) identifiable = false
       }
       iters += 1

@@ -106,7 +106,7 @@ case class RangeJoinBinning(spark: SparkSession) extends Rule[LogicalPlan] {
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint) =>
         rangeShape(cond, left, right) match {
-          case Some((point, lo, hi, strictLo, strictHi)) =>
+          case Some((point, lo, hi, _, strictHi)) =>
             val intervalOnLeft = lo.references.subsetOf(left.outputSet)
             val (intervalSide, pointSide) = if (intervalOnLeft) (left, right) else (right, left)
             // interval side: explode the overlapped bin range. A strict

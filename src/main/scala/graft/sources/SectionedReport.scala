@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Instrument-export parsers (SURVEY.md §2.1 S3/S4).
   *
@@ -24,10 +24,9 @@ object SectionedReport {
     * file read (per-file line order is preserved); the marker/header scan
     * touches only two driver-collected lines, rows stay distributed.
     */
-  def parseFinalReport(spark: SparkSession, path: String,
-                       marker: String = "[Sample Methylation Profile]"): DataFrame = {
+  def parseFinalReport(spark: SparkSession, path: String): DataFrame = {
     val lines = spark.read.textFile(path).rdd.zipWithIndex()
-    val markerIdx = lines.filter(_._1.trim == marker).map(_._2).first()
+    val markerIdx = lines.filter(_._1.trim == "[Sample Methylation Profile]").map(_._2).first()
     val header = lines.filter(_._2 == markerIdx + 1).map(_._1).first().split("\t")
     val keyCol = header.head
     val sampleCols = header.tail
@@ -52,13 +51,13 @@ object SectionedReport {
   }
 
   /** S4: parse every report in `dirGlob`. Run number = first integer in the
-    * file name; header row = first line whose tab-split fields contain all
-    * `requiredKeywords`; each data row's Index is emitted as
+    * file name; header row = first line whose tab-split fields contain
+    * both "Index" and "Sample ID"; each data row's Index is emitted as
     * "{run}_{Index}".
     */
-  def parseSampleReports(spark: SparkSession, dirGlob: String,
-                         requiredKeywords: Set[String] = Set("Index", "Sample ID")): DataFrame = {
+  def parseSampleReports(spark: SparkSession, dirGlob: String): DataFrame = {
     import spark.implicits._
+    val requiredKeywords = Set("Index", "Sample ID")
     val files = spark.sparkContext.wholeTextFiles(dirGlob)
     files.flatMap { case (file, content) =>
       // bounded digit run: a timestamp-style 14-digit filename must not

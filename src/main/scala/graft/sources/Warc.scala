@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** WARC (ISO 28500 / WARC/1.0) web-archive container — the format web-scale
   * training corpora actually arrive in (Common Crawl ships response records

@@ -173,7 +173,7 @@ object Xlsx {
     * any cluster DFS unchanged). Each part independently respects the sheet
     * cap, so total exportable volume scales with partition count.
     */
-  def writePartitioned(df: DataFrame, dir: String, sheet: String = "Sheet1"): Unit = {
+  def writePartitioned(df: DataFrame, dir: String): Unit = {
     val header = df.columns.toSeq
     val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
     val fs0 = new org.apache.hadoop.fs.Path(dir).getFileSystem(hadoopConf)
@@ -190,7 +190,7 @@ object Xlsx {
     df.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        val data = bytes(header, it, sheet)
+        val data = bytes(header, it)
         val p = new org.apache.hadoop.fs.Path(f"$dir/part-$pid%05d.xlsx")
         val conf = new org.apache.hadoop.conf.Configuration(false)
         confProps.foreach { case (k, v) => conf.set(k, v) }

@@ -127,14 +127,17 @@ object QcMonitor {
     * restarts the window, or bounds in-stream state with
     * [[dedupStreamTtl]]'s event-time TTL when a sliding window suffices.
     */
-  def incrementalDedupStream(stream: DataFrame, corpus: DataFrame,
-                             textCol: String = "text"): DataFrame = {
-    val fp = graft.llm.TextAnalysis.fingerprint(col(textCol))
+  def incrementalDedupStream(stream: DataFrame, corpus: DataFrame): DataFrame = {
+    val fp = graft.llm.TextAnalysis.fingerprint(col("text"))
     val corpusFp = corpus.select(fp.as("fp")).distinct()
     stream.withColumn("fp", fp)
       .join(corpusFp, Seq("fp"), "left_anti")
       .dropDuplicates("fp")
   }
+
+  /** How late an event may arrive before the TTL monitors' watermark
+    * passes it. */
+  private val WatermarkDelay = "10 seconds"
 
   /** Watermark-bounded streaming dedup — the production form of
     * [[dedupStream]]: per-key state carries an event-time TTL
@@ -145,12 +148,11 @@ object QcMonitor {
     * sliding dedup window, which is what unbounded streams actually
     * want; unexpiring state would OOM at stream scale).
     */
-  def dedupStreamTtl(events: DataFrame, ttlMs: Long,
-                     watermarkDelay: String = "10 seconds"):
+  def dedupStreamTtl(events: DataFrame, ttlMs: Long):
       org.apache.spark.sql.Dataset[(Long, String)] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import events.sparkSession.implicits._
-    events.withWatermark("ts", watermarkDelay)
+    events.withWatermark("ts", WatermarkDelay)
       .as[(Long, java.sql.Timestamp, String)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[Long, (Long, String)](
@@ -293,7 +295,7 @@ object QcMonitor {
     * @return (seq, key, value, ewma_before, anomalous)
     */
   def ewmaAnomalyStream(events: org.apache.spark.sql.Dataset[(Long, String, Double)],
-                        alpha: Double = 0.2, k: Double = 4.0, warmup: Long = 5)
+                        alpha: Double, k: Double, warmup: Long)
       : org.apache.spark.sql.Dataset[(Long, String, Double, Double, Boolean)] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import events.sparkSession.implicits._
@@ -338,7 +340,7 @@ object QcMonitor {
     * deterministic, and mirrored exactly by the batch oracle.
     */
   def driftMonitor(events: DataFrame, cmin: Long, cmax: Long,
-                   refShares: Seq[Double], windowLen: String = "1 hour"): DataFrame = {
+                   refShares: Seq[Double]): DataFrame = {
     require(refShares.length == 10, "expect 10 reference shares")
     val binned = events.withColumn("bin",
       least(greatest(expr(s"((c - ${cmin}L) * 10) div ${cmax - cmin + 1}L"),
@@ -346,7 +348,7 @@ object QcMonitor {
     val aggCols = (0 until 10).map(i =>
       sum(when(col("bin") === i, 1L).otherwise(0L)).as(s"n$i"))
     val agged = binned
-      .groupBy(window(col("ts"), windowLen).as("w"))
+      .groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(aggCols.head, aggCols.tail: _*)
     val total = (0 until 10).map(i => col(s"n$i")).reduce(_ + _)
     val psi = (0 until 10).map { i =>
@@ -363,13 +365,13 @@ object QcMonitor {
   /** Streaming heavy-hitter watchlist monitor: per event-time window, a
     * count-min sketch of the key stream with watchlist estimates read off
     * the finalized sketch. The window state is the sketch buffer —
-    * depth×width longs REGARDLESS of key cardinality (the property that
+    * 4×4096 longs REGARDLESS of key cardinality (the property that
     * matters when the keyed alternative would hold one state row per user)
     * — and CMS merge is elementwise addition, so partial sketches combine
     * associatively across partitions and triggers. ONE windowed
     * aggregation; the watchlist explode and estimate lookup are row-local
     * projections after it (chained aggregations stay illegal in
-    * streaming; this shape needs none). With the default width the
+    * streaming; this shape needs none). With 4096 columns the
     * watch-key estimates are collision-free at realistic per-window
     * cardinalities — the t13 posture — which is what the batch oracle
     * asserts against exact counts.
@@ -377,8 +379,8 @@ object QcMonitor {
     * Input needs `ts` (timestamp) and `uid` (string key).
     */
   def watchlistMonitor(events: DataFrame, watch: Seq[String],
-                       windowLen: String = "1 hour",
-                       depth: Int = 4, width: Int = 4096): DataFrame = {
+                       windowLen: String = "1 hour"): DataFrame = {
+    val (depth, width) = (4, 4096)
     val cms = udaf(new graft.functions.CountMinAgg(depth, width))
     val est = udf((counts: Seq[Long], key: String) =>
       graft.functions.CountMinSketch(depth, width, counts.toArray).estimate(key))
@@ -415,15 +417,14 @@ object QcMonitor {
     * signatures, same banding, same gate, so the live drive and the
     * oracle-able batch restatement can never drift.
     */
-  def nearDupMonitor(docs: DataFrame, numPerm: Int = 16, bands: Int = 4,
-      minSim: Double = 0.5, ttlMs: Long = 3600000L, maxPerBucket: Int = 64,
-      watermarkDelay: String = "10 seconds"):
+  def nearDupMonitor(docs: DataFrame, numPerm: Int, bands: Int,
+      minSim: Double, ttlMs: Long, maxPerBucket: Int = 64):
       org.apache.spark.sql.Dataset[(Long, Long, Int, Double)] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import docs.sparkSession.implicits._
     graft.llm.Dedup
       .bandedSignatureRows(docs, numPerm, bands, passthrough = Seq("ts"))
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", WatermarkDelay)
       .select("doc_id", "ts", "band", "sig", "sigv")
       .as[(Long, java.sql.Timestamp, Int, Long, Seq[Long])]
       .groupByKey(r => (r._3, r._4))

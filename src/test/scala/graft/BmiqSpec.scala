@@ -174,7 +174,7 @@ class BmiqSpec extends SparkSpec {
     import spark.implicits._
     val rows = df.select("probe_id", "sample_id", "beta", "design_type")
       .as[Bmiq.In].collect()
-    val Some((p1, _)) = Bmiq.fitParams(rows, 10000, 5, 50)
+    val Some((p1, _)) = Bmiq.fitParams(rows, 50)
     def mean(p: (Double, Double, Double)) = p._2 / (p._2 + p._3)
     assert(mean(p1(0)) < 0.3 && mean(p1(2)) > 0.7)
     assert(math.abs(p1.map(_._1).sum - 1.0) < 1e-9)

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.commons.math3.special.Gamma
 import org.apache.spark.sql.functions._
-import graft.functions.Fns
 import graft.ops.Dmp
 
 class DmpSpec extends SparkSpec {

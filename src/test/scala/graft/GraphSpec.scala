@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Graph
-import org.apache.spark.sql.functions._
 
 /** ops/Graph: fixed-point-integer PageRank invariants plus bit-equality
   * against a driver-side reference implementation of the same recurrence.

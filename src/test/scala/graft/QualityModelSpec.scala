@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.llm.QualityModel
 
 class QualityModelSpec extends SparkSpec {

@@ -24,6 +24,32 @@ class RelationalSpec extends SparkSpec {
     assert(r.getLong(2) == 3L, s"missing: $r")
   }
 
+  test("qcBetas applies the collected passing samples without broadcasting a local relation") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    // 3 samples x 4 probes built from spark.range, so no input is a local
+    // relation: s2 fails the sample filter (mean detP 0.5), p3 the probe
+    // filter (0.2 in s0), and a beta row with a null sample_id matches no
+    // sample
+    val cells = spark.range(12).select(
+      concat(lit("p"), (col("id") % 4).cast("string")).as("probe_id"),
+      concat(lit("s"), (col("id") / 4).cast("int").cast("string")).as("sample_id"))
+    val detp = cells.withColumn("pval",
+      when(col("sample_id") === "s2", 0.5)
+        .when(col("probe_id") === "p3" && col("sample_id") === "s0", 0.2)
+        .otherwise(0.01))
+    val beta = cells.withColumn("beta", lit(0.5)).unionByName(spark.range(1).select(
+      lit("p0").as("probe_id"), lit(null).cast("string").as("sample_id"), lit(0.5).as("beta")))
+    val out = graft.ops.Qc.qcBetas(beta, detp, nSamples = -1, thr = 0.1)
+    assert(out.select("sample_id", "probe_id").as[(String, String)].collect().sorted.toSeq ==
+      (for (s <- Seq("s0", "s1"); p <- Seq("p0", "p1", "p2")) yield (s, p)))
+    val plan = out.queryExecution.executedPlan
+    assert(new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+      case b: BroadcastExchangeExec if b.child.isInstanceOf[LocalTableScanExec] => b
+    }.isEmpty, plan.toString)
+  }
+
   test("saltedJoin equals the plain join on a skewed key distribution") {
     // one hot key carrying 90% of rows
     val large = ((1 to 900).map(i => ("hot", i)) ++ (1 to 100).map(i => (s"k$i", i)))

@@ -44,7 +44,7 @@ class StreamingSpec extends SparkSpec {
       .format("memory").queryName("drift_out").outputMode("complete").start()
     try {
       // window 1: all mass in bin 0 (max drift); window 2: spread evenly
-      ms.addData((0 until 20).map(i =>
+      ms.addData((0 until 20).map(_ =>
         (Timestamp.valueOf("2024-01-01 10:05:00"), 3L)): _*)
       ms.addData((0 until 10).map(i =>
         (Timestamp.valueOf("2024-01-01 11:05:00"), i * 10L + 5L)): _*)

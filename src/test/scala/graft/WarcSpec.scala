@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import graft.sources.Warc

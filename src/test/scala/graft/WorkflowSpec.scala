@@ -25,7 +25,7 @@ class WorkflowSpec extends SparkSpec {
   }
 
   private def both(beta: DataFrame, detp: DataFrame, sheet: DataFrame, manifest: DataFrame) = (
-    Pipelines.fullWorkflow(spark, beta, detp, sheet, manifest,
+    Pipelines.fullWorkflow(beta, detp, sheet, manifest,
       qcThr = 0.09, topK = 50, pcs = 3, bmiqMinPerType = 10),
     Pipelines.fullWorkflowDistributed(beta, detp, sheet, manifest,
       qcThr = 0.09, topK = 50, pcs = 3, bmiqMinPerType = 10))

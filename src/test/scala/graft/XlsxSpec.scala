@@ -7,7 +7,6 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.sources.Xlsx
 
