@@ -295,8 +295,7 @@ object QueriesLlm {
     // Hash-function-specific (xxhash64) → rows-only; DedupSpec covers
     // recall against planted duplicates.
     Q("d03_minhash_lsh", (s, d) =>
-      Dedup.minhashNearDups(withPlantedDups(docs(s, d)), numPerm = 16,
-        bands = 4, minJaccard = 0.5)
+      Dedup.minhashNearDups(withPlantedDups(docs(s, d)))
         .select(col("doc_a"), col("doc_b"), col("inter"),
           round(col("jaccard"), 6).as("jaccard"))
         .orderBy("doc_a", "doc_b"),
@@ -351,10 +350,10 @@ object QueriesLlm {
     // quantizer is Spark-ML-specific); SimilaritySpec checks recall vs the
     // brute-force baseline.
     Q("n03_ann_ivf", (s, d) =>
-      Similarity.ivfTopK(emb(s, d), queryId = 0L, k = 10, nlist = 16, nprobe = 4),
+      Similarity.ivfTopK(emb(s, d), queryId = 0L, k = 10, nlist = 16),
       None),
 
-    // Product-quantization ANN: 4 subspace codebooks × 16 centroids → 4-byte
+    // Product-quantization ANN: 8 subspace codebooks × 16 centroids → 8-byte
     // codes, ADC table-lookup scoring (rows-only — k-means codebooks are
     // Spark-ML-specific; SimilaritySpec checks recall vs brute force).
     Q("n06_ann_pq", (s, d) =>
@@ -373,8 +372,7 @@ object QueriesLlm {
     // SimilaritySpec additionally pins first-pick-equals-top-cosine and
     // planted-redundancy demotion.
     Q("n07_mmr_rerank", (s, d) =>
-      Similarity.mmrRerank(emb(s, d), queryId = 0L, k = 5,
-        candidates = 20, lambda = 0.7),
+      Similarity.mmrRerank(emb(s, d), queryId = 0L, k = 5, candidates = 20),
       Some(
         """WITH RECURSIVE
           |mq AS (SELECT unnest(embedding) AS qv, generate_subscripts(embedding, 1) AS i
@@ -537,8 +535,7 @@ object QueriesLlm {
     // state + a shiftleft rank bitmask — hash-exact, no float-order
     // hazard.
     Q("n09_ann_eval", (s, d) =>
-      Similarity.annEvalMetrics(emb(s, d), nQueries = 20, k = 10, bits = 4,
-        nlist = 8, nprobe = 2, m = 4, codebookSize = 8),
+      Similarity.annEvalMetrics(emb(s, d), nQueries = 20, k = 10),
       Some {
         val dcg = (1 to 10).map(r =>
           s"(CASE WHEN (mask // ${1L << (r - 1)}) % 2 = 1 " +
@@ -656,7 +653,7 @@ object QueriesLlm {
       }),
 
     Q("n02_ann_lsh_bucketed", (s, d) =>
-      Similarity.lshTopK(emb(s, d), queryId = 0L, k = 5, bits = 4),
+      Similarity.lshTopK(emb(s, d), queryId = 0L, k = 5),
       Some(
         """WITH b AS (SELECT vec_id, embedding,
           |                  (CASE WHEN embedding[1] >= 0 THEN 8 ELSE 0 END) +
@@ -1538,7 +1535,7 @@ object QueriesLlm {
     // selection count + the md5 of the position-ordered fingerprint
     // stream, i.e. the full (pos, fp) selection replayed cell-exactly.
     Q("d15_winnowing", (s, d) => {
-      val fp = Dedup.winnowFingerprints(winnowCorpus(s, d), k = 12, w = 4)
+      val fp = Dedup.winnowFingerprints(winnowCorpus(s, d), k = 12)
       fp.groupBy("doc_id").agg(
           count(lit(1)).as("n_fp"),
           md5(array_join(transform(
@@ -1565,7 +1562,7 @@ object QueriesLlm {
       // persisted: the distinct selection feeds the df histogram AND both
       // sides of the pair join — four recomputes of the winnow otherwise
       val sel = graft.ops.Caches.track(
-        Dedup.winnowFingerprints(winnowCorpus(s, d), k = 12, w = 4)
+        Dedup.winnowFingerprints(winnowCorpus(s, d), k = 12)
           .select("doc_id", "fp").distinct().persist())
       val rare = sel.groupBy("fp").agg(count(lit(1)).as("df"))
         .filter(col("df") <= 64).select("fp")

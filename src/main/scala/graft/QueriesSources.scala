@@ -442,7 +442,7 @@ object QueriesSources {
       val ev = Tables.events(s, d).select(col("ts"),
         format_string("U%05d", col("user_id")).as("uid"))
       val watch = (1 to 5).map(i => f"U$i%05d")
-      QcMonitor.watchlistMonitor(ev, watch, "1 hour")
+      QcMonitor.watchlistMonitor(ev, watch)
         .orderBy("hour", "watch_key")
     }, Some(
       """WITH wm_e AS (
@@ -537,8 +537,7 @@ object QueriesSources {
       val docsTs = Tables.table(s, d, "documents")
         .select(col("doc_id"), col("text"),
           timestamp_millis(col("doc_id") * 60000L).as("ts"))
-      graft.llm.Dedup.estimatedNearDupPairs(docsTs, numPerm = 16, bands = 4,
-          minSim = 0.5)
+      graft.llm.Dedup.estimatedNearDupPairs(docsTs, numPerm = 16, minSim = 0.5)
         .select(col("doc_a"), col("doc_b"), col("band"),
           round(col("est_sim"), 6).as("est_sim"))
         .orderBy("doc_a", "doc_b", "band")

@@ -1302,7 +1302,7 @@ object QueriesStats {
     // {run_0, run_1} vs {run_2}. minCoverage 0.30: the reference's strict
     // no-NaN gate (1.0) assumes a near-complete wide matrix (it dropped
     // 0.5% of probes); the synthetic long table is ~26% dense with max 41%
-    // coverage, so 1.0 would pass nothing — the e02 qcThr precedent.
+    // coverage, so 1.0 would pass nothing — the e02 QC-threshold precedent.
     // Rows-only (iterative EB kernel); CombatSpec asserts the beta-flavor
     // invariants (batch-mean spread shrinks, grand mean preserved,
     // complete-cases gate at 1.0).
@@ -2335,16 +2335,12 @@ object QueriesStats {
 
     // E2 — the full reference lifecycle (QC → BMIQ → ComBat → top-k → PCA)
     // chained as one DAG; output is the workflow's final plot-ready PCA
-    // coordinate table. Rows-only.
-    // qcThr 0.09: the synthetic detP is uniform-ish on [0, 0.1], so the
-    // reference's 0.05 all-observed probe gate would pass ~nothing; 0.09
-    // keeps a realistic surviving fraction. bmiqMinPerType lowered to
-    // match the post-QC per-sample probe counts.
+    // coordinate table. Rows-only. Its thresholds (QC 0.09, BMIQ ≥ 10
+    // probes per type, top 50 probes, 3 PCs) are Pipelines constants.
     Q("e02_full_workflow", (s, d) =>
       graft.ops.Pipelines.fullWorkflow(
         Tables.betaLong(s, d), Tables.detpLong(s, d),
-        Tables.sampleSheet(s, d), Tables.probeManifest(s, d),
-        qcThr = 0.09, topK = 50, pcs = 3, bmiqMinPerType = 10),
+        Tables.sampleSheet(s, d), Tables.probeManifest(s, d)),
       None),
 
     // E4 — the LLM-curation lifecycle as one DAG: exact dedup → near-dup

@@ -13,9 +13,18 @@ final case class Q(
     oracle: Option[String])
 
 object Q {
-  /** Scratch dir for queries that exercise file sinks/sources: the build
-    * dir of the checkout the process runs from, so engines started from
-    * two checkouts never write into each other's folders.
+  /** Scratch dir for queries that exercise file sinks/sources:
+    * `target/qtmp` of the checkout whose build holds these classes (the
+    * nearest directory above them with a `build.sbt`), whatever directory
+    * the process starts in, so engines built in two checkouts never write
+    * into each other's folders. Classes with no such directory above them
+    * use a `qtmp` beside their class directory or jar.
     */
-  val scratch = s"${sys.props("user.dir")}/target/qtmp"
+  val scratch: String = {
+    val classes = java.nio.file.Paths.get(
+      classOf[Q].getProtectionDomain.getCodeSource.getLocation.toURI)
+    Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
+      .find(d => java.nio.file.Files.isRegularFile(d.resolve("build.sbt")))
+      .fold(s"${classes.getParent}/qtmp")(d => s"$d/target/qtmp")
+  }
 }

@@ -179,8 +179,7 @@ object ScaleSmoke {
     if (drive("cclsh")) {
       val t0 = System.nanoTime()
       val docs8 = Tables.table(spark, out, "documents")
-      val edges = graft.llm.Dedup.minhashNearDups(docs8, numPerm = 16,
-        bands = 4, minJaccard = 0.5)
+      val edges = graft.llm.Dedup.minhashNearDups(docs8)
       val n = graft.ops.Graph.connectedComponents(edges, docs8.select("doc_id"))
         .groupBy("cluster").count().filter(col("count") > 1).count()
       println(f"[scale] cc-over-lsh ${reps}x ${(System.nanoTime() - t0) / 1e9}%8.2f s  multi-doc clusters=$n")

@@ -17,6 +17,21 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** Words per shingle, in the batch shingle table and the streaming
+    * signature alike. */
+  private val ShingleWords = 3
+
+  /** MinHash near-dup settings every near-dup caller shares: 16
+    * permutations in 4 bands of 4, pairs kept at (exact or estimated)
+    * similarity ≥ 0.5. */
+  private[graft] val NearDupPerm = 16
+  private[graft] val NearDupBands = 4
+  private[graft] val NearDupMinSim = 0.5
+
+  /** Winnowing window: 4 consecutive k-gram hashes, one fingerprint per
+    * window — expected density 2/5 of the k-gram positions. */
+  private val WinnowWindow = 4
+
   /** Word tokens with positions from normalized text. */
   def words(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
@@ -30,11 +45,11 @@ object Dedup {
     * it), and the per-doc dedup happens before the explode, so the explode
     * fan-out is the distinct-shingle count, not the token count.
     */
-  def shingles(docs: DataFrame, n: Int = 3): DataFrame = {
+  def shingles(docs: DataFrame): DataFrame = {
     docs
       .withColumn("__norm", TextAnalysis.normalized(col("text")))
       .select(col("doc_id"),
-        explode(expr(s"graft_shingles(__norm, $n)")).as("shingle"))
+        explode(expr(s"graft_shingles(__norm, $ShingleWords)")).as("shingle"))
   }
 
   /** Exact n-gram Jaccard similarity for documents sharing >=1 shingle
@@ -104,17 +119,15 @@ object Dedup {
     sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Banded bucket table of a signature table: one row per (doc, band)
-    * with the band's hash — the STORED near-dup index shape at scale (a
-    * corpus keeps this table materialized, keyed/bucketed by (band, sig),
-    * and appends each admitted batch's rows).
+  /** Banded bucket table of a [[NearDupPerm]]-permutation signature
+    * table: one row per (doc, band) with the band's hash — the STORED
+    * near-dup index shape at scale (a corpus keeps this table
+    * materialized, keyed/bucketed by (band, sig), and appends each
+    * admitted batch's rows).
     */
-  def bandTable(sig: DataFrame, numPerm: Int, bands: Int): DataFrame = {
-    require(bands >= 1 && numPerm % bands == 0,
-      s"bands ($bands) must divide numPerm ($numPerm) — a remainder would " +
-        "silently drop trailing permutations from every band")
-    val rowsPerBand = numPerm / bands
-    val bandCols = (0 until bands).map { b =>
+  def bandTable(sig: DataFrame): DataFrame = {
+    val rowsPerBand = NearDupPerm / NearDupBands
+    val bandCols = (0 until NearDupBands).map { b =>
       struct(lit(b).as("band"),
         hash((b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"h$i")): _*).as("sig"))
     }
@@ -140,33 +153,31 @@ object Dedup {
     // DedupSpec pins value parity with the batch minhashSignatures
     // aggregate, permutation by permutation.
     call_function("graft_minhash_sigs",
-      call_function("graft_shingles", TextAnalysis.normalized(text), lit(3)),
+      call_function("graft_shingles", TextAnalysis.normalized(text), lit(ShingleWords)),
       lit(numPerm))
 
   /** Per-(band, bucket) rows with the full signature carried along:
-    * `(doc_id, <passthrough cols>, band, sig, sigv)` — the row-local
+    * `(doc_id, ts, band, sig, sigv)` — the row-local
     * analog of [[bandTable]] (same per-band murmur3 over the same
     * signature slice), shared by the streaming near-dup monitor and its
     * batch flavor so the two can never drift.
     */
-  def bandedSignatureRows(docs: DataFrame, numPerm: Int, bands: Int,
-                          passthrough: Seq[String]): DataFrame = {
-    require(bands >= 1 && numPerm % bands == 0,
-      s"bands ($bands) must divide numPerm ($numPerm)")
-    val rowsPerBand = numPerm / bands
+  def bandedSignatureRows(docs: DataFrame, numPerm: Int): DataFrame = {
+    require(numPerm % NearDupBands == 0,
+      s"bands ($NearDupBands) must divide numPerm ($numPerm)")
+    val rowsPerBand = numPerm / NearDupBands
     val withSig = docs
       .withColumn("sigv", minhashSignatureArray(col("text"), numPerm))
       .filter(col("sigv").isNotNull)
-    val bandCols = (0 until bands).map { b =>
+    val bandCols = (0 until NearDupBands).map { b =>
       struct(lit(b).as("band"),
         hash((b * rowsPerBand until (b + 1) * rowsPerBand)
           .map(i => element_at(col("sigv"), i + 1)): _*).as("sig"))
     }
-    withSig.select((col("doc_id") +: passthrough.map(col) :+ col("sigv") :+
-        explode(array(bandCols: _*)).as("bk")): _*)
-      .select((col("doc_id") +: passthrough.map(col) :+
-        col("bk.band").as("band") :+ col("bk.sig").as("sig") :+
-        col("sigv")): _*)
+    withSig.select(col("doc_id"), col("ts"), col("sigv"),
+        explode(array(bandCols: _*)).as("bk"))
+      .select(col("doc_id"), col("ts"), col("bk.band").as("band"),
+        col("bk.sig").as("sig"), col("sigv"))
   }
 
   /** Batch flavor of the streaming near-dup monitor: per-(band, bucket)
@@ -177,13 +188,12 @@ object Dedup {
     * would emit. One shuffle on (band, sig); fan-out bounded by bucket
     * collisions.
     */
-  def estimatedNearDupPairs(docs: DataFrame, numPerm: Int,
-      bands: Int, minSim: Double,
+  def estimatedNearDupPairs(docs: DataFrame, numPerm: Int, minSim: Double,
       ttlMs: Long = Long.MaxValue): DataFrame = {
     // persist: the self-join consumes the signature subtree twice, and the
     // 16-permutation row-local hashing is the expensive part of the plan
     val banded = graft.ops.Caches.track(
-      bandedSignatureRows(docs, numPerm, bands, Seq("ts")).persist())
+      bandedSignatureRows(docs, numPerm).persist())
     val matches = aggregate(
       zip_with(col("x.sigv"), col("y.sigv"),
         (a, b) => when(a === b, 1).otherwise(0)),
@@ -198,13 +208,13 @@ object Dedup {
       .filter(col("est_sim") >= minSim)
   }
 
-  /** LSH banding: split the signature into `bands`, hash each band, and
+  /** LSH banding: split the signature into bands, hash each band, and
     * self-join on (band, bandHash) — candidate pairs are docs agreeing on
     * at least one full band. This is the 100 TB path: the join fan-out is
     * bounded by bucket collisions, never all-pairs.
     */
-  def minhashCandidates(sig: DataFrame, numPerm: Int, bands: Int): DataFrame = {
-    val banded = bandTable(sig, numPerm, bands)
+  def minhashCandidates(sig: DataFrame): DataFrame = {
+    val banded = bandTable(sig)
     banded.as("x").join(banded.as("y"), Seq("band", "sig"))
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -222,16 +232,15 @@ object Dedup {
     * (they key one shared shingle table for the verify step).
     */
   def incrementalNearDupAdmit(batch: DataFrame, corpus: DataFrame): DataFrame = {
-    val (numPerm, bands) = (16, 4)
     val shB = graft.ops.Caches.track(shingles(batch).persist())
     val shC = graft.ops.Caches.track(shingles(corpus).persist())
-    val cand = bandTable(minhashSignatures(shB, numPerm), numPerm, bands).as("x")
-      .join(bandTable(minhashSignatures(shC, numPerm), numPerm, bands).as("y"),
+    val cand = bandTable(minhashSignatures(shB, NearDupPerm)).as("x")
+      .join(bandTable(minhashSignatures(shC, NearDupPerm)).as("y"),
         Seq("band", "sig"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
     val near = jaccardForPairs(shB.unionByName(shC), cand)
-      .filter(col("jaccard") >= 0.5)
+      .filter(col("jaccard") >= NearDupMinSim)
     batch.join(near.select(col("doc_a").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
   }
@@ -260,11 +269,10 @@ object Dedup {
   /** Full MinHash+LSH near-dup pipeline: candidates from banding, exact
     * Jaccard computed ONLY for candidate pairs.
     */
-  def minhashNearDups(docs: DataFrame, numPerm: Int, bands: Int,
-                      minJaccard: Double): DataFrame = {
+  def minhashNearDups(docs: DataFrame): DataFrame = {
     val sh = graft.ops.Caches.track(shingles(docs).persist())
-    val cand = minhashCandidates(minhashSignatures(sh, numPerm), numPerm, bands)
-    jaccardForPairs(sh, cand).filter(col("jaccard") >= minJaccard)
+    val cand = minhashCandidates(minhashSignatures(sh, NearDupPerm))
+    jaccardForPairs(sh, cand).filter(col("jaccard") >= NearDupMinSim)
   }
 
   /** 64-bit SimHash per document: sign of the per-bit weighted sum of word
@@ -440,11 +448,11 @@ object Dedup {
     * window (31.7 s at sf0.1 vs sub-second; HOF lambdas never codegen).
     * Returns (doc_id, pos, fp) — one row per selected occurrence.
     */
-  def winnowFingerprints(docs: DataFrame, k: Int, w: Int): DataFrame = {
+  def winnowFingerprints(docs: DataFrame, k: Int): DataFrame = {
     docs
       .withColumn("__norm", TextAnalysis.normalized(col("text")))
       .select(col("doc_id"),
-        explode(expr(s"graft_winnow(__norm, $k, $w)")).as("s"))
+        explode(expr(s"graft_winnow(__norm, $k, $WinnowWindow)")).as("s"))
       .select(col("doc_id"), col("s.pos").as("pos"), col("s.fp").as("fp"))
   }
 

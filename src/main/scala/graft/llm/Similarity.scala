@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * Two tiers: brute-force cosine top-k (the correctness baseline — one
   * scan, no shuffle, TakeOrderedAndProject) and a sign-bit LSH-bucketed
-  * variant (the scale path: the scan prunes to one bucket ≈ 1/2^bits of
+  * variant (the scale path: the scan prunes to one bucket ≈ 1/2^LshBits of
   * the data before scoring; at 100 TB the bucket id becomes a partition
   * column so pruning happens at the file level).
   */
@@ -58,29 +58,36 @@ object Similarity {
       .limit(k)
   }
 
-  /** Sign-bit bucket of the first `bits` dimensions (a 2^bits-cell LSH). */
-  def signBucket(vecCol: String, bits: Int) =
-    (1 to bits).map { i =>
-      when(element_at(col(vecCol), i) >= 0, lit(1 << (bits - i))).otherwise(lit(0))
+  /** Sign bits of the LSH bucket: 2^4 = 16 cells. */
+  private val LshBits = 4
+
+  /** Sign-bit bucket of `v`'s first [[LshBits]] dimensions. */
+  private def signBucket =
+    (1 to LshBits).map { i =>
+      when(element_at(col("v"), i) >= 0, lit(1 << (LshBits - i))).otherwise(lit(0))
     }.reduce(_ + _)
 
   /** LSH-bucketed ANN: score only vectors in the query's sign bucket. */
-  def lshTopK(emb: DataFrame, queryId: Long, k: Int, bits: Int): DataFrame = {
-    val e = withVec(emb).withColumn("bucket", signBucket("v", bits))
+  def lshTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
+    val e = withVec(emb).withColumn("bucket", signBucket)
     val q = queryVec(e, queryId)
-    require(bits <= q.length,
-      s"signBucket needs $bits leading dims, embedding has ${q.length}")
-    val qBucket = (1 to bits).map(i => if (q(i - 1) >= 0) 1 << (bits - i) else 0).sum
+    require(LshBits <= q.length,
+      s"signBucket needs $LshBits leading dims, embedding has ${q.length}")
+    val qBucket = (1 to LshBits).map(i => if (q(i - 1) >= 0) 1 << (LshBits - i) else 0).sum
     scored(e.filter(col("vec_id") =!= queryId && col("bucket") === qBucket), q)
       .select("vec_id", "bucket", "cos")
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(k)
   }
 
+  /** MMR's relevance weight λ; redundancy weighs 1 − λ. */
+  private val MmrLambda = 0.7
+
   /** Maximal-marginal-relevance diversity re-rank (Carbonell & Goldstein
     * 1998): fetch the top-`candidates` cosine neighbors with the
     * distributed n01 scan, then run the greedy selection
-    * `argmax_i λ·cos(q,i) − (1−λ)·max_{j∈S} cos(i,j)` driver-side on that
+    * `argmax_i λ·cos(q,i) − (1−λ)·max_{j∈S} cos(i,j)` (λ = [[MmrLambda]])
+    * driver-side on that
     * BOUNDED candidate set (the PQ-codebook policy: the corpus-sized scan
     * is distributed, the k·candidates² greedy loop is a driver constant).
     * Deterministic: candidate order is (cos desc, vec_id asc) and ties in
@@ -88,8 +95,7 @@ object Similarity {
     *
     * @return (rank, vec_id, relevance, redundancy, mmr_score), rank 1..k
     */
-  def mmrRerank(emb: DataFrame, queryId: Long, k: Int,
-                candidates: Int, lambda: Double): DataFrame = {
+  def mmrRerank(emb: DataFrame, queryId: Long, k: Int, candidates: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val e = withVec(emb)
@@ -121,7 +127,7 @@ object Similarity {
         if (!selected.contains(i)) {
           val red = if (selected.isEmpty) 0.0
             else selected.map(j => sim(i, j)).max
-          val sc = lambda * rel(i) - (1.0 - lambda) * red
+          val sc = MmrLambda * rel(i) - (1.0 - MmrLambda) * red
           if (sc > bestScore ||
               (sc == bestScore && best >= 0 && ids(i) < ids(best))) {
             best = i; bestScore = sc; bestRed = red
@@ -284,18 +290,20 @@ object Similarity {
           typedLit(centers.map(_.toSeq).toSeq)),
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(v)))
 
+  /** Cells an IVF query probes. */
+  private val IvfProbes = 4
+
   /** IVF-style ANN: a k-means coarse quantizer partitions the corpus into
-    * nlist cells; a query scores only the nprobe cells whose centroids are
+    * nlist cells; a query scores only the [[IvfProbes]] cells whose centroids are
     * closest to it. The quantizer trains via the [[trainCenters]]
     * dispatch (driver-local deterministic Lloyd's below the bounded-
     * sample threshold, seeded Spark ML KMeans over every row above it)
     * and cell assignment is a pure codegen'd map pass either way. The
     * 100 TB shape: cell id becomes a partition column at ingest, so probing
-    * is file-level partition pruning and each query touches nprobe/nlist
+    * is file-level partition pruning and each query touches IvfProbes/nlist
     * of the data.
     */
-  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nlist: Int,
-              nprobe: Int): DataFrame = {
+  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nlist: Int): DataFrame = {
     val e = graft.ops.Caches.track(withVec(emb).persist())
     val centers = trainCenters(e, "v", nlist, 200L * nlist)
     val assigned = e.withColumn("cell", nearestC(centers, col("v")) - 1)
@@ -305,7 +313,7 @@ object Similarity {
         val d = c.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum
         (i, d)
       }
-      .sortBy(_._2).take(nprobe).map(_._1).toSeq
+      .sortBy(_._2).take(IvfProbes).map(_._1).toSeq
     scored(assigned.filter(col("vec_id") =!= queryId &&
         col("cell").isin(probeCells: _*)), q)
       .select("vec_id", "cell", "cos")
@@ -314,12 +322,13 @@ object Similarity {
   }
 
   /** Product-quantization ANN (Jégou et al., TPAMI'11): vectors are
-    * L2-normalized, split into `m` subspaces, and each subspace is vector-
-    * quantized by its own small k-means codebook — a D-float vector
-    * compresses to m small ints (m bytes at nbits=8). A query scores codes
-    * by ADC (asymmetric distance computation): per subspace, the exact
-    * distance from the query sub-vector to each centroid is precomputed
-    * driver-side (m × codebookSize doubles), and a row's approximate
+    * L2-normalized, split into `m` = 8 subspaces, and each subspace is
+    * vector-quantized by its own small k-means codebook of `codebookSize`
+    * = 16 centroids — a D-float vector compresses to m small ints (m bytes
+    * at nbits=8). A query scores codes by ADC (asymmetric distance
+    * computation): per subspace, the exact distance from the query
+    * sub-vector to each centroid is precomputed driver-side
+    * (m × codebookSize doubles), and a row's approximate
     * squared L2 distance is the sum of m table lookups. On unit vectors
     * ‖q−v‖² = 2−2·cos, so ascending ADC distance approximates descending
     * cosine — comparable against [[cosineTopK]].
@@ -335,8 +344,8 @@ object Similarity {
     * pruning) composes with PQ (small codes) in a production IVFADC
     * index; both halves are here.
     */
-  def pqTopK(emb: DataFrame, queryId: Long, k: Int, m: Int = 8,
-             codebookSize: Int = 16, rerank: Int = 5): DataFrame = {
+  def pqTopK(emb: DataFrame, queryId: Long, k: Int, rerank: Int = 5): DataFrame = {
+    val (m, codebookSize) = (8, 16)
     val unit = graft.ops.Caches.track(
       withVec(emb).withColumn("nrm", sqrt(dotC(col("v"), col("v"))))
         .withColumn("vn", transform(col("v"), x => x / col("nrm")))
@@ -463,17 +472,18 @@ object Similarity {
     *  - `lsh` — the sign-bit bucket rule of [[lshTopK]] (candidates =
     *    same bucket, ranked by cosine);
     *  - `ivf` — the cell-probe rule of [[ivfTopK]] (candidates = the
-    *    `nprobe` cells nearest the query, ranked by cosine), with the
-    *    coarse quantizer HELD FIXED at `nlist` deterministic seed centers
-    *    (the vectors at ids `[nQueries, nQueries+nlist)`) — the standard
+    *    `nprobe` = 2 cells nearest the query, ranked by cosine), with the
+    *    coarse quantizer HELD FIXED at `nlist` = 8 deterministic seed
+    *    centers (the vectors at ids `[nQueries, nQueries+nlist)`) — the standard
     *    eval simplification: grade the cell-probe structure with the
     *    codebook pinned, so the whole panel stays SQL-expressible and
     *    fully oracle-checkable (Lloyd-trained codebooks are spec-graded
     *    separately in SimilaritySpec);
     *  - `pq` — the ADC rule of [[pqTopK]] (rank ALL codes by asymmetric
-    *    distance, take top-k), with per-subspace codebooks likewise
-    *    pinned at the seed vectors' sub-slices, on L2-normalized vectors
-    *    so ascending ADC ≈ descending cosine.
+    *    distance, take top-k), with `m` = 4 per-subspace codebooks of
+    *    `codebookSize` = 8 centroids likewise pinned at the seed vectors'
+    *    sub-slices, on L2-normalized vectors so ascending ADC ≈
+    *    descending cosine.
     *
     * Scale shape: ground truth on a BOUNDED query sample (the standard
     * protocol — nobody brute-forces every query), computed as one
@@ -491,16 +501,15 @@ object Similarity {
     * ranking metrics). Every argmin/rank runs on round(·, 6) values with
     * an id tie-break, the repo-wide cross-engine determinism rule.
     */
-  def annEvalMetrics(emb: DataFrame, nQueries: Int, k: Int,
-                     bits: Int = 4, nlist: Int = 8, nprobe: Int = 2,
-                     m: Int = 4, codebookSize: Int = 8): DataFrame = {
+  def annEvalMetrics(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
+    val (nlist, nprobe, m, codebookSize) = (8, 2, 4, 8)
     require(k >= 1 && k <= 63,
       s"k=$k outside [1, 63]: the rank bitmask lives in one BIGINT")
     import org.apache.spark.sql.expressions.Window
     val spark = emb.sparkSession
     // norms once per VECTOR (not per pair — nQueries× less norm work)
     val e = graft.ops.Caches.track(
-      withVec(emb).withColumn("bucket", signBucket("v", bits))
+      withVec(emb).withColumn("bucket", signBucket)
         .withColumn("nrm", dotC(col("v"), col("v")))
         .select("vec_id", "v", "bucket", "nrm")
         .persist())

@@ -88,7 +88,7 @@ object TextAnalysis {
     val words = size(split(normalized(col("text")), " "))
     val total = docs.select(col("doc_id"),
       greatest(words - 2, lit(0)).cast("bigint").as("n_grams"))
-    val distinct = Dedup.shingles(docs, 3)
+    val distinct = Dedup.shingles(docs)
       .groupBy("doc_id").agg(count(lit(1)).as("n_distinct"))
     total.join(distinct, Seq("doc_id"), "left")
       .withColumn("n_distinct", coalesce(col("n_distinct"), lit(0L)))

@@ -31,6 +31,19 @@ object Pipelines {
     */
   private val LocalMaxRows = 1000000L
 
+  /** Mean detection p-value a sample and every observation of a probe
+    * must stay under. The reference's 0.05 (workflow.R:44-53) passes
+    * almost nothing on the synthetic detP, which is uniform-ish on
+    * [0, 0.1]; 0.09 keeps a realistic surviving fraction. */
+  private val QcThr = 0.09
+  /** Probes per design type a sample needs for its BMIQ fit, lowered
+    * from the reference's 50 (DoBMIQ.R:135) to the post-QC per-sample
+    * probe counts. */
+  private val BmiqMinPerType = 10
+  /** The most variable probes PCA runs on, and the components kept. */
+  private val TopK = 50
+  private val Pcs = 3
+
   /** QC'd → BMIQ-normalized → ComBat-adjusted → top-k → PCA coordinates.
     *
     * QC runs in Spark. Its output is joined once with the manifest's
@@ -41,28 +54,23 @@ object Pipelines {
     * transforms over the persisted table, which is released before
     * returning. Both paths call the same per-sample BMIQ, per-probe
     * ComBat, M-value and PCA functions, so they differ only in summation
-    * order. Either way the driver holds the samples × topK matrix PCA
+    * order. Either way the driver holds the samples × [[TopK]] matrix PCA
     * runs on.
     *
     * @return PCA coordinates per surviving sample (the workflow's final
     *         plot-ready table, workflow.R:229-237).
     */
   def fullWorkflow(beta: DataFrame, detp: DataFrame, sheet: DataFrame,
-                   manifest: DataFrame, qcThr: Double, topK: Int, pcs: Int,
-                   bmiqMinPerType: Int): DataFrame =
-    workflow(beta, detp, sheet, manifest, qcThr, topK, pcs, bmiqMinPerType,
-      pinDistributed = false)
+                   manifest: DataFrame): DataFrame =
+    workflow(beta, detp, sheet, manifest, pinDistributed = false)
 
   /** [[fullWorkflow]]'s distributed chain at any size — for the specs. */
   private[graft] def fullWorkflowDistributed(beta: DataFrame, detp: DataFrame,
-      sheet: DataFrame, manifest: DataFrame, qcThr: Double, topK: Int, pcs: Int,
-      bmiqMinPerType: Int): DataFrame =
-    workflow(beta, detp, sheet, manifest, qcThr, topK, pcs, bmiqMinPerType,
-      pinDistributed = true)
+      sheet: DataFrame, manifest: DataFrame): DataFrame =
+    workflow(beta, detp, sheet, manifest, pinDistributed = true)
 
   private def workflow(beta: DataFrame, detp: DataFrame, sheet: DataFrame,
-                       manifest: DataFrame, qcThr: Double, topK: Int, pcs: Int,
-                       minPerType: Int, pinDistributed: Boolean): DataFrame = {
+                       manifest: DataFrame, pinDistributed: Boolean): DataFrame = {
     // The sheet (one row per sample) as a local relation: both chains
     // read ComBat's batch and group axes and each sample's run and group
     // from it without another job.
@@ -71,7 +79,7 @@ object Pipelines {
       java.util.Arrays.asList(dims.collect(): _*), dims.schema)
     // 1. per-run QC (workflow.R:43-75): sample mean-detP filter + probe
     // filter (observed-entry semantics — long model)
-    val typed = Qc.qcBetas(beta, detp, nSamples = -1, thr = qcThr)
+    val typed = Qc.qcBetas(beta, detp, nSamples = -1, thr = QcThr)
       .join(broadcast(manifest.select("probe_id", "design_type")), "probe_id")
       .select("probe_id", "sample_id", "beta", "design_type")
       .persist()
@@ -79,16 +87,15 @@ object Pipelines {
       // An RDD count fills the cache and counts it; Dataset.count would add
       // an aggregate exchange, a job of its own.
       if (!pinDistributed && typed.rdd.count() <= LocalMaxRows)
-        local(typed, localDims, topK, pcs, minPerType)
-      else distributed(typed, localDims, topK, pcs, minPerType)
+        local(typed, localDims)
+      else distributed(typed, localDims)
     } finally typed.unpersist(false)
   }
 
   /** The post-QC chain as distributed transforms. */
-  private def distributed(typed: DataFrame, sheet: DataFrame, topK: Int, pcs: Int,
-                          minPerType: Int): DataFrame = {
+  private def distributed(typed: DataFrame, sheet: DataFrame): DataFrame = {
     // 2. BMIQ intra-sample normalization (workflow.R:84-108)
-    val normalized = Bmiq.normalizeTyped(typed, minPerType)
+    val normalized = Bmiq.normalizeTyped(typed, BmiqMinPerType)
       .select(col("probe_id"), col("sample_id"), col("beta_norm").as("beta"))
 
     // 3. ComBat across runs on M-values (workflow.R:112-150), back to betas.
@@ -110,7 +117,7 @@ object Pipelines {
     // 4-5. top-k variable probes + PCA (workflow.R:155-237). pcaCoords
     // materializes its bounded result eagerly, so the chain cache can be
     // dropped before returning — nothing leaks past the call.
-    try Pca.pcaCoords(adjusted, topK, pcs, scale = true)
+    try Pca.pcaCoords(adjusted, TopK, Pcs, scale = true)
     finally { adjusted.unpersist(false); m.unpersist(false) }
   }
 
@@ -119,8 +126,7 @@ object Pipelines {
     * Samples and probes are dictionary-encoded in sorted id order and every
     * step visits them in that order, so the result is the same on every run.
     */
-  private def local(typed: DataFrame, sheet: DataFrame, topK: Int, pcs: Int,
-                    minPerType: Int): DataFrame = {
+  private def local(typed: DataFrame, sheet: DataFrame): DataFrame = {
     val (batches, groups) = Combat.axes(sheet)
     val runGroup = sheet.collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
     val rows = typed.collect().filter(r => runGroup.contains(r.getString(1)))
@@ -138,7 +144,7 @@ object Pipelines {
     java.util.stream.IntStream.range(0, nS).parallel().forEach { s =>
       normalized(s) = Bmiq.normalizeSample(bySample(sIds(s)).map(r =>
           Bmiq.In(r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))),
-        minPerType).toArray
+        BmiqMinPerType).toArray
     }
     // M-values in sample order, then a stable counting sort by probe:
     // probe p's cells are start(p) until start(p + 1), samples ascending
@@ -192,7 +198,7 @@ object Pipelines {
     // 4. top-k surviving probes by the variance of their adjusted betas
     val live = (0 until nP).filter(stand(_).isDefined).toArray
     val top = Analytic.topKIndices(
-      live.map(p => Analytic.meanVar(adj.slice(start(p), start(p + 1)))._2), topK)
+      live.map(p => Analytic.meanVar(adj.slice(start(p), start(p + 1)))._2), TopK)
       .map(live).sorted
     val column = top.zipWithIndex.toMap
 
@@ -203,7 +209,7 @@ object Pipelines {
       wide(sample(i))(column(p)) = adj(i)
     }
     val kept = (0 until nS).filter(wide(_) != null)
-    Pca.coords(typed.sparkSession, kept.map(sIds).toArray, kept.map(wide).toArray, pcs, scale = true)
+    Pca.coords(typed.sparkSession, kept.map(sIds).toArray, kept.map(wide).toArray, Pcs, scale = true)
   }
 
   /** The LLM-data analog of [[fullWorkflow]]: the whole curation tier as

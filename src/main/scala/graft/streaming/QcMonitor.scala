@@ -281,21 +281,27 @@ object QcMonitor {
     fs.mkdirs(marker)
   }
 
+  /** EWMA smoothing weight of [[ewmaAnomalyStream]]'s mean/variance. */
+  private val EwmaAlpha = 0.2
+  /** Alarm width in weighted standard deviations. */
+  private val EwmaK = 4.0
+  /** Observations per key that only train the state. */
+  private val EwmaWarmup = 5L
+
   /** Streaming EWMA control chart (anomaly monitor): per key, keep an
     * exponentially-weighted mean/variance as O(1) state and flag each
-    * observation whose deviation from the running mean exceeds `k`
-    * weighted standard deviations — the online analog of the batch QC
-    * thresholds, with state that never grows with stream length. The
-    * first `warmup` observations per key only train the state (a control
-    * chart needs a baseline before it can alarm). Intra-batch arrival
+    * observation whose deviation from the running mean exceeds
+    * [[EwmaK]] weighted standard deviations — the online analog of the
+    * batch QC thresholds, with state that never grows with stream length.
+    * The first [[EwmaWarmup]] observations per key only train the state (a
+    * control chart needs a baseline before it can alarm). Intra-batch arrival
     * order is undefined after the groupByKey shuffle, so rows carry a
     * sequence number and each micro-batch is processed in sequence order
     * — deterministic run-to-run.
     *
     * @return (seq, key, value, ewma_before, anomalous)
     */
-  def ewmaAnomalyStream(events: org.apache.spark.sql.Dataset[(Long, String, Double)],
-                        alpha: Double, k: Double, warmup: Long)
+  def ewmaAnomalyStream(events: org.apache.spark.sql.Dataset[(Long, String, Double)])
       : org.apache.spark.sql.Dataset[(Long, String, Double, Double, Boolean)] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import events.sparkSession.implicits._
@@ -307,13 +313,13 @@ object QcMonitor {
           var (m, v, n) = state.getOption.getOrElse((0.0, 0.0, 0L))
           val out = rows.toSeq.sortBy(_._1).map { case (seq, _, x) =>
             val anomalous =
-              n >= warmup && math.abs(x - m) > k * math.sqrt(math.max(v, 1e-12))
+              n >= EwmaWarmup && math.abs(x - m) > EwmaK * math.sqrt(math.max(v, 1e-12))
             val mBefore = m
             if (n == 0L) { m = x; v = 0.0 }
             else {
               val d = x - m
-              m += alpha * d
-              v = (1 - alpha) * (v + alpha * d * d)
+              m += EwmaAlpha * d
+              v = (1 - EwmaAlpha) * (v + EwmaAlpha * d * d)
             }
             n += 1
             (seq, key, x, mBefore, anomalous)
@@ -362,7 +368,7 @@ object QcMonitor {
       total.as("n"), round(psi, 6).as("psi"))
   }
 
-  /** Streaming heavy-hitter watchlist monitor: per event-time window, a
+  /** Streaming heavy-hitter watchlist monitor: per hourly event-time window, a
     * count-min sketch of the key stream with watchlist estimates read off
     * the finalized sketch. The window state is the sketch buffer —
     * 4×4096 longs REGARDLESS of key cardinality (the property that
@@ -378,14 +384,13 @@ object QcMonitor {
     *
     * Input needs `ts` (timestamp) and `uid` (string key).
     */
-  def watchlistMonitor(events: DataFrame, watch: Seq[String],
-                       windowLen: String = "1 hour"): DataFrame = {
+  def watchlistMonitor(events: DataFrame, watch: Seq[String]): DataFrame = {
     val (depth, width) = (4, 4096)
     val cms = udaf(new graft.functions.CountMinAgg(depth, width))
     val est = udf((counts: Seq[Long], key: String) =>
       graft.functions.CountMinSketch(depth, width, counts.toArray).estimate(key))
     events.select(col("ts"), col("uid"))
-      .groupBy(window(col("ts"), windowLen).as("w"))
+      .groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(cms(col("uid")).as("sk"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("sk.counts").as("counts"),
@@ -397,12 +402,14 @@ object QcMonitor {
   /** Streaming NEAR-dup monitor — the LSH-banded complement of
     * [[dedupStreamTtl]]'s exact-hash dedup: each arriving document's
     * row-local MinHash signature ([[graft.llm.Dedup.minhashSignatureArray]]
-    * — no per-doc shuffle) lands in its `bands` (band, bucket) groups, and
+    * — no per-doc shuffle) lands in its [[graft.llm.Dedup.NearDupBands]]
+    * (band, bucket) groups, and
     * per-bucket state holds the recent entries' (doc_id, ts, signature)
     * so a newcomer is compared against exactly its bucket collisions —
     * work ∝ collisions, the batch LSH contract carried into streaming.
     * Emits one row per (older, newer, band) whose estimated similarity
-    * (matching signature components / numPerm) clears `minSim`; a pair
+    * (matching signature components / [[graft.llm.Dedup.NearDupPerm]])
+    * clears [[graft.llm.Dedup.NearDupMinSim]]; a pair
     * caught by k bands appears k times (downstream dedups if it cares —
     * chaining a second stateful op here would be the wrong default).
     *
@@ -417,13 +424,12 @@ object QcMonitor {
     * signatures, same banding, same gate, so the live drive and the
     * oracle-able batch restatement can never drift.
     */
-  def nearDupMonitor(docs: DataFrame, numPerm: Int, bands: Int,
-      minSim: Double, ttlMs: Long, maxPerBucket: Int = 64):
+  def nearDupMonitor(docs: DataFrame, ttlMs: Long, maxPerBucket: Int = 64):
       org.apache.spark.sql.Dataset[(Long, Long, Int, Double)] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import docs.sparkSession.implicits._
-    graft.llm.Dedup
-      .bandedSignatureRows(docs, numPerm, bands, passthrough = Seq("ts"))
+    import graft.llm.Dedup.{NearDupMinSim, NearDupPerm}
+    graft.llm.Dedup.bandedSignatureRows(docs, NearDupPerm)
       .withWatermark("ts", WatermarkDelay)
       .select("doc_id", "ts", "band", "sig", "sigv")
       .as[(Long, java.sql.Timestamp, Int, Long, Seq[Long])]
@@ -450,9 +456,9 @@ object QcMonitor {
                 if (oid != id && math.abs(tMs - oms) <= ttlMs) {
                   var m = 0
                   var i = 0
-                  while (i < numPerm) { if (sv(i) == osv(i)) m += 1; i += 1 }
-                  val est = m.toDouble / numPerm
-                  if (est >= minSim) {
+                  while (i < NearDupPerm) { if (sv(i) == osv(i)) m += 1; i += 1 }
+                  val est = m.toDouble / NearDupPerm
+                  if (est >= NearDupMinSim) {
                     // orient older→newer by (event time, id), not by who
                     // happened to be in state first
                     val stateIsOlder =

@@ -24,7 +24,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH recovers the planted near-dup and exact-dup pairs") {
-    val found = Dedup.minhashNearDups(docs, numPerm = 16, bands = 4, minJaccard = 0.5)
+    val found = Dedup.minhashNearDups(docs)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(found.contains((1L, 4L)))
     assert(found.contains((1L, 2L)))
@@ -74,7 +74,7 @@ class DedupSpec extends SparkSpec {
     // unrelated doc 3 pairs with nothing
     val est = Dedup.estimatedNearDupPairs(
         docs.withColumn("ts", timestamp_millis(col("doc_id") * 1000L)),
-        numPerm = 8, bands = 4, minSim = 0.9)
+        numPerm = 8, minSim = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
     assert(est.count(p => p._1 == 1L && p._2 == 4L && p._3 == 1.0) == 4)
     assert(!est.exists(p => p._1 == 3L || p._2 == 3L))
@@ -181,7 +181,7 @@ class DedupSpec extends SparkSpec {
       (2L, "prefix shift marker the quick brown fox jumps over the lazy dog near the river"),
       (3L, "entirely unrelated words about catalyst plans and shuffles")
     ).toDF("doc_id", "text")
-    def run() = Dedup.winnowFingerprints(corpus, k = 5, w = 4)
+    def run() = Dedup.winnowFingerprints(corpus, k = 5)
       .select("doc_id", "fp").as[(Long, Long)].collect()
     val sel = run().groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(sel(1L).nonEmpty && sel(3L).nonEmpty)

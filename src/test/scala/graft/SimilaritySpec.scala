@@ -34,7 +34,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("lshTopK only scores the query's sign bucket") {
-    val got = Similarity.lshTopK(emb, 0L, 5, bits = 4)
+    val got = Similarity.lshTopK(emb, 0L, 5)
       .select("vec_id").as[Long].collect().toSet
     // vec 3 has a negative first dim → different bucket → excluded
     assert(got.contains(1L) && !got.contains(3L))
@@ -43,7 +43,7 @@ class SimilaritySpec extends SparkSpec {
   test("ivfTopK finds the brute-force top hit on real embeddings") {
     val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val brute = Similarity.cosineTopK(real, 0L, 1).head().getLong(0)
-    val ivf = Similarity.ivfTopK(real, 0L, 5, nlist = 8, nprobe = 4)
+    val ivf = Similarity.ivfTopK(real, 0L, 5, nlist = 8)
       .select("vec_id").as[Long].collect().toSet
     assert(ivf.contains(brute), s"IVF candidates $ivf miss brute-force top $brute")
   }
@@ -204,8 +204,7 @@ class SimilaritySpec extends SparkSpec {
     // exact re-rank to recover the true top-10 — the documented two-stage
     // contract (quantization only costs recall when a true neighbor
     // misses the whole shortlist).
-    val got = Similarity.pqTopK(df, 0L, 10, m = 8, codebookSize = 16,
-        rerank = 30)
+    val got = Similarity.pqTopK(df, 0L, 10, rerank = 30)
       .select("vec_id").as[Long].collect().toSet
     val brute = Similarity.cosineTopK(df, 0L, 10)
       .select("vec_id").as[Long].collect().toSet
@@ -215,7 +214,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("annEvalMetrics pq guard: an indivisible vector dim fails loudly") {
-    // dim 6 does not divide into the default m = 4 subspaces — the
+    // dim 6 does not divide into annEvalMetrics's m = 4 subspaces — the
     // per-row raise_error guard (not silent truncation) must fire at
     // action time with the intended message. Pins the failure path the
     // r7 ADVICE flagged as untested.
@@ -276,8 +275,7 @@ class SimilaritySpec extends SparkSpec {
       (2L, Seq(1.0f, 0.11f, 0.0f, 0.0f), 0),
       (3L, Seq(1.0f, -0.1f, 0.0f, 0.0f), 0)
     ).toDF("vec_id", "embedding", "label")
-    val got = Similarity.mmrRerank(e, queryId = 0L, k = 3,
-      candidates = 10, lambda = 0.7).collect()
+    val got = Similarity.mmrRerank(e, queryId = 0L, k = 3, candidates = 10).collect()
     val order = got.sortBy(_.getInt(0)).map(_.getLong(1)).toSeq
     assert(order.head == 1L, s"first MMR pick must be the top-cosine hit: $order")
     assert(order == Seq(1L, 3L, 2L),

@@ -129,7 +129,7 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val ctx = sp.sqlContext
     val ms = MemoryStream[(Long, String, Double)]
-    val q = QcMonitor.ewmaAnomalyStream(ms.toDS(), alpha = 0.2, k = 4.0, warmup = 5)
+    val q = QcMonitor.ewmaAnomalyStream(ms.toDS())
       .toDF("seq", "key", "value", "ewma_before", "anomalous")
       .writeStream.format("memory").queryName("ewma_out")
       .outputMode("append").start()
@@ -241,8 +241,7 @@ class StreamingSpec extends SparkSpec {
       "optimizing shuffle topology under adaptive execution with skew handling"
     val ms = MemoryStream[(Long, Timestamp, String)]
     val q = QcMonitor.nearDupMonitor(
-        ms.toDF().toDF("doc_id", "ts", "text"),
-        numPerm = 16, bands = 4, minSim = 0.5, ttlMs = 20000L)
+        ms.toDF().toDF("doc_id", "ts", "text"), ttlMs = 20000L)
       .toDF("doc_a", "doc_b", "band", "est_sim")
       .writeStream.format("memory").queryName("neardup_out")
       .outputMode("append").start()
@@ -277,7 +276,7 @@ class StreamingSpec extends SparkSpec {
             (8L, ts(90), other + " trailing churn"),
             (9L, ts(95), other + " more churn"), (4L, ts(100), base))
             .toDF("doc_id", "ts", "text"),
-          numPerm = 16, bands = 4, minSim = 0.5, ttlMs = 20000L)
+          numPerm = 16, minSim = 0.5, ttlMs = 20000L)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       assert(batch.toSet == sp.table("neardup_out").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet,
@@ -306,9 +305,7 @@ class StreamingSpec extends SparkSpec {
     val n = 12
     val cap = 3
     val q = QcMonitor.nearDupMonitor(
-        ms.toDF().toDF("doc_id", "ts", "text"),
-        numPerm = 16, bands = 4, minSim = 0.5, ttlMs = 3600000L,
-        maxPerBucket = cap)
+        ms.toDF().toDF("doc_id", "ts", "text"), ttlMs = 3600000L, maxPerBucket = cap)
       .toDF("doc_a", "doc_b", "band", "est_sim")
       .writeStream.format("memory").queryName("neardup_adversarial")
       .outputMode("append").start()

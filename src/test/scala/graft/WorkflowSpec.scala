@@ -25,10 +25,8 @@ class WorkflowSpec extends SparkSpec {
   }
 
   private def both(beta: DataFrame, detp: DataFrame, sheet: DataFrame, manifest: DataFrame) = (
-    Pipelines.fullWorkflow(beta, detp, sheet, manifest,
-      qcThr = 0.09, topK = 50, pcs = 3, bmiqMinPerType = 10),
-    Pipelines.fullWorkflowDistributed(beta, detp, sheet, manifest,
-      qcThr = 0.09, topK = 50, pcs = 3, bmiqMinPerType = 10))
+    Pipelines.fullWorkflow(beta, detp, sheet, manifest),
+    Pipelines.fullWorkflowDistributed(beta, detp, sheet, manifest))
 
   Seq("sf0.001", "sf0.01").foreach { sf =>
     test(s"e02's driver-local chain matches the distributed chain at $sf") {
