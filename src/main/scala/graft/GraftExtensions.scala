@@ -162,18 +162,15 @@ object GraftExtensions {
     ).map { case (name, build) =>
       (FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name),
-        (es: Seq[Expression]) => {
-          val plan = build(es).queryExecution.logical
-          // The kernel behind the build may have persisted intermediates
-          // (Dmp's moments cache) for its eager prior fit — in the pure-
-          // SQL audience of this TVF nothing ever calls releaseAll, so a
-          // leaked cache would accumulate per analysis. Release here: the
-          // returned plan stays valid (unpersist only costs one recompute
-          // at execution), and a co-resident harness query merely
-          // recomputes its own kernel cache in the worst case.
-          ops.Caches.releaseAll()
-          plan
-        })
+        // The kernel behind the build may persist intermediates (Dmp's
+        // moments cache) for its eager prior fit — in the pure-SQL
+        // audience of this TVF nothing ever calls releaseAll, so a leaked
+        // cache would accumulate per analysis. Release the caches this
+        // build tracked, and only those: the returned plan stays valid
+        // (unpersist only costs one recompute at execution), and other
+        // queries' kernel caches stay resident.
+        (es: Seq[Expression]) =>
+          ops.Caches.releasing(build(es).queryExecution.logical))
     }
   }
 

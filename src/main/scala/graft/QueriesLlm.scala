@@ -223,13 +223,12 @@ object QueriesLlm {
     // shingle in df docs emits df² pairs). Deterministic semantics (the
     // pruned sets ARE the operator's universe), so it carries a full
     // DuckDB oracle with the same pruning.
-    Q("d10_jaccard_df_pruned", (s, d) => {
-      val sh = graft.ops.Caches.track(Dedup.shingles(docs(s, d)).persist())
-      Dedup.jaccardPairsDfPruned(sh, 0.01, 4)
+    Q("d10_jaccard_df_pruned", (s, d) =>
+      Dedup.jaccardPairsDfPruned(Dedup.shingles(docs(s, d)), 0.01, 4)
         .select(col("doc_a"), col("doc_b"), col("inter"),
           round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    }, Some(
+        .orderBy("doc_a", "doc_b"),
+      Some(
       """WITH words AS (
         |  SELECT doc_id,
         |         unnest(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS w,

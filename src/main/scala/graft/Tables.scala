@@ -21,8 +21,14 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
+  /** A raw table, read once per session and directory: parquet's schema
+    * inference runs a Spark job per read, so later calls reuse the first
+    * DataFrame (memoized in [[viewCache]] under the file name, unpersisted).
+    * A directory read here must not be rewritten in the same session.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    viewCache.getOrElseUpdate((System.identityHashCode(spark), dir, s"$name.parquet"),
+      spark.read.parquet(s"$dir/$name.parquet"))
 
   /** The events table is written with TIMESTAMP(NANOS), which Spark's
     * parquet reader rejects unless nanos are surfaced as longs; normalize

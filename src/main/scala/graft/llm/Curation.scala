@@ -82,9 +82,8 @@ object Curation {
     */
   def dedupClusters(docs: DataFrame, minJaccard: Double,
                     maxDf: Option[Long] = DefaultMaxDf): DataFrame = {
-    // jaccardPairs reads the shingle table three times (sizes + both sides
-    // of the inverted-index self-join) — persist it, as minhashNearDups
-    // does, so the explode/window pipeline runs once. maxDf = the d10
+    // The Jaccard kernel reads the shingle strings once (one aggregate
+    // into dense ids) and caches only its longs. maxDf = the d10
     // document-frequency guard (Dedup.jaccardPairsDfPruned): bounds the
     // per-shingle pair fan-out at maxDf² against boilerplate/duplication
     // blowup. SAFE BY DEFAULT since r8, and the default ADAPTS to the
@@ -92,10 +91,7 @@ object Curation {
     // cap survives both the lose-genuine-dups cliff and the junk-fan-out
     // OOM); pass None explicitly for the exact unguarded semantics
     // (c01's oracle does).
-    val cap = resolveMaxDf(docs, maxDf)
-    val sh = graft.ops.Caches.track(Dedup.shingles(docs).persist())
-    val pairs = cap.fold(Dedup.jaccardPairs(sh, minJaccard))(
-      c => Dedup.jaccardPairsDfPruned(sh, minJaccard, c))
+    val pairs = Dedup.jaccard(Dedup.shingles(docs), minJaccard, resolveMaxDf(docs, maxDf))
     val cc = graft.ops.Graph.connectedComponents(pairs, docs.select("doc_id"))
     // cluster_size via a window on the cluster key: one shuffle, vs the
     // two (aggregate + join back) of the groupBy/join formulation.

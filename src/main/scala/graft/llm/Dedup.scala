@@ -53,31 +53,10 @@ object Dedup {
   }
 
   /** Exact n-gram Jaccard similarity for documents sharing >=1 shingle
-    * (inverted-index blocking: the self-join key is the shingle itself).
+    * (inverted-index blocking: the self-join key is the shingle's long
+    * id, see [[shingleIds]]).
     */
-  def jaccardPairs(sh: DataFrame, minJaccard: Double): DataFrame = {
-    // NOT persisted here (r10 A/B): the input feeds two distinct
-    // exchanges (doc-keyed sizes + the shingle-keyed self-join), so an
-    // un-persisted caller pays the shingle chain twice per action — but
-    // the tried persist-if-unpersisted guard measured NEUTRAL at sf0.1
-    // (d02 2.39 → 2.42 s; the pair join dominates) and its cache blocks
-    // squeezed execution memory into an OOM on the 64× adversarial
-    // replica, where d02's pair stream is quadratic in duplication by
-    // contract. Callers with an expensive upstream and bounded shingle
-    // tables persist it themselves (dedupClusters, jaccardPairsDfPruned).
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = sh.as("x").join(sh.as("y"), "shingle")
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")), "doc_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "inter", "jaccard")
-  }
+  def jaccardPairs(sh: DataFrame, minJaccard: Double): DataFrame = jaccard(sh, minJaccard, None)
 
   /** [[jaccardPairs]] with document-frequency pruning: shingles appearing
     * in more than `maxDf` documents are dropped before the inverted-index
@@ -91,21 +70,52 @@ object Dedup {
     * Jaccard is computed over the pruned shingle sets (sizes included),
     * so the result is bit-reproducible and SQL-expressible.
     */
-  def jaccardPairsDfPruned(sh: DataFrame, minJaccard: Double,
-                           maxDf: Long): DataFrame = {
-    // shingles() emits per-doc-distinct shingles, so count = document
-    // frequency. The df table is shingle-keyed (bounded by vocabulary),
-    // and the prune is a co-keyed join on the same key the self-join
-    // shuffles on — no extra shuffle of the shingle table.
-    val df = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-    // jaccardPairs reads its input three ways (sizes + both self-join
-    // sides); without a persist the df aggregate + prune join re-ran per
-    // consumer (r9, KernelProbe: ~1 s/pass at sf0.1). Released by the
-    // harness via ops.Caches.
-    val pruned = graft.ops.Caches.track(
-      sh.join(df.filter(col("df") <= maxDf).select("shingle"), "shingle")
-        .persist())
-    jaccardPairs(pruned, minJaccard)
+  def jaccardPairsDfPruned(sh: DataFrame, minJaccard: Double, maxDf: Long): DataFrame =
+    jaccard(sh, minJaccard, Some(maxDf))
+
+  /** The `(doc_id, sid)` table behind both Jaccard entry points: ONE
+    * shingle-keyed aggregate reads the shingle strings, drops the
+    * shingles in more than `maxDf` documents (`shingles()` emits
+    * per-doc-distinct rows, so the row count is the document frequency),
+    * and gives each kept shingle a long id, dense within its partition.
+    * The id is injective (`monotonically_increasing_id` is partition
+    * index ⊕ row number) and deterministic: the aggregate's rows are
+    * sorted by shingle within their hash partition before numbering, so
+    * every evaluation numbers the same shingle alike. A NULL shingle keeps a NULL sid — counted in
+    * its document's size, never joined — and is dropped with the pruned
+    * shingles, as the string-keyed joins treated it.
+    */
+  private[graft] def shingleIds(sh: DataFrame, maxDf: Option[Long]): DataFrame =
+    sh.groupBy("shingle").agg(collect_list(col("doc_id")).as("docs"), count(lit(1)).as("df"))
+      .filter(maxDf.fold(lit(true))(c => col("shingle").isNotNull && col("df") <= c))
+      .sortWithinPartitions("shingle")
+      .withColumn("sid", when(col("shingle").isNotNull, monotonically_increasing_id()))
+      .select(explode(col("docs")).as("doc_id"), col("sid"))
+
+  /** The one exact-Jaccard kernel: sizes, the inverted-index self-join
+    * and the pair count all run on [[shingleIds]]' longs. */
+  private[llm] def jaccard(sh: DataFrame, minJaccard: Double, maxDf: Option[Long]): DataFrame = {
+    // Persisted: the id table feeds three consumers (doc-keyed sizes and
+    // both self-join sides), and without the cache each re-ran the
+    // shingle aggregate. It holds two longs per (doc, shingle) row and
+    // replaces the callers' caches of the shingle STRINGS, one of which
+    // squeezed d02 into an OOM on the 64× replica (r10). With it, e04 and
+    // d10 ran at 64× on an 8 g heap (PERF.md, "Exact Jaccard on dense
+    // shingle ids"); d02's pair stream stays quadratic in duplication,
+    // outside that envelope with or without a cache.
+    val ids = graft.ops.Caches.track(shingleIds(sh, maxDf).persist())
+    val sizes = ids.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    val inter = ids.as("x").join(ids.as("y"), "sid")
+      .filter(col("x.doc_id") < col("y.doc_id"))
+      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("inter"))
+    inter
+      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")), "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")), "doc_b")
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")).cast("double"))
+      .filter(col("jaccard") >= minJaccard)
+      .select("doc_a", "doc_b", "inter", "jaccard")
   }
 
   /** MinHash signatures: numPerm independent permutations simulated by

@@ -17,12 +17,31 @@ object Caches {
 
   private val tracked = new ConcurrentLinkedQueue[DataFrame]()
 
+  /** Where this thread's [[track]] registers: the innermost [[releasing]]
+    * region it runs in, or the harness-wide queue outside every region.
+    */
+  private val region = new ThreadLocal[ConcurrentLinkedQueue[DataFrame]] {
+    override def initialValue(): ConcurrentLinkedQueue[DataFrame] = tracked
+  }
+
   /** Persist (MEMORY_AND_DISK by default via Dataset.persist) and register
     * for later release. Returns the same DataFrame.
     */
   def track(df: DataFrame): DataFrame = {
-    tracked.add(df)
+    region.get.add(df)
     df
+  }
+
+  /** Runs `body`, then unpersists exactly the caches this thread tracked
+    * while it ran — never the caches other queries (other threads, or
+    * this thread outside the region) tracked before or meanwhile.
+    */
+  def releasing[T](body: => T): T = {
+    val outer = region.get
+    val mine = new ConcurrentLinkedQueue[DataFrame]()
+    region.set(mine)
+    try body
+    finally { region.set(outer); release(mine) }
   }
 
   /** Unpersist every tracked intermediate. BLOCKING since r9: the
@@ -32,12 +51,14 @@ object Caches {
     * neighbors. Block removal is reference dropping (no recompute), so
     * the synchronous wait is microseconds-to-ms per cache.
     */
-  def releaseAll(): Unit = {
-    var df = tracked.poll()
+  def releaseAll(): Unit = release(tracked)
+
+  private def release(queue: ConcurrentLinkedQueue[DataFrame]): Unit = {
+    var df = queue.poll()
     while (df != null) {
       try df.unpersist(true)
       catch { case _: Throwable => () } // session may already be stopped
-      df = tracked.poll()
+      df = queue.poll()
     }
   }
 }

@@ -129,25 +129,15 @@ object Pipelines {
   private def local(typed: DataFrame, sheet: DataFrame): DataFrame = {
     val (batches, groups) = Combat.axes(sheet)
     val runGroup = sheet.collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
-    val rows = typed.collect().filter(r => runGroup.contains(r.getString(1)))
-    val sIds = rows.map(_.getString(1)).distinct.sorted
-    val pIds = rows.map(_.getString(0)).distinct.sorted
+    val (sIds, pIds, normalized) = localBmiq(typed, runGroup.contains)
     val (nS, nP, bN, gN) = (sIds.length, pIds.length, batches.length, groups.length)
     val pIndex = pIds.zipWithIndex.toMap
     val batchOf = sIds.map(s => batches.indexOf(runGroup(s)._1))
     val groupOf = sIds.map(s => groups.indexOf(runGroup(s)._2))
 
-    // 2. BMIQ per sample: samples are independent, so they run in
-    // parallel on the common fork-join pool, each into its own slot
-    val bySample = rows.groupBy(_.getString(1))
-    val normalized = new Array[Array[Bmiq.Out]](nS)
-    java.util.stream.IntStream.range(0, nS).parallel().forEach { s =>
-      normalized(s) = Bmiq.normalizeSample(bySample(sIds(s)).map(r =>
-          Bmiq.In(r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))),
-        BmiqMinPerType).toArray
-    }
-    // M-values in sample order, then a stable counting sort by probe:
-    // probe p's cells are start(p) until start(p + 1), samples ascending
+    // 2. BMIQ ran in localBmiq. M-values in sample order, then a stable
+    // counting sort by probe: probe p's cells are start(p) until
+    // start(p + 1), samples ascending
     val probe0 = Array.newBuilder[Int]
     val m0 = Array.newBuilder[Double]
     val sample0 = Array.newBuilder[Int]
@@ -210,6 +200,29 @@ object Pipelines {
     }
     val kept = (0 until nS).filter(wide(_) != null)
     Pca.coords(typed.sparkSession, kept.map(sIds).toArray, kept.map(wide).toArray, Pcs, scale = true)
+  }
+
+  /** The local chain's collect and its step 2, BMIQ per sample: the
+    * sorted sample and probe ids of the rows whose sample `keep`s, and
+    * each sample's normalized rows in sample-id order. The collected rows
+    * are unreachable once this returns, so they never share the heap with
+    * ComBat's and PCA's arrays.
+    */
+  private def localBmiq(typed: DataFrame, keep: String => Boolean)
+      : (Array[String], Array[String], Array[Array[Bmiq.Out]]) = {
+    val rows = typed.collect().filter(r => keep(r.getString(1)))
+    val sIds = rows.map(_.getString(1)).distinct.sorted
+    val pIds = rows.map(_.getString(0)).distinct.sorted
+    // samples are independent, so they run in parallel on the common
+    // fork-join pool, each into its own slot
+    val bySample = rows.groupBy(_.getString(1))
+    val normalized = new Array[Array[Bmiq.Out]](sIds.length)
+    java.util.stream.IntStream.range(0, sIds.length).parallel().forEach { s =>
+      normalized(s) = Bmiq.normalizeSample(bySample(sIds(s)).map(r =>
+          Bmiq.In(r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3))),
+        BmiqMinPerType).toArray
+    }
+    (sIds, pIds, normalized)
   }
 
   /** The LLM-data analog of [[fullWorkflow]]: the whole curation tier as

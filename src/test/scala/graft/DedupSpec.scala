@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.Dedup
 
@@ -125,6 +126,129 @@ class DedupSpec extends SparkSpec {
     val noCap = Dedup.jaccardPairsDfPruned(sh, 0.01, maxDf = 1000)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(noCap == all)
+  }
+
+  /** The string-keyed formulation the dense-id kernel replaced: sizes,
+    * the inverted-index self-join and the pair count on the shingle
+    * strings, the df prune as a shingle-keyed join. */
+  private def referencePairs(sh: DataFrame, minJaccard: Double,
+                             maxDf: Option[Long]): DataFrame = {
+    val kept = maxDf.fold(sh) { c =>
+      val df = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+      sh.join(df.filter(col("df") <= c).select("shingle"), "shingle")
+    }
+    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    kept.as("x").join(kept.as("y"), "shingle")
+      .filter(col("x.doc_id") < col("y.doc_id"))
+      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("inter"))
+      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")), "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")), "doc_b")
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("sza") + col("szb") - col("inter")).cast("double"))
+      .filter(col("jaccard") >= minJaccard)
+      .select("doc_a", "doc_b", "inter", "jaccard")
+  }
+
+  private def sortedRows(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSeq.sorted
+
+  /** Planted corpus: shingles in 4 documents ("aa bb cc", "dd ee ff"),
+    * in 3 ("bb cc dd", "gg hh ii") and in 2 ("hh ii one") around a cap of
+    * 3, exact duplicates, one-shingle documents, empty and null text, and
+    * sparse doc ids near 2^62 and Long.MaxValue. */
+  private val planted = {
+    val big = 1L << 62
+    Seq[(Long, String)](
+      (big + 7, "aa bb cc dd ee ff gg hh ii one two three"),
+      (big + 1000003, "aa bb cc dd ee ff gg hh ii one two three"),
+      (5L, "aa bb cc dd ee ff four five six seven"),
+      (big + 99, "aa bb cc eight nine ten"),
+      (Long.MaxValue - 2, "gg hh ii"),
+      (11L, "solo shingle here"),
+      (12L, "solo shingle here"),
+      (13L, ""),
+      (14L, null),
+      (15L, "two words"),
+      (big, "dd ee ff gg hh")
+    ).toDF("doc_id", "text")
+  }
+
+  test("dense-id Jaccard matches the string-keyed formulation row for row") {
+    val sh = Dedup.shingles(planted)
+    // a raw shingle table with a NULL shingle, a NULL doc_id and a
+    // repeated (doc, shingle) row: the kernel keeps the string joins'
+    // multiset and NULL semantics, not just those of shingles()' output
+    val raw = Seq[(java.lang.Long, String)](
+      (1L, "a"), (1L, "b"), (1L, null), (2L, "a"), (2L, "b"), (2L, "b"),
+      (3L, "a"), (3L, null), (null, "a"), (null, "c"), (4L, "c"))
+      .toDF("doc_id", "shingle")
+    try {
+      for (in <- Seq(sh, raw); minJ <- Seq(0.0, 0.3)) {
+        assert(sortedRows(Dedup.jaccardPairs(in, minJ)) ==
+          sortedRows(referencePairs(in, minJ, None)))
+        for (cap <- Seq(1L, 2L, 3L, 4L, 1000L))
+          assert(sortedRows(Dedup.jaccardPairsDfPruned(in, minJ, cap)) ==
+            sortedRows(referencePairs(in, minJ, Some(cap))), s"maxDf=$cap minJaccard=$minJ")
+      }
+      // the planted cases are present: duplicates at 1.0, one-shingle
+      // duplicates, and the above-cap shingle pruned at cap 3
+      val all = sortedRows(Dedup.jaccardPairs(sh, 0.0)).map(r => (r._1, r._2) -> r._3).toMap
+      assert(all((11L, 12L)) == 1L)
+      assert(all(((1L << 62) + 7, (1L << 62) + 1000003)) == 10L)
+      val capped = sortedRows(Dedup.jaccardPairsDfPruned(sh, 0.0, 3))
+        .map(r => (r._1, r._2) -> r._3).toMap
+      // 5 and 2^62+7 share "aa bb cc" and "dd ee ff" (df 4, pruned) and
+      // "bb cc dd" and "cc dd ee" (df 3, kept)
+      assert(all((5L, (1L << 62) + 7)) == 4L && capped((5L, (1L << 62) + 7)) == 2L)
+      assert(!capped.contains((5L, (1L << 62) + 99))) // shared only "aa bb cc"
+    } finally graft.ops.Caches.releaseAll()
+  }
+
+  test("the Jaccard kernel joins and caches longs, never shingle strings") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val helper = new AdaptiveSparkPlanHelper {}
+    val outs = Seq(
+      Dedup.jaccardPairs(Dedup.shingles(planted), 0.0),
+      Dedup.jaccardPairsDfPruned(Dedup.shingles(planted), 0.0, 3),
+      graft.llm.Curation.dedupClusters(planted, 0.3, None),
+      graft.llm.Curation.dedupClusters(planted, 0.3))
+    try outs.foreach { out =>
+      out.collect()
+      val plan = out.queryExecution.executedPlan
+      val keys = helper.collectWithSubqueries(plan) {
+        case j: BroadcastHashJoinExec => j.leftKeys ++ j.rightKeys
+        case j: ShuffledHashJoinExec => j.leftKeys ++ j.rightKeys
+        case j: SortMergeJoinExec => j.leftKeys ++ j.rightKeys
+      }.flatten
+      assert(keys.nonEmpty && keys.forall(_.dataType == LongType), plan.toString)
+      val cached = helper.collectWithSubqueries(plan) {
+        case s: InMemoryTableScanExec => s.relation.output
+      }.flatten
+      assert(!cached.exists(a => a.name == "shingle" || a.dataType == StringType),
+        plan.toString)
+    } finally graft.ops.Caches.releaseAll()
+  }
+
+  test("shingle ids are injective and the same on every evaluation") {
+    val sh = Dedup.shingles(planted)
+    for (cap <- Seq(None, Some(3L))) {
+      def once() = Dedup.shingleIds(sh, cap).as[(Long, Long)].collect().toSet
+      val ids = once()
+      assert(ids == once())
+      // one id per distinct shingle: the (doc, id) pairs map back onto
+      // the (doc, shingle) pairs one for one
+      val names = sh.as[(Long, String)].collect().groupBy(_._2).view
+        .mapValues(_.map(_._1).toSet).toMap
+        .filter { case (_, d) => cap.forall(d.size <= _) }
+      val byId = ids.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
+      assert(byId.size == names.size)
+      assert(byId.values.toSet == names.values.toSet)
+    }
   }
 
   test("removeDuplicateSpans: keep-first span removal with interval union") {

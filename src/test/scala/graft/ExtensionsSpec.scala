@@ -229,4 +229,39 @@ class ExtensionsSpec extends SparkSpec {
     val counts = Seq.fill(3)(compiles())
     assert(counts.last <= 10, s"compiles per run: $counts")
   }
+
+  test("Caches.releasing drops only the caches tracked inside it") {
+    import org.apache.spark.storage.StorageLevel
+    val outside = ops.Caches.track(spark.range(10).toDF("x").persist())
+    val inside = ops.Caches.releasing {
+      val df = ops.Caches.track(spark.range(20).toDF("y").persist())
+      assert(df.count() == 20)
+      df
+    }
+    try {
+      assert(inside.storageLevel == StorageLevel.NONE)
+      assert(outside.storageLevel != StorageLevel.NONE)
+    } finally ops.Caches.releaseAll()
+    assert(outside.storageLevel == StorageLevel.NONE)
+  }
+
+  test("analyzing graft_dmp keeps the caches other queries tracked") {
+    import org.apache.spark.storage.StorageLevel
+    // a small study in the testdata's layout: 40 probes (parts) on 8
+    // samples (suppliers), 4 per group
+    val dir = java.nio.file.Files.createTempDirectory("graft_dmp").toString
+    spark.range(320).select(
+        (col("id") % 40 + 1).as("l_partkey"), expr("id div 40 + 1").as("l_suppkey"),
+        col("id").as("l_orderkey"), (col("id") % 7 + 1).cast("int").as("l_linenumber"),
+        ((col("id") * 7919 % 100003) / 100.0).as("l_extendedprice"))
+      .write.parquet(s"$dir/lineitem.parquet")
+    spark.range(1, 9).select(col("id").as("s_suppkey")).write.parquet(s"$dir/supplier.parquet")
+    val other = ops.Caches.track(spark.range(10).toDF("x").persist())
+    try {
+      assert(other.count() == 10)
+      val dmp = spark.sql(s"SELECT * FROM graft_dmp('$dir')")
+      assert(other.storageLevel != StorageLevel.NONE)
+      assert(dmp.count() == 40)
+    } finally ops.Caches.releaseAll()
+  }
 }
