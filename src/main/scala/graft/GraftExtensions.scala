@@ -134,16 +134,10 @@ object GraftExtensions {
         s"$name(dir) takes exactly one literal directory path")
       String.valueOf(es.head.eval())
     }
-    def dmpFrame(dir: String) = {
-      val s = SparkSession.active
-      Tables.betaLong(s, dir).join(
-        org.apache.spark.sql.functions.broadcast(Tables.sampleSheet(s, dir)),
-        "sample_id")
-    }
     import org.apache.spark.sql.functions.{col, round}
     Seq[(String, Seq[Expression] => org.apache.spark.sql.DataFrame)](
       ("graft_dmp", es => {
-        val bg = dmpFrame(literalDir("graft_dmp", es))
+        val bg = Tables.betaGrid(SparkSession.active, literalDir("graft_dmp", es))
         ops.Dmp.dmp(bg, "WT", "MUT")
           .select(col("probe_id"), col("n1"), col("n2"),
             round(col("logfc"), 6).as("logfc"),
@@ -153,7 +147,7 @@ object GraftExtensions {
             col("significant"))
       }),
       ("graft_dmp_pass1", es => {
-        val bg = dmpFrame(literalDir("graft_dmp_pass1", es))
+        val bg = Tables.betaGrid(SparkSession.active, literalDir("graft_dmp_pass1", es))
         ops.Dmp.moments(bg, "WT", "MUT")
           .select(col("probe_id"), col("n1"), col("n2"),
             round(col("logfc"), 4).as("logfc"),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.Fns.d2
 import graft.llm.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 /** LLM-training-data pipeline queries over documents/embeddings
@@ -652,7 +653,7 @@ object QueriesLlm {
       }),
 
     Q("n02_ann_lsh_bucketed", (s, d) =>
-      Similarity.lshTopK(emb(s, d), queryId = 0L, k = 5),
+      Similarity.lshTopK(emb(s, d), queryId = 0L),
       Some(
         """WITH b AS (SELECT vec_id, embedding,
           |                  (CASE WHEN embedding[1] >= 0 THEN 8 ELSE 0 END) +
@@ -1170,7 +1171,6 @@ object QueriesLlm {
         .withColumn("sxx", sum(col("x") * col("x")).over(wCum))
         .withColumn("last", row_number().over(Window.orderBy(col("rk").desc)))
         .filter(col("last") === 1)
-      def d2(c: String) = col(c).cast("double")
       sums.withColumn("slope",
           (d2("rk") * col("sxy") - col("sx") * col("sy"))
             / (d2("rk") * col("sxx") - col("sx") * col("sx")))
@@ -1251,7 +1251,6 @@ object QueriesLlm {
         .withColumn("sxx", sum(col("x") * col("x")).over(wCum))
         .withColumn("last", row_number().over(Window.orderBy(col("dec").desc)))
         .filter(col("last") === 1)
-      def d2(c: String) = col(c).cast("double")
       sums.withColumn("beta",
           (d2("dec") * col("sxy") - col("sx") * col("sy"))
             / (d2("dec") * col("sxx") - col("sx") * col("sx")))

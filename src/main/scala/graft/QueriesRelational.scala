@@ -1213,7 +1213,6 @@ object QueriesRelational {
       val wAll = Window.partitionBy()
       val wCum = Window.orderBy("x", "y")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      def d2(c: org.apache.spark.sql.Column) = c.cast("double")
       val t = cells
         .withColumn("n_x", sum("n_xy").over(wx))
         .withColumn("n_y", sum("n_xy").over(wy))
@@ -1272,7 +1271,6 @@ object QueriesRelational {
         .filter(col("b").isNotNull)
       val base = ev.groupBy("event_type").agg(
         count(lit(1)).as("n"), sum("c").as("s"), sum(col("c") * col("c")).as("ss"))
-      def d2(c: String) = col(c).cast("double")
       stacked.groupBy("event_type", "lag")
         .agg(count(lit(1)).as("n_pairs"), sum(col("x") * col("b")).as("sxy"),
           sum("x").as("sa"), sum("b").as("sb"))
@@ -1338,7 +1336,6 @@ object QueriesRelational {
         .select(substring(round(col("o_totalprice") * 100).cast("bigint")
           .cast("string"), 1, 1).cast("int").as("digit"))
       val counts = digits.groupBy("digit").agg(count(lit(1)).as("n_obs"))
-      def d2(c: org.apache.spark.sql.Column) = c.cast("double")
       val wAll = Window.partitionBy()
       val wCum = Window.orderBy("digit")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1512,7 +1509,6 @@ object QueriesRelational {
         .groupBy("event_type", "user_id").agg(sum("c").as("spend"))
       val w = Window.partitionBy("event_type")
         .orderBy(col("spend").asc, col("user_id").asc)
-      def d2(c: String) = col(c).cast("double")
       spend.withColumn("i", row_number().over(w).cast("bigint"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_users"), sum("spend").as("total_cents"),
@@ -1557,7 +1553,6 @@ object QueriesRelational {
       val ev = Tables.events(s, d).select(col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"),
         round(col("value") * 100).cast("bigint").as("c"))
-      def d2(c: String) = col(c).cast("double")
       ev.withColumn("lag5", lag("c", 5).over(w))
         .withColumn("lag1", lag("c", 1).over(w))
         .filter(col("lag5").isNotNull)
@@ -2220,7 +2215,6 @@ object QueriesRelational {
       val ev = Tables.events(s, d).select(col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"),
         round(col("value") * 100).cast("bigint").as("c"))
-      def d2(c: org.apache.spark.sql.Column) = c.cast("double")
       val cum = ev
         .withColumn("t", row_number().over(ord))
         .withColumn("cum", sum("c").over(
@@ -2653,7 +2647,6 @@ object QueriesRelational {
         sum(when(col("la") && !col("lb"), 1L).otherwise(0L)).as("n10"),
         sum(when(!col("la") && col("lb"), 1L).otherwise(0L)).as("n01"),
         sum(when(!col("la") && !col("lb"), 1L).otherwise(0L)).as("n00"))
-      def d2(c: String) = col(c).cast("double")
       val n = d2("n11") + d2("n10") + d2("n01") + d2("n00")
       val po = (d2("n11") + d2("n00")) / n
       val pe = ((d2("n11") + d2("n10")) / n) * ((d2("n11") + d2("n01")) / n) +

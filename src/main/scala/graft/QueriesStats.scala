@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
-import graft.ops.{Analytic, Bmiq, Combat, Dmp, Mds, Pca, Survival}
+import graft.functions.Fns.d2
+import graft.ops.{Analytic, Bmiq, Combat, Dmp, Hclust, Mds, Pca, Survival}
 import SqlOracles.ctes
 
 /** Statistical-kernel queries (SURVEY.md §2.9). The DuckDB-expressible
@@ -11,6 +13,92 @@ import SqlOracles.ctes
   * unit tests against hand-computed values.
   */
 object QueriesStats {
+
+  /** The K tier's moments builder: per `keys` group, in ONE conditional-sum
+    * hash aggregate, the exact bigint count `n`, Σv `s` and Σv² `ss` over
+    * all rows, and `n<sfx>`, `s<sfx>`, `ss<sfx>` over the rows each level's
+    * condition holds on (a null condition counts as false). `v` is an
+    * integer column, beta's grid value `k` for most callers, so every sum
+    * is exact and order-independent and each statistic built on them is a
+    * fixed double sequence. Columns a caller never reads are pruned from
+    * the aggregate by the optimizer.
+    */
+  private[graft] def levelMoments(df: DataFrame, keys: Seq[String], v: Column,
+                                  levels: Seq[(String, Column)]): DataFrame = {
+    def on(c: Column, e: Column) = sum(when(c, e).otherwise(0L))
+    val aggs = Seq(count(lit(1)).as("n"), sum(v).as("s"), sum(v * v).as("ss")) ++
+      levels.flatMap { case (sfx, c) =>
+        Seq(on(c, lit(1L)).as(s"n$sfx"), on(c, v).as(s"s$sfx"), on(c, v * v).as(s"ss$sfx"))
+      }
+    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The three instrument runs as levels `0`..`2`. */
+  private[graft] val runLevels: Seq[(String, Column)] =
+    (0 to 2).map(r => r.toString -> (col("run") === s"run_$r"))
+
+  /** The two sheet groups as levels `1` (WT) and `2` (MUT). */
+  private[graft] val groupLevels: Seq[(String, Column)] =
+    Seq("1" -> (col("group") === "WT"), "2" -> (col("group") === "MUT"))
+
+  /** Group within run, levels `<group>_<run>`: `1_0` = WT in run_0, …,
+    * `2_2` = MUT in run_2 (k38's per-run effects).
+    */
+  private[graft] val runGroupLevels: Seq[(String, Column)] =
+    for ((r, inRun) <- runLevels; (g, inGroup) <- groupLevels)
+      yield s"${g}_$r" -> (inRun && inGroup)
+
+  /** Per-probe WT/MUT grid moments of `bg`, probes with at least 3 samples
+    * in each group: the input of [[welchT]], k31's effect sizes and the
+    * k14/k41/e07 group deltas.
+    */
+  private def groupMoments(bg: DataFrame) =
+    levelMoments(bg, Seq("probe_id"), col("k"), groupLevels)
+      .filter(col("n1") >= 3 && col("n2") >= 3)
+
+  /** Mean of level `a` minus mean of level `b`, in grid units. */
+  private def meanDiff(a: String, b: String) =
+    d2(s"s$a") / d2(s"n$a") - d2(s"s$b") / d2(s"n$b")
+
+  /** Sample variance of level `sfx`. */
+  private def levelVar(sfx: String) =
+    Fns.varFromMoments(col(s"n$sfx"), col(s"s$sfx"), col(s"ss$sfx"))
+
+  /** Squared standard error of level `sfx`'s mean: its sample variance / n. */
+  private def seSq(sfx: String) = levelVar(sfx) / d2(s"n$sfx")
+
+  /** The `top` probes of `bk` (probe_id, sample_id, k) with the largest
+    * exact-moment sample variance, ties by probe_id: the k02/k09 selection,
+    * identical in Spark and DuckDB.
+    */
+  private def topVarianceProbes(bk: DataFrame, top: Int) =
+    levelMoments(bk, Seq("probe_id"), col("k"), Nil)
+      .filter(col("n") >= 2)
+      .select(col("probe_id"), Fns.varFromMoments(col("n"), col("s"), col("ss")).as("v"))
+      .orderBy(col("v").desc, col("probe_id").asc)
+      .limit(top).select("probe_id")
+
+  /** The k15 clock panel: per probe the integer numerator of its age
+    * coefficient (coef = coef_num/10). k15, k34 and e07 score it.
+    */
+  private def clockPanel(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.table(s, d, "part")
+      .filter(col("p_partkey") % 17 === 3)
+      .select(format_string("cg%07d", col("p_partkey")).as("probe_id"),
+        (col("p_partkey") % 13 - 6).cast("long").as("coef_num"))
+
+  /** The k16 reference profiles of cell types A and B on the beta grid,
+    * probes where they differ. k16 and e07 project onto them.
+    */
+  private def cellProfiles(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.table(s, d, "part")
+      .select(format_string("cg%07d", col("p_partkey")).as("probe_id"),
+        (col("p_partkey") * 3 % 997).cast("long").as("pa"),
+        (col("p_partkey") * 7 % 997).cast("long").as("pb"))
+      .filter(col("pa") =!= col("pb"))
+
+  /** `c` rounded to the 6 places the oracle compares, under its own name. */
+  private def r6(c: String) = round(col(c), 6).as(c)
 
   /** Shared K17 statistic pass: per-probe Welch two-sample t (unequal
     * variances — the test scipy's `ttest_ind(equal_var=False)` runs and the
@@ -23,68 +111,57 @@ object QueriesStats {
     * k17_welch_dmp rounds for the oracle, k17_welch_inference feeds
     * (t, df) to `graft_t_pvalue`.
     */
-  private[graft] def welchT(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val bg = Tables.betaLong(s, d)
-      .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-      .withColumn("k", round(col("beta") * 997).cast("bigint"))
-    def gi(g: String, e: org.apache.spark.sql.Column) =
-      sum(when(col("group") === g, e).otherwise(0L))
-    val m = bg.groupBy("probe_id").agg(
-      gi("WT", lit(1L)).as("n1"), gi("WT", col("k")).as("s1"),
-      gi("WT", col("k") * col("k")).as("ss1"),
-      gi("MUT", lit(1L)).as("n2"), gi("MUT", col("k")).as("s2"),
-      gi("MUT", col("k") * col("k")).as("ss2"))
-    def d2(c: String) = col(c).cast("double")
-    val v1 = (d2("ss1") - d2("s1") * d2("s1") / d2("n1")) / (d2("n1") - 1.0)
-    val v2 = (d2("ss2") - d2("s2") * d2("s2") / d2("n2")) / (d2("n2") - 1.0)
-    m.filter(col("n1") >= 3 && col("n2") >= 3)
-      .withColumn("se1", v1 / d2("n1")).withColumn("se2", v2 / d2("n2"))
+  private[graft] def welchT(s: org.apache.spark.sql.SparkSession, d: String) =
+    groupMoments(Tables.betaGrid(s, d))
+      .withColumn("se1", seSq("1")).withColumn("se2", seSq("2"))
       .withColumn("se", col("se1") + col("se2"))
       .filter(col("se") > 0.0)
       .select(col("probe_id"), col("n1"), col("n2"),
-        ((d2("s1") / d2("n1") - d2("s2") / d2("n2")) / 997.0).as("delta_beta"),
+        (meanDiff("1", "2") / 997.0).as("delta_beta"),
         (sqrt(col("se")) / 997.0).as("se_beta"),
-        ((d2("s1") / d2("n1") - d2("s2") / d2("n2")) / sqrt(col("se"))).as("t"),
+        (meanDiff("1", "2") / sqrt(col("se"))).as("t"),
         ((col("se") * col("se"))
           / (col("se1") * col("se1") / (d2("n1") - 1.0)
             + col("se2") * col("se2") / (d2("n2") - 1.0))).as("df"))
-  }
 
   /** Shared K18 statistic pass: Brown–Forsythe (median-centered Levene)
     * across the three instrument runs. Exact per-(probe,run) median on the
     * 0..996 grid (x.0/x.5 ⇒ |2k − 2·med| is an exact integer in doubled
-    * units), then the k13 one-way-F sequence on those integer deviations.
+    * units), then [[oneWayAnova]] on those integer deviations.
     * Unrounded output `(probe_id, n, df1, df2, bf_f)`.
     */
   private[graft] def brownForsythe(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val bg = Tables.betaLong(s, d)
-      .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-      .withColumn("k", round(col("beta") * 997).cast("bigint"))
-      .select("probe_id", "run", "k")
+    val bg = Tables.betaGrid(s, d).select("probe_id", "run", "k")
     val med = bg.groupBy("probe_id", "run")
       .agg(expr("percentile(k, 0.5)").as("med"))
     val z = bg.join(med, Seq("probe_id", "run"))
       .withColumn("z2",
         abs(col("k") * 2 - round(col("med") * 2).cast("bigint")))
-    def ni(r: Int) = sum(when(col("run") === s"run_$r", 1L).otherwise(0L))
-    def si(r: Int) = sum(when(col("run") === s"run_$r", col("z2")).otherwise(0L))
-    val m = z.groupBy("probe_id").agg(
-      count(lit(1)).as("n"), sum("z2").as("sz"),
-      sum(col("z2") * col("z2")).as("szz"),
-      ni(0).as("n0"), ni(1).as("n1"), ni(2).as("n2"),
-      si(0).as("s0"), si(1).as("s1"), si(2).as("s2"))
-    def d2(c: String) = col(c).cast("double")
-    val grand = d2("sz") * d2("sz") / d2("n")
-    val ssb = (d2("s0") * d2("s0") / d2("n0")
-      + d2("s1") * d2("s1") / d2("n1")
-      + d2("s2") * d2("s2") / d2("n2")) - grand
-    val sst = d2("szz") - grand
-    m.filter(col("n0") >= 2 && col("n1") >= 2 && col("n2") >= 2)
-      .withColumn("ssb", ssb).withColumn("ssw", sst - col("ssb"))
-      .filter(col("ssw") > 0.0)
-      .select(col("probe_id"), col("n"), lit(2L).as("df1"),
-        (col("n") - lit(3L)).as("df2"),
-        ((col("ssb") / 2.0) / (col("ssw") / (d2("n") - 3.0))).as("bf_f"))
+    oneWayAnova(levelMoments(z, Seq("probe_id"), col("z2"), runLevels))
+      .select(col("probe_id"), col("n"), col("df1"), col("df2"), col("f").as("bf_f"))
+  }
+
+  /** Tie-cell rank moments shared by K20 (omnibus) and K37 (post-hoc):
+    * `(probe_id, ncells, n0..n2, r0_2..r2_2, ties)` with ri_2 = the
+    * group's DOUBLED pooled rank sum (exact bigint) and ties = Σ(t³−t).
+    */
+  private[graft] def kwMoments(s: org.apache.spark.sql.SparkSession, d: String) = {
+    import org.apache.spark.sql.expressions.Window
+    // per-run counts of each (probe, beta) tie cell
+    val cells = levelMoments(Tables.betaGrid(s, d), Seq("probe_id", "beta"), col("k"), runLevels)
+      .withColumn("t", col("n0") + col("n1") + col("n2"))
+    val w = Window.partitionBy("probe_id").orderBy("beta")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ranked = cells.withColumn("cum", sum("t").over(w))
+      // doubled average rank of every member of this tie cell
+      .withColumn("dr", col("cum") * 2 - (col("t") - 1))
+    ranked.groupBy("probe_id").agg(
+      count(lit(1)).as("ncells"),
+      sum("n0").as("n0"), sum("n1").as("n1"), sum("n2").as("n2"),
+      sum(col("n0") * col("dr")).as("r0_2"),
+      sum(col("n1") * col("dr")).as("r1_2"),
+      sum(col("n2") * col("dr")).as("r2_2"),
+      sum(col("t") * col("t") * col("t") - col("t")).as("ties"))
   }
 
   /** Shared K20 statistic pass: Kruskal–Wallis H across the three
@@ -96,36 +173,8 @@ object QueriesStats {
     * 3/(N(N+1))·ΣRi_2²/ni. Tie correction 1 − Σ(t³−t)/(N³−N). Unrounded
     * output `(probe_id, n, n0, n1, n2, h)`.
     */
-  /** Tie-cell rank moments shared by K20 (omnibus) and K37 (post-hoc):
-    * `(probe_id, ncells, n0..n2, r0_2..r2_2, ties)` with ri_2 = the
-    * group's DOUBLED pooled rank sum (exact bigint) and ties = Σ(t³−t).
-    */
-  private[graft] def kwMoments(s: org.apache.spark.sql.SparkSession, d: String) = {
-    import org.apache.spark.sql.expressions.Window
-    val bg = Tables.betaLong(s, d)
-      .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-      .select("probe_id", "run", "beta")
-    def ci(r: Int) = sum(when(col("run") === s"run_$r", 1L).otherwise(0L))
-    val cells = bg.groupBy("probe_id", "beta")
-      .agg(ci(0).as("c0"), ci(1).as("c1"), ci(2).as("c2"))
-      .withColumn("t", col("c0") + col("c1") + col("c2"))
-    val w = Window.partitionBy("probe_id").orderBy("beta")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = cells.withColumn("cum", sum("t").over(w))
-      // doubled average rank of every member of this tie cell
-      .withColumn("dr", col("cum") * 2 - (col("t") - 1))
-    ranked.groupBy("probe_id").agg(
-      count(lit(1)).as("ncells"),
-      sum("c0").as("n0"), sum("c1").as("n1"), sum("c2").as("n2"),
-      sum(col("c0") * col("dr")).as("r0_2"),
-      sum(col("c1") * col("dr")).as("r1_2"),
-      sum(col("c2") * col("dr")).as("r2_2"),
-      sum(col("t") * col("t") * col("t") - col("t")).as("ties"))
-  }
-
   private[graft] def kruskalWallis(s: org.apache.spark.sql.SparkSession, d: String) = {
     val a = kwMoments(s, d)
-    def d2(c: String) = col(c).cast("double")
     val n = d2("n0") + d2("n1") + d2("n2")
     val hRaw = lit(3.0) / (n * (n + 1.0)) *
       (d2("r0_2") * d2("r0_2") / d2("n0")
@@ -154,7 +203,6 @@ object QueriesStats {
         col("ncells") > 1)
     def pick(idx: org.apache.spark.sql.Column, c0: String, c1: String, c2: String) =
       when(idx === 0, col(c0)).when(idx === 1, col(c1)).otherwise(col(c2))
-    def d2(c: org.apache.spark.sql.Column) = c.cast("double")
     val j = a.crossJoin(broadcast(pairs))
       .withColumn("ni", pick(col("gi"), "n0", "n1", "n2"))
       .withColumn("nj", pick(col("gj"), "n0", "n1", "n2"))
@@ -182,14 +230,11 @@ object QueriesStats {
     * sequence is identical). Unrounded `(probe_id, n, skew, kurt, jb)`.
     */
   private[graft] def jarqueBera(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val bk = Tables.betaLong(s, d)
-      .withColumn("k", round(col("beta") * 997).cast("bigint"))
-    val m = bk.groupBy("probe_id").agg(
+    val m = Tables.betaLong(s, d).withColumn("k", Fns.betaK).groupBy("probe_id").agg(
       count(lit(1)).as("n"), sum("k").as("s1"),
       sum(col("k") * col("k")).as("s2"),
       sum(col("k") * col("k") * col("k")).as("s3"),
       sum(col("k") * col("k") * col("k") * col("k")).as("s4"))
-    def d2(c: String) = col(c).cast("double")
     val mu = d2("s1") / d2("n")
     val e2 = d2("s2") / d2("n")
     val e3 = d2("s3") / d2("n")
@@ -213,9 +258,7 @@ object QueriesStats {
     * corrected z. Unrounded `(probe_id, n, s_stat, z)`.
     */
   private[graft] def mannKendall(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val bk = Tables.betaLong(s, d)
-      .withColumn("k", round(col("beta") * 997).cast("bigint"))
-      .select("probe_id", "sample_id", "k")
+    val bk = Tables.betaLong(s, d).select(col("probe_id"), col("sample_id"), Fns.betaK.as("k"))
     val pairs = bk.as("a").join(bk.as("b"),
         col("a.probe_id") === col("b.probe_id") &&
           col("a.sample_id") < col("b.sample_id"))
@@ -225,7 +268,6 @@ object QueriesStats {
       .groupBy("probe_id")
       .agg(sum(col("t") * (col("t") - 1) * (col("t") * 2 + 5)).as("tsum"),
         sum("t").as("n"))
-    def d2(c: String) = col(c).cast("double")
     pairs.join(ties, "probe_id")
       .withColumn("var_s",
         (d2("n") * (d2("n") - 1.0) * (d2("n") * 2.0 + 5.0) - d2("tsum")) / 18.0)
@@ -237,14 +279,31 @@ object QueriesStats {
       .select(col("probe_id"), col("n"), col("s_stat"), col("z"))
   }
 
-  /** Shared K13 statistic pass: per-probe one-way ANOVA across the three
-    * instrument runs in ONE hash aggregate — run-conditional integer
-    * moments (beta scaled to its exact 0..996 grid, the k08 trick), then
-    * SSB/SSW as a fixed double sequence over the pivoted run columns (no
-    * data-dependent summation order → bit-reproducible). Unrounded output
-    * `(probe_id, n, ssb, ssw, df1, df2, f)`; k13_anova_f rounds it for the
-    * oracle, k13_anova_inference feeds `f` to `graft_f_sf`.
+  /** QC failure × `x` 2×2 counts per `keys` group (Nil: one table over
+    * all samples). A sample fails when its mean detection p is ≥ 0.05,
+    * compared exactly on detp's j/1010 grid. a = fail∧x, b = fail∧¬x,
+    * c = ¬fail∧x, dd = ¬fail∧¬x, with margins r1, r2, c1, c2 and n. k29
+    * and k32 test it.
     */
+  private def failTable(s: org.apache.spark.sql.SparkSession, d: String, keys: Seq[String],
+                        x: Column) = {
+    def cnt(c: Column) = sum(when(c, 1L).otherwise(0L))
+    Tables.detpLong(s, d)
+      .withColumn("k", round(col("pval") * 1010).cast("bigint"))
+      .groupBy("sample_id").agg(sum("k").as("sk"), count(lit(1)).as("nn"))
+      .withColumn("fail", col("sk") * 20 >= col("nn") * 1010)
+      .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
+      .withColumn("x", x)
+      .groupBy(keys.map(col): _*).agg(
+        cnt(col("fail") && col("x")).as("a"), cnt(col("fail") && !col("x")).as("b"),
+        cnt(!col("fail") && col("x")).as("c"), cnt(!col("fail") && !col("x")).as("dd"))
+      .withColumn("r1", col("a") + col("b"))
+      .withColumn("r2", col("c") + col("dd"))
+      .withColumn("c1", col("a") + col("c"))
+      .withColumn("c2", col("b") + col("dd"))
+      .withColumn("n", col("r1") + col("r2"))
+  }
+
   /** Shared K32 statistic pass: Cochran–Mantel–Haenszel over the
     * run-stratified QC-failure × group 2×2 tables. One bounded aggregate
     * per stratum, hypergeometric E and V per stratum, the continuity-
@@ -255,24 +314,8 @@ object QueriesStats {
     */
   private[graft] def cmhTest(s: org.apache.spark.sql.SparkSession, d: String) = {
     import org.apache.spark.sql.expressions.Window
-    val qc = Tables.detpLong(s, d)
-      .withColumn("k", round(col("pval") * 1010).cast("bigint"))
-      .groupBy("sample_id").agg(sum("k").as("sk"), count(lit(1)).as("nn"))
-      .withColumn("fail", col("sk") * 20 >= col("nn") * 1010)
-      .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-      .withColumn("wt", col("group") === "WT")
-    val strata = qc.groupBy("run").agg(
-        sum(when(col("fail") && col("wt"), 1L).otherwise(0L)).as("a"),
-        sum(when(col("fail") && !col("wt"), 1L).otherwise(0L)).as("b"),
-        sum(when(!col("fail") && col("wt"), 1L).otherwise(0L)).as("c"),
-        sum(when(!col("fail") && !col("wt"), 1L).otherwise(0L)).as("dd"))
-      .withColumn("r1", col("a") + col("b"))
-      .withColumn("r2", col("c") + col("dd"))
-      .withColumn("c1", col("a") + col("c"))
-      .withColumn("c2", col("b") + col("dd"))
-      .withColumn("n", col("r1") + col("r2"))
+    val strata = failTable(s, d, Seq("run"), col("group") === "WT")
       .filter(col("n") > 1)
-    def d2(c: String) = col(c).cast("double")
     val wRun = Window.orderBy("run")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.orderBy("run")
@@ -826,29 +869,38 @@ object QueriesStats {
 
   private val welchChainSql: String = welchChain("")
 
-  private def anovaF(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val bg = Tables.betaLong(s, d)
-      .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-      .withColumn("k", round(col("beta") * 997).cast("bigint"))
-    def ni(r: Int) = sum(when(col("run") === s"run_$r", 1L).otherwise(0L))
-    def si(r: Int) = sum(when(col("run") === s"run_$r", col("k")).otherwise(0L))
-    val m = bg.groupBy("probe_id").agg(
-      count(lit(1)).as("n"), sum("k").as("s"), sum(col("k") * col("k")).as("ss"),
-      ni(0).as("n0"), ni(1).as("n1"), ni(2).as("n2"),
-      si(0).as("s0"), si(1).as("s1"), si(2).as("s2"))
-    def d2(c: String) = col(c).cast("double")
+  /** One-way ANOVA across the three runs over [[levelMoments]] by
+    * [[runLevels]]: keeps probes with at least 2 values per run and a
+    * positive within-run sum of squares, and adds `ssb`, `ssw`, `df1` = 2,
+    * `df2` = n − 3 and `f`. k13 runs it on the beta grid, k18 on the
+    * Brown–Forsythe deviations, and k39 reads its sums of squares.
+    */
+  private def oneWayAnova(m: DataFrame) = {
     val grand = d2("s") * d2("s") / d2("n")
     val ssb = (d2("s0") * d2("s0") / d2("n0")
       + d2("s1") * d2("s1") / d2("n1")
       + d2("s2") * d2("s2") / d2("n2")) - grand
-    val sst = d2("ss") - grand
     m.filter(col("n0") >= 2 && col("n1") >= 2 && col("n2") >= 2)
-      .withColumn("ssb", ssb).withColumn("ssw", sst - col("ssb"))
+      .withColumn("ssb", ssb).withColumn("ssw", d2("ss") - grand - col("ssb"))
       .filter(col("ssw") > 0.0)
-      .select(col("probe_id"), col("n"), col("ssb"), col("ssw"),
-        lit(2L).as("df1"), (col("n") - lit(3L)).as("df2"),
-        ((col("ssb") / 2.0) / (col("ssw") / (d2("n") - 3.0))).as("f"))
+      .withColumn("df1", lit(2L)).withColumn("df2", col("n") - lit(3L))
+      .withColumn("f", (col("ssb") / 2.0) / (col("ssw") / (d2("n") - 3.0)))
   }
+
+  /** k13's run moments of the beta grid, through [[oneWayAnova]]. */
+  private def anovaSs(s: org.apache.spark.sql.SparkSession, d: String) =
+    oneWayAnova(levelMoments(Tables.betaGrid(s, d), Seq("probe_id"), col("k"), runLevels))
+
+  /** Shared K13 statistic pass: per-probe one-way ANOVA across the three
+    * instrument runs in ONE hash aggregate — run-conditional integer
+    * moments (beta scaled to its exact 0..996 grid, the k08 trick), then
+    * SSB/SSW as a fixed double sequence over the pivoted run columns (no
+    * data-dependent summation order → bit-reproducible). Unrounded output
+    * `(probe_id, n, ssb, ssw, df1, df2, f)`; k13_anova_f rounds it for the
+    * oracle, k13_anova_inference feeds `f` to `graft_f_sf`.
+    */
+  private[graft] def anovaF(s: org.apache.spark.sql.SparkSession, d: String) =
+    anovaSs(s, d).select("probe_id", "n", "ssb", "ssw", "df1", "df2", "f")
 
   /** Shared K38 statistic pass: DerSimonian–Laird random-effects
     * meta-analysis of the WT−MUT effect ACROSS the three instrument runs
@@ -861,29 +913,11 @@ object QueriesStats {
     * `(probe_id, y_fe, q, tau2, y_re, se_re)` in 0..996 grid units.
     */
   private[graft] def randomEffects(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val bg = Tables.betaLong(s, d)
-      .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-      .withColumn("k", round(col("beta") * 997).cast("bigint"))
-    def cs(r: Int, g: String, e: org.apache.spark.sql.Column) =
-      sum(when(col("run") === s"run_$r" && col("group") === g, e).otherwise(0L))
-    val aggs = (0 to 2).flatMap { r =>
-      Seq(cs(r, "WT", lit(1L)).as(s"n1_$r"), cs(r, "WT", col("k")).as(s"s1_$r"),
-        cs(r, "WT", col("k") * col("k")).as(s"ss1_$r"),
-        cs(r, "MUT", lit(1L)).as(s"n2_$r"), cs(r, "MUT", col("k")).as(s"s2_$r"),
-        cs(r, "MUT", col("k") * col("k")).as(s"ss2_$r"))
-    }
-    val m = bg.groupBy("probe_id").agg(aggs.head, aggs.tail: _*)
+    val m = levelMoments(Tables.betaGrid(s, d), Seq("probe_id"), col("k"), runGroupLevels)
       .filter((0 to 2).map(r =>
         col(s"n1_$r") >= 2 && col(s"n2_$r") >= 2).reduce(_ && _))
-    def d2(c: String) = col(c).cast("double")
-    def y(r: Int) = d2(s"s1_$r") / d2(s"n1_$r") - d2(s"s2_$r") / d2(s"n2_$r")
-    def v(r: Int) = {
-      val v1 = (d2(s"ss1_$r") - d2(s"s1_$r") * d2(s"s1_$r") / d2(s"n1_$r")) /
-        (d2(s"n1_$r") - 1.0)
-      val v2 = (d2(s"ss2_$r") - d2(s"s2_$r") * d2(s"s2_$r") / d2(s"n2_$r")) /
-        (d2(s"n2_$r") - 1.0)
-      v1 / d2(s"n1_$r") + v2 / d2(s"n2_$r")
-    }
+    def y(r: Int) = meanDiff(s"1_$r", s"2_$r")
+    def v(r: Int) = seSq(s"1_$r") + seSq(s"2_$r")
     val withYV = m
       .withColumn("y0", y(0)).withColumn("y1", y(1)).withColumn("y2", y(2))
       .withColumn("v0", v(0)).withColumn("v1", v(1)).withColumn("v2", v(2))
@@ -1038,9 +1072,7 @@ object QueriesStats {
     // K3 pass 1 — per-probe two-group M-value moments, pooled variance,
     // logFC (reference lmFit/topTable inputs, /root/reference/plots.R:130-159).
     Q("k03_dmp_pass1", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-      Dmp.moments(bg, "WT", "MUT")
+      Dmp.moments(Tables.betaGrid(s, d), "WT", "MUT")
         .select(col("probe_id"), col("n1"), col("n2"),
           round(col("logfc"), 4).as("logfc"),
           round(col("s2"), 4).as("s2_pooled"))
@@ -1082,15 +1114,9 @@ object QueriesStats {
     // (d0, s0²) agree to ~1e-12 (aggregate moments + bisection width),
     // far inside the round-6 comparison.
     Q("k03_dmp_moderated", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-      Dmp.dmp(bg, "WT", "MUT")
-        .select(col("probe_id"), col("n1"), col("n2"),
-          round(col("logfc"), 6).as("logfc"),
-          round(col("t_mod"), 6).as("t_mod"),
-          round(col("p_value"), 6).as("p_value"),
-          round(col("fdr"), 6).as("fdr"),
-          col("significant"))
+      Dmp.dmp(Tables.betaGrid(s, d), "WT", "MUT")
+        .select(col("probe_id"), col("n1"), col("n2"), r6("logfc"), r6("t_mod"), r6("p_value"),
+          r6("fdr"), col("significant"))
         .orderBy("probe_id")
     }, Some(ctes.replaceFirst("WITH ", "WITH RECURSIVE ") + dmpMomSql +
       dmpModeratedTailSql + "\n" +
@@ -1104,13 +1130,11 @@ object QueriesStats {
     // volcano.R:117-166): moderated stats + delta-beta + -log10(p) +
     // sigUp/sigDown/notSig partition (SO4 rbind restated as a tag column).
     Q("k03_volcano_table", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
       // delta_beta rides the moments aggregate (Dmp.dmp extraAggs, r9) —
       // the separate groupBy + probe-keyed join-back cost a second full
       // pass over the joined betas; same groups, same avg, so the value
       // (and the oracle's separate-CTE replay) is unchanged
-      Dmp.dmp(bg, "WT", "MUT", extraAggs = Seq(
+      Dmp.dmp(Tables.betaGrid(s, d), "WT", "MUT", extraAggs = Seq(
           (avg(when(col("group") === "WT", col("beta"))) -
             avg(when(col("group") === "MUT", col("beta")))).as("delta_beta")))
         .withColumn("neg_log10_p", Fns.negLog10(col("p_value")))
@@ -1118,10 +1142,8 @@ object QueriesStats {
           when(col("significant") && col("logfc") > 0, "sigUp")
             .when(col("significant") && col("logfc") < 0, "sigDown")
             .otherwise("notSig"))
-        .select(col("probe_id"), round(col("logfc"), 6).as("logfc"),
-          round(col("delta_beta"), 6).as("delta_beta"),
-          round(col("neg_log10_p"), 6).as("neg_log10_p"),
-          round(col("fdr"), 6).as("fdr"), col("category"))
+        .select(col("probe_id"), r6("logfc"), r6("delta_beta"), r6("neg_log10_p"),
+          r6("fdr"), col("category"))
         .orderBy("probe_id")
     }, Some(ctes.replaceFirst("WITH ", "WITH RECURSIVE ") + dmpMomSql +
       dmpModeratedTailSql +
@@ -1147,8 +1169,7 @@ object QueriesStats {
     // extra grouping column (reference 16-contrast variant,
     // Mouse_Microarray_General_Workflow.R:113-146).
     Q("k03_dmp_multicontrast", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
+      val bg = Tables.betaGrid(s, d)
         .withColumn("group", concat_ws("_", col("group"), col("run")))
       val contrasts = Seq(
         ("c_run0", "WT_run_0", "MUT_run_0"),
@@ -1195,20 +1216,15 @@ object QueriesStats {
     // contrast (bhTailBy). DmpSpec additionally asserts each contrast's
     // prior matches the single-contrast fit on that slice.
     Q("k03_dmp_multicontrast_moderated", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
+      val bg = Tables.betaGrid(s, d)
         .withColumn("group", concat_ws("_", col("group"), col("run")))
       val contrasts = Seq(
         ("c_run0", "WT_run_0", "MUT_run_0"),
         ("c_run1", "WT_run_1", "MUT_run_1"),
         ("c_run2", "WT_run_2", "MUT_run_2"))
       Dmp.multiContrastModerated(bg, contrasts)
-        .select(col("comparison_id"), col("probe_id"), col("n1"), col("n2"),
-          round(col("logfc"), 6).as("logfc"),
-          round(col("t_mod"), 6).as("t_mod"),
-          round(col("p_value"), 6).as("p_value"),
-          round(col("fdr"), 6).as("fdr"),
-          col("significant"))
+        .select(col("comparison_id"), col("probe_id"), col("n1"), col("n2"), r6("logfc"),
+          r6("t_mod"), r6("p_value"), r6("fdr"), col("significant"))
         .orderBy("comparison_id", "probe_id")
     }, Some(ctes.replaceFirst("WITH ", "WITH RECURSIVE ") +
       s""", dmc_bgx AS (
@@ -1291,7 +1307,7 @@ object QueriesStats {
         .select("probe_id", "sample_id", "m")
       Combat.combat(m, Tables.sampleSheet(s, d))
         .select(col("probe_id"), col("sample_id"), col("run"), col("group"),
-          round(col("m"), 6).as("m"), round(col("m_adj"), 6).as("m_adj"))
+          r6("m"), r6("m_adj"))
         .orderBy("probe_id", "sample_id")
     }, None),
 
@@ -1313,9 +1329,7 @@ object QueriesStats {
             .otherwise("file3_4").as("batch"))
       Combat.combatBetas(Tables.betaLong(s, d), broadcast(batchOf),
           minCoverage = 0.30)
-        .select(col("probe_id"), col("sample_id"), col("batch"),
-          round(col("beta"), 6).as("beta"),
-          round(col("beta_adj"), 6).as("beta_adj"))
+        .select(col("probe_id"), col("sample_id"), col("batch"), r6("beta"), r6("beta_adj"))
         .orderBy("probe_id", "sample_id")
     }, None),
 
@@ -1343,11 +1357,8 @@ object QueriesStats {
       val m = b.join(keep, Seq("probe_id"), "left_semi")
         .select(col("probe_id"), col("sample_id"), col("beta").as("m"))
       Combat.standStats(m, sheet)
-        .select(col("probe_id"), col("batch"),
-          round(col("stand_mean"), 6).as("stand_mean"),
-          round(col("var_pooled"), 6).as("var_pooled"),
-          round(col("gamma_hat"), 6).as("gamma_hat"),
-          round(col("delta2_hat"), 6).as("delta2_hat"))
+        .select(col("probe_id"), col("batch"), r6("stand_mean"), r6("var_pooled"),
+          r6("gamma_hat"), r6("delta2_hat"))
         .orderBy("probe_id", "batch")
     }, Some(ctes +
       """, batchof AS (
@@ -1402,9 +1413,8 @@ object QueriesStats {
     // BmiqSpec asserts identity-on-type-I / range / guard invariants.
     Q("k06_bmiq_normalize", (s, d) =>
       Bmiq.bmiq(Tables.betaLong(s, d), Tables.probeManifest(s, d))
-        .select(col("probe_id"), col("sample_id"),
-          round(col("beta"), 6).as("beta"),
-          round(col("beta_norm"), 6).as("beta_norm"), col("design_type"))
+        .select(col("probe_id"), col("sample_id"), r6("beta"),
+          r6("beta_norm"), col("design_type"))
         .orderBy("probe_id", "sample_id"),
       None),
 
@@ -1419,9 +1429,7 @@ object QueriesStats {
     Q("k06_bmiq_type1", (s, d) =>
       Bmiq.bmiq(Tables.betaLong(s, d), Tables.probeManifest(s, d))
         .filter(col("design_type") === 1)
-        .select(col("probe_id"), col("sample_id"),
-          round(col("beta"), 6).as("beta"),
-          round(col("beta_norm"), 6).as("beta_norm"))
+        .select(col("probe_id"), col("sample_id"), r6("beta"), r6("beta_norm"))
         .orderBy("probe_id", "sample_id"),
       Some(ctes +
         """SELECT b.probe_id, b.sample_id,
@@ -1438,8 +1446,7 @@ object QueriesStats {
       graft.ops.QuantileNorm
         .normalizeBinned(Tables.betaLong(s, d), "probe_id", "sample_id",
           "beta", bins = 100, denom = 997)
-        .select(col("probe_id"), col("sample_id"), col("beta"),
-          round(col("p"), 6).as("p"), col("qn_value"))
+        .select(col("probe_id"), col("sample_id"), col("beta"), r6("p"), col("qn_value"))
         .orderBy("probe_id", "sample_id"),
       Some(ctes +
         s""", ranked AS (
@@ -1470,19 +1477,11 @@ object QueriesStats {
     // aggregate is bit-checkable — the iterative eigen step stays
     // spec-only, but its input no longer is. Scale shape: equi-join on
     // probe_id, output bounded by samples² (samples are the bounded axis).
-    Q("k08_sample_distance_matrix", (s, d) => {
-      val b = Tables.betaLong(s, d).select(col("probe_id"),
-        col("sample_id"), round(col("beta") * 997).cast("bigint").as("k"))
-      val l = b.select(col("probe_id"), col("sample_id").as("sa"), col("k").as("ka"))
-      val r = b.select(col("probe_id"), col("sample_id").as("sb"), col("k").as("kb"))
-      l.join(r, "probe_id").filter(col("sa") < col("sb"))
-        .groupBy("sa", "sb")
-        .agg(count(lit(1)).as("n_shared"),
-          sum((col("ka") - col("kb")) * (col("ka") - col("kb"))).as("d2_num"))
-        .withColumn("d2", col("d2_num").cast("double")
-          / (lit(994009.0) * col("n_shared").cast("double")))
-        .orderBy("sa", "sb")
-    }, Some(ctes +
+    Q("k08_sample_distance_matrix", (s, d) =>
+      Hclust.sampleDistances(Tables.betaLong(s, d)
+          .select(col("probe_id"), col("sample_id"), Fns.betaK.as("k")))
+        .orderBy("sa", "sb"),
+    Some(ctes +
       s""", kb AS (
          |  SELECT probe_id, sample_id, CAST(round(beta * 997) AS BIGINT) AS k
          |  FROM beta)
@@ -1507,8 +1506,8 @@ object QueriesStats {
     // equi-join bounded by samples² (the bounded axis) + a samples-sized
     // centering join — nothing grows with probes beyond the k08 join.
     Q("k02_mds_gram", (s, d) => {
-      val bk0 = Tables.betaLong(s, d).select(col("probe_id"),
-        col("sample_id"), round(col("beta") * 997).cast("bigint").as("k"))
+      val bk0 = Tables.betaLong(s, d)
+        .select(col("probe_id"), col("sample_id"), Fns.betaK.as("k"))
       // the kernel's top-100-variance probe filter (k02_mds_coords passes
       // topK = 100), ranked here by exact integer moments (the k09 fixed
       // double sequence) so Spark and DuckDB select the identical set.
@@ -1517,29 +1516,12 @@ object QueriesStats {
       // could flip under float summation; PcaMdsSpec asserts the two
       // selections coincide on the fixture, so the "only the eigensolve
       // stays spec-only" claim is checked rather than assumed
-      val top = bk0.groupBy("probe_id")
-        .agg(count(lit(1)).as("n"), sum("k").as("s"),
-          sum(col("k") * col("k")).as("ss"))
-        .filter(col("n") >= 2)
-        .select(col("probe_id"),
-          Fns.varFromMoments(col("n"), col("s"), col("ss")).as("v"))
-        .orderBy(col("v").desc, col("probe_id").asc)
-        .limit(100).select("probe_id")
-      val bk = bk0.join(broadcast(top), "probe_id")
-      val l = bk.select(col("probe_id"), col("sample_id").as("sa"), col("k").as("ka"))
-      val r = bk.select(col("probe_id"), col("sample_id").as("sb"), col("k").as("kb"))
+      val bk = bk0.join(broadcast(topVarianceProbes(bk0, 100)), "probe_id")
       // pairs persists FIRST (the CC/graph r9 fix): materializing the
       // two-orientation union directly would run the expansion join once
       // per union branch
       val pairs = graft.ops.Caches.track(
-        l.join(r, "probe_id").filter(col("sa") < col("sb"))
-          .groupBy("sa", "sb")
-          .agg(count(lit(1)).as("n_shared"),
-            sum((col("ka") - col("kb")) * (col("ka") - col("kb"))).as("d2_num"))
-          .withColumn("d2", col("d2_num").cast("double")
-            / (lit(994009.0) * col("n_shared").cast("double")))
-          .select("sa", "sb", "d2")
-          .persist())
+        Hclust.sampleDistances(bk).select("sa", "sb", "d2").persist())
       val sym = graft.ops.Caches.track(pairs
         .unionByName(pairs.select(col("sb").as("sa"), col("sa").as("sb"),
           col("d2")))
@@ -1617,17 +1599,9 @@ object QueriesStats {
     // samples observing BOTH probes (the long-model restatement of the
     // dense matrix's complete columns).
     Q("k09_probe_covariance", (s, d) => {
-      val bk = Tables.betaLong(s, d).select(col("probe_id"),
-        col("sample_id"), round(col("beta") * 997).cast("bigint").as("k"))
-      val top = bk.groupBy("probe_id")
-        .agg(count(lit(1)).as("n"), sum("k").as("s"),
-          sum(col("k") * col("k")).as("ss"))
-        .filter(col("n") >= 2)
-        .select(col("probe_id"),
-          Fns.varFromMoments(col("n"), col("s"), col("ss")).as("v"))
-        .orderBy(col("v").desc, col("probe_id").asc)
-        .limit(20).select("probe_id")
-      val t = bk.join(broadcast(top), "probe_id")
+      val bk = Tables.betaLong(s, d)
+        .select(col("probe_id"), col("sample_id"), Fns.betaK.as("k"))
+      val t = bk.join(broadcast(topVarianceProbes(bk, 20)), "probe_id")
       val a = t.select(col("probe_id").as("pa"), col("sample_id"), col("k").as("ka"))
       val b = t.select(col("probe_id").as("pb"), col("sample_id"), col("k").as("kb"))
       a.join(b, "sample_id").filter(col("pa") <= col("pb"))
@@ -1671,12 +1645,10 @@ object QueriesStats {
     // windows/aggregates on the per-probe cell table; U exact by integer
     // half-rank units, tie-corrected z a fixed double sequence.
     Q("k10_ranksum_dmp", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
+      val bg = Tables.betaGrid(s, d)
       Analytic.mannWhitney(bg, "probe_id", "beta", "group", "WT", "MUT")
         .filter(col("n1") >= 3 && col("n2") >= 3)
-        .select(col("probe_id"), col("n1"), col("n2"), col("u1"),
-          round(col("z"), 6).as("z"))
+        .select(col("probe_id"), col("n1"), col("n2"), col("u1"), r6("z"))
         .orderBy("probe_id")
     }, Some(ctes + mwChainSql + "\n" +
       """SELECT probe_id, n1, n2, u1, round(z, 6) AS z
@@ -1691,15 +1663,13 @@ object QueriesStats {
     // feeding it is the shared mwChainSql statistic, verbatim from k10's
     // own oracle.
     Q("k10_ranksum_inference", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
+      val bg = Tables.betaGrid(s, d)
       val stats = Analytic.mannWhitney(bg, "probe_id", "beta", "group", "WT", "MUT")
         .filter(col("n1") >= 3 && col("n2") >= 3)
         .withColumn("p_value", expr("graft_chisq_sf(z * z, 1.0)"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
-        .select(col("probe_id"), col("n1"), col("n2"), col("u1"),
-          round(col("z"), 6).as("z"), round(col("p_value"), 6).as("p_value"),
-          round(col("fdr"), 6).as("fdr"))
+        .select(col("probe_id"), col("n1"), col("n2"), col("u1"), r6("z"), r6("p_value"),
+          r6("fdr"))
         .orderBy("probe_id")
     }, Some(ctes + mwChainSql +
       """,
@@ -1718,12 +1688,11 @@ object QueriesStats {
     // location test misses — the distributional QC companion to k10).
     // Same cell+window shape; D exact via the integer gap |cum1·n2−cum2·n1|.
     Q("k11_ks_dmp", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
+      val bg = Tables.betaGrid(s, d)
       Analytic.ksTest(bg, "probe_id", "beta", "group", "WT", "MUT")
         .filter(col("n1") >= 3 && col("n2") >= 3)
         .select(col("probe_id"), col("n1"), col("n2"),
-          round(col("d"), 9).as("d"), round(col("ks_stat"), 6).as("ks_stat"))
+          round(col("d"), 9).as("d"), r6("ks_stat"))
         .orderBy("probe_id")
     }, Some(ctes + ksChainSql + "\n" +
       """SELECT probe_id, n1, n2,
@@ -1744,15 +1713,13 @@ object QueriesStats {
     // [0,1] clamp. RankTestSpec asserts the series against commons-math
     // approximateP.
     Q("k11_ks_inference", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
+      val bg = Tables.betaGrid(s, d)
       val stats = Analytic.ksTest(bg, "probe_id", "beta", "group", "WT", "MUT")
         .filter(col("n1") >= 3 && col("n2") >= 3)
         .withColumn("p_value", expr("graft_ks_sf(ks_stat)"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
         .select(col("probe_id"), col("n1"), col("n2"),
-          round(col("d"), 9).as("d"), round(col("ks_stat"), 6).as("ks_stat"),
-          round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
+          round(col("d"), 9).as("d"), r6("ks_stat"), r6("p_value"), r6("fdr"))
         .orderBy("probe_id")
     }, Some(ctes + ksChainSql +
       """,
@@ -1786,8 +1753,7 @@ object QueriesStats {
     // chain definitions k17/k10/k11 use), and the fused χ²(6) survival is
     // the finite even-df series exp(−x/2)·(1 + x/2 + (x/2)²/2).
     Q("k19_fisher_combined", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
+      val bg = Tables.betaGrid(s, d)
       val pWelch = welchT(s, d)
         .select(col("probe_id"), expr("graft_t_pvalue(t, df)").as("p_w"))
       val pRank = Analytic.mannWhitney(bg, "probe_id", "beta", "group", "WT", "MUT")
@@ -1803,10 +1769,8 @@ object QueriesStats {
         .withColumn("x2", lit(-2.0) * (lnp(col("p_w")) + lnp(col("p_r")) + lnp(col("p_k"))))
         .withColumn("p_value", expr("graft_chisq_sf(x2, 6.0)"))
       Analytic.bhAdjust(fused, "p_value", "probe_id")
-        .select(col("probe_id"),
-          round(col("p_w"), 6).as("p_w"), round(col("p_r"), 6).as("p_r"),
-          round(col("p_k"), 6).as("p_k"), round(col("x2"), 6).as("x2"),
-          round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
+        .select(col("probe_id"), r6("p_w"), r6("p_r"), r6("p_k"), r6("x2"),
+          r6("p_value"), r6("fdr"))
         .orderBy("probe_id")
     }, Some(ctes.replaceFirst("WITH ", "WITH RECURSIVE ") +
       welchChain("w_") + mwChain("r_") + ksChain("s_") +
@@ -1861,8 +1825,7 @@ object QueriesStats {
     Q("k12_spearman_corr", (s, d) =>
       Analytic.spearmanMatrix(Tables.betaLong(s, d),
           "probe_id", "sample_id", "beta")
-        .select(col("sa"), col("sb"), col("n_shared"),
-          round(col("rho"), 6).as("rho"))
+        .select(col("sa"), col("sb"), col("n_shared"), r6("rho"))
         .orderBy("sa", "sb"),
     Some(ctes + spearmanChainSql + "\n" +
       """SELECT sa, sb, n_shared, round(rho, 6) AS rho
@@ -1893,9 +1856,8 @@ object QueriesStats {
           expr("graft_t_pvalue(t_stat, CAST(n_shared - 2 AS DOUBLE))"))
         .withColumn("pair", concat(col("sa"), lit("|"), col("sb")))
       Analytic.bhAdjust(stats, "p_value", "pair")
-        .select(col("sa"), col("sb"), col("n_shared"),
-          round(col("rho"), 6).as("rho"), round(col("t_stat"), 6).as("t_stat"),
-          round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
+        .select(col("sa"), col("sb"), col("n_shared"), r6("rho"), r6("t_stat"),
+          r6("p_value"), r6("fdr"))
         .orderBy("sa", "sb")
     }, Some(ctes + spearmanChainSql +
       """,
@@ -1926,8 +1888,7 @@ object QueriesStats {
     Q("k12_spearman_thresholded", (s, d) =>
       Analytic.spearmanThresholded(Tables.betaLong(s, d),
           "probe_id", "sample_id", "beta", tau = 0.25)
-        .select(col("sa"), col("sb"), col("n_shared"),
-          round(col("rho"), 6).as("rho"))
+        .select(col("sa"), col("sb"), col("n_shared"), r6("rho"))
         .orderBy("sa", "sb"),
     Some(ctes +
       """, cells AS (
@@ -2008,9 +1969,8 @@ object QueriesStats {
     // oracle-checked surface, the a23/k10 convention.
     Q("k13_anova_f", (s, d) =>
       anovaF(s, d)
-        .select(col("probe_id"), col("n"),
-          round(col("ssb"), 6).as("ssb"), round(col("ssw"), 6).as("ssw"),
-          col("df1"), col("df2"), round(col("f"), 6).as("f"))
+        .select(col("probe_id"), col("n"), r6("ssb"), r6("ssw"),
+          col("df1"), col("df2"), r6("f"))
         .orderBy("probe_id"),
     Some(ctes + anovaChainSql + "\n" +
       """SELECT probe_id, n, round(ssb, 6) AS ssb, round(sst - ssb, 6) AS ssw,
@@ -2036,9 +1996,8 @@ object QueriesStats {
         .withColumn("p_value",
           expr("graft_f_sf(f, CAST(df1 AS DOUBLE), CAST(df2 AS DOUBLE))"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
-        .select(col("probe_id"), col("n"), col("df1"), col("df2"),
-          round(col("f"), 6).as("f"), round(col("p_value"), 6).as("p_value"),
-          round(col("fdr"), 6).as("fdr"))
+        .select(col("probe_id"), col("n"), col("df1"), col("df2"), r6("f"), r6("p_value"),
+          r6("fdr"))
         .orderBy("probe_id")
     }, Some(ctes + anovaChainSql +
       """,
@@ -2071,18 +2030,8 @@ object QueriesStats {
     // thinned significant set.
     Q("k14_dmr_regions", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-        .withColumn("k", round(col("beta") * 997).cast("bigint"))
-      def d2(c: org.apache.spark.sql.Column) = c.cast("double")
-      val delta = bg.groupBy("probe_id").agg(
-        sum(when(col("group") === "WT", col("k"))).as("s1"),
-        sum(when(col("group") === "MUT", col("k"))).as("s2"),
-        count(when(col("group") === "WT", 1)).as("n1"),
-        count(when(col("group") === "MUT", 1)).as("n2"))
-        .filter(col("n1") >= 3 && col("n2") >= 3)
-        .withColumn("delta_beta",
-          (d2(col("s1")) / d2(col("n1")) - d2(col("s2")) / d2(col("n2"))) / 997.0)
+      val delta = groupMoments(Tables.betaGrid(s, d))
+        .withColumn("delta_beta", meanDiff("1", "2") / 997.0)
         .filter(abs(col("delta_beta")) >= 0.05)
       val sig = delta
         .join(broadcast(Tables.chipAnnotation(s, d)), "probe_id")
@@ -2153,13 +2102,9 @@ object QueriesStats {
     // ONE hash aggregate, one partial row per (sample, partition) on the
     // shuffle, samples the bounded output axis.
     Q("k15_clock_predictor", (s, d) => {
-      val coef = Tables.table(s, d, "part")
-        .filter(col("p_partkey") % 17 === 3)
-        .select(format_string("cg%07d", col("p_partkey")).as("probe_id"),
-          (col("p_partkey") % 13 - 6).cast("long").as("coef_num"))
       Tables.betaLong(s, d)
-        .withColumn("k", round(col("beta") * 997).cast("long"))
-        .join(broadcast(coef), "probe_id")
+        .withColumn("k", Fns.betaK)
+        .join(broadcast(clockPanel(s, d)), "probe_id")
         .groupBy("sample_id")
         .agg(count(lit(1)).as("n_panel"),
           sum(col("k") * col("coef_num")).as("dot"))
@@ -2187,14 +2132,9 @@ object QueriesStats {
     // broadcast profile panel ⋈ long betas → ONE per-sample hash
     // aggregate; samples the bounded output axis (the PCA/MDS posture).
     Q("k16_cell_deconvolution", (s, d) => {
-      val prof = Tables.table(s, d, "part")
-        .select(format_string("cg%07d", col("p_partkey")).as("probe_id"),
-          (col("p_partkey") * 3 % 997).cast("long").as("pa"),
-          (col("p_partkey") * 7 % 997).cast("long").as("pb"))
-        .filter(col("pa") =!= col("pb"))
       Tables.betaLong(s, d)
-        .withColumn("k", round(col("beta") * 997).cast("long"))
-        .join(broadcast(prof), "probe_id")
+        .withColumn("k", Fns.betaK)
+        .join(broadcast(cellProfiles(s, d)), "probe_id")
         .groupBy("sample_id")
         .agg(count(lit(1)).as("n_probes"),
           sum((col("k") - col("pb")) * (col("pa") - col("pb"))).as("num"),
@@ -2240,34 +2180,19 @@ object QueriesStats {
       val qc = graft.ops.Caches.track(Tables.betaLong(s, d)
         .join(goodS, Seq("sample_id"), "left_semi")
         .join(goodP, Seq("probe_id"), "left_semi")
-        .withColumn("k", round(col("beta") * 997).cast("long"))
+        .withColumn("k", Fns.betaK)
         .persist())
       val sheet = broadcast(Tables.sampleSheet(s, d))
       // two-group delta screen (the k14 significance gate) → 1-row scalar
-      val nSig = qc.join(sheet, "sample_id")
-        .groupBy("probe_id")
-        .agg(sum(when(col("group") === "WT", col("k"))).as("s1"),
-          sum(when(col("group") === "MUT", col("k"))).as("s2"),
-          count(when(col("group") === "WT", 1)).as("n1"),
-          count(when(col("group") === "MUT", 1)).as("n2"))
-        .filter(col("n1") >= 3 && col("n2") >= 3)
-        .filter(abs((col("s1").cast("double") / col("n1").cast("double")
-          - col("s2").cast("double") / col("n2").cast("double")) / 997.0) >= 0.05)
+      val nSig = groupMoments(qc.join(sheet, "sample_id"))
+        .filter(abs(meanDiff("1", "2") / 997.0) >= 0.05)
         .agg(count(lit(1)).as("n_sig_probes"))
       // panels on the QC'd betas (k15/k16 over the gated table)
-      val part = Tables.table(s, d, "part")
-      val clock = qc.join(broadcast(part
-          .filter(col("p_partkey") % 17 === 3)
-          .select(format_string("cg%07d", col("p_partkey")).as("probe_id"),
-            (col("p_partkey") % 13 - 6).cast("long").as("coef_num"))), "probe_id")
+      val clock = qc.join(broadcast(clockPanel(s, d)), "probe_id")
         .groupBy("sample_id")
         .agg(round(lit(20.0) +
           sum(col("k") * col("coef_num")).cast("double") / 9970.0, 6).as("age_pred"))
-      val deconv = qc.join(broadcast(part
-          .select(format_string("cg%07d", col("p_partkey")).as("probe_id"),
-            (col("p_partkey") * 3 % 997).cast("long").as("pa"),
-            (col("p_partkey") * 7 % 997).cast("long").as("pb"))
-          .filter(col("pa") =!= col("pb"))), "probe_id")
+      val deconv = qc.join(broadcast(cellProfiles(s, d)), "probe_id")
         .groupBy("sample_id")
         .agg(round(least(lit(1.0), greatest(lit(0.0),
           sum((col("k") - col("pb")) * (col("pa") - col("pb"))).cast("double")
@@ -2376,9 +2301,7 @@ object QueriesStats {
     // fully oracle-checkable.
     Q("k17_welch_dmp", (s, d) =>
       welchT(s, d)
-        .select(col("probe_id"), col("n1"), col("n2"),
-          round(col("delta_beta"), 6).as("delta_beta"),
-          round(col("t"), 6).as("t"), round(col("df"), 6).as("df"))
+        .select(col("probe_id"), col("n1"), col("n2"), r6("delta_beta"), r6("t"), r6("df"))
         .orderBy("probe_id"),
     Some(ctes + welchChainSql + "\n" +
       """SELECT probe_id, n1, n2, round(delta_beta, 6) AS delta_beta,
@@ -2398,8 +2321,7 @@ object QueriesStats {
     // deviation join + moment agg).
     Q("k18_brown_forsythe", (s, d) =>
       brownForsythe(s, d)
-        .select(col("probe_id"), col("n"), col("df1"), col("df2"),
-          round(col("bf_f"), 6).as("bf_f"))
+        .select(col("probe_id"), col("n"), col("df1"), col("df2"), r6("bf_f"))
         .orderBy("probe_id"),
     Some(ctes + bfChainSql + "\n" +
       """SELECT probe_id, n, CAST(2 AS BIGINT) AS df1, n - 3 AS df2,
@@ -2417,9 +2339,8 @@ object QueriesStats {
         .withColumn("p_value",
           expr("graft_f_sf(bf_f, CAST(df1 AS DOUBLE), CAST(df2 AS DOUBLE))"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
-        .select(col("probe_id"), col("n"), col("df1"), col("df2"),
-          round(col("bf_f"), 6).as("bf_f"),
-          round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
+        .select(col("probe_id"), col("n"), col("df1"), col("df2"), r6("bf_f"),
+          r6("p_value"), r6("fdr"))
         .orderBy("probe_id")
     }, Some(ctes + bfChainSql +
       """,
@@ -2449,9 +2370,8 @@ object QueriesStats {
     Q("k17_welch_inference", (s, d) => {
       val stats = welchT(s, d).withColumn("p_value", expr("graft_t_pvalue(t, df)"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
-        .select(col("probe_id"), col("n1"), col("n2"),
-          round(col("t"), 6).as("t"), round(col("df"), 6).as("df"),
-          round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
+        .select(col("probe_id"), col("n1"), col("n2"), r6("t"), r6("df"),
+          r6("p_value"), r6("fdr"))
         .orderBy("probe_id")
     }, Some(ctes.replaceFirst("WITH ", "WITH RECURSIVE ") + welchChainSql +
       """,
@@ -2472,8 +2392,7 @@ object QueriesStats {
     // combination is floating point, so the DuckDB oracle is bit-for-bit.
     Q("k20_kruskal_wallis", (s, d) =>
       kruskalWallis(s, d)
-        .select(col("probe_id"), col("n"), col("n0"), col("n1"), col("n2"),
-          round(col("h"), 6).as("h"))
+        .select(col("probe_id"), col("n"), col("n0"), col("n1"), col("n2"), r6("h"))
         .orderBy("probe_id"),
     Some(ctes + kwChainSql + "\n" +
       """SELECT probe_id, n, n0, n1, n2, round(h, 6) AS h
@@ -2489,8 +2408,7 @@ object QueriesStats {
       val stats = kruskalWallis(s, d)
         .withColumn("p_value", expr("graft_chisq_sf(h, 2.0)"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
-        .select(col("probe_id"), col("n"), round(col("h"), 6).as("h"),
-          round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
+        .select(col("probe_id"), col("n"), r6("h"), r6("p_value"), r6("fdr"))
         .orderBy("probe_id")
     }, Some(ctes + kwChainSql +
       """,
@@ -2506,8 +2424,7 @@ object QueriesStats {
     // integers until the final double sequence — fully oracle-checked.
     Q("k37_dunn_posthoc", (s, d) =>
       dunnPairs(s, d)
-        .select(col("probe_id"), col("pair"), col("n"), col("ni"), col("nj"),
-          round(col("z"), 6).as("z"))
+        .select(col("probe_id"), col("pair"), col("n"), col("ni"), col("nj"), r6("z"))
         .orderBy("probe_id", "pair"),
     Some(ctes + dunnChainSql + "\n" +
       """SELECT probe_id, pair, n, ni, nj, round(z, 6) AS z
@@ -2523,8 +2440,7 @@ object QueriesStats {
         .withColumn("p_value", expr("graft_chisq_sf(z * z, 1.0)"))
         .withColumn("key", concat(col("probe_id"), lit("|"), col("pair")))
       Analytic.bhAdjust(stats, "p_value", "key")
-        .select(col("probe_id"), col("pair"), round(col("z"), 6).as("z"),
-          round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
+        .select(col("probe_id"), col("pair"), r6("z"), r6("p_value"), r6("fdr"))
         .orderBy("probe_id", "pair")
     }, Some(ctes + dunnChainSql +
       """,
@@ -2559,15 +2475,8 @@ object QueriesStats {
       val nB = 200
       val sheet = Tables.sampleSheet(s, d)
       val bk = Tables.betaLong(s, d)
-        .withColumn("k", round(col("beta") * 997).cast("bigint"))
-        .select("probe_id", "sample_id", "k")
-      val obs = bk.join(broadcast(sheet), "sample_id")
-        .groupBy("probe_id").agg(
-          sum(when(col("group") === "WT", 1L).otherwise(0L)).as("n1"),
-          sum(when(col("group") === "WT", col("k")).otherwise(0L)).as("s1"),
-          sum(when(col("group") === "MUT", 1L).otherwise(0L)).as("n2"),
-          sum(when(col("group") === "MUT", col("k")).otherwise(0L)).as("s2"))
-        .filter(col("n1") >= 3 && col("n2") >= 3)
+        .select(col("probe_id"), col("sample_id"), Fns.betaK.as("k"))
+      val obs = groupMoments(bk.join(broadcast(sheet), "sample_id"))
       val boot = udaf(new graft.functions.PoissonBootAgg(nB))
       // repartition the SKINNY rows (4 scalars) by probe before the
       // object aggregation: with >128 keys/partition the typed-aggregator
@@ -2598,9 +2507,7 @@ object QueriesStats {
         .filter(expr(s"size(filter(deltas, x -> x IS NOT NULL)) = $nB"))
         .withColumn("ds", array_sort(col("deltas")))
         .select(col("probe_id"), col("n1"), col("n2"),
-          round((col("s1").cast("double") / col("n1").cast("double")
-            - col("s2").cast("double") / col("n2").cast("double")) / 997.0, 6)
-            .as("delta_obs"),
+          round(meanDiff("1", "2") / 997.0, 6).as("delta_obs"),
           round(element_at(col("ds"), 5), 6).as("ci_lo"),
           round(element_at(col("ds"), 196), 6).as("ci_hi"))
         .orderBy("probe_id")
@@ -2681,9 +2588,7 @@ object QueriesStats {
           when(col("t2") >= 0, expr("graft_t_pvalue(t2, df)") / 2.0)
             .otherwise(lit(1.0) - expr("graft_t_pvalue(-t2, df)") / 2.0))
         .withColumn("p_tost", greatest(col("p_upper"), col("p_lower")))
-        .select(col("probe_id"), round(col("delta_beta"), 6).as("delta_beta"),
-          round(col("se_beta"), 6).as("se_beta"),
-          round(col("p_tost"), 6).as("p_tost"),
+        .select(col("probe_id"), r6("delta_beta"), r6("se_beta"), r6("p_tost"),
           (col("p_tost") < 0.05).as("equivalent"))
         .orderBy("probe_id")
     }, Some(ctes.replaceFirst("WITH ", "WITH RECURSIVE ") + welchChainSql +
@@ -2722,8 +2627,7 @@ object QueriesStats {
     Q("k38_random_effects", (s, d) =>
       randomEffects(s, d)
         .select(col("probe_id"),
-          round(col("y_fe") / 997.0, 6).as("delta_fe"),
-          round(col("q"), 6).as("q"), round(col("tau2"), 6).as("tau2"),
+          round(col("y_fe") / 997.0, 6).as("delta_fe"), r6("q"), r6("tau2"),
           round(col("y_re") / 997.0, 6).as("delta_re"),
           round(col("se_re") / 997.0, 6).as("se_re"))
         .orderBy("probe_id"),
@@ -2797,32 +2701,12 @@ object QueriesStats {
     // shrink. One-way random-effects ANOVA moments with the unbalanced
     // n̄₀ correction — one aggregate, fully oracle-checked.
     Q("k39_icc", (s, d) => {
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-        .withColumn("k", round(col("beta") * 997).cast("bigint"))
-      def ni(r: Int) = sum(when(col("run") === s"run_$r", 1L).otherwise(0L))
-      def si(r: Int) = sum(when(col("run") === s"run_$r", col("k")).otherwise(0L))
-      val m = bg.groupBy("probe_id").agg(
-        count(lit(1)).as("n"), sum("k").as("s"),
-        sum(col("k") * col("k")).as("ss"),
-        ni(0).as("n0"), ni(1).as("n1"), ni(2).as("n2"),
-        si(0).as("s0"), si(1).as("s1"), si(2).as("s2"))
-      def d2(c: String) = col(c).cast("double")
-      val grand = d2("s") * d2("s") / d2("n")
-      val ssb = (d2("s0") * d2("s0") / d2("n0")
-        + d2("s1") * d2("s1") / d2("n1")
-        + d2("s2") * d2("s2") / d2("n2")) - grand
-      val sst = d2("ss") - grand
       val sumNi2 = d2("n0") * d2("n0") + d2("n1") * d2("n1") + d2("n2") * d2("n2")
-      m.filter(col("n0") >= 2 && col("n1") >= 2 && col("n2") >= 2)
-        .withColumn("ssb", ssb).withColumn("ssw", sst - col("ssb"))
-        .filter(col("ssw") > 0.0)
+      anovaSs(s, d)
         .withColumn("msb", col("ssb") / 2.0)
         .withColumn("msw", col("ssw") / (d2("n") - 3.0))
         .withColumn("nbar0", (d2("n") - sumNi2 / d2("n")) / 2.0)
-        .select(col("probe_id"), col("n"),
-          round(col("msb"), 6).as("msb"), round(col("msw"), 6).as("msw"),
-          round(col("nbar0"), 6).as("nbar0"),
+        .select(col("probe_id"), col("n"), r6("msb"), r6("msw"), r6("nbar0"),
           round((col("msb") - col("msw"))
             / (col("msb") + (col("nbar0") - 1.0) * col("msw")), 6).as("icc"))
         .orderBy("probe_id")
@@ -2872,8 +2756,7 @@ object QueriesStats {
     // k10/k11 nonparametric path. ONE hash aggregate, map-side combined.
     Q("k21_jarque_bera", (s, d) =>
       jarqueBera(s, d)
-        .select(col("probe_id"), col("n"), round(col("skew"), 6).as("skew"),
-          round(col("kurt"), 6).as("kurt"), round(col("jb"), 6).as("jb"))
+        .select(col("probe_id"), col("n"), r6("skew"), r6("kurt"), r6("jb"))
         .orderBy("probe_id"),
     Some(ctes + jbChainSql + "\n" +
       """SELECT probe_id, n, round(skew, 6) AS skew, round(kurt, 6) AS kurt,
@@ -2891,8 +2774,7 @@ object QueriesStats {
       val stats = jarqueBera(s, d)
         .withColumn("p_value", expr("graft_chisq_sf(jb, 2.0)"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
-        .select(col("probe_id"), col("n"), round(col("jb"), 6).as("jb"),
-          round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
+        .select(col("probe_id"), col("n"), r6("jb"), r6("p_value"), r6("fdr"))
         .orderBy("probe_id")
     }, Some(ctes + jbChainSql +
       """,
@@ -2919,8 +2801,7 @@ object QueriesStats {
     // processing order?
     Q("k22_mann_kendall", (s, d) =>
       mannKendall(s, d)
-        .select(col("probe_id"), col("n"), col("s_stat"),
-          round(col("z"), 6).as("z"))
+        .select(col("probe_id"), col("n"), col("s_stat"), r6("z"))
         .orderBy("probe_id"),
     Some(ctes + mkChainSql + "\n" +
       """SELECT probe_id, n, s_stat, round(z, 6) AS z
@@ -2934,9 +2815,7 @@ object QueriesStats {
       val stats = mannKendall(s, d)
         .withColumn("p_value", expr("graft_chisq_sf(z * z, 1.0)"))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
-        .select(col("probe_id"), col("n"), col("s_stat"),
-          round(col("z"), 6).as("z"), round(col("p_value"), 6).as("p_value"),
-          round(col("fdr"), 6).as("fdr"))
+        .select(col("probe_id"), col("n"), col("s_stat"), r6("z"), r6("p_value"), r6("fdr"))
         .orderBy("probe_id")
     }, Some(ctes + mkChainSql +
       """,
@@ -2965,7 +2844,7 @@ object QueriesStats {
     // stage — per-sample then per-group, both trivially distributed.
     Q("k23_group_ellipse", (s, d) => {
       val perSample = Tables.betaLong(s, d)
-        .withColumn("k", round(col("beta") * 997).cast("bigint"))
+        .withColumn("k", Fns.betaK)
         .groupBy("sample_id")
         .agg(count(lit(1)).as("nb"), sum("k").as("sk"))
         .join(Tables.detpLong(s, d)
@@ -2989,11 +2868,10 @@ object QueriesStats {
           sum(col("x6") * col("x6")).as("sxx"),
           sum(col("x6") * col("y6")).as("sxy"),
           sum(col("y6") * col("y6")).as("syy"))
-      def dc(c: String) = col(c).cast("double")
-      val nD = dc("n")
-      val cxx = (dc("sxx") - dc("sx") * dc("sx") / nD) / (nD - 1.0)
-      val cxy = (dc("sxy") - dc("sx") * dc("sy") / nD) / (nD - 1.0)
-      val cyy = (dc("syy") - dc("sy") * dc("sy") / nD) / (nD - 1.0)
+      val nD = d2("n")
+      val cxx = (d2("sxx") - d2("sx") * d2("sx") / nD) / (nD - 1.0)
+      val cxy = (d2("sxy") - d2("sx") * d2("sy") / nD) / (nD - 1.0)
+      val cyy = (d2("syy") - d2("sy") * d2("sy") / nD) / (nD - 1.0)
       g.withColumn("cxx", cxx).withColumn("cxy", cxy).withColumn("cyy", cyy)
         .withColumn("disc",
           sqrt((col("cxx") - col("cyy")) * (col("cxx") - col("cyy")) / 4.0
@@ -3001,8 +2879,8 @@ object QueriesStats {
         .withColumn("l1", (col("cxx") + col("cyy")) / 2.0 + col("disc"))
         .withColumn("l2", (col("cxx") + col("cyy")) / 2.0 - col("disc"))
         .select(col("group"), col("n"),
-          round(dc("sx") / nD / 1e6, 6).as("center_x"),
-          round(dc("sy") / nD / 1e6, 6).as("center_y"),
+          round(d2("sx") / nD / 1e6, 6).as("center_x"),
+          round(d2("sy") / nD / 1e6, 6).as("center_y"),
           round(atan2(lit(2.0) * col("cxy"), col("cxx") - col("cyy")) / 2.0, 6)
             .as("theta"),
           round(sqrt(greatest(col("l1"), lit(0.0)) * 5.991464547107979) / 1e6, 6)
@@ -3055,9 +2933,8 @@ object QueriesStats {
     // unit mass, and lockstep with the normalization fit.
     Q("k25_bmiq_fit_density", (s, d) =>
       Bmiq.fittedDensity(Tables.betaLong(s, d), Tables.probeManifest(s, d), gridN = 50)
-        .select(col("sample_id"), col("design_type"), round(col("x"), 6).as("x"),
-          round(col("dens_u"), 6).as("dens_u"), round(col("dens_h"), 6).as("dens_h"),
-          round(col("dens_m"), 6).as("dens_m"), round(col("density"), 6).as("density"))
+        .select(col("sample_id"), col("design_type"), r6("x"), r6("dens_u"), r6("dens_h"),
+          r6("dens_m"), r6("density"))
         .orderBy("sample_id", "design_type", "x"),
       None),
 
@@ -3083,7 +2960,7 @@ object QueriesStats {
     // replay does not carry — on a probe-disjoint corpus use the Scala
     // surface, whose behavior HclustSpec pins.
     Q("k24_hclust_dendrogram", (s, d) =>
-      graft.ops.Hclust.mergeTable(s, Tables.betaLong(s, d)),
+      Hclust.mergeTable(s, Tables.betaLong(s, d)),
       Some(ctes.replaceFirst("WITH ", "WITH RECURSIVE ") +
         """, kb AS (
           |  SELECT probe_id, sample_id, CAST(round(beta * 997) AS BIGINT) AS k
@@ -3204,10 +3081,8 @@ object QueriesStats {
           * col("col_tot").cast("double") / col("grand").cast("double"))
         .withColumn("contrib", (o - col("exp_cnt")) * (o - col("exp_cnt")) / col("exp_cnt"))
         .withColumn("chisq_running", sum("contrib").over(wRun))
-        .select(col("lang"), col("source"), col("obs"),
-          round(col("exp_cnt"), 6).as("exp_cnt"),
-          round(col("contrib"), 6).as("contrib"),
-          round(col("chisq_running"), 6).as("chisq_running"))
+        .select(col("lang"), col("source"), col("obs"), r6("exp_cnt"), r6("contrib"),
+          r6("chisq_running"))
         .orderBy("lang", "source")
     }, Some(
       """WITH ci_seen AS (
@@ -3268,8 +3143,7 @@ object QueriesStats {
         .withColumn("rn", row_number().over(Window.orderBy(col("lang").desc, col("source").desc)))
         .filter(col("rn") === 1)
         .withColumn("df", ((col("n_lang") - 1) * (col("n_source") - 1)).cast("double"))
-        .select(col("n_lang"), col("n_source"), col("n_cells"),
-          round(col("chisq"), 6).as("chisq"), col("df"),
+        .select(col("n_lang"), col("n_source"), col("n_cells"), r6("chisq"), col("df"),
           round(expr("graft_chisq_sf(chisq, df)"), 6).as("p_value"))
       // FULLY oracle-checked (r8): the 5-language × 20-source grid fixes
       // df = 4·19 = 76 — EVEN, so the χ² survival is the elementary
@@ -3340,9 +3214,8 @@ object QueriesStats {
     // oracle-checked including the survival doubles.
     Q("k28_kaplan_meier", (s, d) =>
       Survival.kaplanMeier(kmSubjects(s, d))
-        .select(col("grp"), col("duration_h"), col("n_risk"),
-          col("d_events"), round(col("survival"), 6).as("survival"),
-          round(col("greenwood_se"), 6).as("greenwood_se"))
+        .select(col("grp"), col("duration_h"), col("n_risk"), col("d_events"), r6("survival"),
+          r6("greenwood_se"))
         .orderBy("grp", "duration_h"),
     Some(
       s"""WITH $kmSubjSql,
@@ -3378,9 +3251,7 @@ object QueriesStats {
     // running sums → the statistic is oracle-checked bit-for-bit.
     Q("k28_logrank", (s, d) =>
       Survival.logRank(kmSubjects(s, d), "cohort_a")
-        .select(col("grp_a"), col("n_times"), col("o_a"),
-          round(col("e_a"), 6).as("e_a"), round(col("var_a"), 6).as("var_a"),
-          round(col("chi2"), 6).as("chi2")),
+        .select(col("grp_a"), col("n_times"), col("o_a"), r6("e_a"), r6("var_a"), r6("chi2")),
     Some(
       s"""WITH $kmSubjSql,
          |$lrRiskSql,
@@ -3395,8 +3266,7 @@ object QueriesStats {
     // lrChainSql statistic.
     Q("k28_logrank_inference", (s, d) => {
       Survival.logRank(kmSubjects(s, d), "cohort_a")
-        .select(col("grp_a"), col("o_a"), round(col("e_a"), 6).as("e_a"),
-          round(col("chi2"), 6).as("chi2"),
+        .select(col("grp_a"), col("o_a"), r6("e_a"), r6("chi2"),
           round(expr("graft_chisq_sf(chi2, 1.0)"), 6).as("p_value"))
     }, Some(
       s"""WITH $kmSubjSql,
@@ -3421,22 +3291,7 @@ object QueriesStats {
     // Lanczos agree far below the 1e-6 rounding.
     Q("k29_fisher_exact", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val qc = Tables.detpLong(s, d)
-        .withColumn("k", round(col("pval") * 1010).cast("bigint"))
-        .groupBy("sample_id").agg(sum("k").as("sk"), count(lit(1)).as("nn"))
-        .withColumn("fail", col("sk") * 20 >= col("nn") * 1010)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-        .withColumn("run0", col("run") === "run_0")
-      val tab = qc.agg(
-          sum(when(col("fail") && col("run0"), 1L).otherwise(0L)).as("a"),
-          sum(when(col("fail") && !col("run0"), 1L).otherwise(0L)).as("b"),
-          sum(when(!col("fail") && col("run0"), 1L).otherwise(0L)).as("c"),
-          sum(when(!col("fail") && !col("run0"), 1L).otherwise(0L)).as("dd"))
-        .withColumn("r1", col("a") + col("b"))
-        .withColumn("r2", col("c") + col("dd"))
-        .withColumn("c1", col("a") + col("c"))
-        .withColumn("c2", col("b") + col("dd"))
-        .withColumn("n", col("r1") + col("r2"))
+      val tab = failTable(s, d, Nil, col("run") === "run_0")
       val sup = tab.withColumn("kk",
           explode(sequence(greatest(lit(0L), col("r1") + col("c1") - col("n")),
             least(col("r1"), col("c1")))))
@@ -3544,13 +3399,10 @@ object QueriesStats {
         .filter(col("rnk") <= col("n_wt"))
         .select("sample_id", "rep")
       val bk = Tables.betaLong(s, d)
-        .withColumn("k", round(col("beta") * 997).cast("bigint"))
-        .select("probe_id", "sample_id", "k")
-      val obs = bk.join(broadcast(sheet), "sample_id")
-        .groupBy("probe_id").agg(
-          count(lit(1)).as("n"), sum("k").as("stot"),
-          sum(when(col("group") === "WT", 1L).otherwise(0L)).as("n1"),
-          sum(when(col("group") === "WT", col("k")).otherwise(0L)).as("s1"))
+        .select(col("probe_id"), col("sample_id"), Fns.betaK.as("k"))
+      // n and s over all of a probe's samples, n1 and s1 over its WT ones
+      val obs = levelMoments(bk.join(broadcast(sheet), "sample_id"), Seq("probe_id"),
+          col("k"), groupLevels.take(1))
         .filter(col("n1") >= 3 && col("n") - col("n1") >= 3)
       // one-pass permutation sufficient statistics: each sample carries the
       // list of reps that put it in group A (a ~B/2-int array on a bounded
@@ -3572,17 +3424,17 @@ object QueriesStats {
       val saE = "element_at(st, cast(r as int))"
       val validE = s"$naE >= 1 AND $naE < n"
       state.join(obs, "probe_id")
-        .withColumn("dnum_o", abs(col("s1") * col("n") - col("stot") * col("n1")))
+        .withColumn("dnum_o", abs(col("s1") * col("n") - col("s") * col("n1")))
         .withColumn("wo", col("n1") * (col("n") - col("n1")))
         .withColumn("b_valid",
           expr(s"size(filter(sequence(1, ${nB}L), r -> $validE))").cast("bigint"))
         .withColumn("b_ge",
           expr(s"""size(filter(sequence(1, ${nB}L), r -> $validE
-                  | AND abs($saE * n - stot * $naE) * wo
+                  | AND abs($saE * n - s * $naE) * wo
                   |     >= dnum_o * ($naE * (n - $naE))))"""
             .stripMargin.replace("\n", " ")).cast("bigint"))
         .withColumn("dmean", col("s1").cast("double") / col("n1").cast("double")
-          - (col("stot") - col("s1")).cast("double")
+          - (col("s") - col("s1")).cast("double")
             / (col("n") - col("n1")).cast("double"))
         .select(col("probe_id"), col("n"), col("n1"), col("b_valid"), col("b_ge"),
           round(col("dmean") / 997.0, 6).as("delta_beta"),
@@ -3645,11 +3497,8 @@ object QueriesStats {
     // fully oracle-checked. p via χ²(1) rides k32_cmh_inference.
     Q("k32_cmh_test", (s, d) =>
       cmhTest(s, d)
-        .select(col("n_strata"), col("sum_a"),
-          round(col("sum_e"), 6).as("sum_e"),
-          round(col("sum_v"), 6).as("sum_v"),
-          round(col("cmh"), 6).as("cmh"),
-          round(col("or_mh"), 6).as("or_mh")),
+        .select(col("n_strata"), col("sum_a"), r6("sum_e"), r6("sum_v"), r6("cmh"),
+          r6("or_mh")),
     Some(ctes + cmhChainSql + "\n" +
       """SELECT n_strata, sum_a, round(sum_e, 6) AS sum_e,
         |       round(sum_v, 6) AS sum_v, round(cmh, 6) AS cmh,
@@ -3662,8 +3511,7 @@ object QueriesStats {
     // cmhChainSql statistic.
     Q("k32_cmh_inference", (s, d) => {
       cmhTest(s, d)
-        .select(col("n_strata"), round(col("cmh"), 6).as("cmh"),
-          round(col("or_mh"), 6).as("or_mh"),
+        .select(col("n_strata"), r6("cmh"), r6("or_mh"),
           round(expr("graft_chisq_sf(cmh, 1.0)"), 6).as("p_value"))
     }, Some(ctes + cmhChainSql +
       s""",
@@ -3683,25 +3531,12 @@ object QueriesStats {
     // keyed aggregates over the same input, one join — fully oracle-checked.
     Q("k31_effect_sizes", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val bg = Tables.betaLong(s, d)
-        .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
-        .withColumn("k", round(col("beta") * 997).cast("bigint"))
-        .select("probe_id", "group", "k")
-      def gi(g: String, e: org.apache.spark.sql.Column) =
-        sum(when(col("group") === g, e).otherwise(0L))
-      val m = bg.groupBy("probe_id").agg(
-          gi("WT", lit(1L)).as("n1"), gi("WT", col("k")).as("s1"),
-          gi("WT", col("k") * col("k")).as("ss1"),
-          gi("MUT", lit(1L)).as("n2"), gi("MUT", col("k")).as("s2"),
-          gi("MUT", col("k") * col("k")).as("ss2"))
-        .filter(col("n1") >= 3 && col("n2") >= 3)
-      def d2(c: String) = col(c).cast("double")
-      val v1 = (d2("ss1") - d2("s1") * d2("s1") / d2("n1")) / (d2("n1") - 1.0)
-      val v2 = (d2("ss2") - d2("s2") * d2("s2") / d2("n2")) / (d2("n2") - 1.0)
-      val sp2 = ((d2("n1") - 1.0) * v1 + (d2("n2") - 1.0) * v2) /
+      val bg = Tables.betaGrid(s, d)
+      val sp2 = ((d2("n1") - 1.0) * levelVar("1") + (d2("n2") - 1.0) * levelVar("2")) /
         (d2("n1") + d2("n2") - 2.0)
-      val dCol = (d2("s1") / d2("n1") - d2("s2") / d2("n2")) / sqrt(sp2)
-      val moments = m.filter(
+      val dCol = meanDiff("1", "2") / sqrt(sp2)
+      // welchT's moments, less probes with no spread within either group
+      val moments = groupMoments(bg).filter(
           (d2("ss1") - d2("s1") * d2("s1") / d2("n1"))
             + (d2("ss2") - d2("s2") * d2("s2") / d2("n2")) > 0.0)
         .withColumn("cohens_d", dCol)
@@ -3709,24 +3544,20 @@ object QueriesStats {
           col("cohens_d") * (lit(1.0) - lit(3.0)
             / (lit(4.0) * (d2("n1") + d2("n2")) - 9.0)))
         .select("probe_id", "n1", "n2", "cohens_d", "hedges_g")
-      // Cliff's δ: tie cells on (probe, k) with WT/MUT counts; running MUT
-      // mass strictly below each cell gives gt; lt by symmetry from totals.
-      val cells = bg.groupBy("probe_id", "k").agg(
-        sum(when(col("group") === "WT", 1L).otherwise(0L)).as("c1"),
-        sum(when(col("group") === "MUT", 1L).otherwise(0L)).as("c2"))
+      // Cliff's δ: tie cells on (probe, k) with WT/MUT counts n1/n2; running
+      // MUT mass strictly below each cell gives gt; lt by symmetry from totals.
+      val cells = levelMoments(bg, Seq("probe_id", "k"), col("k"), groupLevels)
       val w = Window.partitionBy("probe_id").orderBy("k")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val cliff = cells
-        .withColumn("cum2", sum("c2").over(w))
+        .withColumn("cum2", sum("n2").over(w))
         .groupBy("probe_id").agg(
-          sum(col("c1") * (col("cum2") - col("c2"))).as("gt"),
-          sum(col("c1") * col("c2")).as("eq"),
-          sum("c1").as("t1"), sum("c2").as("t2"))
+          sum(col("n1") * (col("cum2") - col("n2"))).as("gt"),
+          sum(col("n1") * col("n2")).as("eq"),
+          sum("n1").as("t1"), sum("n2").as("t2"))
         .withColumn("lt", col("t1") * col("t2") - col("gt") - col("eq"))
       moments.join(cliff, "probe_id")
-        .select(col("probe_id"), col("n1"), col("n2"),
-          round(col("cohens_d"), 6).as("cohens_d"),
-          round(col("hedges_g"), 6).as("hedges_g"),
+        .select(col("probe_id"), col("n1"), col("n2"), r6("cohens_d"), r6("hedges_g"),
           round((col("gt") - col("lt")).cast("double")
             / (col("t1") * col("t2")).cast("double"), 6).as("cliffs_delta"))
         .orderBy("probe_id")
@@ -3793,7 +3624,7 @@ object QueriesStats {
       val sidx = Tables.sampleSheet(s, d).select("sample_id")
         .withColumn("t", row_number().over(Window.orderBy("sample_id")).cast("long"))
       val bk = Tables.betaLong(s, d)
-        .withColumn("k", round(col("beta") * 997).cast("bigint"))
+        .withColumn("k", Fns.betaK)
         .join(broadcast(sidx), "sample_id")
         .select("probe_id", "t", "k")
       val pairs = bk.as("a").join(bk.as("b"),
@@ -3847,8 +3678,7 @@ object QueriesStats {
     Q("k36_cumulative_incidence", (s, d) =>
       Survival.cumulativeIncidence(cifSubjects(s, d))
         .select(col("grp"), col("duration_h"), col("n_risk"),
-          col("d1").as("d_conv"), col("d2").as("d_fail"),
-          round(col("surv"), 6).as("surv"),
+          col("d1").as("d_conv"), col("d2").as("d_fail"), r6("surv"),
           round(col("cif1"), 6).as("cif_conv"),
           round(col("cif2"), 6).as("cif_fail"))
         .orderBy("grp", "duration_h"),
@@ -3952,13 +3782,9 @@ object QueriesStats {
     // oracle-checked.
     Q("k34_conformal_clock", (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val coef = Tables.table(s, d, "part")
-        .filter(col("p_partkey") % 17 === 3)
-        .select(format_string("cg%07d", col("p_partkey")).as("probe_id"),
-          (col("p_partkey") % 13 - 6).cast("long").as("coef_num"))
       val pred = Tables.betaLong(s, d)
-        .withColumn("k", round(col("beta") * 997).cast("long"))
-        .join(broadcast(coef), "probe_id")
+        .withColumn("k", Fns.betaK)
+        .join(broadcast(clockPanel(s, d)), "probe_id")
         .groupBy("sample_id")
         .agg(sum(col("k") * col("coef_num")).as("dot"))
         .select(col("sample_id"),
@@ -3979,8 +3805,7 @@ object QueriesStats {
         .select(col("score").as("qhat"), col("ncal"))
       j.filter(!col("is_cal"))
         .crossJoin(broadcast(qhat))
-        .select(col("sample_id"), col("ncal").as("n_cal"),
-          round(col("age_pred"), 6).as("age_pred"),
+        .select(col("sample_id"), col("ncal").as("n_cal"), r6("age_pred"),
           round(col("age_pred") - col("qhat"), 6).as("lo"),
           round(col("age_pred") + col("qhat"), 6).as("hi"),
           (col("age_true") >= col("age_pred") - col("qhat") &&
@@ -4039,12 +3864,9 @@ object QueriesStats {
       probeOls(s, d)
         .select(col("probe_id"), col("n"),
           round(col("b_group") / 997.0, 6).as("b_group"),
-          round(col("se_group") / 997.0, 6).as("se_group"),
-          round(col("t_group"), 6).as("t_group"),
+          round(col("se_group") / 997.0, 6).as("se_group"), r6("t_group"),
           round(col("b_age") / 997.0, 6).as("b_age"),
-          round(col("se_age") / 997.0, 6).as("se_age"),
-          round(col("t_age"), 6).as("t_age"),
-          col("df"))
+          round(col("se_age") / 997.0, 6).as("se_age"), r6("t_age"), col("df"))
         .orderBy("probe_id"),
     Some(ctes + olsCte +
       """, ols_s AS (
@@ -4085,9 +3907,7 @@ object QueriesStats {
           expr("graft_t_pvalue(t_stat, CAST(df AS DOUBLE))"))
         .withColumn("key", concat(col("probe_id"), lit("|"), col("coef")))
       Analytic.bhAdjust(long, "p_value", "key")
-        .select(col("probe_id"), col("coef"), round(col("b"), 6).as("b"),
-          round(col("t_stat"), 6).as("t_stat"),
-          round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
+        .select(col("probe_id"), col("coef"), r6("b"), r6("t_stat"), r6("p_value"), r6("fdr"))
         .orderBy("probe_id", "coef")
     }, Some(ctes + olsCte +
       """, ols_s AS (
@@ -4186,11 +4006,9 @@ object QueriesStats {
       probeOlsRobust(s, d)
         .select(col("probe_id"), col("n"),
           round(col("b_group") / 997.0, 6).as("b_group"),
-          round(col("se_group_hc1") / 997.0, 6).as("se_group_hc1"),
-          round(col("t_group_hc1"), 6).as("t_group_hc1"),
+          round(col("se_group_hc1") / 997.0, 6).as("se_group_hc1"), r6("t_group_hc1"),
           round(col("b_age") / 997.0, 6).as("b_age"),
-          round(col("se_age_hc1") / 997.0, 6).as("se_age_hc1"),
-          round(col("t_age_hc1"), 6).as("t_age_hc1"))
+          round(col("se_age_hc1") / 997.0, 6).as("se_age_hc1"), r6("t_age_hc1"))
         .orderBy("probe_id"),
     Some(ctes + olsCte +
       """, hc_adj AS (
@@ -4253,6 +4071,15 @@ object QueriesStats {
         |ORDER BY probe_id""".stripMargin))
   )
 
+  /** The k42-family covariate panel: group indicator (1 = MUT, the
+    * sheet's parity rule) and the k34 age covariate, one row per sample.
+    */
+  private[graft] def olsCov(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.table(s, d, "supplier").select(
+      format_string("S%03d", col("s_suppkey")).as("sample_id"),
+      (col("s_suppkey") % 2).cast("long").as("g"),
+      (col("s_suppkey") * 13 % 41).cast("long").as("a"))
+
   /** Shared K42 statistic pass: per-probe OLS of beta (0..996 grid units)
     * on X = [1, group, age] from nine exact integer moments in ONE hash
     * aggregate; 3×3 normal equations by Cramer's rule as a fixed double
@@ -4265,19 +4092,10 @@ object QueriesStats {
     * Age is k34's panel (`20 + s_suppkey*13 % 41`, the constant 20 folded
     * into the intercept); group is the sheet's WT/MUT indicator (1=MUT).
     */
-  /** The k42-family covariate panel: group indicator (1 = MUT, the
-    * sheet's parity rule) and the k34 age covariate, one row per sample.
-    */
-  private[graft] def olsCov(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.table(s, d, "supplier").select(
-      format_string("S%03d", col("s_suppkey")).as("sample_id"),
-      (col("s_suppkey") % 2).cast("long").as("g"),
-      (col("s_suppkey") * 13 % 41).cast("long").as("a"))
-
   private[graft] def probeOlsMoments(s: org.apache.spark.sql.SparkSession, d: String) = {
     val cov = olsCov(s, d)
     val m = Tables.betaLong(s, d)
-      .withColumn("k", round(col("beta") * 997).cast("bigint"))
+      .withColumn("k", Fns.betaK)
       .join(broadcast(cov), "sample_id")
       .groupBy("probe_id").agg(
         count(lit(1L)).as("n"),
@@ -4295,7 +4113,6 @@ object QueriesStats {
       .withColumn("cof11", col("n") * col("saa") - col("sa") * col("sa"))
       .withColumn("cof22", col("n") * col("sg") - col("sg") * col("sg"))
       .filter(col("det") > 0L)
-    def d2(c: String) = col(c).cast("double")
     m.withColumn("b0",
         (d2("sy") * (d2("sg") * d2("saa") - d2("sga") * d2("sga"))
           - d2("sg") * (d2("sgy") * d2("saa") - d2("sga") * d2("say"))
@@ -4322,7 +4139,6 @@ object QueriesStats {
     * variance σ̂² = RSS_full/(n−3), SEs from σ̂²·cofⱼⱼ/det, t = b/se.
     */
   private[graft] def probeOls(s: org.apache.spark.sql.SparkSession, d: String) = {
-    def d2(c: String) = col(c).cast("double")
     val b = probeOlsMoments(s, d)
       .withColumn("sigma2",
         (col("syyd")
@@ -4348,7 +4164,6 @@ object QueriesStats {
     * in one fixed double sequence. Unrounded grid units.
     */
   private[graft] def probeOlsRobust(s: org.apache.spark.sql.SparkSession, d: String) = {
-    def d2(c: String) = col(c).cast("double")
     // persisted: consumed twice (the meat pass joins b̂ to the rows, the
     // sandwich pass joins the adjugate) — without this the nine-moment
     // aggregate and the betaLong scan behind it run twice (the w18 rule)
@@ -4361,7 +4176,7 @@ object QueriesStats {
       .persist())
     val cov = olsCov(s, d)
     val meat = Tables.betaLong(s, d)
-      .withColumn("k", round(col("beta") * 997).cast("bigint"))
+      .withColumn("k", Fns.betaK)
       .join(broadcast(cov), "sample_id")
       .join(mo.select("probe_id", "b0", "b1", "b2"), "probe_id")
       .withColumn("er", round((col("k").cast("double") - col("b0")

@@ -436,8 +436,12 @@ object SqlOracles {
        |         CASE WHEN swap THEN 1.0 - ib ELSE ib END AS p
        |  FROM (
        |    SELECT *,
-       |           exp(a * ln(x) + b * ln(1.0 - x) - ln(a)
-       |               - (lgamma(a) + lgamma(b) - lgamma(a + b))) * 1.0 / h AS ib
+       |           -- x = 0 (t = 0, swapped): commons-math's regularizedBeta
+       |           -- evaluates exp(-inf) = 0 there, where DuckDB's ln(0) raises
+       |           CASE WHEN x = 0.0 THEN 0.0
+       |                ELSE exp(a * ln(x) + b * ln(1.0 - x) - ln(a)
+       |                         - (lgamma(a) + lgamma(b) - lgamma(a + b))) * 1.0 / h
+       |           END AS ib
        |    FROM ${pfx}cf_h))""".stripMargin
 
   /** Per-group flavor of [[bhTail]] — the SQL mirror of

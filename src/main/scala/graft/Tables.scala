@@ -94,6 +94,16 @@ object Tables {
           col("beta"))
     }
 
+  /** [[betaLong]] joined to the broadcast [[sampleSheet]] (adds run and
+    * group), with beta's exact grid value `k` ([[graft.functions.Fns.betaK]]):
+    * the one input of the K-tier statistics. Deliberately not [[cached]]:
+    * both sides are cached already, and a persisted join would outlive
+    * `Caches.releaseAll` at the size of the beta table.
+    */
+  def betaGrid(spark: SparkSession, dir: String): DataFrame =
+    betaLong(spark, dir).join(broadcast(sampleSheet(spark, dir)), "sample_id")
+      .withColumn("k", graft.functions.Fns.betaK)
+
   /** Long-form detection p-value matrix (reference `detP`,
     * /root/reference/workflow.R:24-25) with the same keys as [[betaLong]].
     */

@@ -89,6 +89,18 @@ object Fns {
     (ss.cast("double") - s.cast("double") * s.cast("double") / n.cast("double")) /
       (n - lit(1)).cast("double")
 
+  /** A column as a double: where every fixed double sequence over exact
+    * integer moments starts.
+    */
+  def d2(c: String): Column = col(c).cast("double")
+  def d2(c: Column): Column = c.cast("double")
+
+  /** Beta on its exact integer grid: every synthetic beta is j/997 for an
+    * integer j in 0..996, so round(beta·997) recovers j, and sums of it are
+    * exact bigints whatever the summation order.
+    */
+  val betaK: Column = round(col("beta") * 997).cast("bigint")
+
   /** Exact integer cent count for a currency double that carries 2 decimals. */
   def cents(c: Column): Column = round(c * 100).cast("bigint")
 }

@@ -173,14 +173,20 @@ object Curation {
     clustered.withColumn("split", splitCol)
   }
 
-  /** Keep the best member of each near-dup cluster by a quality score
-    * (descending, doc_id tiebreak) — production dedup keeps the
-    * highest-quality copy, not an arbitrary one. The rank window is
+  /** The shingle Jaccard at which [[bestOfCluster]] and
+    * [[leakageFreeSplit]] call two docs near-duplicates: at least half of
+    * their shingles shared. A constant because every caller passed 0.5.
+    */
+  private val NearDupJaccard = 0.5
+
+  /** Keep the best member of each near-dup cluster ([[NearDupJaccard]]) by
+    * a quality score (descending, doc_id tiebreak) — production dedup keeps
+    * the highest-quality copy, not an arbitrary one. The rank window is
     * per-cluster, bounded by the largest cluster. Scores are rounded
     * before ranking so the kept doc is stable under last-ulp noise.
     */
-  def bestOfCluster(docs: DataFrame, minJaccard: Double, scoreCol: Column): DataFrame =
-    bestOfClusterFrom(dedupClusters(docs, minJaccard),
+  def bestOfCluster(docs: DataFrame, scoreCol: Column): DataFrame =
+    bestOfClusterFrom(dedupClusters(docs, NearDupJaccard),
       docs.select(col("doc_id"), round(scoreCol, 6).as("score")))
 
   /** [[bestOfCluster]] over a precomputed cluster table and a
@@ -274,13 +280,11 @@ object Curation {
     * threshold), so two near-duplicates can never land on opposite sides —
     * the train/test contamination a naive per-doc hash split silently
     * creates. `valFrac` is approximate (hash-uniform over clusters).
-    * Builds on [[dedupClusters]]; one extra column expression, no extra
-    * shuffle.
+    * Builds on [[dedupClusters]] at [[NearDupJaccard]]; one extra column
+    * expression, no extra shuffle.
     */
-  def leakageFreeSplit(docs: DataFrame, minJaccard: Double,
-                       valFrac: Double): DataFrame = {
-    splitByCluster(dedupClusters(docs, minJaccard), valFrac)
-  }
+  def leakageFreeSplit(docs: DataFrame, valFrac: Double): DataFrame =
+    splitByCluster(dedupClusters(docs, NearDupJaccard), valFrac)
 
   final case class PackedDoc(doc_id: Long, tokens: Long, bin_id: Long)
 

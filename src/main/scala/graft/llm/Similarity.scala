@@ -67,8 +67,13 @@ object Similarity {
       when(element_at(col("v"), i) >= 0, lit(1 << (LshBits - i))).otherwise(lit(0))
     }.reduce(_ + _)
 
-  /** LSH-bucketed ANN: score only vectors in the query's sign bucket. */
-  def lshTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
+  /** Neighbors [[lshTopK]] returns: the top 5 that n02, its one caller, reports. */
+  private val LshK = 5
+
+  /** LSH-bucketed ANN: score only vectors in the query's sign bucket and
+    * keep the [[LshK]] nearest.
+    */
+  def lshTopK(emb: DataFrame, queryId: Long): DataFrame = {
     val e = withVec(emb).withColumn("bucket", signBucket)
     val q = queryVec(e, queryId)
     require(LshBits <= q.length,
@@ -77,7 +82,7 @@ object Similarity {
     scored(e.filter(col("vec_id") =!= queryId && col("bucket") === qBucket), q)
       .select("vec_id", "bucket", "cos")
       .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(k)
+      .limit(LshK)
   }
 
   /** MMR's relevance weight λ; redundancy weighs 1 − λ. */

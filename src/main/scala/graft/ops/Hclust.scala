@@ -25,22 +25,22 @@ import org.apache.spark.sql.functions._
   */
 object Hclust {
 
-  /** Distributed pairwise mean-squared-distance on the beta grid —
-    * identical arithmetic to k08 (exact integer numerators; /997² and
-    * /n_shared applied once at the end).
+  /** Distributed pairwise mean-squared distance on the beta grid over
+    * `bk` (probe_id, sample_id, k): per sample pair sa < sb, the shared
+    * probe count `n_shared`, the exact integer numerator `d2_num` =
+    * Σ(ka − kb)², and `d2` = d2_num / (997² · n_shared) applied once at
+    * the end. k08 checks this table against DuckDB; k02's Gram matrix and
+    * [[mergeTable]] read it.
     */
-  def sampleDistances(beta: DataFrame): DataFrame = {
-    val b = beta.select(col("probe_id"),
-      col("sample_id"), round(col("beta") * 997).cast("bigint").as("k"))
-    val l = b.select(col("probe_id"), col("sample_id").as("sa"), col("k").as("ka"))
-    val r = b.select(col("probe_id"), col("sample_id").as("sb"), col("k").as("kb"))
+  def sampleDistances(bk: DataFrame): DataFrame = {
+    val l = bk.select(col("probe_id"), col("sample_id").as("sa"), col("k").as("ka"))
+    val r = bk.select(col("probe_id"), col("sample_id").as("sb"), col("k").as("kb"))
     l.join(r, "probe_id").filter(col("sa") < col("sb"))
       .groupBy("sa", "sb")
       .agg(count(lit(1)).as("n_shared"),
         sum((col("ka") - col("kb")) * (col("ka") - col("kb"))).as("d2_num"))
-      .select(col("sa"), col("sb"),
-        (col("d2_num").cast("double")
-          / (lit(994009.0) * col("n_shared").cast("double"))).as("d2"))
+      .withColumn("d2", col("d2_num").cast("double")
+        / (lit(994009.0) * col("n_shared").cast("double")))
   }
 
   /** Average-linkage merge schedule from a collected condensed distance
@@ -164,7 +164,8 @@ object Hclust {
     * first leaf — with the merge heights, exactly what `pheatmap` renders.
     */
   def mergeTable(spark: SparkSession, beta: DataFrame): DataFrame = {
-    val pairs = sampleDistances(beta).collect()
+    val pairs = sampleDistances(beta.select(col("probe_id"), col("sample_id"),
+      graft.functions.Fns.betaK.as("k"))).select("sa", "sb", "d2").collect()
     val ids = pairs.iterator
       .flatMap(p => Iterator(p.getString(0), p.getString(1))).toVector.distinct.sorted
     val idx = ids.zipWithIndex.toMap

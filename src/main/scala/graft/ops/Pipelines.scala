@@ -253,8 +253,7 @@ object Pipelines {
     // (the qualityScore regex over every doc + the cluster rank window)
     // re-evaluated under both branches (r9: one full regex pass saved).
     val kept = Caches.track(observed(
-      Curation.bestOfCluster(exact, minJaccard = 0.5,
-          TextAnalysis.qualityScore(col("text")))
+      Curation.bestOfCluster(exact, TextAnalysis.qualityScore(col("text")))
         .select(col("kept_doc").as("doc_id"), col("score"))
         .join(exact, "doc_id")
         .filter(col("score") >= 0.3), "after_quality_gate")

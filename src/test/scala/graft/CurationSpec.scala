@@ -113,7 +113,7 @@ class CurationSpec extends SparkSpec {
       (3L, "unrelated standalone document")
     ).toDF("doc_id", "text")
     // score = text length (longer near-dup wins)
-    val got = Curation.bestOfCluster(docs, minJaccard = 0.5, length(col("text")).cast("double"))
+    val got = Curation.bestOfCluster(docs, length(col("text")).cast("double"))
       .select("cluster", "kept_doc").as[(Long, Long)].collect().toMap
     assert(got(1L) == 2L) // cluster {1,2} keeps the longer doc 2
     assert(got(3L) == 3L)
@@ -257,10 +257,10 @@ class CurationSpec extends SparkSpec {
   test("leakage-free split degenerate fractions: all val / all train") {
     val docs = Seq((1L, "alpha beta gamma delta words here"),
       (2L, "other totally different tokens")).toDF("doc_id", "text")
-    val allVal = Curation.leakageFreeSplit(docs, 0.5, valFrac = 1.0)
+    val allVal = Curation.leakageFreeSplit(docs, valFrac = 1.0)
       .select("split").as[String].collect()
     assert(allVal.forall(_ == "val"))
-    val allTrain = Curation.leakageFreeSplit(docs, 0.5, valFrac = 0.0)
+    val allTrain = Curation.leakageFreeSplit(docs, valFrac = 0.0)
       .select("split").as[String].collect()
     assert(allTrain.forall(_ == "train"))
   }
@@ -297,7 +297,7 @@ class CurationSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog near the river bank tonight"),
       (3L, "completely different words about spark engines and distributed shuffles here")
     ).toDF("doc_id", "text")
-    val got = Curation.leakageFreeSplit(docs, minJaccard = 0.5, valFrac = 0.5)
+    val got = Curation.leakageFreeSplit(docs, valFrac = 0.5)
       .select("doc_id", "split").as[(Long, String)].collect().toMap
     assert(got(1L) == got(2L)) // same cluster → same side, whatever side it is
     assert(got.size == 3)

@@ -34,7 +34,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("lshTopK only scores the query's sign bucket") {
-    val got = Similarity.lshTopK(emb, 0L, 5)
+    val got = Similarity.lshTopK(emb, 0L)
       .select("vec_id").as[Long].collect().toSet
     // vec 3 has a negative first dim → different bucket → excluded
     assert(got.contains(1L) && !got.contains(3L))
