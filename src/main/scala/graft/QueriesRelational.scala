@@ -20,6 +20,25 @@ object QueriesRelational {
   private val D = (s: org.apache.spark.sql.SparkSession, d: String) => Tables.detpLong(s, d)
   private val SS = (s: org.apache.spark.sql.SparkSession, d: String) => Tables.sampleSheet(s, d)
 
+  /** `n` and every Σv and Σv·w (v ≤ w) over `vars` of `base`, as `s_v`
+    * and `s_v_w` — exact for decimal(38,0) inputs. */
+  private def crossMoments(base: org.apache.spark.sql.DataFrame, vars: Seq[String]) = {
+    val aggs = Seq(count(lit(1)).cast("decimal(38,0)").as("n")) ++
+      vars.map(v => sum(col(v)).as(s"s_$v")) ++
+      (for { i <- vars.indices; j <- i until vars.length } yield
+        sum(col(vars(i)) * col(vars(j))).as(s"s_${vars(i)}_${vars(j)}"))
+    base.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Pearson r of `a` and `b` from [[crossMoments]] columns, the moments
+    * differenced before the one cast to double. */
+  private def momentCorr(a: String, b: String) = {
+    def den(v: String) =
+      (col("n") * col(s"s_${v}_$v") - col(s"s_$v") * col(s"s_$v")).cast("double")
+    (col("n") * col(s"s_${a}_$b") - col(s"s_$a") * col(s"s_$b")).cast("double") /
+      sqrt(den(a) * den(b))
+  }
+
   /** lineitem returnflag×linestatus cell counts, ZERO-FILLED over the full
     * margin cross so structurally empty cells carry nij = 0 (and therefore
     * their (0−E)²/E = E Pearson term) — the k27 grid convention, shared by
@@ -955,19 +974,10 @@ object QueriesRelational {
         round(col("l_discount") * 100).cast("bigint").cast(dec).as("disc"),
         round(col("l_tax") * 100).cast("bigint").cast(dec).as("tax"))
       val vars = Seq("qty", "cents", "disc", "tax")
-      val aggs = Seq(count(lit(1)).cast(dec).as("n")) ++
-        vars.map(v => sum(col(v)).as(s"s_$v")) ++
-        (for { i <- vars.indices; j <- i until vars.length } yield
-          sum(col(vars(i)) * col(vars(j))).as(s"s_${vars(i)}_${vars(j)}"))
-      val m = base.agg(aggs.head, aggs.tail: _*)
-      def den(v: String) =
-        (col("n") * col(s"s_${v}_$v") - col(s"s_$v") * col(s"s_$v")).cast("double")
-      def corrOf(a: String, b: String) =
-        round((col("n") * col(s"s_${a}_$b") - col(s"s_$a") * col(s"s_$b")).cast("double")
-          / sqrt(den(a) * den(b)), 6)
+      val m = crossMoments(base, vars)
       val pairs = for { i <- vars.indices; j <- i + 1 until vars.length } yield
         struct(lit(vars(i)).as("var_a"), lit(vars(j)).as("var_b"),
-          corrOf(vars(i), vars(j)).as("corr"))
+          round(momentCorr(vars(i), vars(j)), 6).as("corr"))
       m.select(inline(array(pairs: _*))).orderBy("var_a", "var_b")
     }, Some {
       val defs = Seq("qty" -> "CAST(l_quantity AS HUGEINT)",
@@ -1389,19 +1399,10 @@ object QueriesRelational {
         col("l_quantity").cast("bigint").cast(dec).as("y"),
         round(col("l_discount") * 100).cast("bigint").cast(dec).as("z"))
       val vars = Seq("x", "y", "z")
-      val aggs = Seq(count(lit(1)).cast(dec).as("n")) ++
-        vars.map(v => sum(col(v)).as(s"s_$v")) ++
-        (for { i <- vars.indices; j <- i until vars.length } yield
-          sum(col(vars(i)) * col(vars(j))).as(s"s_${vars(i)}_${vars(j)}"))
-      val m = base.agg(aggs.head, aggs.tail: _*)
-      def den(v: String) =
-        (col("n") * col(s"s_${v}_$v") - col(s"s_$v") * col(s"s_$v")).cast("double")
-      def corrOf(a: String, b: String) =
-        (col("n") * col(s"s_${a}_$b") - col(s"s_$a") * col(s"s_$b")).cast("double") /
-          sqrt(den(a) * den(b))
-      m.withColumn("r_xy", corrOf("x", "y"))
-        .withColumn("r_xz", corrOf("x", "z"))
-        .withColumn("r_yz", corrOf("y", "z"))
+      val m = crossMoments(base, vars)
+      m.withColumn("r_xy", momentCorr("x", "y"))
+        .withColumn("r_xz", momentCorr("x", "z"))
+        .withColumn("r_yz", momentCorr("y", "z"))
         .select(round(col("r_xy"), 6).as("r_xy"),
           round(col("r_xz"), 6).as("r_xz"),
           round(col("r_yz"), 6).as("r_yz"),

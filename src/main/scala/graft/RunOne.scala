@@ -13,7 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * included; those the query function ran before returning its frame in
   * brackets), the generated classes it compiled and their compile time, so
   * a cut in eager jobs or a warm rep that recompiles shows up without a
-  * trace. Usage: runMain graft.RunOne <sfDir> <query> [reps]
+  * trace, and then one line per [[graft.ops.SizeGate]] decision the rep
+  * made: the gate, the side it took and its (measure,limit) pairs.
+  * Usage: runMain graft.RunOne <sfDir> <query> [reps]
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
@@ -31,16 +33,18 @@ object RunOne {
         val j0 = jobs.get
         val t0 = System.nanoTime()
         val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        ListenerBus.drain(spark.sparkContext)
-        val built = jobs.get - j0
-        val n = df.count()
+        val ((built, n), gates) = graft.ops.SizeGate.recording {
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          ListenerBus.drain(spark.sparkContext)
+          (jobs.get - j0, df.count())
+        }
         val secs = (System.nanoTime() - t0) / 1e9
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         val compileMs = (CodeGenerator.compileTime - ns0) / 1e6
         ListenerBus.drain(spark.sparkContext)
         println(f"[runone] $name rep $i OK rows=$n ($secs%.2f s, ${jobs.get - j0} jobs ($built building), " +
           f"codegen $compiles compiles $compileMs%.0f ms)")
+        gates.foreach(d => println(s"[runone] $name rep $i gate ${d.gate} ${d.side} ${d.checks.mkString(" ")}"))
       } catch {
         case e: Throwable =>
           println(s"[runone] $name rep $i FAILED")

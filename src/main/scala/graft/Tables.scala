@@ -62,13 +62,6 @@ object Tables {
       df
     })
 
-  /** `l_extendedprice` always carries exactly 2 decimals; this recovers the
-    * exact integer cent count (round() is safe: the double is within 1e-9
-    * of an integer, nowhere near a .5 boundary).
-    */
-  private def cents(c: String) =
-    round(col(c) * 100).cast("bigint")
-
   /** Long-form beta matrix (SURVEY.md §1.1): probe = part, sample =
     * supplier, beta = exact-integer hash of the line item mapped into
     * (0,1). Duplicate (probe, sample) pairs are deduplicated with min()
@@ -84,7 +77,7 @@ object Tables {
       table(spark, dir, "lineitem")
         .select(
           col("l_partkey"), col("l_suppkey"),
-          (((cents("l_extendedprice") + col("l_linenumber")) % 997)
+          (((graft.functions.Fns.cents(col("l_extendedprice")) + col("l_linenumber")) % 997)
             .cast("double") / 997.0).as("beta_raw"))
         .groupBy("l_partkey", "l_suppkey")
         .agg(min("beta_raw").as("beta"))

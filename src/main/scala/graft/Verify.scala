@@ -1,5 +1,11 @@
 package graft
+
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -26,21 +32,10 @@ object Verify {
       // (Targeted — the Tables derived-view caches survive.)
       finally graft.ops.Caches.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => included(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes quotes, backslashes and every control character, so a
+    // tab or CR in a query's oracle SQL still reads back as valid JSON.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), new ObjectMapper()
+      .writeValueAsString(SparkEntry.oracleSql.filter(kv => included(kv._1)).asJava))
     spark.stop()
   }
 }

@@ -120,29 +120,23 @@ object Curation {
 
   /** Per-stratum quantile profile of a score column — the distribution
     * report a curation run uses to pick quality cutoffs. Size-dispatched
-    * like bhAdjust: exact `percentile` buffers every value of a stratum in
-    * its aggregation buffer (right answer, bounded memory only while
-    * strata are small), so above [[ExactMaxRows]] TOTAL rows the profile
-    * switches to `approx_percentile` — a t-digest sketch with constant
-    * per-group memory and mergeable partials, the only shape that
-    * survives a 100 TB stratum.
+    * by the [[graft.ops.SizeGate]] `Curation.quantileProfile`: exact
+    * `percentile` buffers every value of a stratum in its aggregation
+    * buffer (right answer, bounded memory only while strata are small), so
+    * above [[ExactMaxRows]] TOTAL rows the profile switches to
+    * `approx_percentile` — a t-digest sketch with constant per-group memory
+    * and mergeable partials, the only shape that survives a 100 TB stratum.
     */
   def quantileProfile(df: DataFrame, strataCol: String,
-                      scoreCol: String): DataFrame =
+                      scoreCol: String): DataFrame = {
     // Dispatch count WITHOUT persisting: the input is the caller's frame
     // (persisting it here would register a cache we don't own — see the
     // ops.Caches ownership contract — and materializing a 100 TB input to
     // storage is exactly the cost the sketch path avoids). The price is
     // one extra scan pass; callers with an expensive upstream should
     // persist it themselves.
-    quantileProfile(df, strataCol, scoreCol, exact = df.count() <= ExactMaxRows)
-
-  /** [[quantileProfile]] with its path pinned: `exact = false` is the
-    * t-digest sketch.
-    */
-  private[graft] def quantileProfile(df: DataFrame, strataCol: String,
-                                     scoreCol: String,
-                                     exact: Boolean): DataFrame = {
+    val exact = graft.ops.SizeGate("Curation.quantileProfile",
+      df.count() -> ExactMaxRows) == graft.ops.SizeGate.Local
     // the column name is quoted into the SQL string — backticks keep
     // non-identifier names (e.g. "quality-score") as one column reference
     // instead of parsing as arbitrary SQL

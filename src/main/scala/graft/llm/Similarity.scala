@@ -215,15 +215,11 @@ object Similarity {
 
   /** Bounded deterministic training sample: every `stride`-th vec_id, so
     * the quantizer sees ≈`maxTrain` spread-out rows with no seed and no
-    * shuffle. Returns rows sorted by vec_id (collection order must not
-    * depend on partitioning).
+    * shuffle, out of `unit`'s `total` rows. Returns rows sorted by vec_id
+    * (collection order must not depend on partitioning).
     */
-  private def trainSample(unit: DataFrame, vecCol: String,
-                          maxTrain: Long,
-                          knownTotal: Long = -1L): Array[Array[Double]] = {
-    // callers that already counted (trainCenters' dispatch) thread the
-    // total through instead of paying a second count job
-    val total = if (knownTotal >= 0L) knownTotal else unit.count()
+  private def trainSample(unit: DataFrame, vecCol: String, maxTrain: Long,
+                          total: Long): Array[Array[Double]] = {
     val sampled =
       if (total <= maxTrain) unit
       else unit.filter(pmod(col("vec_id"), lit((total + maxTrain - 1) / maxTrain)) === 0)
@@ -238,7 +234,8 @@ object Similarity {
     picked.sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
   }
 
-  /** Codebook/centroid training dispatch (r8). Below `maxTrain` corpus
+  /** Codebook/centroid training dispatch (r8), the
+    * [[graft.ops.SizeGate]] `Similarity.trainCenters`. Below `maxTrain` corpus
     * rows the quantizer trains driver-locally ([[localKMeans]] on the
     * whole corpus via [[trainSample]] — zero distributed fits, seed-free
     * deterministic, the oracle-friendly path). ABOVE it, a bounded driver
@@ -252,16 +249,14 @@ object Similarity {
     * columns) is identical. Centers are sorted lexicographically so cell
     * numbering does not depend on the fit's internal (partitioning-
     * dependent) center order.
-    *
-    * @param forceLocal pins the driver-local path regardless of corpus
-    *   size — the dispatch-equivalence/quality spec hook (SimilaritySpec)
     */
   private[graft] def trainCenters(unit: DataFrame, vecCol: String, k: Int,
-      maxTrain: Long, forceLocal: Boolean = false): Array[Array[Double]] = {
+      maxTrain: Long): Array[Array[Double]] = {
     val total = unit.count()
     val centers =
-      if (forceLocal || total <= maxTrain)
-        localKMeans(trainSample(unit, vecCol, maxTrain, knownTotal = total), k)
+      if (graft.ops.SizeGate("Similarity.trainCenters", total -> maxTrain) ==
+          graft.ops.SizeGate.Local)
+        localKMeans(trainSample(unit, vecCol, maxTrain, total), k)
       else {
         import org.apache.spark.ml.clustering.KMeans
         val feats = unit.select(org.apache.spark.ml.functions
@@ -435,7 +430,7 @@ object Similarity {
       withVec(emb)
         .withColumn("nrm", sqrt(dotC(col("v"), col("v"))))
         .persist())
-    val centers = localKMeans(trainSample(e, "v", 200L * ncells), ncells)
+    val centers = localKMeans(trainSample(e, "v", 200L * ncells, e.count()), ncells)
     val assigned = e
       .withColumn("cell", nearestC(centers, col("v")) - 1)
       .select(col("vec_id"), col("cell"), col("v"), col("nrm"))

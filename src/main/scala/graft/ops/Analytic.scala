@@ -265,7 +265,7 @@ object Analytic {
     */
   def spearmanMatrix(df: DataFrame, probeCol: String, sampleCol: String,
                      valCol: String): DataFrame =
-    spearman(df, probeCol, sampleCol, valCol, None, None)
+    spearman(df, probeCol, sampleCol, valCol, None)
 
   /** K12 thresholded production variant (r8): emit only sample pairs with
     * |Spearman ρ| ≥ `tau`, via a deterministic sign-sketch pre-filter so
@@ -304,18 +304,7 @@ object Analytic {
     */
   def spearmanThresholded(df: DataFrame, probeCol: String, sampleCol: String,
                           valCol: String, tau: Double): DataFrame =
-    spearman(df, probeCol, sampleCol, valCol, Some(SpearmanSketch(tau)), None)
-
-  /** The distributed plans at a pinned moment width (decimal(38,0) when
-    * `decimal`, else bigint), past the local gate — for the specs.
-    */
-  private[graft] def spearmanMatrixDistributed(df: DataFrame, probeCol: String,
-      sampleCol: String, valCol: String, decimal: Boolean): DataFrame =
-    spearman(df, probeCol, sampleCol, valCol, None, Some(decimal))
-
-  private[graft] def spearmanThresholdedDistributed(df: DataFrame, probeCol: String,
-      sampleCol: String, valCol: String, tau: Double, decimal: Boolean): DataFrame =
-    spearman(df, probeCol, sampleCol, valCol, Some(SpearmanSketch(tau)), Some(decimal))
+    spearman(df, probeCol, sampleCol, valCol, Some(SpearmanSketch(tau)))
 
   /** The thresholded search's threshold and band width. r is derived from
     * the sample count (smallest r with 4·2^r ≥ samples, floor 4) so the
@@ -328,7 +317,8 @@ object Analytic {
       (4 to 30).find(b => (1L << b) * 4 >= nSamples).getOrElse(30)
   }
 
-  /** One bound for the moment width and the local gate. A sample's doubled
+  /** One bound for the moment width (the [[SizeGate]]
+    * `Analytic.spearmanWidth`) and the local gate. A sample's doubled
     * ranks are ≤ 2n+1 and a pair shares ≤ n probes, so every pair moment
     * and sketch projection is ≤ 4n³ < 2⁶³ while the largest per-sample
     * row count n is ≤ 1.3M: bigint is exact there, decimal(38,0) above.
@@ -347,10 +337,11 @@ object Analytic {
     * 2.9 → 5.6 s) while the candidate-bounded thresholded output kept
     * winning at 1500.
     */
-  private val SpearmanLocalMaxSamples = 1500
-  private val SpearmanMatrixLocalMaxSamples = 256
+  private val SpearmanLocalMaxSamples = 1500L
+  private val SpearmanMatrixLocalMaxSamples = 256L
   /** Beyond ~3·10⁸ pair events the distributed expansion's parallelism
-    * wins back its fixed cost, so the local path declines.
+    * wins back its fixed cost, so the local path declines (the
+    * [[SizeGate]] `Analytic.spearmanEvents`, after the local collect).
     */
   private val SpearmanLocalEventBudget = 300000000L
   private val SpearmanPackBits = 40 // packed entry: sampleIndex << 40 | ar2
@@ -367,18 +358,15 @@ object Analytic {
     *  2. Dispatch: one per-sample count collect gives the sorted non-null
     *     sample ids, the total row count and the largest per-sample count
     *     (the width, [[SpearmanMaxRows]]), and fills the cache.
-    *  3. Small inputs run [[spearmanLocal]]; the rest, and any input the
-    *     local path declines, run [[spearmanDistributed]]. Both compute the
-    *     same exact integers and the same final doubles, so the dispatch is
-    *     plan-only (PropertySpec pins local ≡ distributed and bigint ≡
-    *     decimal; every k12 query replays against the DuckDB oracle).
-    *
-    * @param pinnedDecimal Some(decimal) pins the distributed plan at that
-    *   width (decimal(38,0) when true, else bigint).
+    *  3. The [[SizeGate]] `Analytic.spearman` sends small inputs to
+    *     [[spearmanLocal]]; the rest, and any input the local path
+    *     declines, run [[spearmanDistributed]]. Both compute the same exact
+    *     integers and the same final doubles, so the dispatch is plan-only
+    *     (PropertySpec pins local ≡ distributed and bigint ≡ decimal; every
+    *     k12 query replays against the DuckDB oracle).
     */
   private def spearman(df: DataFrame, probeCol: String, sampleCol: String,
-      valCol: String, sketch: Option[SpearmanSketch],
-      pinnedDecimal: Option[Boolean]): DataFrame = {
+      valCol: String, sketch: Option[SpearmanSketch]): DataFrame = {
     val w = Window.partitionBy(sampleCol).orderBy(valCol)
     val cum = count(lit(1))
       .over(w.rangeBetween(Window.unboundedPreceding, Window.currentRow))
@@ -394,11 +382,13 @@ object Analytic {
     val maxSamples =
       if (sketch.isEmpty) SpearmanMatrixLocalMaxSamples else SpearmanLocalMaxSamples
     val local =
-      if (pinnedDecimal.isEmpty && sizes.sum <= SpearmanMaxRows && sampleIds.length <= maxSamples)
+      if (SizeGate("Analytic.spearman", sizes.sum -> SpearmanMaxRows,
+          sampleIds.length.toLong -> maxSamples) == SizeGate.Local)
         spearmanLocal(rb, probeCol, sampleCol, sampleIds, sketch)
       else None
     local.getOrElse(spearmanDistributed(rb, probeCol, sampleCol, sampleIds, sketch,
-      pinnedDecimal.getOrElse(sizes.exists(_ > SpearmanMaxRows))))
+      decimal = SizeGate("Analytic.spearmanWidth",
+        sizes.foldLeft(0L)(_ max _) -> SpearmanMaxRows) == SizeGate.Distributed))
   }
 
   /** Distributed tail. The bounded sample axis is dict-encoded (sorted, so
@@ -535,8 +525,9 @@ object Analytic {
           ((index(row.getString(1)).toLong << SpearmanPackBits) | row.getLong(2))
       }
     val (probes, groups) = byProbe.asScala.toArray.map { case (p, g) => (p, g.toArray) }.unzip
-    if (groups.foldLeft(0L)((e, g) => e + g.length.toLong * (g.length - 1) / 2) >
-        SpearmanLocalEventBudget) return None
+    val events = groups.foldLeft(0L)((e, g) => e + g.length.toLong * (g.length - 1) / 2)
+    if (SizeGate("Analytic.spearmanEvents", events -> SpearmanLocalEventBudget) ==
+        SizeGate.Distributed) return None
     val mask = (1L << SpearmanPackBits) - 1
     val cand = sketch.map { s =>
       val r = s.r(nS)

@@ -24,8 +24,9 @@ object Caches {
     override def initialValue(): ConcurrentLinkedQueue[DataFrame] = tracked
   }
 
-  /** Persist (MEMORY_AND_DISK by default via Dataset.persist) and register
-    * for later release. Returns the same DataFrame.
+  /** Registers `df`, which the caller has persisted, for release by the
+    * innermost [[releasing]] region or by [[releaseAll]]. Persists
+    * nothing itself; returns the same DataFrame.
     */
   def track(df: DataFrame): DataFrame = {
     region.get.add(df)

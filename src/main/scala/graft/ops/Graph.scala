@@ -80,13 +80,8 @@ object Graph {
     * @return (id, rank) — rank in Scale units, int64
     */
   def pageRank(edges: DataFrame, iterations: Int): DataFrame =
-    gated(edges, "src", "dst")(pageRankLocal(_, iterations),
+    gated("Graph.pageRank", edges, "src", "dst")(pageRankLocal(_, iterations),
       pageRankLoop(_, iterations))
-
-  /** [[pageRank]]'s distributed loop at any size. */
-  private[graft] def pageRankDistributed(edges: DataFrame,
-                                         iterations: Int): DataFrame =
-    pageRankLoop(undirected(edgeList(edges, "src", "dst")), iterations)
 
   private def pageRankLoop(und: DataFrame, iterations: Int): DataFrame = {
     val deg = und.groupBy("src").agg(count(lit(1)).as("outdeg"))
@@ -183,13 +178,12 @@ object Graph {
     // materialization barrier costs more than the recomputes it saves on
     // a cached-scan upstream. Callers with a genuinely expensive pair
     // generator should persist before calling.
-    val pr = pairs
-    val deg = pr.select(col("u").as("n"))
-      .unionAll(pr.select(col("v").as("n")))
+    val deg = pairs.select(col("u").as("n"))
+      .unionAll(pairs.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val e = pr
+    val e = pairs
       .join(deg.select(col("n").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("n").as("v"), col("deg").as("dv")), "v")
       .select(when(uFirst, col("u")).otherwise(col("v")).as("src"),
@@ -231,14 +225,8 @@ object Graph {
     */
   def shortestPaths(edges: DataFrame, seeds: DataFrame,
                     maxHops: Int): DataFrame =
-    gated(edges, "src", "dst")(shortestPathsLocal(_, seeds, maxHops),
-      shortestPathsLoop(_, seeds, maxHops))
-
-  /** [[shortestPaths]]'s distributed loop at any size. */
-  private[graft] def shortestPathsDistributed(edges: DataFrame,
-                                              seeds: DataFrame,
-                                              maxHops: Int): DataFrame =
-    shortestPathsLoop(undirected(edgeList(edges, "src", "dst")), seeds, maxHops)
+    gated("Graph.shortestPaths", edges, "src", "dst")(
+      shortestPathsLocal(_, seeds, maxHops), shortestPathsLoop(_, seeds, maxHops))
 
   private def seedIds(seeds: DataFrame): DataFrame =
     seeds.select(col("id")).where(col("id").isNotNull).distinct()
@@ -315,19 +303,18 @@ object Graph {
     * @return (doc_id, cluster) — cluster = min vertex id of the component
     */
   def connectedComponents(edges: DataFrame, vertices: DataFrame): DataFrame =
-    gated(edges, "doc_a", "doc_b")(componentsLocal(_, vertices),
-      componentsLoop(_, vertices, ComponentsMaxIter))
+    gated("Graph.connectedComponents", edges, "doc_a", "doc_b")(
+      componentsLocal(_, vertices), componentsLoop(_, vertices, ComponentsMaxIter))
 
   /** Label-propagation rounds after which [[connectedComponents]]'
     * distributed loop throws rather than return unconverged labels. */
   private val ComponentsMaxIter = 50
 
-  /** [[connectedComponents]]' distributed loop at any size. */
-  private[graft] def connectedComponentsDistributed(
-      edges: DataFrame, vertices: DataFrame,
-      maxIter: Int = ComponentsMaxIter): DataFrame =
-    componentsLoop(undirected(edgeList(edges, "doc_a", "doc_b")), vertices,
-      maxIter)
+  /** [[connectedComponents]]' distributed loop with its round limit set:
+    * the non-convergence spec's entry. */
+  private[graft] def connectedComponentsLoop(edges: DataFrame, vertices: DataFrame,
+                                             maxIter: Int): DataFrame =
+    componentsLoop(undirected(edgeList(edges, "doc_a", "doc_b")), vertices, maxIter)
 
   private def componentsLoop(und: DataFrame, vertices: DataFrame,
                              maxIter: Int): DataFrame = {
@@ -415,40 +402,36 @@ object Graph {
   }
 
   /** The one-orientation `(src, dst)` edge list every kernel above starts
-    * from, persisted (it serves the gate's count and then the collect or
-    * the union fill). A pair with a null endpoint is dropped: it joins no
-    * two vertices, and neither path may count the null as a node.
+    * from. A pair with a null endpoint is dropped: it joins no two
+    * vertices, and neither path may count the null as a node.
     */
   private def edgeList(edges: DataFrame, src: String, dst: String): DataFrame =
-    Caches.track(edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull).persist())
+    edges.select(col(src).as("src"), col(dst).as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
 
   /** Both orientations of a one-orientation list, persisted: the
-    * distributed loops re-read it every round, and the persisted
-    * one-orientation input keeps the upstream from running once per union
-    * branch.
+    * distributed loops re-read it every round.
     */
   private def undirected(edg: DataFrame): DataFrame =
     Caches.track(edg.union(edg.select(col("dst").as("src"),
       col("src").as("dst"))).persist())
 
-  /** The size gate in front of every iterative kernel here: count the
-    * one-orientation list; at most [[LocalMaxEdges]] edges collect into a
-    * [[LocalGraph]] for `local`, more go to `distributed` as the
-    * two-orientation union. The union persists BELOW the gate, where only
-    * the distributed loops pay its fill: persisting it ahead of the count
-    * put a 2E-row fill and a double-width collect in front of every
-    * driver-local run (measured g01 1.42 → 2.32 s).
+  /** The [[SizeGate]] `gate` in front of an iterative kernel here, over
+    * the one-orientation list's count: at most [[LocalMaxEdges]] edges
+    * collect into a [[LocalGraph]] for `local`, more go to `distributed`
+    * as the two-orientation union, which persists over the persisted list.
+    * The union persists BELOW the gate, where only the distributed loops
+    * pay its fill: persisting it ahead of the count put a 2E-row fill and
+    * a double-width collect in front of every driver-local run (measured
+    * g01 1.42 → 2.32 s). Both sides return materialized results (local
+    * relations, checkpointed loop state), so the list is released on
+    * return.
     */
-  private def gated(edges: DataFrame, src: String, dst: String)(
+  private def gated(gate: String, edges: DataFrame, src: String, dst: String)(
       local: LocalGraph => DataFrame,
-      distributed: DataFrame => DataFrame): DataFrame = {
-    val edg = edgeList(edges, src, dst)
-    // An RDD count fills the cache and counts it; Dataset.count would add
-    // an aggregate exchange, a job of its own.
-    if (edg.rdd.count() <= LocalMaxEdges) local(new LocalGraph(edg))
-    else distributed(undirected(edg))
-  }
+      distributed: DataFrame => DataFrame): DataFrame =
+    SizeGate.counted(gate, edgeList(edges, src, dst), LocalMaxEdges)(
+      edg => local(new LocalGraph(edg)), edg => distributed(undirected(edg)))
 
   /** A one-orientation edge list collected once into a dense index: vertex
     * `i` is `ids(i)`, numbered in first-seen order; edge `e` joins `src(e)`

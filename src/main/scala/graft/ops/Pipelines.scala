@@ -47,30 +47,21 @@ object Pipelines {
   /** QC'd → BMIQ-normalized → ComBat-adjusted → top-k → PCA coordinates.
     *
     * QC runs in Spark. Its output is joined once with the manifest's
-    * `design_type`, persisted and counted; the sheet is collected once.
-    * At most [[LocalMaxRows]] (1,000,000) rows are collected into
-    * primitive arrays and run BMIQ → M-values → ComBat → top-k → PCA on
-    * the driver; larger tables run the same steps as distributed
-    * transforms over the persisted table, which is released before
-    * returning. Both paths call the same per-sample BMIQ, per-probe
-    * ComBat, M-value and PCA functions, so they differ only in summation
-    * order. Either way the driver holds the samples × [[TopK]] matrix PCA
-    * runs on.
+    * `design_type` and goes through the [[SizeGate]] `Pipelines.fullWorkflow`
+    * (persisted, counted, released before returning); the sheet is
+    * collected once. At most [[LocalMaxRows]] (1,000,000) rows are
+    * collected into primitive arrays and run BMIQ → M-values → ComBat →
+    * top-k → PCA on the driver; larger tables run the same steps as
+    * distributed transforms over the persisted table. Both paths call the
+    * same per-sample BMIQ, per-probe ComBat, M-value and PCA functions, so
+    * they differ only in summation order. Either way the driver holds the
+    * samples × [[TopK]] matrix PCA runs on.
     *
     * @return PCA coordinates per surviving sample (the workflow's final
     *         plot-ready table, workflow.R:229-237).
     */
   def fullWorkflow(beta: DataFrame, detp: DataFrame, sheet: DataFrame,
-                   manifest: DataFrame): DataFrame =
-    workflow(beta, detp, sheet, manifest, pinDistributed = false)
-
-  /** [[fullWorkflow]]'s distributed chain at any size — for the specs. */
-  private[graft] def fullWorkflowDistributed(beta: DataFrame, detp: DataFrame,
-      sheet: DataFrame, manifest: DataFrame): DataFrame =
-    workflow(beta, detp, sheet, manifest, pinDistributed = true)
-
-  private def workflow(beta: DataFrame, detp: DataFrame, sheet: DataFrame,
-                       manifest: DataFrame, pinDistributed: Boolean): DataFrame = {
+                   manifest: DataFrame): DataFrame = {
     // The sheet (one row per sample) as a local relation: both chains
     // read ComBat's batch and group axes and each sample's run and group
     // from it without another job.
@@ -82,14 +73,8 @@ object Pipelines {
     val typed = Qc.qcBetas(beta, detp, nSamples = -1, thr = QcThr)
       .join(broadcast(manifest.select("probe_id", "design_type")), "probe_id")
       .select("probe_id", "sample_id", "beta", "design_type")
-      .persist()
-    try {
-      // An RDD count fills the cache and counts it; Dataset.count would add
-      // an aggregate exchange, a job of its own.
-      if (!pinDistributed && typed.rdd.count() <= LocalMaxRows)
-        local(typed, localDims)
-      else distributed(typed, localDims)
-    } finally typed.unpersist(false)
+    SizeGate.counted("Pipelines.fullWorkflow", typed, LocalMaxRows)(
+      local(_, localDims), distributed(_, localDims))
   }
 
   /** The post-QC chain as distributed transforms. */

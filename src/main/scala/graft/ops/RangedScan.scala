@@ -3,6 +3,8 @@ package graft.ops
 import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.{col, spark_partition_id, sum}
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -48,12 +50,13 @@ object RangedScan {
                         out: Seq[StructField], weight: Column, fold: Option[Fold],
                         emit: (Any, Long, Double) => Seq[Any])
 
-  /** The size gate. `counted` is an exact row count the caller already
-    * holds; without one the plan estimate decides, which needs no job.
+  /** The [[SizeGate]] `RangedScan.run`, whose local side is one range
+    * partition. `counted` is an exact row count the caller already holds;
+    * without one the plan estimate decides, which needs no job.
     */
   def run(df: DataFrame, scan: Scan, counted: Option[Long] = None): DataFrame =
-    ranged(df, scan,
-      if (counted.getOrElse(planRowEstimate(df)) <= SinglePartitionMaxRows) 1 else 0)
+    ranged(df, scan, if (SizeGate("RangedScan.run", counted.getOrElse(planRowEstimate(df)) ->
+      SinglePartitionMaxRows) == SizeGate.Local) 1 else 0)
 
   /** Row-count ESTIMATE from plan statistics — no job. Sums the leaf
     * relations' sizeInBytes (cached relations report their real in-memory
@@ -66,15 +69,21 @@ object RangedScan {
     * leaves are summed once per appearance. (An /8 divisor was measured
     * to shunt the k-tier's ~130 MB multi-leaf inputs onto the
     * multi-partition path at sf0.1 — k22_mk_inference 1.48 → 1.82 s — for
-    * scans that fit one task with 10× headroom.) Suitable only for
+    * scans that fit one task with 10× headroom.) A cached relation not
+    * yet filled has no bytes of its own: Spark reports its cached plan's
+    * statistics, which multiply a join's children sizes, so it counts as
+    * the leaves of the plan it caches instead. Suitable only for
     * plan-equivalent dispatches (every partition count is bit-equal);
     * never use where the count affects a result.
     */
-  private[graft] def planRowEstimate(df: DataFrame): Long = {
-    val leafBytes = df.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).sum
-    (leafBytes / 48).min(BigInt(Long.MaxValue)).toLong
-  }
+  private def planRowEstimate(df: DataFrame): Long =
+    (leafBytes(df.queryExecution.optimizedPlan) / 48).min(BigInt(Long.MaxValue)).toLong
+
+  private def leafBytes(plan: LogicalPlan): BigInt = plan.collectLeaves().map {
+    case cached: InMemoryRelation if !cached.cacheBuilder.isCachedColumnBuffersLoaded =>
+      leafBytes(cached.cacheBuilder.logicalPlan)
+    case leaf => leaf.stats.sizeInBytes
+  }.sum
 
   private val WeightCol = "__scan_weight"
   private val SeedCol = "__scan_seed"

@@ -1,11 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.Curation
-import graft.ops.Graph
+import graft.ops.{Graph, SizeGate}
 
 class CurationSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The distributed label-propagation path, at any size. */
+  private def distributedComponents(edges: DataFrame, verts: DataFrame) =
+    SizeGate.pinned("Graph.connectedComponents" -> SizeGate.Distributed)(
+      Graph.connectedComponents(edges, verts))
 
   test("connected components labels chains, pairs and singletons") {
     // graph: 1-2-3 chain, 5-4 pair (reversed direction), 6 isolated
@@ -21,7 +27,7 @@ class CurationSpec extends SparkSpec {
     val edges = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val verts = (1L to n).toDF("doc_id")
     // the distributed label-propagation path
-    val got = Graph.connectedComponentsDistributed(edges, verts)
+    val got = distributedComponents(edges, verts)
       .as[(Long, Long)].collect()
     assert(got.length == n && got.forall(_._2 == 1L))
   }
@@ -33,7 +39,7 @@ class CurationSpec extends SparkSpec {
     val ids = Seq(base, base - 7, -base, -base + 11, base - 1000)
     val edges = Seq((ids(0), ids(1)), (ids(2), ids(3))).toDF("doc_a", "doc_b")
     val verts = ids.toDF("doc_id")
-    val got = Graph.connectedComponentsDistributed(edges, verts)
+    val got = distributedComponents(edges, verts)
       .as[(Long, Long)].collect().toMap
     assert(got(ids(0)) == ids(1) && got(ids(1)) == ids(1)) // min of the pair
     assert(got(ids(2)) == ids(2) && got(ids(3)) == ids(2))
@@ -57,7 +63,8 @@ class CurationSpec extends SparkSpec {
       .toDF("lang", "score")
     val exact = Curation.quantileProfile(df, "lang", "score")
       .collect().map(r => r.getString(0) -> (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    val approx = Curation.quantileProfile(df, "lang", "score", exact = false)
+    val approx = SizeGate.pinned("Curation.quantileProfile" -> SizeGate.Distributed)(
+      Curation.quantileProfile(df, "lang", "score"))
       .collect().map(r => r.getString(0) -> (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
     for (k <- Seq("a", "b"); i <- 0 until 3) {
       val e = exact(k).productElement(i).asInstanceOf[Double]
@@ -238,7 +245,7 @@ class CurationSpec extends SparkSpec {
       (None, None)).toDF("doc_a", "doc_b")
     val verts = (1L to 4L).toDF("doc_id")
     val local = Graph.connectedComponents(edges, verts)
-    val dist = Graph.connectedComponentsDistributed(edges, verts)
+    val dist = distributedComponents(edges, verts)
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L)
     assert(local.as[(Long, Long)].collect().toMap == expected)
     assert(dist.as[(Long, Long)].collect().toMap == expected)
@@ -249,7 +256,7 @@ class CurationSpec extends SparkSpec {
     val edges = (1L until 10L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val verts = (1L to 10L).toDF("doc_id")
     val e = intercept[IllegalStateException] {
-      Graph.connectedComponentsDistributed(edges, verts, maxIter = 3)
+      Graph.connectedComponentsLoop(edges, verts, maxIter = 3)
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -283,7 +290,7 @@ class CurationSpec extends SparkSpec {
       val local = Graph.connectedComponents(
           edges.toDF("doc_a", "doc_b"), (1L to n.toLong).toDF("doc_id"))
         .as[(Long, Long)].collect().toMap
-      val dist = Graph.connectedComponentsDistributed(
+      val dist = distributedComponents(
           edges.toDF("doc_a", "doc_b"), (1L to n.toLong).toDF("doc_id"))
         .as[(Long, Long)].collect().toMap
       assert(local == expected)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Graph
+import graft.ops.{Graph, SizeGate}
 
 /** ops/Graph: fixed-point-integer PageRank invariants plus bit-equality
   * against a driver-side reference implementation of the same recurrence.
@@ -12,7 +12,8 @@ class GraphSpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     val df = edges.toDF("src", "dst")
-    try (if (distributed) Graph.pageRankDistributed(df, iters)
+    try (if (distributed) SizeGate.pinned("Graph.pageRank" -> SizeGate.Distributed)(
+           Graph.pageRank(df, iters))
          else Graph.pageRank(df, iters))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     finally graft.ops.Caches.releaseAll()
@@ -99,7 +100,8 @@ class GraphSpec extends SparkSpec {
       (6L, 7L), (8L, 9L), (9L, 1L)).toDF("src", "dst")
     val seeds = Seq(1L, 42L).toDF("id")
     def run(distributed: Boolean) =
-      try (if (distributed) Graph.shortestPathsDistributed(edges, seeds, maxHops = 3)
+      try (if (distributed) SizeGate.pinned("Graph.shortestPaths" -> SizeGate.Distributed)(
+             Graph.shortestPaths(edges, seeds, maxHops = 3))
            else Graph.shortestPaths(edges, seeds, maxHops = 3))
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       finally graft.ops.Caches.releaseAll()
@@ -117,11 +119,13 @@ class GraphSpec extends SparkSpec {
       Seq((Some(6L), None), (None, Some(2L)), (None, None))).toDF("src", "dst")
     val seeds = Seq(Some(1L), None).toDF("id")
     try {
-      val ranks = Seq(Graph.pageRank(edges, 4), Graph.pageRankDistributed(edges, 4))
+      val ranks = Seq(Graph.pageRank(edges, 4),
+        SizeGate.pinned("Graph.pageRank" -> SizeGate.Distributed)(Graph.pageRank(edges, 4)))
       ranks.foreach(r => assert(
         r.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == reference(g, 4)))
       val dists = Seq(Graph.shortestPaths(edges, seeds, maxHops = 2),
-        Graph.shortestPathsDistributed(edges, seeds, maxHops = 2))
+        SizeGate.pinned("Graph.shortestPaths" -> SizeGate.Distributed)(
+          Graph.shortestPaths(edges, seeds, maxHops = 2)))
       dists.foreach(d => assert(d.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap ==
         Map(1L -> 0, 2L -> 1, 3L -> 1, 4L -> 1, 5L -> 2)))
       assert(ranks(0).schema == ranks(1).schema)

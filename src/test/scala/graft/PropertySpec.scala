@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.functions.Fns
-import graft.ops.{Analytic, RangedScan}
+import graft.ops.{Analytic, RangedScan, SizeGate}
 
 /** Property-based invariants (SURVEY.md §5): M-transform round-trip, BH
   * bounds/monotonicity, top-k permutation invariance. Inputs are drawn
@@ -16,6 +16,12 @@ class PropertySpec extends SparkSpec {
 
   private def samples[A](gen: Gen[A], n: Int): Seq[A] =
     (0 until n).map(i => gen.pureApply(Gen.Parameters.default, Seed(42L + i)))
+
+  /** A Spearman kernel on its distributed plan, with the moment width's
+    * side (local: bigint, distributed: decimal(38,0)). */
+  private def distributed[T](width: SizeGate.Side)(body: => T): T =
+    SizeGate.pinned("Analytic.spearman" -> SizeGate.Distributed,
+      "Analytic.spearmanWidth" -> width)(body)
 
   test("property: M-value round-trip within 1e-9 on any (0,1) vector") {
     samples(Gen.listOfN(40, Gen.choose(1e-6, 1.0 - 1e-6)), 15).foreach { betas =>
@@ -238,11 +244,11 @@ class PropertySpec extends SparkSpec {
         val df = triples.distinct
           .map { case (p, s, v) => (f"p$p%03d", s"s$s", v / 12.0) }
           .toDF("probe_id", "sample_id", "beta")
-        val narrow = Analytic.spearmanMatrixDistributed(df, "probe_id", "sample_id",
-            "beta", decimal = false)
+        val narrow = distributed(SizeGate.Local)(Analytic.spearmanMatrix(df, "probe_id",
+            "sample_id", "beta"))
           .orderBy("sa", "sb").collect().toSeq
-        val wide = Analytic.spearmanMatrixDistributed(df, "probe_id", "sample_id",
-            "beta", decimal = true)
+        val wide = distributed(SizeGate.Distributed)(Analytic.spearmanMatrix(df, "probe_id",
+            "sample_id", "beta"))
           .orderBy("sa", "sb").collect().toSeq
         assert(narrow == wide) // bit-equal: same integers, same final ops
         assert(narrow.nonEmpty)
@@ -250,8 +256,8 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: spearman driver-local kernels are bit-equal to the distributed plans") {
-    // the *Distributed entry points pin the distributed bigint plan; the
-    // public calls on these tiny inputs take the driver-local path — the collected
+    // the pins take the distributed bigint plan; the unpinned calls on
+    // these tiny inputs take the driver-local path — the collected
     // rows must reproduce the distributed integers and doubles exactly,
     // for both the full matrix and the sketch-thresholded variant (whose
     // local path replays md5 signs, projections, band canonicalization
@@ -264,16 +270,16 @@ class PropertySpec extends SparkSpec {
           .toDF("probe_id", "sample_id", "beta")
         val localM = Analytic.spearmanMatrix(df, "probe_id", "sample_id", "beta")
           .orderBy("sa", "sb").collect().toSeq
-        val distM = Analytic.spearmanMatrixDistributed(df, "probe_id", "sample_id",
-            "beta", decimal = false)
+        val distM = distributed(SizeGate.Local)(Analytic.spearmanMatrix(df, "probe_id",
+            "sample_id", "beta"))
           .orderBy("sa", "sb").collect().toSeq
         assert(localM == distM)
         assert(localM.nonEmpty)
         val localT = Analytic.spearmanThresholded(df, "probe_id", "sample_id",
             "beta", tau = 0.2)
           .orderBy("sa", "sb").collect().toSeq
-        val distT = Analytic.spearmanThresholdedDistributed(df, "probe_id", "sample_id",
-            "beta", tau = 0.2, decimal = false)
+        val distT = distributed(SizeGate.Local)(Analytic.spearmanThresholded(df,
+            "probe_id", "sample_id", "beta", tau = 0.2))
           .orderBy("sa", "sb").collect().toSeq
         assert(localT == distT)
       }

@@ -5,6 +5,11 @@ import graft.llm.Similarity
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
+  /** A Spearman kernel on its distributed plan at bigint width. */
+  private def distributed[T](body: => T): T = graft.ops.SizeGate.pinned(
+    "Analytic.spearman" -> graft.ops.SizeGate.Distributed,
+    "Analytic.spearmanWidth" -> graft.ops.SizeGate.Local)(body)
+
   private val emb = Seq(
     (0L, Seq(1.0f, 0.0f, 0.0f, 0.0f), 0),
     (1L, Seq(1.0f, 1.0f, 0.0f, 0.0f), 0), // cos with q = 1/sqrt(2)
@@ -154,19 +159,19 @@ class SimilaritySpec extends SparkSpec {
     val unitDf = df.select($"vec_id",
       org.apache.spark.sql.functions.transform($"embedding",
         x => x.cast("double")).as("v"))
-    // below threshold (maxTrain >= total): default == forceLocal exactly
+    // below threshold (maxTrain >= total): default == pinned local exactly
+    def pinnedLocal[T](body: => T) =
+      graft.ops.SizeGate.pinned("Similarity.trainCenters" -> graft.ops.SizeGate.Local)(body)
     val below = Similarity.trainCenters(unitDf, "v", 8, maxTrain = 5000L)
-    val belowForced = Similarity.trainCenters(unitDf, "v", 8, maxTrain = 5000L,
-      forceLocal = true)
+    val belowForced = pinnedLocal(Similarity.trainCenters(unitDf, "v", 8, maxTrain = 5000L))
     assert(below.map(_.toSeq).toSeq == belowForced.map(_.toSeq).toSeq)
     // above threshold: the distributed Spark ML fit sees every row; the
-    // forced-local path trains on a 16-point stride sample that cannot
+    // pinned-local path trains on a 16-point stride sample that cannot
     // witness 40 clusters. Quantization distortion (the k-means
     // objective, which bounds ADC/coarse-cell error — "index quality")
     // must not be worse than the starved sample's.
     val dist = Similarity.trainCenters(unitDf, "v", 16, maxTrain = 16L)
-    val starved = Similarity.trainCenters(unitDf, "v", 16, maxTrain = 16L,
-      forceLocal = true)
+    val starved = pinnedLocal(Similarity.trainCenters(unitDf, "v", 16, maxTrain = 16L))
     graft.ops.Caches.releaseAll()
     assert(dist.length == 16 && starved.length == 16)
     val pts = rows.map(_._2.map(_.toDouble).toArray)
@@ -297,16 +302,16 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("sa", "sb").collect().toSeq
     val expected = rows(Analytic.spearmanMatrix(clean, "probe_id", "sample_id", "beta"))
     assert(expected.nonEmpty)
-    // the small input takes the driver-local path; *Distributed pins the distributed one
+    // the small input takes the driver-local path; the pin takes the distributed one
     assert(rows(Analytic.spearmanMatrix(withNull, "probe_id", "sample_id", "beta")) == expected)
-    assert(rows(Analytic.spearmanMatrixDistributed(withNull, "probe_id", "sample_id", "beta",
-      decimal = false)) == expected)
+    assert(rows(distributed(Analytic.spearmanMatrix(withNull, "probe_id", "sample_id",
+      "beta"))) == expected)
     val thresholded = rows(Analytic.spearmanThresholded(clean, "probe_id", "sample_id",
       "beta", tau = 0.2))
     assert(rows(Analytic.spearmanThresholded(withNull, "probe_id", "sample_id",
       "beta", tau = 0.2)) == thresholded)
-    assert(rows(Analytic.spearmanThresholdedDistributed(withNull, "probe_id", "sample_id",
-      "beta", tau = 0.2, decimal = false)) == thresholded)
+    assert(rows(distributed(Analytic.spearmanThresholded(withNull, "probe_id", "sample_id",
+      "beta", tau = 0.2))) == thresholded)
     graft.ops.Caches.releaseAll()
   }
 
@@ -322,11 +327,11 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("sa", "sb").collect().toSeq
     val local = rows(Analytic.spearmanMatrix(df, "probe_id", "sample_id", "beta"))
     assert(local.nonEmpty && local.forall(_.getLong(2) == 20L))
-    assert(rows(Analytic.spearmanMatrixDistributed(df, "probe_id", "sample_id", "beta",
-      decimal = false)) == local)
+    assert(rows(distributed(Analytic.spearmanMatrix(df, "probe_id", "sample_id",
+      "beta"))) == local)
     assert(rows(Analytic.spearmanThresholded(df, "probe_id", "sample_id", "beta",
-      tau = 0.2)) == rows(Analytic.spearmanThresholdedDistributed(df, "probe_id",
-      "sample_id", "beta", tau = 0.2, decimal = false)))
+      tau = 0.2)) == rows(distributed(Analytic.spearmanThresholded(df, "probe_id",
+      "sample_id", "beta", tau = 0.2))))
     graft.ops.Caches.releaseAll()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import graft.ops.Pipelines
+import graft.ops.{Pipelines, SizeGate}
 
 /** e02's two post-QC chains: the driver-local chain that runs below the
   * size gate and the distributed chain above it call the same BMIQ,
@@ -26,7 +26,8 @@ class WorkflowSpec extends SparkSpec {
 
   private def both(beta: DataFrame, detp: DataFrame, sheet: DataFrame, manifest: DataFrame) = (
     Pipelines.fullWorkflow(beta, detp, sheet, manifest),
-    Pipelines.fullWorkflowDistributed(beta, detp, sheet, manifest))
+    SizeGate.pinned("Pipelines.fullWorkflow" -> SizeGate.Distributed)(
+      Pipelines.fullWorkflow(beta, detp, sheet, manifest)))
 
   Seq("sf0.001", "sf0.01").foreach { sf =>
     test(s"e02's driver-local chain matches the distributed chain at $sf") {

@@ -5,19 +5,24 @@ Runs each oracle_sql.json entry in DuckDB against the sf parquet tables,
 loads the corresponding Spark result parquet, sorts columns by name and rows
 by all columns, and compares cell-by-cell (exact for non-floats, exact-then-
 tolerance-report for floats). Usage:
-    python3 tools/check_oracle.py <sfdir> <verify_outdir>
+    python3 tools/check_oracle.py <sfdir> <verify_outdir> [query ...]
+
+Without query names it checks every entry; with them, only those (a name
+missing from oracle_sql.json is a failure). Exits non-zero on any failure.
 """
 import json, math, sys
 import duckdb
 
-sfdir, outdir = sys.argv[1], sys.argv[2]
+sfdir, outdir, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 con = duckdb.connect()
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-fails, passes = [], 0
+fails, passes = [(n, "not in oracle_sql.json") for n in names if n not in oracle], 0
+if names:
+    oracle = {n: sql for n, sql in oracle.items() if n in names}
 for name, sql in sorted(oracle.items()):
     try:
         exp = con.execute(sql).fetchdf()
