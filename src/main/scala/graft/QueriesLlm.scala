@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.Fns.d2
 import graft.llm.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.sources.BinaryFiles
 
 /** LLM-training-data pipeline queries over documents/embeddings
   * (BASELINE.json north-star: dedup, similarity search, text analysis,
@@ -1329,7 +1330,7 @@ object QueriesLlm {
       javax.imageio.ImageIO.write(img(4, 2), "jpg", dir.resolve("b.jpg").toFile)
       javax.imageio.ImageIO.write(img(7, 1), "gif", dir.resolve("c.gif").toFile)
       java.nio.file.Files.writeString(dir.resolve("d.txt"), "not an image")
-      Multimodal.imageMeta(s.read.format("binaryFile").load(dir.toString))
+      Multimodal.imageMeta(BinaryFiles.read(s, dir.toString, "*"))
         .select("file", "format", "width", "height")
         .orderBy("file")
     }, Some(
@@ -1346,18 +1347,8 @@ object QueriesLlm {
     Q("m03_image_pixels", (s, _) => {
       val dir = java.nio.file.Paths.get(s"${Q.scratch}/m03/images")
       java.nio.file.Files.createDirectories(dir)
-      def img(w: Int, h: Int) = {
-        val b = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (x <- 0 until w; y <- 0 until h)
-          b.setRGB(x, y, ((x.toLong * 2654435761L + y.toLong * 40503L) & 0xffffff).toInt)
-        b
-      }
-      javax.imageio.ImageIO.write(img(5, 3), "png", dir.resolve("p1.png").toFile)
-      javax.imageio.ImageIO.write(img(8, 4), "png", dir.resolve("p2.png").toFile)
-      javax.imageio.ImageIO.write(img(6, 2), "png", dir.resolve("p3.png").toFile)
-      java.nio.file.Files.writeString(dir.resolve("junk.txt"), "not an image")
-      Multimodal.imagePixelFeatures(s.read.format("binaryFile").load(dir.toString))
+      Multimodal.writePixelFixtures(dir)
+      Multimodal.imagePixelFeatures(BinaryFiles.read(s, dir.toString, "*"))
         .orderBy("file")
     }, Some(
       """SELECT * FROM (VALUES
@@ -1372,19 +1363,8 @@ object QueriesLlm {
     Q("m04_image_resize", (s, _) => {
       val dir = java.nio.file.Paths.get(s"${Q.scratch}/m03/images")
       java.nio.file.Files.createDirectories(dir)
-      def img(w: Int, h: Int) = {
-        val b = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (x <- 0 until w; y <- 0 until h)
-          b.setRGB(x, y, ((x.toLong * 2654435761L + y.toLong * 40503L) & 0xffffff).toInt)
-        b
-      }
-      javax.imageio.ImageIO.write(img(5, 3), "png", dir.resolve("p1.png").toFile)
-      javax.imageio.ImageIO.write(img(8, 4), "png", dir.resolve("p2.png").toFile)
-      javax.imageio.ImageIO.write(img(6, 2), "png", dir.resolve("p3.png").toFile)
-      java.nio.file.Files.writeString(dir.resolve("junk.txt"), "not an image")
-      Multimodal.resizeNearest(
-          s.read.format("binaryFile").load(dir.toString), tw = 3, th = 2)
+      Multimodal.writePixelFixtures(dir)
+      Multimodal.resizeNearest(BinaryFiles.read(s, dir.toString, "*"), tw = 3, th = 2)
         .orderBy("file")
     }, Some(
       """SELECT * FROM (VALUES
@@ -1409,7 +1389,7 @@ object QueriesLlm {
       java.nio.file.Files.write(dir.resolve("b.wav"),
         Multimodal.encodeWavPcm16Mono(pcm(300, 91), 16000))
       java.nio.file.Files.writeString(dir.resolve("junk.txt"), "not audio")
-      Multimodal.wavFeatures(s.read.format("binaryFile").load(dir.toString))
+      Multimodal.wavFeatures(BinaryFiles.read(s, dir.toString, "*"))
         .orderBy("file")
     }, Some(
       """SELECT * FROM (VALUES
@@ -1434,8 +1414,7 @@ object QueriesLlm {
       java.nio.file.Files.write(dir.resolve("anim.gif"),
         Multimodal.encodeAnimatedGif16(w, h, palette, (0 until 6).map(idx)))
       java.nio.file.Files.writeString(dir.resolve("junk.txt"), "not video")
-      Multimodal.gifFrameFeatures(
-          s.read.format("binaryFile").load(dir.toString), stride = 2)
+      Multimodal.gifFrameFeatures(BinaryFiles.read(s, dir.toString, "*"), stride = 2)
         .orderBy("file", "frame_id")
     }, Some(
       """SELECT * FROM (VALUES
@@ -1592,7 +1571,7 @@ object QueriesLlm {
       val dir = java.nio.file.Paths.get(s"${Q.scratch}/m07/images")
       java.nio.file.Files.createDirectories(dir)
       Multimodal.writeDHashFixtures(dir)
-      Multimodal.imageDHash(s.read.format("binaryFile").load(dir.toString))
+      Multimodal.imageDHash(BinaryFiles.read(s, dir.toString, "*"))
         .select("file", "dhash_hex")
         .orderBy("file")
     }, Some(
@@ -1612,7 +1591,7 @@ object QueriesLlm {
       val dir = java.nio.file.Paths.get(s"${Q.scratch}/m07/images")
       java.nio.file.Files.createDirectories(dir)
       Multimodal.writeDHashFixtures(dir)
-      val hashes = Multimodal.imageDHash(s.read.format("binaryFile").load(dir.toString))
+      val hashes = Multimodal.imageDHash(BinaryFiles.read(s, dir.toString, "*"))
       Dedup.simhashPairs(hashes, maxHamming = 10, idCol = "file", hashCol = "dhash")
         .withColumnRenamed("doc_a", "file_a").withColumnRenamed("doc_b", "file_b")
         .orderBy("file_a", "file_b")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.Fns._
 import graft.ops.{Analytic, Qc, Relational}
+import graft.sources.BinaryFiles
 import SqlOracles.ctes
 
 /** Relational + analytic tier queries (SURVEY.md §2.2-§2.8), each with a
@@ -236,10 +237,10 @@ object QueriesRelational {
       // sets the session's nanos-timestamp read conf, which the dim's direct
       // parquet read below depends on.
       val ev = Tables.events(s, d)
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
+      BinaryFiles.once(s, dir)(
         ev.select(col("event_id"), col("user_id"),
             round(col("value") * 100).cast("bigint").as("cents"), col("event_type"))
-          .write.mode("overwrite").partitionBy("event_type").parquet(dir)
+          .write.mode("overwrite").partitionBy("event_type").parquet(dir))
       val fact = s.read.parquet(dir)
       val dim = s.read.parquet(s"$d/events.parquet")
         .select("event_type").distinct()

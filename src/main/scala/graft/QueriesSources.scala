@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType}
 import graft.ops.Poobah
-import graft.sources.{Idat, SectionedReport, Warc, Xlsx, ZipArchive}
+import graft.sources.{BinaryFiles, Idat, SectionedReport, Warc, Xlsx, ZipArchive}
 import graft.streaming.QcMonitor
 
 /** Source/sink queries (SURVEY.md §2.1): CSV round-trip, sectioned
@@ -151,7 +151,7 @@ object QueriesSources {
     // byte sizes from the parquet directly.
     Q("s12_zip_members", (s, d) => {
       val dir = s"${Q.scratch}/s12_zip_${Integer.toHexString(d.hashCode)}"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+      BinaryFiles.once(s, dir) {
         val rows = Tables.table(s, d, "nation")
           .select(col("n_nationkey").cast("long"), col("n_name"),
             col("n_regionkey").cast("long")).collect()
@@ -164,7 +164,6 @@ object QueriesSources {
             }.toSeq
             Files.write(Paths.get(s"$dir/$name"), ZipArchive.bytes(members))
         }
-        Files.write(Paths.get(s"$dir/_SUCCESS"), Array.emptyByteArray)
       }
       ZipArchive.read(s, dir)
         .groupBy("archive")
@@ -193,7 +192,7 @@ object QueriesSources {
     // against DuckDB computing straight from the parquet text.
     Q("s13_warc_roundtrip", (s, d) => {
       val dir = s"${Q.scratch}/s13_docs_warc_${Integer.toHexString(d.hashCode)}"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+      BinaryFiles.once(s, dir) {
         val recs = Tables.table(s, d, "documents").select(
           concat(lit("https://corpus.example/doc/"), col("doc_id")).as("target_uri"),
           lit("2026-01-01T00:00:00Z").as("warc_date"),
@@ -237,8 +236,7 @@ object QueriesSources {
     // lossless roundtrip is indistinguishable from no roundtrip.
     Q("s05_idat_roundtrip", (s, d) => {
       val dir = s"${Q.scratch}/s05_idat_${Integer.toHexString(d.hashCode)}"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Idat.writeFiles(Tables.idatLong(s, d), dir)
+      BinaryFiles.once(s, dir)(Idat.writeFiles(Tables.idatLong(s, d), dir))
       Idat.read(s, dir)
         .groupBy("sample_id", "channel")
         .agg(count(lit(1)).as("n_beads"),
@@ -267,8 +265,7 @@ object QueriesSources {
     // DuckDB recomputing from the parquet derivation directly.
     Q("e09_idat_lifecycle", (s, d) => {
       val dir = s"${Q.scratch}/s05_idat_${Integer.toHexString(d.hashCode)}"
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Idat.writeFiles(Tables.idatLong(s, d), dir)
+      BinaryFiles.once(s, dir)(Idat.writeFiles(Tables.idatLong(s, d), dir))
       // betas + detectionP consume `dec` four ways (oob/sigI/sigII union
       // branches + the beta aggregate); re-parsing per branch was MEASURED
       // cheaper than persisting the decoded rows here (16×: 20.3 s
@@ -325,20 +322,18 @@ object QueriesSources {
         |FROM supplier GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // S8 distributed flavor: one xlsx part per Spark partition written
-    // executor-side (Hadoop FS API), then the glob scan parses all parts in
+    // executor-side (Hadoop FS API), then the directory scan parses all parts in
     // parallel — the shape that scales an xlsx export beyond the format's
     // 1,048,576-row single-sheet cap.
     Q("s10_xlsx_partitioned", (s, d) => {
       val dir = s"${Q.scratch}/s10_lineitem_xlsx_${Integer.toHexString(d.hashCode)}"
-      // guard on the sink's commit marker, not bare directory existence — a
-      // failed/killed earlier run leaves a partial dir that must be redone
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+      BinaryFiles.once(s, dir) {
         val li = Tables.table(s, d, "lineitem")
           .filter(col("l_linenumber") === 1 && col("l_orderkey") % 4 === 0)
           .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
         Xlsx.writePartitioned(li.repartition(4, col("l_orderkey")), dir)
       }
-      Xlsx.read(s, s"$dir/*.xlsx")
+      Xlsx.read(s, dir)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           sum(round(col("l_quantity").cast("double") * 100).cast("bigint")).as("qty_cents"))

@@ -17,10 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  val tpch: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings")
-
   /** A raw table, read once per session and directory: parquet's schema
     * inference runs a Spark job per read, so later calls reuse the first
     * DataFrame (memoized in [[viewCache]] under the file name, unpersisted).

@@ -1,8 +1,13 @@
 package graft.llm
 
+import java.awt.image.BufferedImage
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.DataFrame
+import javax.imageio.ImageIO
+
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media as opaque `binary` payloads with typed
@@ -109,68 +114,69 @@ object Multimodal {
     } else None
   }
 
-  /** binaryFile-ingested images → per-file metadata rows. Same shape as
-    * [[extractFeatures]]: one per-partition init point, rows streamed
-    * through it; unrecognized payloads are dropped (a real pipeline would
-    * route them to a quarantine sink).
+  /** Run `decode` over the `(file, content)` rows of
+    * [[graft.sources.BinaryFiles.read]] one partition at a time: the
+    * iterator shape of [[extractFeatures]], one per-partition init point
+    * (codec handle / decoder reuse) with the files streamed through it.
     */
-  def imageMeta(binaryFiles: DataFrame): DataFrame = {
-    val spark = binaryFiles.sparkSession
-    import spark.implicits._
-    binaryFiles
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition init point (codec handle / model session goes here)
-        it.flatMap { case (file, bytes) =>
-          decodeImageMeta(bytes).map { case (fmt, w, h) =>
-            ImageMeta(file, fmt, w, h, bytes.length.toLong)
-          }
-        }
-      }.toDF()
+  private def perPartition[T <: Product : TypeTag](files: DataFrame)(
+      decode: Iterator[(String, Array[Byte])] => Iterator[T]): DataFrame =
+    files.as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
+      .mapPartitions(decode)(Encoders.product[T]).toDF()
+
+  /** Full pixel decode through the JDK's ImageIO codecs; None when no
+    * reader recognizes the payload or it fails to decode.
+    */
+  private def decodeImage(bytes: Array[Byte]): Option[BufferedImage] =
+    try Option(ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
+    catch { case _: java.io.IOException => None }
+
+  /** Exact integer sums of the R, G and B channels over every pixel. */
+  private def channelSums(im: BufferedImage): (Long, Long, Long) = {
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var y = 0
+    while (y < im.getHeight) {
+      var x = 0
+      while (x < im.getWidth) {
+        val v = im.getRGB(x, y)
+        sr += (v >> 16) & 0xff; sg += (v >> 8) & 0xff; sb += v & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    (sr, sg, sb)
   }
+
+  /** `(file, content)` images → per-file metadata rows. Unrecognized
+    * payloads are dropped (a real pipeline would route them to a
+    * quarantine sink).
+    */
+  def imageMeta(files: DataFrame): DataFrame =
+    perPartition(files)(_.flatMap { case (file, bytes) =>
+      decodeImageMeta(bytes).map { case (fmt, w, h) =>
+        ImageMeta(file, fmt, w, h, bytes.length.toLong)
+      }
+    })
 
   final case class ImagePixelFeat(file: String, width: Int, height: Int,
                                   sum_r: Long, sum_g: Long, sum_b: Long)
 
   /** Real pixel decode via the JDK's own ImageIO codecs (PNG/GIF/JPEG
     * readers ship with the JRE — no external dependency): per-partition
-    * batched decode over binaryFile payloads, exact integer per-channel
-    * sums as the extracted feature (deterministic, unlike float means, so
-    * it is VALUES-oracle-checkable for lossless formats). This fills the
-    * decode slot [[extractFeatures]] reserves: same iterator shape, real
-    * bytes → real pixels. Unreadable payloads are dropped (quarantine sink
-    * in a real pipeline).
+    * batched decode over `(file, content)` payloads, exact integer
+    * per-channel sums as the extracted feature (deterministic, unlike
+    * float means, so it is VALUES-oracle-checkable for lossless formats).
+    * This fills the decode slot [[extractFeatures]] reserves: same
+    * iterator shape, real bytes → real pixels. Unreadable payloads are
+    * dropped (quarantine sink in a real pipeline).
     */
-  def imagePixelFeatures(binaryFiles: DataFrame): DataFrame = {
-    val spark = binaryFiles.sparkSession
-    import spark.implicits._
-    binaryFiles
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition init point (decoder handle reuse goes here)
-        it.flatMap { case (file, bytes) =>
-          val img =
-            try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-            catch { case _: java.io.IOException => None }
-          img.map { im =>
-            var sr = 0L; var sg = 0L; var sb = 0L
-            var y = 0
-            while (y < im.getHeight) {
-              var x = 0
-              while (x < im.getWidth) {
-                val v = im.getRGB(x, y)
-                sr += (v >> 16) & 0xff; sg += (v >> 8) & 0xff; sb += v & 0xff
-                x += 1
-              }
-              y += 1
-            }
-            ImagePixelFeat(file, im.getWidth, im.getHeight, sr, sg, sb)
-          }
-        }
-      }.toDF()
-  }
+  def imagePixelFeatures(files: DataFrame): DataFrame =
+    perPartition(files)(_.flatMap { case (file, bytes) =>
+      decodeImage(bytes).map { im =>
+        val (sr, sg, sb) = channelSums(im)
+        ImagePixelFeat(file, im.getWidth, im.getHeight, sr, sg, sb)
+      }
+    })
 
   final case class ThumbRow(file: String, t_width: Int, t_height: Int,
                             sum_r: Long, sum_g: Long, sum_b: Long, thumb_fp: String)
@@ -184,42 +190,33 @@ object Multimodal {
     * pixels. Same per-partition batched iterator shape as the other
     * decode ops.
     */
-  def resizeNearest(binaryFiles: DataFrame, tw: Int, th: Int): DataFrame = {
-    val spark = binaryFiles.sparkSession
-    import spark.implicits._
-    binaryFiles
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5") // per-partition init
-        it.flatMap { case (file, bytes) =>
-          val img =
-            try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-            catch { case _: java.io.IOException => None }
-          img.map { im =>
-            var sr = 0L; var sg = 0L; var sb = 0L
-            val parts = new StringBuilder
-            var ty = 0
-            while (ty < th) {
-              var tx = 0
-              while (tx < tw) {
-                val v = im.getRGB(tx * im.getWidth / tw, ty * im.getHeight / th)
-                val r = (v >> 16) & 0xff; val g = (v >> 8) & 0xff; val b = v & 0xff
-                sr += r; sg += g; sb += b
-                if (parts.nonEmpty) parts.append(';')
-                parts.append(r).append(',').append(g).append(',').append(b)
-                tx += 1
-              }
-              ty += 1
+  def resizeNearest(files: DataFrame, tw: Int, th: Int): DataFrame =
+    perPartition(files) { it =>
+      val md = java.security.MessageDigest.getInstance("MD5") // per-partition init
+      it.flatMap { case (file, bytes) =>
+        decodeImage(bytes).map { im =>
+          var sr = 0L; var sg = 0L; var sb = 0L
+          val parts = new StringBuilder
+          var ty = 0
+          while (ty < th) {
+            var tx = 0
+            while (tx < tw) {
+              val v = im.getRGB(tx * im.getWidth / tw, ty * im.getHeight / th)
+              val r = (v >> 16) & 0xff; val g = (v >> 8) & 0xff; val b = v & 0xff
+              sr += r; sg += g; sb += b
+              if (parts.nonEmpty) parts.append(';')
+              parts.append(r).append(',').append(g).append(',').append(b)
+              tx += 1
             }
-            md.reset()
-            val fp = md.digest(parts.toString.getBytes(StandardCharsets.UTF_8))
-              .map("%02x".format(_)).mkString
-            ThumbRow(file, tw, th, sr, sg, sb, fp)
+            ty += 1
           }
+          md.reset()
+          val fp = md.digest(parts.toString.getBytes(StandardCharsets.UTF_8))
+            .map("%02x".format(_)).mkString
+          ThumbRow(file, tw, th, sr, sg, sb, fp)
         }
-      }.toDF()
-  }
+      }
+    }
 
   final case class DHashRow(file: String, dhash: Long, dhash_hex: String)
 
@@ -234,40 +231,49 @@ object Multimodal {
     * from [[graft.llm.Dedup.simhashPairs]] banded Hamming blocking, so the
     * corpus-level join never goes all-pairs.
     */
-  def imageDHash(binaryFiles: DataFrame): DataFrame = {
-    val spark = binaryFiles.sparkSession
-    import spark.implicits._
-    binaryFiles
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (file, bytes) =>
-          val img =
-            try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-            catch { case _: java.io.IOException => None }
-          img.map { im =>
-            val g = Array.ofDim[Int](8, 9)
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 9) {
-                val v = im.getRGB(x * im.getWidth / 9, y * im.getHeight / 8)
-                g(y)(x) = (((v >> 16) & 0xff) * 299 + ((v >> 8) & 0xff) * 587 +
-                  (v & 0xff) * 114) / 1000
-                x += 1
-              }
-              y += 1
-            }
-            var h = 0L
-            var j = 0
-            while (j < 64) {
-              if (g(j / 8)(j % 8) > g(j / 8)(j % 8 + 1)) h |= (1L << j)
-              j += 1
-            }
-            DHashRow(file, h, f"$h%016x")
+  def imageDHash(files: DataFrame): DataFrame =
+    perPartition(files)(_.flatMap { case (file, bytes) =>
+      decodeImage(bytes).map { im =>
+        val g = Array.ofDim[Int](8, 9)
+        var y = 0
+        while (y < 8) {
+          var x = 0
+          while (x < 9) {
+            val v = im.getRGB(x * im.getWidth / 9, y * im.getHeight / 8)
+            g(y)(x) = (((v >> 16) & 0xff) * 299 + ((v >> 8) & 0xff) * 587 +
+              (v & 0xff) * 114) / 1000
+            x += 1
           }
+          y += 1
         }
-      }.toDF()
+        var h = 0L
+        var j = 0
+        while (j < 64) {
+          if (g(j / 8)(j % 8) > g(j / 8)(j % 8 + 1)) h |= (1L << j)
+          j += 1
+        }
+        DHashRow(file, h, f"$h%016x")
+      }
+    })
+
+  /** Write a lossless RGB PNG `dir/name` of `w`×`h` pixels `pix(x, y)`. */
+  private def writePng(dir: java.nio.file.Path, name: String, w: Int, h: Int)(
+      pix: (Int, Int) => Int): Unit = {
+    val b = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    for (x <- 0 until w; y <- 0 until h) b.setRGB(x, y, pix(x, y))
+    ImageIO.write(b, "png", dir.resolve(name).toFile)
+  }
+
+  /** Pixel-decode fixtures (m03 channel sums, m04 thumbnails): PNGs of
+    * 5×3, 8×4 and 6×2 pixels filled with one multiplicative-hash spectrum,
+    * plus a non-image decoy.
+    */
+  def writePixelFixtures(dir: java.nio.file.Path): Unit = {
+    Seq(("p1.png", 5, 3), ("p2.png", 8, 4), ("p3.png", 6, 2)).foreach {
+      case (name, w, h) => writePng(dir, name, w, h)((x, y) =>
+        ((x.toLong * 2654435761L + y.toLong * 40503L) & 0xffffff).toInt)
+    }
+    java.nio.file.Files.writeString(dir.resolve("junk.txt"), "not an image")
   }
 
   /** dHash demo fixtures (32×32 PNGs, lossless): a base gradient pattern,
@@ -276,12 +282,7 @@ object Multimodal {
     * patch, one hash bit flips), and an unrelated pattern (hamming 26).
     */
   def writeDHashFixtures(dir: java.nio.file.Path): Unit = {
-    def png(name: String)(pix: (Int, Int) => Int): Unit = {
-      val b = new java.awt.image.BufferedImage(
-        32, 32, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (x <- 0 until 32; y <- 0 until 32) b.setRGB(x, y, pix(x, y))
-      javax.imageio.ImageIO.write(b, "png", dir.resolve(name).toFile)
-    }
+    def png(name: String)(pix: (Int, Int) => Int): Unit = writePng(dir, name, 32, 32)(pix)
     def base(x: Int, y: Int): Int =
       (((x * 7 + y * 3) & 0xff) << 16) | (((x * 5 + y * 11) & 0xff) << 8) |
         ((x * 13 + y * 2) & 0xff)
@@ -349,22 +350,13 @@ object Multimodal {
     None
   }
 
-  /** binaryFile-ingested WAVs → exact loudness/metadata features. */
-  def wavFeatures(binaryFiles: DataFrame): DataFrame = {
-    val spark = binaryFiles.sparkSession
-    import spark.implicits._
-    binaryFiles
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition init point (decoder handle reuse goes here)
-        it.flatMap { case (file, bytes) =>
-          decodeWavPcm16(bytes).map { case (ch, rate, n, sumAbs, peak) =>
-            WavMeta(file, ch, rate, n, sumAbs, peak)
-          }
-        }
-      }.toDF()
-  }
+  /** `(file, content)` WAVs → exact loudness/metadata features. */
+  def wavFeatures(files: DataFrame): DataFrame =
+    perPartition(files)(_.flatMap { case (file, bytes) =>
+      decodeWavPcm16(bytes).map { case (ch, rate, n, sumAbs, peak) =>
+        WavMeta(file, ch, rate, n, sumAbs, peak)
+      }
+    })
 
   /** Serialize mono 16-bit PCM to a canonical RIFF/WAVE byte array (the
     * fixture writer for [[wavFeatures]]; also usable as a sink encoder).
@@ -392,45 +384,27 @@ object Multimodal {
     * losslessly, so the features are bit-exact. Per-partition batched:
     * one reader instance per partition, payloads streamed through it.
     */
-  def gifFrameFeatures(binaryFiles: DataFrame, stride: Int): DataFrame = {
-    val spark = binaryFiles.sparkSession
-    import spark.implicits._
-    binaryFiles
-      .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        val reader = javax.imageio.ImageIO
-          .getImageReadersByFormatName("gif").next() // per-partition init
-        val out = it.flatMap { case (file, bytes) =>
-          // memory-backed input stream: the default createImageInputStream
-          // wraps a ByteArrayInputStream in a FILE-cache stream whose temp
-          // file + fd live until JVM exit — one leak per payload
-          val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try {
-            reader.setInput(iis, false, true)
-            val n = reader.getNumImages(true)
-            (0 until n by stride).map { f =>
-              val im = reader.read(f)
-              var sr = 0L; var sg = 0L; var sb = 0L
-              var y = 0
-              while (y < im.getHeight) {
-                var x = 0
-                while (x < im.getWidth) {
-                  val v = im.getRGB(x, y)
-                  sr += (v >> 16) & 0xff; sg += (v >> 8) & 0xff; sb += v & 0xff
-                  x += 1
-                }
-                y += 1
-              }
-              FrameFeat(file, f, im.getWidth, im.getHeight, sr, sg, sb)
-            }
-          } catch { case _: java.io.IOException => Seq.empty }
-          finally iis.close()
-        }
-        out
-      }.toDF()
-  }
+  def gifFrameFeatures(files: DataFrame, stride: Int): DataFrame =
+    perPartition(files) { it =>
+      val reader = ImageIO.getImageReadersByFormatName("gif").next() // per-partition init
+      it.flatMap { case (file, bytes) =>
+        // memory-backed input stream: the default createImageInputStream
+        // wraps a ByteArrayInputStream in a FILE-cache stream whose temp
+        // file + fd live until JVM exit — one leak per payload
+        val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
+          new java.io.ByteArrayInputStream(bytes))
+        try {
+          reader.setInput(iis, false, true)
+          val n = reader.getNumImages(true)
+          (0 until n by stride).map { f =>
+            val im = reader.read(f)
+            val (sr, sg, sb) = channelSums(im)
+            FrameFeat(file, f, im.getWidth, im.getHeight, sr, sg, sb)
+          }
+        } catch { case _: java.io.IOException => Seq.empty }
+        finally iis.close()
+      }
+    }
 
   /** Minimal GIF89a encoder for 16-color palette-indexed animated frames
     * (fixture writer / sink encoder for [[gifFrameFeatures]]). Bit-exact

@@ -59,20 +59,20 @@ object RangedScan {
       SinglePartitionMaxRows) == SizeGate.Local) 1 else 0)
 
   /** Row-count ESTIMATE from plan statistics — no job. Sums the leaf
-    * relations' sizeInBytes (cached relations report their real in-memory
-    * bytes; file relations their on-disk bytes) and divides by 48 ≈ the
-    * bytes/row of this engine's long tables in either representation
-    * (~56 B UnsafeRow in cache, ~30–60 B compressed on disk), i.e. the
-    * estimate approximates the LEAF row count. That still over-counts
+    * relations' sizeInBytes (file relations report their on-disk bytes)
+    * and divides by 48 ≈ the bytes/row of this engine's long tables
+    * (~30–60 B compressed on disk), i.e. the estimate approximates the
+    * LEAF row count. That still over-counts
     * the dispatch-relevant quantity: every adjusted input here is a
     * per-key aggregate of its leaves (rows ≪ leaf rows), and self-joined
     * leaves are summed once per appearance. (An /8 divisor was measured
     * to shunt the k-tier's ~130 MB multi-leaf inputs onto the
     * multi-partition path at sf0.1 — k22_mk_inference 1.48 → 1.82 s — for
-    * scans that fit one task with 10× headroom.) A cached relation not
-    * yet filled has no bytes of its own: Spark reports its cached plan's
-    * statistics, which multiply a join's children sizes, so it counts as
-    * the leaves of the plan it caches instead. Suitable only for
+    * scans that fit one task with 10× headroom.) A cached relation counts
+    * as the leaves of the plan it caches, filled or not: unfilled, Spark
+    * reports its cached plan's statistics, which multiply a join's
+    * children sizes; filled, its in-memory bytes, so the estimate (and the
+    * side) would follow which caches earlier work filled. Suitable only for
     * plan-equivalent dispatches (every partition count is bit-equal);
     * never use where the count affects a result.
     */
@@ -80,7 +80,7 @@ object RangedScan {
     (leafBytes(df.queryExecution.optimizedPlan) / 48).min(BigInt(Long.MaxValue)).toLong
 
   private def leafBytes(plan: LogicalPlan): BigInt = plan.collectLeaves().map {
-    case cached: InMemoryRelation if !cached.cacheBuilder.isCachedColumnBuffersLoaded =>
+    case cached: InMemoryRelation =>
       leafBytes(cached.cacheBuilder.logicalPlan)
     case leaf => leaf.stats.sizeInBytes
   }.sum

@@ -10,9 +10,12 @@ import org.apache.spark.sql.DataFrame
   * is at most its limit and the [[Distributed]] side otherwise. Each limit
   * is its kernel's own fixed constant, documented beside it with the
   * measurement that set it; none derives from the heap, so a run's digits
-  * never depend on `-Xmx`. A gate picks a plan, never a result: both sides
-  * of every gate compute the same output, and the kernel specs pin each
-  * pair together.
+  * never depend on `-Xmx`. The kernel specs pin each gate's two sides
+  * together, but not every pair is bit-identical: `Pipelines.fullWorkflow`'s
+  * two chains agree within 2e-6, and two gates switch estimators —
+  * `Curation.quantileProfile` from `percentile` to `approx_percentile`,
+  * `Similarity.trainCenters` from a driver Lloyd fit to Spark ML k-means.
+  * The other gates' sides are bit-identical (PERF.md, "One size gate").
   *
   * Every decision is appended to each [[recording]] region the calling
   * thread is in (RunOne prints them); outside a region nothing is kept. [[pinned]] overrides named gates on the calling thread, the one

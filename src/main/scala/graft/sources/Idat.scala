@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** IDAT binary source + sink (SURVEY.md §2.1 S5) with zero extra
@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * nbeads).
   *
   * Scale posture:
-  *   - '''read''' is distributed: files arrive through the binaryFile
-  *     DataSource (one task per file, executor-side parse). An IDAT file is
+  *   - '''read''' is distributed: files arrive through
+  *     [[BinaryFiles.read]] (one task per file, executor-side parse). An IDAT file is
   *     array-size bounded (~1M beads ≈ 13 MB) — the file is the natural,
   *     well-balanced unit of parallelism, exactly the xlsx/gzip-CSV shape.
   *   - '''write''' shuffles rows to co-locate each (sample, channel) group
@@ -126,52 +126,28 @@ object Idat {
 
   /** S5 distributed sink: the long intensity model written as one
     * `{sample_id}_{channel}.idat` per (sample, channel) group, serialized
-    * executor-side after a co-locating shuffle. Expects columns
+    * executor-side after a co-locating shuffle ([[BinaryFiles.write]]:
+    * `_SUCCESS` marks completion). Expects columns
     * `sample_id, channel, address, mean, sd, nbeads, barcode, chip_type`.
-    * Emits a `_SUCCESS` commit marker (existence-of-directory is not
-    * completion — callers guard on the marker).
     */
-  def writeFiles(df: DataFrame, dir: String): Unit = {
-    val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
-    val fs0 = new org.apache.hadoop.fs.Path(dir).getFileSystem(hadoopConf)
-    fs0.delete(new org.apache.hadoop.fs.Path(dir), true)
-    fs0.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    // ship the SESSION's Hadoop conf to the executors — a bare
-    // `new Configuration()` there would drop spark.hadoop.* settings
-    // (s3a credentials, endpoints) and could resolve a different
-    // fs.defaultFS than the one fs0 just prepared
-    val confProps: Array[(String, String)] = {
-      import scala.jdk.CollectionConverters._
-      hadoopConf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-    }
-    df.select("sample_id", "channel", "address", "mean", "sd", "nbeads",
-        "barcode", "chip_type")
-      .repartition(col("sample_id"), col("channel"))
-      .foreachPartition { (it: Iterator[Row]) =>
-        // One partition holds whole (sample, channel) groups (hash
-        // co-location); group in memory — bounded by bead-vector size.
-        val groups = mutable.Map.empty[(String, String), (mutable.ArrayBuffer[Bead], String, String)]
-        it.foreach { r =>
-          val key = (r.getString(0), r.getString(1))
-          val g = groups.getOrElseUpdate(key,
-            (mutable.ArrayBuffer.empty[Bead], r.getString(6), r.getString(7)))
-          g._1 += Bead(r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5))
-        }
-        lazy val conf = {
-          val c = new org.apache.hadoop.conf.Configuration(false)
-          confProps.foreach { case (k, v) => c.set(k, v) }
-          c
-        }
-        groups.foreach { case ((sample, channel), (beads, barcode, chipType)) =>
-          val data = bytes(beads.toSeq, barcode, chipType)
-          val p = new org.apache.hadoop.fs.Path(s"$dir/${sample}_$channel.idat")
-          val fs = p.getFileSystem(conf)
-          val out = fs.create(p, true)
-          out.write(data); out.close()
-        }
+  def writeFiles(df: DataFrame, dir: String): Unit =
+    BinaryFiles.write(df.select("sample_id", "channel", "address", "mean", "sd",
+        "nbeads", "barcode", "chip_type")
+      .repartition(col("sample_id"), col("channel")), dir) { (it, open) =>
+      // One partition holds whole (sample, channel) groups (hash
+      // co-location); group in memory — bounded by bead-vector size.
+      val groups = mutable.Map.empty[(String, String), (mutable.ArrayBuffer[Bead], String, String)]
+      it.foreach { r =>
+        val key = (r.getString(0), r.getString(1))
+        val g = groups.getOrElseUpdate(key,
+          (mutable.ArrayBuffer.empty[Bead], r.getString(6), r.getString(7)))
+        g._1 += Bead(r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5))
       }
-    fs0.create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
-  }
+      groups.foreach { case ((sample, channel), (beads, barcode, chipType)) =>
+        val data = bytes(beads.toSeq, barcode, chipType)
+        open(s"${sample}_$channel.idat")(_.write(data))
+      }
+    }
 
   // ----------------------------------------------------------------- read
 
@@ -232,22 +208,16 @@ object Idat {
   }
 
   /** S5 distributed scan: every `*.idat` under the glob parses in its own
-    * task (binaryFile source); sample id and channel are recovered from the
+    * task ([[BinaryFiles.read]]); sample id and channel are recovered from the
     * `{sample}_{Grn|Red}.idat` filename — the reference's own convention
     * (idat.r:38). Returns the long intensity model:
     * `(sample_id, channel, address, mean, sd, nbeads, barcode, chip_type)`.
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // pathGlobFilter (not a glob inside the path) — the path-glob form
-    // makes the resolver log a spurious FileNotFoundException before its
-    // glob-expansion fallback, and the option form also skips _SUCCESS
-    spark.read.format("binaryFile").option("pathGlobFilter", "*.idat")
-      .load(dir)
-      .select("path", "content")
+    BinaryFiles.read(spark, dir, "*.idat")
       .as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        val file = path.substring(path.lastIndexOf('/') + 1)
+      .flatMap { case (file, content) =>
         val m = "^(.*)_(Grn|Red)\\.idat$".r.findFirstMatchIn(file)
           .getOrElse(throw new IllegalArgumentException(s"unexpected idat filename: $file"))
         val (beads, barcode, chipType) = parse(content)

@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** WARC (ISO 28500 / WARC/1.0) web-archive container — the format web-scale
   * training corpora actually arrive in (Common Crawl ships response records
@@ -72,39 +72,21 @@ object Warc {
     * own gzip member (the Common Crawl layout — members are independently
     * decompressible, so a future range reader can seek). Input columns:
     * `target_uri, warc_date, record_id, http_content_type, body` (binary).
-    * Written executor-side through the Hadoop FS API with the SESSION's
-    * conf shipped to the tasks (a bare `new Configuration()` would drop
-    * spark.hadoop.* settings); `_SUCCESS` marks completion — callers guard
-    * on the marker, not directory existence.
+    * Written executor-side by [[BinaryFiles.write]] (`_SUCCESS` marks
+    * completion).
     */
-  def writeFiles(df: DataFrame, dir: String): Unit = {
-    val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
-    val fs0 = new org.apache.hadoop.fs.Path(dir).getFileSystem(hadoopConf)
-    fs0.delete(new org.apache.hadoop.fs.Path(dir), true)
-    fs0.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    val confProps: Array[(String, String)] = {
-      import scala.jdk.CollectionConverters._
-      hadoopConf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-    }
-    df.select("target_uri", "warc_date", "record_id", "http_content_type",
-        "body")
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confProps.foreach { case (k, v) => conf.set(k, v) }
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val p = new org.apache.hadoop.fs.Path(f"$dir/part-$pid%05d.warc.gz")
-          val out = p.getFileSystem(conf).create(p, true)
+  def writeFiles(df: DataFrame, dir: String): Unit =
+    BinaryFiles.write(df.select("target_uri", "warc_date", "record_id",
+        "http_content_type", "body"), dir) { (it, open) =>
+      if (it.hasNext)
+        open(f"part-${org.apache.spark.TaskContext.getPartitionId()}%05d.warc.gz") { out =>
           it.foreach { r =>
             out.write(gzipMember(recordBytes("response", r.getString(2),
               Some(r.getString(0)), r.getString(1), Some(r.getString(3)),
               r.getAs[Array[Byte]](4))))
           }
-          out.close()
         }
-      }
-    fs0.create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
-  }
+    }
 
   private type Rec = (String, String, String, Option[String], String, Long,
     Option[Int], Option[String], Array[Byte])
@@ -249,11 +231,7 @@ object Warc {
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val confProps: Array[(String, String)] = {
-      import scala.jdk.CollectionConverters._
-      spark.sessionState.newHadoopConf().iterator().asScala
-        .map(e => (e.getKey, e.getValue)).toArray
-    }
+    val conf = BinaryFiles.hadoopConf(spark)
     // binaryFile does the (driver-cheap, executor-parallel) LISTING; only
     // `path` is selected so the file contents are never materialized as a
     // column — each task opens its files as Hadoop streams and parses
@@ -263,27 +241,23 @@ object Warc {
       .load(dir)
       .select("path")
       .as[String]
-      .mapPartitions { paths =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confProps.foreach { case (k, v) => conf.set(k, v) }
-        paths.flatMap { path =>
-          val p = new org.apache.hadoop.fs.Path(path)
-          val name = path.substring(path.lastIndexOf('/') + 1)
-          val in = p.getFileSystem(conf).open(p)
-          // the iterator's own clean-EOF close only runs on a full drain;
-          // a consumer that stops early (LIMIT/take) or a framing require
-          // failure would otherwise leak one handle per file for the life
-          // of the executor — close at task end regardless (idempotent,
-          // so the drained case double-closes harmlessly)
-          // swallow only the expected close-time I/O failure (already
-          // closed by a full drain) — a fatal VM error or interrupt must
-          // propagate, not vanish in a cleanup hook
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ =>
-              try in.close()
-              catch { case scala.util.control.NonFatal(_) => () }))
-          parseStream(name, in)
-        }
+      .flatMap { path =>
+        val p = new org.apache.hadoop.fs.Path(path)
+        val name = path.substring(path.lastIndexOf('/') + 1)
+        val in = p.getFileSystem(conf.value.value).open(p)
+        // the iterator's own clean-EOF close only runs on a full drain;
+        // a consumer that stops early (LIMIT/take) or a framing require
+        // failure would otherwise leak one handle per file for the life
+        // of the executor — close at task end regardless (idempotent,
+        // so the drained case double-closes harmlessly)
+        // swallow only the expected close-time I/O failure (already
+        // closed by a full drain) — a fatal VM error or interrupt must
+        // propagate, not vanish in a cleanup hook
+        Option(org.apache.spark.TaskContext.get()).foreach(
+          _.addTaskCompletionListener[Unit](_ =>
+            try in.close()
+            catch { case scala.util.control.NonFatal(_) => () }))
+        parseStream(name, in)
       }
       .toDF("file", "record_id", "warc_type", "target_uri", "warc_date",
         "content_length", "http_status", "http_content_type", "body")

@@ -1,8 +1,7 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
@@ -24,8 +23,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * this module reproduces that contract.
   *
   * Scale posture:
-  *   - '''read''' is distributed: files arrive through the binaryFile
-  *     DataSource (one task per file, executor-side unzip+parse); only one
+  *   - '''read''' is distributed: files arrive through
+  *     [[BinaryFiles.read]] (one task per file, executor-side unzip+parse); only one
   *     file's header is peeked on the driver to fix the schema. A 100 TB
   *     corpus of many xlsx exports parallelizes by file exactly like any
   *     other non-splittable container (gzip CSV et al).
@@ -133,19 +132,13 @@ object Xlsx {
         |<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/>
         |</Relationships>""".stripMargin
 
-    val bos = new ByteArrayOutputStream(sheetXml.length + 4096)
-    val zip = new ZipOutputStream(bos, UTF_8)
-    def put(name: String, content: String): Unit = {
-      zip.putNextEntry(new ZipEntry(name))
-      zip.write(content.getBytes(UTF_8)); zip.closeEntry()
-    }
-    put("[Content_Types].xml", contentTypes)
-    put("_rels/.rels", rootRels)
-    put("xl/workbook.xml", workbook)
-    put("xl/_rels/workbook.xml.rels", wbRels)
-    put("xl/worksheets/sheet1.xml", sheetXml.toString)
-    zip.close()
-    bos.toByteArray
+    ZipArchive.bytes(Seq(
+      "[Content_Types].xml" -> contentTypes,
+      "_rels/.rels" -> rootRels,
+      "xl/workbook.xml" -> workbook,
+      "xl/_rels/workbook.xml.rels" -> wbRels,
+      "xl/worksheets/sheet1.xml" -> sheetXml.toString
+    ).map { case (name, xml) => name -> xml.getBytes(UTF_8) })
   }
 
   /** S8 driver-side bounded sink: one xlsx file. The format's own
@@ -175,33 +168,12 @@ object Xlsx {
     */
   def writePartitioned(df: DataFrame, dir: String): Unit = {
     val header = df.columns.toSeq
-    val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
-    val fs0 = new org.apache.hadoop.fs.Path(dir).getFileSystem(hadoopConf)
-    fs0.delete(new org.apache.hadoop.fs.Path(dir), true)
-    fs0.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    // ship the SESSION's Hadoop conf to the executors — a bare
-    // `new Configuration()` there would drop spark.hadoop.* settings
-    // (s3a credentials, endpoints) and could resolve a different
-    // fs.defaultFS than the one fs0 just prepared
-    val confProps: Array[(String, String)] = {
-      import scala.jdk.CollectionConverters._
-      hadoopConf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-    }
-    df.foreachPartition { (it: Iterator[Row]) =>
+    BinaryFiles.write(df, dir) { (it, open) =>
       if (it.hasNext) {
-        val pid = org.apache.spark.TaskContext.getPartitionId()
         val data = bytes(header, it)
-        val p = new org.apache.hadoop.fs.Path(f"$dir/part-$pid%05d.xlsx")
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confProps.foreach { case (k, v) => conf.set(k, v) }
-        val fs = p.getFileSystem(conf)
-        val out = fs.create(p, true)
-        out.write(data); out.close()
+        open(f"part-${org.apache.spark.TaskContext.getPartitionId()}%05d.xlsx")(_.write(data))
       }
     }
-    // commit marker, Hadoop-style: existence-of-directory is NOT completion
-    // (a failed job leaves a partial dir); callers guard on _SUCCESS
-    fs0.create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
   }
 
   // ----------------------------------------------------------------- read
@@ -218,26 +190,6 @@ object Xlsx {
     f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
     f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
     f
-  }
-
-  /** Unzip all parts into memory (xlsx parts are small relative to the file
-    * — the container is already the unit of parallelism).
-    */
-  private def parts(content: Array[Byte]): Map[String, Array[Byte]] = {
-    val zis = new ZipInputStream(new ByteArrayInputStream(content), UTF_8)
-    val m = mutable.Map.empty[String, Array[Byte]]
-    var e = zis.getNextEntry
-    while (e != null) {
-      if (!e.isDirectory) {
-        val bos = new ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = zis.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = zis.read(buf) }
-        m(e.getName) = bos.toByteArray
-      }
-      e = zis.getNextEntry
-    }
-    m.toMap
   }
 
   /** sharedStrings.xml -> indexed strings; each <si> concatenates all its
@@ -323,7 +275,9 @@ object Xlsx {
     * cell rendered to its string form (numbers keep their raw <v> text).
     */
   def parseRows(content: Array[Byte], sheet: Option[String] = None): (Array[String], Iterator[Array[String]]) = {
-    val ps = parts(content)
+    // xlsx parts are small relative to the file, and the file is already
+    // the unit of parallelism
+    val ps = ZipArchive.members(content).toMap
     val shared = ps.get("xl/sharedStrings.xml").map(parseSharedStrings).getOrElse(IndexedSeq.empty)
     val sheetXml = ps(sheetPart(ps, sheet))
     val r = secureFactory().createXMLStreamReader(new ByteArrayInputStream(sheetXml))
@@ -389,24 +343,23 @@ object Xlsx {
 
   /** S2 distributed scan: header from a single driver-side peek fixes the
     * schema (all string, caller casts — the CSV-without-inferSchema
-    * contract); every matched file then parses executor-side, one task per
-    * file via the binaryFile source. Files whose header differs fail fast
-    * with the offending path (schema drift surfaces, not silently
-    * misaligns).
+    * contract); every `*.xlsx` at `pathGlob` (a file, a directory or a
+    * path glob) then parses executor-side, one task per file
+    * ([[BinaryFiles.read]]). Files whose header differs fail fast with the
+    * offending file name (schema drift surfaces, not silently misaligns).
     */
   def read(spark: SparkSession, pathGlob: String, sheet: Option[String] = None): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(pathGlob)
-      .select("path", "content")
+    val bin = BinaryFiles.read(spark, pathGlob, "*.xlsx")
     val first = bin.select("content").head.getAs[Array[Byte]](0)
     val header = parseRows(first, sheet)._1
     val schema = StructType(header.map(h => StructField(h, StringType, nullable = true)))
     val headerB = spark.sparkContext.broadcast(header)
     val rowRdd = bin.rdd.flatMap { fileRow =>
-      val path = fileRow.getAs[String]("path")
-      val (h, rows) = parseRows(fileRow.getAs[Array[Byte]]("content"), sheet)
+      val file = fileRow.getString(0)
+      val (h, rows) = parseRows(fileRow.getAs[Array[Byte]](1), sheet)
       require(java.util.Arrays.equals(h.asInstanceOf[Array[AnyRef]],
         headerB.value.asInstanceOf[Array[AnyRef]]),
-        s"xlsx header mismatch in $path: ${h.toSeq} vs ${headerB.value.toSeq}")
+        s"xlsx header mismatch in $file: ${h.toSeq} vs ${headerB.value.toSeq}")
       rows.map(a => Row.fromSeq(a.toSeq))
     }
     spark.createDataFrame(rowRdd, schema)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `unzip_all_in_directory` — the raw EPIC deliveries arrive as ZIP files
   * that are unpacked before IDAT discovery). Engine-side the unpack is not
   * a filesystem mutation but a SCAN: every `*.zip` under a directory
-  * parses in its own task (binaryFile source, the xlsx/idat shape) and its
+  * parses in its own task ([[BinaryFiles.read]], the xlsx/idat shape) and its
   * members surface as rows `(archive, member, size, content)` — so
   * downstream discovery (S6) and codec parses (S5) compose directly on the
   * member rows without ever materializing an extracted tree.
@@ -34,32 +34,30 @@ object ZipArchive {
     bos.toByteArray
   }
 
+  /** Every non-directory member of one zip, in archive order, unpacked
+    * into memory (one archive per task, so a task holds one archive's
+    * members).
+    */
+  private[sources] def members(content: Array[Byte]): Seq[(String, Array[Byte])] = {
+    val zis = new ZipInputStream(new ByteArrayInputStream(content), UTF_8)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
+    var e = zis.getNextEntry
+    while (e != null) {
+      if (!e.isDirectory) out += ((e.getName, zis.readAllBytes()))
+      e = zis.getNextEntry
+    }
+    out.toSeq
+  }
+
   /** Distributed member scan: `(archive, member, size, content)`, one
     * parse task per archive. `archive` is the file name (path tail).
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").option("pathGlobFilter", "*.zip")
-      .load(dir)
-      .select("path", "content")
+    BinaryFiles.read(spark, dir, "*.zip")
       .as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        val archive = path.substring(path.lastIndexOf('/') + 1)
-        val zis = new ZipInputStream(new ByteArrayInputStream(content), UTF_8)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Array[Byte])]
-        var e = zis.getNextEntry
-        while (e != null) {
-          if (!e.isDirectory) {
-            val bos = new ByteArrayOutputStream()
-            val buf = new Array[Byte](8192)
-            var n = zis.read(buf)
-            while (n >= 0) { bos.write(buf, 0, n); n = zis.read(buf) }
-            val bytes = bos.toByteArray
-            out += ((archive, e.getName, bytes.length.toLong, bytes))
-          }
-          e = zis.getNextEntry
-        }
-        out.iterator
+      .flatMap { case (archive, content) =>
+        members(content).map { case (m, bytes) => (archive, m, bytes.length.toLong, bytes) }
       }
       .toDF("archive", "member", "size", "content")
   }

@@ -6,6 +6,7 @@ import java.io.ByteArrayOutputStream
 import javax.imageio.ImageIO
 
 import graft.llm.Multimodal
+import graft.sources.BinaryFiles
 
 class MultimodalSpec extends SparkSpec {
 
@@ -36,8 +37,7 @@ class MultimodalSpec extends SparkSpec {
     java.nio.file.Files.write(dir.resolve("x.png"), encode(3, 4, "png"))
     java.nio.file.Files.write(dir.resolve("y.gif"), encode(6, 2, "gif"))
     java.nio.file.Files.writeString(dir.resolve("z.txt"), "decoy")
-    val rows = Multimodal.imageMeta(
-        spark.read.format("binaryFile").load(dir.toString))
+    val rows = Multimodal.imageMeta(BinaryFiles.read(spark, dir.toString, "*"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3))).toSet
     assert(rows == Set(("x.png", "png", 3, 4), ("y.gif", "gif", 6, 2)))
   }
@@ -55,8 +55,7 @@ class MultimodalSpec extends SparkSpec {
     }
     javax.imageio.ImageIO.write(img, "png", dir.resolve("t.png").toFile)
     java.nio.file.Files.writeString(dir.resolve("bad.txt"), "decoy")
-    val rows = Multimodal.imagePixelFeatures(
-        spark.read.format("binaryFile").load(dir.toString))
+    val rows = Multimodal.imagePixelFeatures(BinaryFiles.read(spark, dir.toString, "*"))
       .collect()
     assert(rows.length == 1)
     val r = rows.head
@@ -86,8 +85,7 @@ class MultimodalSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("mmgif")
     java.nio.file.Files.write(dir.resolve("anim.gif"),
       Multimodal.encodeAnimatedGif16(w, h, palette, (0 until nFrames).map(idx)))
-    val rows = Multimodal.gifFrameFeatures(
-        spark.read.format("binaryFile").load(dir.toString), stride = 2)
+    val rows = Multimodal.gifFrameFeatures(BinaryFiles.read(spark, dir.toString, "*"), stride = 2)
       .orderBy("frame_id").collect()
     assert(rows.map(_.getInt(1)).toSeq == Seq(0, 2, 4))
     // expected sums computed directly from the palette formula
@@ -124,7 +122,7 @@ class MultimodalSpec extends SparkSpec {
     // grid lands on the same source pixels → identical hash by construction
     java.nio.file.Files.write(dir.resolve("doubled.png"),
       png(64, 64)((x, y) => base(x / 2, y / 2)))
-    val got = Multimodal.imageDHash(spark.read.format("binaryFile").load(dir.toString))
+    val got = Multimodal.imageDHash(BinaryFiles.read(spark, dir.toString, "*"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got.size == 3)
     assert(got("bright.png") == got("orig.png"))
@@ -134,7 +132,7 @@ class MultimodalSpec extends SparkSpec {
   test("dHash near-dup pairs via banded Hamming blocking find only true near-dups") {
     val dir = java.nio.file.Files.createTempDirectory("mmdhashpairs")
     Multimodal.writeDHashFixtures(dir)
-    val hashes = Multimodal.imageDHash(spark.read.format("binaryFile").load(dir.toString))
+    val hashes = Multimodal.imageDHash(BinaryFiles.read(spark, dir.toString, "*"))
     val pairs = graft.llm.Dedup
       .simhashPairs(hashes, maxHamming = 10, idCol = "file", hashCol = "dhash")
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
